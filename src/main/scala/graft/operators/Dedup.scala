@@ -263,9 +263,10 @@ object Dedup {
 
   /** Within-corpus LSH candidate pairs from an already-computed (or
     * index-read) signature relation — the band self-join half of
-    * [[minhashPairs]], reused by the persisted cluster index
-    * (PipelineOps.buildClusterIndex), where signatures come back from
-    * a governed table instead of a fresh shingle pass. One pass over
+    * [[minhashPairs]], reused by the exact-pair cluster index
+    * (PipelineOps.buildClusterIndex with PairSource.Exact, and its
+    * out-of-step heal), where signatures come back from a governed
+    * table instead of a fresh shingle pass. One pass over
     * the signatures: [[sigBands]] explodes each row into its 4 band
     * keys (a union of per-band selects would recompute the whole
     * signature pipeline once per band — 4x the work).
@@ -388,8 +389,9 @@ object Dedup {
     * (exact band join candidate volume = Σ|bucket|², total band rows)
     * at the given banding. One constant-size aggregate — the same
     * integer evidence [[minhashLshAuto]] routes on and the persisted
-    * cluster index's pre-launch density guard refuses on
-    * (PipelineOps.buildClusterIndex).
+    * cluster index's exact build refuses on before committing anything
+    * (PipelineOps.buildClusterIndex with PairSource.Exact; its Auto
+    * route reads the same volume from [[sigBandVolumeDual]]).
     */
   private[operators] def sigBandVolume(sig: DataFrame,
       nBands: Int = 4): (Long, Long) = {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.TextHash
+import graft.plans.{Maintenance, Mor, PartitionSpec, Partitioning, TableIO}
 
 /** Corpus-preparation operators a large-scale training-data pipeline
   * needs beyond dedup/similarity: test-set decontamination, weighted
@@ -774,580 +775,400 @@ object PipelineOps {
   // (bloom/near/BM25/PQ indexes): cluster once into CAS-committed
   // tables, let every downstream consumer read labels.
   //
-  //   {t}_sig   (doc_id, s0..s15)   bucket(doc_id, 8)  append-only
-  //   {t}_pairs (doc_a, doc_b)      bucket(doc_a, 8)   append-only
-  //   {t}_adj   (doc_id, band, key) bucket(doc_id, 8)  delta-committed
-  //             (the ≥2-member-bucket band rows — the scoped
-  //              relabel's adjacency, r19)
-  //   {t}       (doc_id, cluster)   bucket(doc_id, 8)  delta-committed
+  // ONE build/refresh stack. The only variation is where candidate
+  // pairs come from, a private [[Flavour]] the committed state records:
   //
-  // plus cluster-sync.json beside {t}_sig (the four table versions at
-  // the last completed publish — the refresh-atomicity token, r19).
-  // Signatures are the expensive pass (shingle + 16 rehashes over the
-  // corpus) and are never recomputed for existing docs; a refresh
-  // bands only the DELTA against the signature index (disjoint
-  // doc_ids make the appended delta-pairs exactly the rebuild's new
-  // pair set — see Dedup.deltaPairsFromSigs), then brings labels up
-  // to date through the size-routed machinery the capped index
-  // pioneered: small deltas maintain adjacency and labels by MOR
-  // delta commits plus a component-scoped relabel; bulk deltas and
-  // out-of-step state re-propagate over the whole pair table and
-  // REPLACE the snapshot (commitReplacing("overwrite") — reclustering
-  // is content-changing: a new doc can MERGE two old clusters,
-  // relabelling rows a plain append could never touch).
+  //   Exact   {t}_sig   (doc_id, s0..s15)   bucket(doc_id, 8)  append-only
+  //           {t}_pairs (doc_a, doc_b)      bucket(doc_a, 8)   append-only
+  //   Capped  {t}_surv  (doc_id, band, key) bucket(doc_id, 8)  delta-committed
+  //           + cluster-cap.json beside it (cap and band shape — index
+  //             state, not knobs: the survivor key space is the shape's)
+  //   both    {t}_adj   (doc_id, band, key) bucket(doc_id, 8)  delta-committed
+  //             (every ≥2-member-bucket band row — the scoped relabel's
+  //              adjacency)
+  //           {t}       (doc_id, cluster)   bucket(doc_id, 8)  delta-committed
+  //           + cluster-sync.json beside the flavour's state table (the
+  //             table versions at the last completed publish)
   //
-  // DENSITY CAVEAT (r15): the pair table is the EXACT band join
-  // (Dedup.pairsFromSigs) — the refresh-equals-rebuild contract
-  // depends on it (a capped pair set's survivors shift as the corpus
-  // grows, so delta banding could not reproduce a capped rebuild).
-  // On a boilerplate-heavy corpus whose band buckets run deep, the
-  // exact join is quadratic in bucket depth; buildClusterIndex now
-  // REFUSES such a corpus up front (r16 — the guard aggregate runs
-  // before any table is committed) and points at the bounded-work
-  // path: [[buildClusterIndexCapped]], whose per-bucket cap-survivor
-  // state restores the refresh-equals-rebuild contract WITH bounded
-  // work (top-cap by a static per-row rank is a semilattice:
-  // top-cap(A ∪ B) = top-cap(top-cap(A) ∪ B), so persisted survivors
-  // are sufficient state for an incremental fold). Alternatively,
-  // exact-dedup the boilerplate first (Dedup.exact), which restores
-  // shallow buckets and the exact index's full recall.
+  // EXACT pairs are the full band join: full recall, and a disjoint
+  // delta's band join against the full signature set is exactly the
+  // rebuild's new pair set (Dedup.deltaPairsFromSigs) — but the join is
+  // quadratic in bucket depth, so the exact build REFUSES a dense
+  // corpus before committing anything. CAPPED pairs come from the
+  // per-bucket cap survivors, ranked by a STATIC total order (the Knuth
+  // rank of (doc_id, band)); top-k under a static order is a
+  // semilattice, top-cap(A ∪ B) = top-cap(top-cap(A) ∪ B), so
+  // re-capping (touched survivors ∪ delta band rows) reproduces the
+  // union corpus's capped banding bit-for-bit without re-touching old
+  // text, and pair volume stays ≤ buckets × cap² at any density. The
+  // trade is recall past the cap (the ann_recall_eval_capped /
+  // _rebanded and dedup_clusters_recall_eval ledgers).
+  //
+  // Either way signatures are computed once per document. A refresh
+  // folds the delta into the flavour's state, then brings adjacency
+  // and labels up to date by SIZE route: small deltas by MOR delta
+  // commits (appends + one eq-delete file, auto-compacted past
+  // MaxSurvDeleteFiles) plus a component-scoped relabel; bulk deltas
+  // and out-of-step state by a full rebuild of both that REPLACES the
+  // snapshots (commitReplacing("overwrite") — reclustering is
+  // content-changing: a new doc can MERGE two old clusters). Every
+  // route commits readable state bit-identical to a from-scratch build
+  // of the union corpus (ClusterIndexSpec, CappedClusterIndexSpec).
 
-  /** The exact index's density-refusal threshold: the same integer
-    * rule `Dedup.minhashLshAuto` routes on at its defaults
-    * (cap 8 × slack 8) — the exact band join may cost at most 64×
-    * the capped join's bounded candidate volume.
+  /** Where the index's candidate pairs come from. Chosen at build and
+    * recorded in the committed state, so a refresh never takes one.
+    */
+  sealed trait PairSource
+  object PairSource {
+    /** The exact band join: full recall; refuses a dense corpus. */
+    case object Exact extends PairSource
+    /** Per-bucket cap survivors at `nBands` bands of 16/`nBands` rows:
+      * bounded work at any density.
+      */
+    final case class Capped(nBands: Int = 4) extends PairSource
+    /** The density router (the persisted-artifact completion of
+      * `Dedup.minhashLshAuto`): Exact while the exact band join's
+      * measured candidate volume is within [[ClusterIndexGuardCapSlack]]×
+      * the capped bound, else Capped — re-banded to 2×8 iff that shrinks
+      * the volume by ≥ `Dedup.RebandGain` (identical-clone corpora sit
+      * at exactly 0.5 and stay 4×4). The oracle replays the same
+      * integer comparisons, so testdata regeneration cannot
+      * desynchronize route and oracle.
+      */
+    case object Auto extends PairSource
+  }
+
+  /** The exact index's density-refusal threshold, and the auto route's:
+    * the same integer rule `Dedup.minhashLshAuto` routes on at its
+    * defaults (cap 8 × slack 8) — the exact band join may cost at most
+    * 64× the capped join's bounded candidate volume.
     */
   val ClusterIndexGuardCapSlack = 64L
 
-  /** Build the cluster index from scratch. Refuses over an existing
-    * index (fold growth in via [[refreshClusterIndex]]; drop the
-    * tables to rebuild) — the bloom-index lesson: a blind rebuild
-    * would append duplicate signature/pair rows. Also refuses a
-    * DENSE corpus loudly (VERDICT r15 item 8): the pair table is the
-    * exact band join, quadratic in bucket depth, so a corpus whose
-    * measured candidate volume exceeds [[ClusterIndexGuardCapSlack]]×
-    * the capped bound must use [[buildClusterIndexCapped]] (bounded
-    * work, same refresh contract) or be exact-deduped first. The
-    * guard runs BEFORE any table is committed, so a refusal leaves no
-    * half-built index behind.
+  /** Auto-compaction threshold for an index table's accumulated
+    * eq-delete files (one per delta commit).
+    */
+  val MaxSurvDeleteFiles = 8
+
+  /** The size route's threshold: the delta route runs only while the
+    * changed-bucket band rows (old touched rows + delta band rows) are
+    * under 1/8 of the live index band rows — past that, scoped
+    * bookkeeping costs more than the full rebuild it avoids (measured
+    * on the 1M-doc smoke's 1/3-corpus delta: 31.8s scoped vs ~20s full).
+    */
+  val FullRefreshFactor = 8L
+
+  /** One index's address; `t(suffix)` names its `{table}{suffix}` table. */
+  private final case class Ix(root: String, ns: String, table: String) {
+    def t(suffix: String): String = table + suffix
+    def version(suffix: String): Long =
+      TableIO.currentVersion(root, ns, t(suffix))
+    def read(spark: SparkSession, suffix: String): DataFrame =
+      Mor.read(spark, root, ns, t(suffix))
+    def dir(suffix: String): java.nio.file.Path =
+      TableIO.tableDir(root, ns, t(suffix))
+  }
+
+  /** How one index keeps its pair state — everything else in the stack
+    * is shared.
+    */
+  private sealed trait Flavour {
+    /** Band shape of the bucket keys. */
+    def nBands: Int
+    /** Sync-token parts: json key → the table (suffix) whose version it
+      * pins. The token lives beside the first — the flavour's defining
+      * state table, so the two flavours' tokens never shadow each other.
+      */
+    def syncParts: Seq[(String, String)]
+    /** Commit the flavour's state from the corpus signatures (build). */
+    def seed(spark: SparkSession, sigs: DataFrame, ix: Ix): Unit
+    /** The committed (doc_id, band, key) bucket-membership rows. */
+    def bandRows(spark: SparkSession, ix: Ix): DataFrame
+    /** Live committed band rows, from manifest metadata (no scan). */
+    def liveBandRows(ix: Ix): Long
+    /** The pair relation the full relabel propagates over. */
+    def pairs(spark: SparkSession, ix: Ix): DataFrame
+    /** Fold a delta into the flavour's state; returns the touched
+      * buckets' rows after the fold. `touched` holds EVERY old row of
+      * every bucket the delta touches, materialized.
+      */
+    def fold(spark: SparkSession, ix: Ix, deltaSigs: DataFrame,
+        deltaBands: DataFrame, touched: DataFrame, inSync: Boolean): DataFrame
+    /** Repair the flavour's derived state before an out-of-step full
+      * rebuild.
+      */
+    def heal(spark: SparkSession, ix: Ix): Unit
+  }
+
+  private object Flavour {
+    /** Signatures + the exact pair table. The 4×4 shape: its signatures
+      * ARE the full bucket membership, no cap.
+      */
+    case object Exact extends Flavour {
+      val nBands = 4
+      val syncParts = Seq("sig" -> "_sig", "pairs" -> "_pairs",
+        "adj" -> "_adj", "labels" -> "")
+
+      def seed(spark: SparkSession, sigs: DataFrame, ix: Ix): Unit = {
+        commitSnapshot(spark, ix, "_sig", sigs, "doc_id")
+        commitSnapshot(spark, ix, "_pairs",
+          Dedup.pairsFromSigs(ix.read(spark, "_sig")), "doc_a")
+      }
+
+      def bandRows(spark: SparkSession, ix: Ix): DataFrame =
+        Dedup.sigBands(ix.read(spark, "_sig")).select("doc_id", "band", "key")
+
+      def liveBandRows(ix: Ix): Long = nBands * liveRecords(ix, "_sig")
+
+      def pairs(spark: SparkSession, ix: Ix): DataFrame =
+        ix.read(spark, "_pairs")
+
+      def fold(spark: SparkSession, ix: Ix, deltaSigs: DataFrame,
+          deltaBands: DataFrame, touched: DataFrame,
+          inSync: Boolean): DataFrame = {
+        // the PRE-append signature relation: resolved from the manifest
+        // now, so the append below never feeds back into it
+        val old = ix.read(spark, "_sig")
+        Partitioning.appendPartitioned(spark, ix.root, ix.ns, ix.t("_sig"),
+          deltaSigs)
+        // out of step, the heal re-derives the whole pair table instead.
+        // Checkpointed (delta-sized): the emptiness guard and the append
+        // would otherwise each run the band join; an all-unique delta has
+        // NO new pairs, and an empty partitioned append is a malformed
+        // zero-file commit
+        if (inSync) {
+          val deltaPairs = Dedup
+            .deltaPairsFromSigs(deltaSigs, old.unionByName(deltaSigs))
+            .localCheckpoint()
+          if (!deltaPairs.isEmpty)
+            Partitioning.appendPartitioned(spark, ix.root, ix.ns,
+              ix.t("_pairs"), deltaPairs)
+        }
+        // exact bucket membership only grows — no eviction ever
+        touched.unionByName(deltaBands)
+      }
+
+      /** Re-derive the pair table from the committed signatures. A crash
+        * between a refresh's signature and pair appends loses that
+        * delta's pairs forever (every later delta's band join only emits
+        * pairs involving ITS OWN docs), so an out-of-step pair table
+        * cannot be trusted to cover the signatures. Pairs are a pure
+        * function of committed sigs, so the recommitted table is
+        * bit-equal to an uninterrupted append history.
+        */
+      def heal(spark: SparkSession, ix: Ix): Unit = {
+        val pairs = Dedup.pairsFromSigs(ix.read(spark, "_sig"))
+        if (!pairs.isEmpty) commitSnapshot(spark, ix, "_pairs", pairs, "doc_a")
+      }
+    }
+
+    /** Per-bucket cap survivors as the index state. */
+    final case class Capped(cap: Int, nBands: Int) extends Flavour {
+      val syncParts = Seq("surv" -> "_surv", "adj" -> "_adj", "labels" -> "")
+
+      def seed(spark: SparkSession, sigs: DataFrame, ix: Ix): Unit = {
+        commitSnapshot(spark, ix, "_surv", Similarity.capBuckets(
+          Dedup.sigBands(sigs, nBands), "doc_id", cap, lit(0L))
+          .select("doc_id", "band", "key"), "doc_id")
+        java.nio.file.Files.writeString(capFile(ix),
+          s"""{"cap":$cap,"bands":$nBands}""")
+      }
+
+      def bandRows(spark: SparkSession, ix: Ix): DataFrame =
+        ix.read(spark, "_surv").select("doc_id", "band", "key")
+
+      def liveBandRows(ix: Ix): Long = liveRecords(ix, "_surv")
+
+      def pairs(spark: SparkSession, ix: Ix): DataFrame =
+        Similarity.pairsAmongCapped(
+          graft.CacheScope.cached(bandRows(spark, ix)), "doc_a", "doc_b",
+          unordered = true)
+
+      /** Re-cap just the touched buckets against their frozen survivors
+        * (the semilattice fold) and commit the difference as a MOR delta:
+        * append the rows the re-cap ADDED, eq-delete the rows it EVICTED,
+        * one commit at one sequence. (doc_id, band, key) is a key — a doc
+        * holds one key per band — so the anti-joins are exact set
+        * differences; checkpointed once for commitMorDelta's emptiness
+        * probes plus its write.
+        */
+      def fold(spark: SparkSession, ix: Ix, deltaSigs: DataFrame,
+          deltaBands: DataFrame, touched: DataFrame,
+          inSync: Boolean): DataFrame = {
+        val recapped = Similarity.capBuckets(
+          touched.unionByName(deltaBands), "doc_id", cap, lit(0L))
+          .select("doc_id", "band", "key")
+          .localCheckpoint()
+        val keys = Seq("doc_id", "band", "key")
+        commitMorDelta(spark, ix, "_surv",
+          recapped.join(touched, keys, "left_anti").localCheckpoint(),
+          touched.join(recapped, keys, "left_anti").localCheckpoint())
+        recapped
+      }
+
+      /** Nothing to repair: the survivor fold is a pure semilattice
+        * function of the committed survivors.
+        */
+      def heal(spark: SparkSession, ix: Ix): Unit = ()
+    }
+  }
+
+  /** Build the cluster index from scratch, with candidate pairs from
+    * `pairs`. Refuses over any committed index state (fold growth in via
+    * [[refreshClusterIndex]]; drop the tables to rebuild) — the
+    * bloom-index lesson: a blind rebuild would append duplicate rows.
+    * [[PairSource.Exact]] also refuses a DENSE corpus loudly (VERDICT
+    * r15 item 8): its measured candidate volume must stay within
+    * [[ClusterIndexGuardCapSlack]]× the capped bound. Both refusals run
+    * BEFORE any table is committed, so they leave no half-built index.
     */
   def buildClusterIndex(spark: SparkSession, docs: DataFrame, root: String,
-      ns: String, table: String, iters: Int = ClusterIters): Unit = {
-    requireNoExactIndex(root, ns, table)
-    // cached: the guard aggregate and the committed write both read
-    // the signature pass (the corpus-scale shingle+rehash cost)
-    val sigsIn = graft.CacheScope.cached(Dedup.minhashSignatures(docs))
-    val (exactVolume, bandRows) = Dedup.sigBandVolume(sigsIn)
-    require(exactVolume <= bandRows * ClusterIndexGuardCapSlack,
-      s"$ns.$table: this corpus's MinHash band buckets are too deep for " +
-        s"the EXACT pair join (measured candidate volume $exactVolume > " +
-        s"${bandRows * ClusterIndexGuardCapSlack} = band_rows × " +
-        s"$ClusterIndexGuardCapSlack) — build a bounded-work index with " +
-        "buildClusterIndexCapped, or exact-dedup the boilerplate first " +
-        "(Dedup.exact) to restore shallow buckets")
-    buildExactIndexFromSigs(spark, sigsIn, root, ns, table, iters)
+      ns: String, table: String, pairs: PairSource = PairSource.Exact): Unit = {
+    val ix = Ix(root, ns, table)
+    // refused before the corpus-sized work. The survivor table counts
+    // too: an interrupted capped build can leave it committed with no
+    // labels, and an exact build beside it would be MIXED state
+    require(Seq("", "_sig", "_surv").forall(ix.version(_) == 0L),
+      s"$ns.$table already holds committed cluster-index state (a built " +
+        "index, or tables an interrupted build left behind) — fold new " +
+        "docs in with refreshClusterIndex, or drop the index tables to " +
+        "rebuild")
+    val (flavour, sigs) = pairs match {
+      case PairSource.Capped(nBands) =>
+        (Flavour.Capped(Dedup.DefaultCap, nBands),
+          Dedup.minhashSignatures(docs))
+      case routed =>
+        // cached: the guard aggregate and the seed commit both read the
+        // signature pass (the corpus-scale shingle + rehash cost)
+        val sigs = graft.CacheScope.cached(Dedup.minhashSignatures(docs))
+        (densityRoute(routed, sigs, ns, table), sigs)
+    }
+    flavour.seed(spark, sigs, ix)
+    rebuildAdjAndLabels(spark, ix, flavour)
+    writeSyncToken(ix, flavour)
   }
 
-  private def requireNoExactIndex(root: String, ns: String, table: String,
-      refreshHint: String = "refreshClusterIndex"): Unit =
-    require(graft.plans.TableIO.currentVersion(root, ns, table) == 0L &&
-        graft.plans.TableIO.currentVersion(root, ns, s"${table}_sig") == 0L,
-      s"$ns.$table already holds a committed cluster index — fold new " +
-        s"docs in with $refreshHint, or drop the index tables to rebuild")
-
-  /** The exact build's commit phase, guard already passed — shared by
-    * [[buildClusterIndex]] and [[buildClusterIndexAuto]]'s exact
-    * branch so the corpus-wide guard aggregate runs exactly once per
-    * build (r16 review).
+  /** The exact build's refusal, or the auto build's choice, from ONE
+    * guard aggregate over the cached signatures (the auto route reads
+    * both band shapes' volumes in the same pass).
     */
-  private def buildExactIndexFromSigs(spark: SparkSession,
-      sigsIn: DataFrame, root: String, ns: String, table: String,
-      iters: Int): Unit = {
-    import graft.plans.{PartitionSpec, Partitioning}
-    Partitioning.preparePartitioned(spark, root, ns, s"${table}_sig",
-      sigsIn, PartitionSpec("bucket", "doc_id", 8))
-    val sigs = graft.plans.Mor.read(spark, root, ns, s"${table}_sig")
-    Partitioning.preparePartitioned(spark, root, ns, s"${table}_pairs",
-      Dedup.pairsFromSigs(sigs), PartitionSpec("bucket", "doc_a", 8))
-    // adjacency state from the COMMITTED signatures (r19 — the exact
-    // twin of the capped build's adjacency commit): the one
-    // index-sized groupBy, paid at build, so the steady-state refresh
-    // never re-derives bucket occupancy or re-reads the pair table
-    commitAdjFull(spark, root, ns, table,
-      exactBandRows(spark, root, ns, table))
-    relabelClusterIndex(spark, root, ns, table, iters)
-    writeClusterSyncExact(root, ns, table)
-  }
+  private def densityRoute(pairs: PairSource, sigs: DataFrame, ns: String,
+      table: String): Flavour =
+    if (pairs == PairSource.Auto) {
+      val (exactVolume, bandRows, rebandVolume) = Dedup.sigBandVolumeDual(sigs)
+      if (exactVolume <= bandRows * ClusterIndexGuardCapSlack) Flavour.Exact
+      else Flavour.Capped(Dedup.DefaultCap,
+        if (rebandVolume * Dedup.RebandGain <= exactVolume) 2 else 4)
+    } else {
+      val (exactVolume, bandRows) = Dedup.sigBandVolume(sigs)
+      require(exactVolume <= bandRows * ClusterIndexGuardCapSlack,
+        s"$ns.$table: this corpus's MinHash band buckets are too deep for " +
+          s"the EXACT pair join (measured candidate volume $exactVolume > " +
+          s"${bandRows * ClusterIndexGuardCapSlack} = band_rows × " +
+          s"$ClusterIndexGuardCapSlack) — build with pairs = " +
+          "PairSource.Capped() or PairSource.Auto for bounded work, or " +
+          "exact-dedup the boilerplate first (Dedup.exact) to restore " +
+          "shallow buckets")
+      Flavour.Exact
+    }
 
-  /** Fold a delta corpus (disjoint doc_ids) into the index: append its
-    * signatures, append its band-join pairs against the full signature
-    * set, then bring adjacency and labels up to date — SIZE-ROUTED
-    * like the capped refresh (r19, VERDICT r18 item 1: until then
-    * every exact refresh re-propagated ALL pairs and full-replaced the
-    * label snapshot, an index-sized floor on the branch sparse corpora
-    * — the common case — actually route to). Both routes commit
-    * bit-identical readable state (pinned by ClusterIndexSpec):
+  /** Fold a delta corpus (doc_ids disjoint from the index's) into the
+    * index, in the flavour its committed state records. Steps, in order:
     *
-    *  - DELTA branch (small deltas — the steady state): the committed
-    *    `{t}_adj` bucket-adjacency state is maintained by a MOR delta
-    *    commit (the touched buckets' current ≥2-member band rows
-    *    appended, their old multi-member rows eq-deleted — membership
-    *    only grows under the exact index, so both sides are
-    *    delta-bucket-sized), then the SAME component-scoped relabel
-    *    the capped branch uses ([[relabelClusterIndexScoped]]): seeds
-    *    = the touched buckets' members, 2·iters-hop ball through the
-    *    adjacency, fresh labels delta-committed via
-    *    [[publishLabelsDelta]]. The pair table is WRITTEN (the delta
-    *    band join's append) but never read, and no plan touches the
-    *    old label snapshot — the steady-state refresh carries no
-    *    index-sized relabel term.
-    *  - FULL branch (bulk deltas, legacy/out-of-step state): rebuild
-    *    the adjacency from the committed signatures and re-propagate
-    *    over the whole pair table — the pre-r19 path, also the
-    *    healing fallback the [[clusterInSyncExact]] token routes to.
+    *  1. no-op guard — an empty delta (a change-feed refresher's idle
+    *     tick) commits nothing and moves no table version;
+    *  2. the flavour's fold: Exact appends the delta's signatures and
+    *     its band-join pairs against the full signature set; Capped
+    *     re-caps the touched buckets and MOR-commits the survivor diff;
+    *  3. the size route: changed band rows × [[FullRefreshFactor]] ≥
+    *     live index band rows takes the full rebuild (pure economics —
+    *     both routes commit bit-identical readable state);
+    *  4. DELTA route: the touched buckets' ≥2-member rows replace their
+    *     old multi-member rows in `{t}_adj` by a MOR delta commit, then
+    *     the component-scoped relabel ([[relabelScoped]]). Pairs arise
+    *     only in multi-member buckets, so the pair set — and with it
+    *     every label — is a function of the adjacency: an unchanged
+    *     adjacency skips both commits. FULL route (bulk deltas, and
+    *     out-of-step state after the flavour's heal): adjacency and
+    *     labels rebuilt from committed state;
+    *  5. the sync token.
     *
-    * Bit-identical to a from-scratch rebuild on the union corpus
-    * either way: the appended pair SET equals the rebuild's, exact
-    * bucket membership only ever grows (no evictions), so every
-    * changed edge has both endpoints among the touched buckets'
-    * members and the capped branch's locality argument transfers
-    * verbatim — with the committed pair set restricted to the ball
-    * equal to the adjacency self-join restricted to the ball (pairs
-    * arise only in multi-member buckets, and `{t}_adj` holds ALL
-    * multi-member band rows).
+    * The delta route never reads the pair table or the label snapshot
+    * (plan-pinned by both index specs). Refuses a root without a
+    * committed index, and MIXED state an interrupted build left behind.
     */
-  def refreshClusterIndex(spark: SparkSession, delta: DataFrame, root: String,
-      ns: String, table: String, iters: Int = ClusterIters): Unit = {
-    import graft.plans.{Partitioning, TableIO}
-    // cached: referenced by the signature append, the delta band join,
-    // and the scoped relabel's seeds — one shingle pass over the delta
+  def refreshClusterIndex(spark: SparkSession, delta: DataFrame,
+      root: String, ns: String, table: String): Unit = {
+    val ix = Ix(root, ns, table)
+    val flavour = committedFlavour(ix)
+    // cached: read by the fold, the touched-bucket keys, and the scoped
+    // relabel's seeds — one shingle pass over the delta
     val deltaSigs = graft.CacheScope.cached(Dedup.minhashSignatures(delta))
-    // no-op guard (the r18 no-op-delta discipline): an empty delta —
-    // a change-feed refresher's idle tick — commits nothing and moves
-    // no table version
     if (deltaSigs.isEmpty) return
-    // refresh-atomicity check: read BEFORE any commit (the token
-    // records the versions the last COMPLETED publish left behind);
-    // legacy pre-r19 indexes have no token (and no adjacency table)
-    // and heal forward through [[healExactIndex]]
-    val inSync = clusterInSyncExact(root, ns, table)
-    // LIVE pre-delta rows from manifest metadata (no scan; the
-    // signature table is append-only, so data record counts are live)
-    val sigRowsBefore = TableIO.readManifest(root, ns, s"${table}_sig")
-      .filter(_.content == "data").map(_.recordCount).sum
-    // the PRE-append signature relation: resolved from the manifest
-    // now, so the appends below never feed back into it; the delta
-    // side of the union comes from the cache, not a re-shingle
-    val old = graft.plans.Mor.read(spark, root, ns, s"${table}_sig")
-    Partitioning.appendPartitioned(spark, root, ns, s"${table}_sig",
-      deltaSigs)
-    if (!inSync) {
-      // OUT-OF-STEP heal (r19 review): the committed pair table cannot
-      // be trusted to COVER the committed signatures — a crash between
-      // an earlier refresh's signature append and its pair append
-      // loses that delta's pairs forever, because every later delta's
-      // band join only emits pairs involving ITS OWN docs. A full
-      // relabel over such a pair table would silently drop merges, so
-      // the heal re-derives the whole pair set from the signatures
-      // (pairs are a pure function of committed sigs — bit-equal to
-      // an uninterrupted append history) before rebuilding adjacency
-      // and labels. Build-priced, but only on the exceptional path.
-      healExactIndex(spark, root, ns, table, iters)
-      writeClusterSyncExact(root, ns, table)
-      return
-    }
-    // checkpointed (delta-sized): the emptiness guard and the append
-    // would otherwise each run the band join; an all-unique delta has
-    // NO new pairs, and an empty partitioned append is a malformed
-    // zero-file commit, so it is skipped — the pair set is unchanged,
-    // exactly the rebuild's
-    val deltaPairs = Dedup
-      .deltaPairsFromSigs(deltaSigs, old.unionByName(deltaSigs))
-      .localCheckpoint()
-    if (!deltaPairs.isEmpty)
-      Partitioning.appendPartitioned(spark, root, ns, s"${table}_pairs",
-        deltaPairs)
-    val deltaBands = Dedup.sigBands(deltaSigs)
+    // read BEFORE any commit: the token pins the versions the last
+    // COMPLETED publish left behind, so a mismatch means an interrupted
+    // refresh, external maintenance or a legacy index — scoped
+    // maintenance would fold against out-of-step state
+    val inSync = syncTokenMatches(ix, flavour)
+    val deltaBands = Dedup.sigBands(deltaSigs, flavour.nBands)
       .select("doc_id", "band", "key")
-    val touchedKeys = deltaBands.select("band", "key").distinct()
-    // touched-bucket OLD band rows, materialized: read by the route
-    // count, the adjacency delta, and the scoped relabel — and the
-    // checkpoint cuts the signature-scan plan out of everything
-    // downstream (the scoped relabel's contract expects it)
-    val touched = Dedup.sigBands(old).select("doc_id", "band", "key")
-      .join(touchedKeys, Seq("band", "key"), "left_semi")
+    val liveRows = flavour.liveBandRows(ix)
+    // touched-bucket OLD rows, materialized before the fold commits:
+    // read by the fold, the route count, the adjacency delta and the
+    // scoped relabel — and the checkpoint cuts the scan plans out of
+    // everything downstream
+    val touched = flavour.bandRows(spark, ix)
+      .join(deltaBands.select("band", "key").distinct(), Seq("band", "key"),
+        "left_semi")
       .localCheckpoint()
-    val changedRows = touched.count() + deltaBands.count()
-    if (changedRows * FullRefreshFactor >= 4L * sigRowsBefore) {
-      commitAdjFull(spark, root, ns, table,
-        exactBandRows(spark, root, ns, table))
-      relabelClusterIndex(spark, root, ns, table, iters)
-    } else {
-      // adjacency delta: the touched buckets' current ≥2-member rows
-      // replace their old multi-member rows. adjFromSurv over the
-      // touched slice is exact because `touched` holds EVERY old row
-      // of every touched bucket (and no eviction ever removes one).
-      // Checkpointed once for commitMorDelta's probe-plus-write, like
-      // the capped branch's arguments.
-      val adjAdds = adjFromSurv(touched.unionByName(deltaBands))
-        .localCheckpoint()
-      if (!adjAdds.isEmpty) {
-        commitMorDelta(spark, root, ns, s"${table}_adj", adjAdds,
-          adjFromSurv(touched).localCheckpoint())
-        relabelClusterIndexScoped(spark, root, ns, table, iters,
-          deltaBands, touched)
+    val fresh = flavour.fold(spark, ix, deltaSigs, deltaBands, touched, inSync)
+    if (!inSync) flavour.heal(spark, ix)
+    if (!inSync ||
+        (touched.count() + deltaBands.count()) * FullRefreshFactor >= liveRows)
+      rebuildAdjAndLabels(spark, ix, flavour)
+    else {
+      // delta-sized, checkpointed once for the comparison and
+      // commitMorDelta's probe-plus-write. The delete keys are FULL rows,
+      // so every key carries the partition-source column and
+      // Maintenance.compactDeletes can scope its fold
+      val adjAdds = adjFromSurv(fresh).localCheckpoint()
+      val adjDels = adjFromSurv(touched).localCheckpoint()
+      if (!(adjAdds.exceptAll(adjDels).isEmpty &&
+          adjDels.exceptAll(adjAdds).isEmpty)) {
+        commitMorDelta(spark, ix, "_adj", adjAdds, adjDels)
+        relabelScoped(spark, ix, deltaBands, touched)
       }
-      // adjAdds empty: no touched bucket reaches 2 members even WITH
-      // the delta, so the delta produced no pairs and no label can
-      // change — skip the no-op commits (the appended pair delta was
-      // empty for the same reason)
     }
-    writeClusterSyncExact(root, ns, table)
+    writeSyncToken(ix, flavour)
   }
 
-  /** The exact index's out-of-step repair: re-derive the pair table
-    * from the committed signatures (replace commit; initial commit
-    * when healing an interrupted build that never published pairs),
-    * rebuild the adjacency, and relabel in full. The pair set is a
-    * pure function of the committed signatures ([[Dedup
-    * .pairsFromSigs]]), so the recommitted table is bit-equal to an
-    * uninterrupted append history — including the pairs a crashed
-    * refresh's lost append never landed.
+  /** The flavour a committed index records: cluster-cap.json marks the
+    * capped state. The marker is cross-checked against the committed
+    * table versions (r16 advice) — a marker without survivors, exact
+    * signatures beside a marker, or survivors without one is MIXED
+    * state from an interrupted build, refused instead of refreshed.
     */
-  private def healExactIndex(spark: SparkSession, root: String, ns: String,
-      table: String, iters: Int): Unit = {
-    import graft.plans.{PartitionSpec, Partitioning, TableIO}
-    val pairs = Dedup.pairsFromSigs(
-      graft.plans.Mor.read(spark, root, ns, s"${table}_sig"))
-    if (TableIO.currentVersion(root, ns, s"${table}_pairs") == 0L) {
-      // interrupted BUILD: no pair snapshot was ever published
-      if (!pairs.isEmpty)
-        Partitioning.preparePartitioned(spark, root, ns, s"${table}_pairs",
-          pairs, PartitionSpec("bucket", "doc_a", 8))
-    } else {
-      val spec = Partitioning.readSpec(root, ns, s"${table}_pairs")
-        .getOrElse(throw new IllegalStateException(
-          s"$ns.${table}_pairs has no partition spec"))
-      val entries =
-        if (pairs.isEmpty) Nil
-        else Partitioning.writePartitioned(spark, root, ns,
-          s"${table}_pairs", pairs, spec,
-          seq = TableIO.nextSeq(root, ns, s"${table}_pairs"))
-      TableIO.commitReplacing(root, ns, s"${table}_pairs",
-        TableIO.readManifest(root, ns, s"${table}_pairs")
-          .filter(_.content == TableIO.PropsContent) ++ entries,
-        operation = Some("overwrite"))
-    }
-    commitAdjFull(spark, root, ns, table,
-      exactBandRows(spark, root, ns, table))
-    relabelClusterIndex(spark, root, ns, table, iters)
-  }
-
-  /** Re-run propagation over the committed pair table and publish the
-    * label snapshot — initial commit when no snapshot exists (build,
-    * or a fallback healing an interrupted build), replacing commit
-    * (with the "overwrite" changelog marker) otherwise.
-    */
-  private def relabelClusterIndex(spark: SparkSession, root: String,
-      ns: String, table: String, iters: Int): Unit = {
-    val pairs = graft.CacheScope.cached(
-      graft.plans.Mor.read(spark, root, ns, s"${table}_pairs"))
-    publishLabels(spark, root, ns, table, labelPropagation(pairs, iters),
-      replace = graft.plans.TableIO.currentVersion(root, ns, table) > 0L)
-  }
-
-  /** Shared label-snapshot publish: initial partitioned commit on
-    * build, replacing commit (content-changing "overwrite" marker) on
-    * refresh — a new doc can MERGE clusters, relabelling rows a plain
-    * append could never touch.
-    */
-  private def publishLabels(spark: SparkSession, root: String, ns: String,
-      table: String, labels: DataFrame, replace: Boolean): Unit = {
-    import graft.plans.{PartitionSpec, Partitioning, TableIO}
-    if (!replace)
-      Partitioning.preparePartitioned(spark, root, ns, table, labels,
-        PartitionSpec("bucket", "doc_id", 8))
+  private def committedFlavour(ix: Ix): Flavour = {
+    val hasMarker = java.nio.file.Files.isRegularFile(capFile(ix))
+    val survV = ix.version("_surv")
+    val sigV = ix.version("_sig")
+    require(if (hasMarker) survV > 0L && sigV == 0L else survV == 0L,
+      s"${ix.ns}.${ix.table} is in MIXED cluster-index state (capped " +
+        s"marker: $hasMarker, surv version: $survV, sig version: $sigV) — " +
+        "an interrupted build left inconsistent tables; drop the index " +
+        "tables and rebuild")
+    require(hasMarker || sigV > 0L,
+      s"${ix.ns}.${ix.table} holds no committed cluster index — build one " +
+        "with buildClusterIndex")
+    if (!hasMarker) Flavour.Exact
     else {
-      val spec = Partitioning.readSpec(root, ns, table).getOrElse(
-        throw new IllegalStateException(s"$ns.$table has no partition spec"))
-      val entries = Partitioning.writePartitioned(spark, root, ns, table,
-        labels, spec, seq = TableIO.nextSeq(root, ns, table))
-      TableIO.commitReplacing(root, ns, table, entries,
-        operation = Some("overwrite"))
+      val (cap, nBands) = readClusterCap(ix.root, ix.ns, ix.table)
+      Flavour.Capped(cap, nBands)
     }
   }
 
-  /** DELTA label publish (r18, VERDICT r17 item 1): the scoped relabel
-    * computes exactly the changed rows, so the label table gets the
-    * same MOR maintenance the survivor table got in r17 — append the
-    * ball's fresh label rows + ONE eq-delete file (doc_id-keyed) for
-    * the relabel set, in one CAS commit at one sequence. The
-    * strictly-lower-seq gate makes the folded read equal the old
-    * full-replace row-for-row: every pre-refresh row of a relabeled
-    * doc dies, every same-commit append survives, every row outside
-    * the relabel set is untouched — which is precisely
-    * `old ∖ relabel ∪ fresh⋂relabel`, the r17 replace expression.
-    * This removes the last index-sized write from the steady-state
-    * refresh (the replace re-wrote ALL labels per delta). Delete
-    * files accumulate one per refresh and fold away past
-    * [[MaxSurvDeleteFiles]], same policy as the survivors.
-    */
-  private def publishLabelsDelta(spark: SparkSession, root: String,
-      ns: String, table: String, fresh: DataFrame,
-      relabel: DataFrame): Unit =
-    commitMorDelta(spark, root, ns, table, fresh, relabel.select("doc_id"))
-
-  /** ONE copy of the index-maintenance MOR delta commit the three
-    * cluster-index tables share (r18 review: the shape was pasted
-    * three times, with the empty-guards already diverging): append
-    * `adds` under the table's partition spec + one eq-delete file of
-    * `deleteKeys` (whose OWN columns are the equality-identifier set —
-    * full rows for the survivors and the adjacency, doc_id for labels;
-    * since r19 every key set carries doc_id so the delete-scoped
-    * compaction below can partition-scope its folds), all at one
-    * sequence in one CAS commit; then fold
-    * accumulated delete files past [[MaxSurvDeleteFiles]]. Both sides
-    * are guarded on emptiness — an empty append avoids a zero-file
-    * partitioned write, an empty delete set avoids committing (and
-    * eventually compacting away) zero-row delete files — so a no-op
-    * delta leaves the table version untouched. Callers must pass
-    * MATERIALIZED (checkpointed/cached) relations: the emptiness probe
-    * and the write each run an action.
-    */
-  private def commitMorDelta(spark: SparkSession, root: String, ns: String,
-      table: String, adds: DataFrame, deleteKeys: DataFrame): Unit = {
-    import graft.plans.{Maintenance, Partitioning, TableIO}
-    val spec = Partitioning.readSpec(root, ns, table).getOrElse(
-      throw new IllegalStateException(s"$ns.$table has no partition spec"))
-    val seq = TableIO.nextSeq(root, ns, table)
-    val dataEntries =
-      if (adds.isEmpty) Nil
-      else Partitioning.writePartitioned(spark, root, ns, table, adds,
-        spec, seq = seq)
-    val delEntries =
-      if (deleteKeys.isEmpty) Nil
-      else Seq(TableIO.writeExactFile(spark, root, ns, table,
-        s"data/eqdel-$seq.parquet", deleteKeys, "eq_delete", seq))
-    val entries = dataEntries ++ delEntries
-    if (entries.nonEmpty) TableIO.commit(root, ns, table, entries)
-    if (TableIO.readManifest(root, ns, table)
-        .count(_.content == "eq_delete") >= MaxSurvDeleteFiles)
-      // DELETE-SCOPED (r19, VERDICT r18 item 2): folds the delete debt
-      // into only the partitions the keys touch — the full-table
-      // rewrite here was the one index-sized term left in the "fully
-      // delta-sized" steady state, an amortized index/8 per refresh
-      Maintenance.compactDeletes(spark, root, ns, table)
-  }
-
-  /** The capped index's bucket-ADJACENCY state `{t}_adj` (r18, VERDICT
-    * r17 item 2): the multi-member-bucket survivor rows — exactly the
-    * relation the scoped relabel used to re-derive per refresh with a
-    * full-index groupBy (`multiKeys`) plus a full-index semi-join. A
-    * bucket's multi-member status changes ONLY when the bucket's
-    * membership changes, and a delta refresh changes membership only
-    * in the touched buckets, so the adjacency is delta-maintainable by
-    * the same MOR commit the survivors use: append the touched
-    * buckets' new ≥2-member rows + one (band, key)-keyed eq-delete
-    * file for ALL touched buckets. The steady-state refresh thereafter
-    * reads adjacency as committed state — no full-index exchange
-    * anywhere in its plan.
-    */
-  private def adjFromSurv(surv: DataFrame): DataFrame = {
-    val multiKeys = surv.groupBy("band", "key")
-      .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      .select("band", "key")
-    surv.join(multiKeys, Seq("band", "key"), "left_semi")
-  }
-
-  /** Full rebuild of the adjacency state from committed index state —
-    * the build path and the bulk/fallback refresh paths of BOTH index
-    * flavors (the delta paths maintain it incrementally). `bandRows`
-    * is the flavor's committed (doc_id, band, key) bucket-membership
-    * relation: the survivor snapshot for the capped index
-    * ([[survBandRows]]), the signature table's band explosion for the
-    * exact index ([[exactBandRows]] — r19, when the exact branch
-    * gained the same delta machinery).
-    */
-  private def commitAdjFull(spark: SparkSession, root: String, ns: String,
-      table: String, bandRows: DataFrame): Unit = {
-    import graft.plans.{PartitionSpec, Partitioning, TableIO}
-    val adj = adjFromSurv(bandRows)
-    if (TableIO.currentVersion(root, ns, s"${table}_adj") == 0L)
-      Partitioning.preparePartitioned(spark, root, ns, s"${table}_adj",
-        adj, PartitionSpec("bucket", "doc_id", 8))
-    else {
-      val spec = Partitioning.readSpec(root, ns, s"${table}_adj").getOrElse(
-        throw new IllegalStateException(
-          s"$ns.${table}_adj has no partition spec"))
-      val entries = Partitioning.writePartitioned(spark, root, ns,
-        s"${table}_adj", adj, spec,
-        seq = TableIO.nextSeq(root, ns, s"${table}_adj"))
-      TableIO.commitReplacing(root, ns, s"${table}_adj", entries,
-        operation = Some("overwrite"))
-    }
-  }
-
-  /** The capped index's committed bucket-membership relation — the
-    * survivor snapshot, the adjacency-rebuild source for
-    * [[commitAdjFull]].
-    */
-  private def survBandRows(spark: SparkSession, root: String, ns: String,
-      table: String): DataFrame =
-    graft.plans.Mor.read(spark, root, ns, s"${table}_surv")
-      .select("doc_id", "band", "key")
-
-  /** The EXACT index's committed bucket-membership relation: the
-    * signature table's band explosion (the exact index is always the
-    * 4×4 shape — its signatures ARE the full membership, no cap).
-    */
-  private def exactBandRows(spark: SparkSession, root: String, ns: String,
-      table: String): DataFrame =
-    Dedup.sigBands(graft.plans.Mor.read(spark, root, ns, s"${table}_sig"))
-      .select("doc_id", "band", "key")
-
-  /** The refresh-atomicity token (r17 ADVICE, medium): a capped-index
-    * refresh commits THREE tables in sequence (survivors, adjacency,
-    * labels) — individually atomic, jointly not. A crash between
-    * commits leaves them out of step, and the r17 scoped relabel
-    * would have preserved the stale label rows outside the next
-    * delta's ball VERBATIM — a silent, persistent refresh-vs-rebuild
-    * divergence. Every completed build/refresh therefore records the
-    * three table versions next to cluster-cap.json; the next refresh
-    * takes the delta-maintenance branch ONLY if the live versions
-    * still match. On any mismatch (interrupted refresh, external
-    * compaction, legacy pre-r18 index) it falls back to rebuilding
-    * the adjacency and relabeling in full from the committed
-    * survivors — always correct, since the survivor fold itself is a
-    * pure semilattice function of committed state.
-    */
-  private def writeClusterSync(root: String, ns: String,
-      table: String): Unit =
-    writeSyncToken(root, ns, s"${table}_surv", cappedSyncParts(table))
-
-  /** True iff the three index tables' live versions match the last
-    * completed publish's token — the delta branch's precondition.
-    */
-  private def clusterInSync(root: String, ns: String,
-      table: String): Boolean =
-    syncTokenMatches(root, ns, s"${table}_surv", cappedSyncParts(table))
-
-  /** The EXACT index's twin of the capped refresh-atomicity token
-    * (r19, VERDICT r18 item 1): its refresh commits FOUR tables in
-    * sequence (signatures, pairs, adjacency, labels), so the same
-    * crash-between-commits window exists and gets the same medicine —
-    * record the versions at each completed publish beside the
-    * signature table; take the delta-maintenance branch only when the
-    * live versions still match, else run [[healExactIndex]]: the pair
-    * table is RE-DERIVED from the committed signatures (a crash
-    * between a refresh's signature and pair appends loses that
-    * delta's pairs forever — later deltas' band joins never re-emit
-    * them — so the pair table itself cannot be trusted out of step),
-    * then adjacency and labels rebuild in full. Always correct:
-    * signatures are append-only facts and everything else is a pure
-    * function of them. A legacy pre-r19 exact index has no token
-    * (and no adjacency table) — it heals forward through the same
-    * repair on its first refresh.
-    */
-  private def writeClusterSyncExact(root: String, ns: String,
-      table: String): Unit =
-    writeSyncToken(root, ns, s"${table}_sig", exactSyncParts(table))
-
-  private def clusterInSyncExact(root: String, ns: String,
-      table: String): Boolean =
-    syncTokenMatches(root, ns, s"${table}_sig", exactSyncParts(table))
-
-  private def cappedSyncParts(table: String): Seq[(String, String)] =
-    Seq("surv" -> s"${table}_surv", "adj" -> s"${table}_adj",
-      "labels" -> table)
-
-  private def exactSyncParts(table: String): Seq[(String, String)] =
-    Seq("sig" -> s"${table}_sig", "pairs" -> s"${table}_pairs",
-      "adj" -> s"${table}_adj", "labels" -> table)
-
-  /** ONE copy of the token write/check shape both flavors share:
-    * `parts` maps each json key to the table whose version it pins;
-    * the token lives beside `homeTable` (the flavor's defining state
-    * table, so the two flavors' tokens can never shadow each other).
-    */
-  private def writeSyncToken(root: String, ns: String, homeTable: String,
-      parts: Seq[(String, String)]): Unit = {
-    import graft.plans.TableIO
-    val body = parts.map { case (k, t) =>
-      s""""$k":${TableIO.currentVersion(root, ns, t)}""" }
-      .mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      TableIO.tableDir(root, ns, homeTable).resolve("cluster-sync.json"),
-      body)
-  }
-
-  private def syncTokenMatches(root: String, ns: String, homeTable: String,
-      parts: Seq[(String, String)]): Boolean = {
-    import graft.plans.TableIO
-    val f = TableIO.tableDir(root, ns, homeTable)
-      .resolve("cluster-sync.json")
-    java.nio.file.Files.isRegularFile(f) && {
-      val body = java.nio.file.Files.readString(f)
-      def recorded(k: String): Option[Long] =
-        s""""$k":(\\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
-      parts.forall { case (k, t) =>
-        recorded(k).contains(TableIO.currentVersion(root, ns, t)) }
-    }
-  }
-
-  // --- CAPPED cluster index: the dense-corpus scale path (r16) ----------
-  // VERDICT r15 item 1: the exact index above gives dense corpora
-  // EITHER incremental refresh OR bounded work, never both. The capped
-  // index gives both by persisting the per-bucket CAP SURVIVORS as
-  // index state instead of full signatures:
-  //
-  //   {t}_surv (doc_id, band, key)  bucket(doc_id, 8)  delta-committed
-  //   {t}_adj  (doc_id, band, key)  bucket(doc_id, 8)  delta-committed
-  //            (the ≥2-member-bucket survivor rows — the scoped
-  //             relabel's adjacency, r18)
-  //   {t}      (doc_id, cluster)    bucket(doc_id, 8)  delta-committed
-  //
-  // plus two marker files beside {t}_surv: cluster-cap.json (cap and
-  // band shape — index state, not knobs) and cluster-sync.json (the
-  // three table versions at the last completed publish — the
-  // refresh-atomicity token). Small deltas maintain all three tables
-  // by MOR delta commits (appends + one eq-delete file, auto-compacted
-  // past MaxSurvDeleteFiles); bulk deltas and out-of-step state take
-  // the full-rewrite path.
-  //
-  // Why survivors are sufficient state: capBuckets keeps the top-`cap`
-  // rows per (band, key) under a STATIC total order (the Knuth rank is
-  // a pure function of (doc_id, band); ties on doc_id) — and top-k
-  // under a static total order is a semilattice,
-  //   top-cap(A ∪ B) = top-cap(top-cap(A) ∪ B),
-  // so re-capping (old survivors ∪ delta band rows) reproduces the
-  // from-scratch capped banding of the union corpus BIT-FOR-BIT,
-  // without ever re-touching old documents' text. A refresh therefore
-  // costs: the delta's shingle pass, one window over (touched-bucket
-  // survivors ∪ delta rows) — untouched buckets keep their frozen
-  // survivors verbatim — and a label propagation over the survivor
-  // self-join, whose pair volume is ≤ buckets × cap² by construction.
-  // The survivor and label snapshots are both index-sized (≤ 4 band
-  // rows per doc, ≤ cap per bucket), far smaller than the corpus, so
-  // their replace commits are cheap at any scale.
-  //
-  // TRADE vs the exact index: recall. The capped pair set is the exact
-  // set on corpora whose buckets are at or under the cap (spec-pinned
-  // equivalence); past the cap it keeps a bounded survivor clique per
-  // bucket — the measured loss and its re-banding mitigation live in
-  // the ann_recall_eval_capped / _rebanded ledger rows.
-
-  /** The cap AND the band shape are INDEX state, not per-call knobs:
-    * chosen at build, recorded next to the survivor table, replayed
-    * by every refresh — a refresh under a different cap or banding
-    * would silently break the refresh-equals-rebuild contract (the
-    * survivor rows' (band, key) space is defined by the shape).
-    */
-  private def writeClusterCap(root: String, ns: String, table: String,
-      cap: Int, nBands: Int): Unit =
-    java.nio.file.Files.writeString(
-      graft.plans.TableIO.tableDir(root, ns, s"${table}_surv")
-        .resolve("cluster-cap.json"),
-      s"""{"cap":$cap,"bands":$nBands}""")
+  private def capFile(ix: Ix): java.nio.file.Path =
+    ix.dir("_surv").resolve("cluster-cap.json")
 
   /** (cap, nBands) of a committed capped index. Pre-r17 marker files
     * carry no "bands" field — those indexes were all built at the
@@ -1355,11 +1176,10 @@ object PipelineOps {
     */
   private[graft] def readClusterCap(root: String, ns: String,
       table: String): (Int, Int) = {
-    val f = graft.plans.TableIO.tableDir(root, ns, s"${table}_surv")
-      .resolve("cluster-cap.json")
+    val f = capFile(Ix(root, ns, table))
     require(java.nio.file.Files.isRegularFile(f),
       s"$ns.${table}_surv has no cluster-cap.json — not a capped cluster " +
-        "index (exact indexes refresh via refreshClusterIndex)")
+        "index")
     val body = java.nio.file.Files.readString(f)
     val cap = """"cap":(\d+)""".r.findFirstMatchIn(body).map(_.group(1).toInt)
       .getOrElse(throw new IllegalArgumentException(
@@ -1369,239 +1189,160 @@ object PipelineOps {
     (cap, nBands)
   }
 
-  /** Build the CAPPED cluster index from scratch: per-bucket cap
-    * survivors of the corpus's MinHash band rows, committed as the
-    * index state, then labels propagated over the survivor self-join.
-    * Bounded work on ANY corpus density (pair volume ≤ buckets × cap²)
-    * — the production path [[buildClusterIndex]]'s density guard
-    * points at. Refuses over an existing index, like the exact build.
+  /** Live rows of an index table from manifest metadata: every eq-delete
+    * row kills exactly one committed row (survivor evictions ⊆ committed
+    * survivors), so live = data − deleted. Summing data rows alone would
+    * overstate a churn-heavy index by its historical evictions and let
+    * the size route drift from the measured crossover.
     */
-  def buildClusterIndexCapped(spark: SparkSession, docs: DataFrame,
-      root: String, ns: String, table: String, cap: Int = 8,
-      iters: Int = ClusterIters, nBands: Int = 4): Unit =
-    buildCappedIndexFromSigs(spark, Dedup.minhashSignatures(docs), root,
-      ns, table, cap, nBands, iters)
-
-  /** The capped build over an already-computed signature relation —
-    * [[buildClusterIndexAuto]]'s capped branch hands its cached guard
-    * signatures here EXPLICITLY (r16 advice: reuse via CacheManager
-    * plan-matching was fragile to any divergence in how the two plans
-    * were built), the twin of [[buildExactIndexFromSigs]]. `nBands`
-    * becomes index state (see [[readClusterCap]]).
-    */
-  private def buildCappedIndexFromSigs(spark: SparkSession,
-      sigsIn: DataFrame, root: String, ns: String, table: String,
-      cap: Int, nBands: Int, iters: Int): Unit = {
-    import graft.plans.{PartitionSpec, Partitioning, TableIO}
-    require(cap >= 1, s"cap must be >= 1, got $cap")
-    require(TableIO.currentVersion(root, ns, table) == 0L &&
-        TableIO.currentVersion(root, ns, s"${table}_surv") == 0L,
-      s"$ns.$table already holds a committed cluster index — fold new " +
-        "docs in with refreshClusterIndexCapped, or drop the index " +
-        "tables to rebuild")
-    val surv = Similarity.capBuckets(
-      Dedup.sigBands(sigsIn, nBands), "doc_id", cap, lit(0L))
-      .select("doc_id", "band", "key")
-    Partitioning.preparePartitioned(spark, root, ns, s"${table}_surv",
-      surv, PartitionSpec("bucket", "doc_id", 8))
-    writeClusterCap(root, ns, table, cap, nBands)
-    // adjacency state from the COMMITTED survivors (not a recompute of
-    // the shingle pipeline) — the one index-sized groupBy, paid at
-    // build where it belongs, so no refresh ever re-derives it
-    commitAdjFull(spark, root, ns, table,
-      survBandRows(spark, root, ns, table))
-    relabelClusterIndexCapped(spark, root, ns, table, iters)
-    writeClusterSync(root, ns, table)
+  private def liveRecords(ix: Ix, suffix: String): Long = {
+    val m = TableIO.readManifest(ix.root, ix.ns, ix.t(suffix))
+    m.filter(_.content == "data").map(_.recordCount).sum -
+      m.filter(_.content == "eq_delete").map(_.recordCount).sum
   }
 
-  /** Fold a delta corpus (disjoint doc_ids — same contract as
-    * [[refreshClusterIndex]]) into the capped index: band the DELTA
-    * only, re-cap just the buckets the delta touches against their
-    * frozen survivors (the semilattice fold — see the block comment
-    * above), REPLACE the survivor snapshot, and re-propagate labels.
-    * Bit-identical to [[buildClusterIndexCapped]] on the union corpus
-    * (pinned by CappedClusterIndexSpec).
+  /** Adjacency and labels rebuilt from the flavour's committed state —
+    * build, bulk refreshes and the out-of-step heal. The adjacency
+    * rebuild is the one index-sized groupBy, paid here so the delta
+    * route never re-derives bucket occupancy.
     */
-  def refreshClusterIndexCapped(spark: SparkSession, delta: DataFrame,
-      root: String, ns: String, table: String,
-      iters: Int = ClusterIters): Unit = {
-    import graft.plans.{Partitioning, TableIO}
-    // cap AND band shape come from the index itself — a delta banded
-    // at a different shape could never fold into the survivor space
-    val (cap, nBands) = readClusterCap(root, ns, table)
-    // cached: read by the touched-bucket semi-join key set and the
-    // re-cap union — one shingle pass over the delta, not two
-    val deltaBands = graft.CacheScope.cached(
-      Dedup.sigBands(Dedup.minhashSignatures(delta), nBands)
-        .select("doc_id", "band", "key"))
-    val old = graft.plans.Mor.read(spark, root, ns, s"${table}_surv")
-      .select("doc_id", "band", "key")
-    val touchedKeys = deltaBands.select("band", "key").distinct()
-    // touched-bucket OLD survivors, materialized (delta-bucket-sized):
-    // read three ways below (re-cap union, survivor diff, scoped
-    // relabel adjacency) and the checkpoint also cuts the
-    // shingle-pipeline plan out of everything downstream
-    val touched = old.join(touchedKeys, Seq("band", "key"), "left_semi")
-      .localCheckpoint()
-    val recapped = Similarity.capBuckets(
-      touched.unionByName(deltaBands), "doc_id", cap, lit(0L))
-      .select("doc_id", "band", "key")
-      .localCheckpoint()
-    // SIZE-ROUTED refresh (r17): both branches commit bit-identical
-    // readable state, so the route is pure economics, decided from
-    // numbers already in hand (two checkpointed row counts + the
-    // manifest's metadata record counts — no extra scan).
-    //  - DELTA branch (small deltas — the steady state): survivor
-    //    state maintained by DELTA COMMIT — append the rows the
-    //    re-cap ADDED, equality-delete the rows it EVICTED (both
-    //    delta-bucket-sized), one CAS commit at one sequence.
-    //    Eq-deletes apply to strictly-lower sequences (Mor.read's
-    //    Iceberg-v2 gate), so same-commit appends are untouched and
-    //    the folded read equals a full rewrite row-for-row.
-    //    (doc_id, band, key) is a key — a doc holds one key per band
-    //    — so the anti-joins are exact set differences. Labels then
-    //    relabel component-scoped. Delete files accumulate one per
-    //    refresh; Maintenance.compact folds them. Removed the r16
-    //    index-sized floor: 13.4s → 8.1s at the 1M-doc smoke's
-    //    1%-delta, and the gap grows with the index:delta ratio.
-    //  - FULL branch (bulk deltas): when the changed-bucket volume is
-    //    within [[FullRefreshFactor]]× of the whole index, the scoped
-    //    machinery costs more than it saves (measured: the 1/3-corpus
-    //    delta ran 31.8s scoped vs ~20s full) — rewrite the snapshot
-    //    and relabel everything, exactly the r16 path.
-    val keys3 = Seq("doc_id", "band", "key")
-    // LIVE rows, not raw data rows (r17 review): every eq-delete row
-    // kills exactly one committed survivor row (removes ⊆ old by
-    // construction), so the live count is the manifest difference —
-    // summing only data recordCounts would overstate a churn-heavy
-    // index by its total historical evictions and let the route
-    // drift ever further from the measured ~1/8 crossover.
-    val survManifest = TableIO.readManifest(root, ns, s"${table}_surv")
-    val indexRows =
-      survManifest.filter(_.content == "data").map(_.recordCount).sum -
-        survManifest.filter(_.content == "eq_delete").map(_.recordCount).sum
-    val changedRows = touched.count() + deltaBands.count()
-    val spec = Partitioning.readSpec(root, ns, s"${table}_surv").getOrElse(
+  private def rebuildAdjAndLabels(spark: SparkSession, ix: Ix,
+      flavour: Flavour): Unit = {
+    commitSnapshot(spark, ix, "_adj", adjFromSurv(flavour.bandRows(spark, ix)),
+      "doc_id")
+    commitSnapshot(spark, ix, "", labelPropagation(
+      graft.CacheScope.cached(flavour.pairs(spark, ix))), "doc_id")
+  }
+
+  /** Publish `df` as the table's whole snapshot: the initial partitioned
+    * commit when none exists (build, or a heal of an interrupted build),
+    * else a replacing commit with the content-changing "overwrite"
+    * marker — decided from committed state, so a heal can never hit a
+    * replace-without-spec failure.
+    */
+  private def commitSnapshot(spark: SparkSession, ix: Ix, suffix: String,
+      df: DataFrame, partCol: String): Unit = {
+    val t = ix.t(suffix)
+    if (ix.version(suffix) == 0L)
+      Partitioning.preparePartitioned(spark, ix.root, ix.ns, t, df,
+        PartitionSpec("bucket", partCol, 8))
+    else TableIO.commitReplacing(ix.root, ix.ns, t,
+      Partitioning.writePartitioned(spark, ix.root, ix.ns, t, df,
+        specOf(ix, suffix), seq = TableIO.nextSeq(ix.root, ix.ns, t)),
+      operation = Some("overwrite"))
+  }
+
+  private def specOf(ix: Ix, suffix: String): PartitionSpec =
+    Partitioning.readSpec(ix.root, ix.ns, ix.t(suffix)).getOrElse(
       throw new IllegalStateException(
-        s"$ns.${table}_surv has no partition spec"))
-    // refresh-atomicity check (r17 ADVICE): read BEFORE any commit —
-    // the token records the versions the last COMPLETED publish left
-    // behind, so any mismatch means interrupted maintenance, external
-    // compaction, or a legacy index; the scoped machinery would then
-    // be folding against out-of-step state
-    val inSync = clusterInSync(root, ns, table)
-    if (changedRows * FullRefreshFactor >= indexRows) {
-      val untouched = old.join(touchedKeys, Seq("band", "key"), "left_anti")
-      val surv = untouched.unionByName(recapped)
-      val entries = Partitioning.writePartitioned(spark, root, ns,
-        s"${table}_surv", surv, spec,
-        seq = TableIO.nextSeq(root, ns, s"${table}_surv"))
-      TableIO.commitReplacing(root, ns, s"${table}_surv", entries,
-        operation = Some("overwrite"))
-      commitAdjFull(spark, root, ns, table,
-        survBandRows(spark, root, ns, table))
-      relabelClusterIndexCapped(spark, root, ns, table, iters)
-    } else {
-      // checkpointed ONCE (r18 ADVICE): commitMorDelta's emptiness
-      // probes plus its write would otherwise re-execute each
-      // unmaterialized anti-join 2-3 times (deterministic over the
-      // checkpointed inputs, so correctness never depended on it —
-      // just redundant delta-sized compute per refresh)
-      val adds = recapped.join(touched, keys3, "left_anti")
-        .localCheckpoint()
-      val removes = touched.join(recapped, keys3, "left_anti")
-        .localCheckpoint()
-      val survChanged = !(adds.isEmpty && removes.isEmpty)
-      // bound the read amplification the delta commits accumulate
-      // (one eq-delete anti-join per refresh on every survivor read):
-      // past the threshold, commitMorDelta folds everything back into
-      // plain data files — index-sized work amortized over that many
-      // refreshes
-      commitMorDelta(spark, root, ns, s"${table}_surv", adds, removes)
-      if (!inSync) {
-        // out-of-step state: the survivor fold above is still exact
-        // (pure function of committed survivors), but adjacency and
-        // labels cannot be trusted for scoped maintenance — rebuild
-        // both in full from the committed survivors
-        commitAdjFull(spark, root, ns, table,
-          survBandRows(spark, root, ns, table))
-        relabelClusterIndexCapped(spark, root, ns, table, iters)
-      } else if (survChanged) {
-        // adjacency delta: the touched buckets' NEW ≥2-member rows
-        // replace their old multi-member rows — delta-bucket-sized
-        // compute and commit, like the survivors. The delete keys are
-        // FULL (doc_id, band, key) rows as of r19 (equivalent to the
-        // earlier (band, key) bucket eviction: the old multi-member
-        // rows ARE everything a bucket key would kill), so every
-        // delete key carries the partition-source column and
-        // Maintenance.compactDeletes can scope the fold to touched
-        // buckets. adjFromSurv over `touched` is exact for the old
-        // side because `touched` holds every old survivor of every
-        // touched bucket. Both checkpointed for the probe-plus-write.
-        commitMorDelta(spark, root, ns, s"${table}_adj",
-          adjFromSurv(recapped).localCheckpoint(),
-          adjFromSurv(touched).localCheckpoint())
-        relabelClusterIndexScoped(spark, root, ns, table, iters,
-          deltaBands, touched)
-      }
-      // survChanged == false with in-step state: the re-cap reproduced
-      // every touched bucket verbatim (an all-evicted or empty delta),
-      // so adjacency and labels already equal the union rebuild's —
-      // skip the no-op commits (r18 review: the adjacency eq-delete
-      // used to commit unconditionally, burning a version + an
-      // eventual compaction per empty refresh)
-    }
-    writeClusterSync(root, ns, table)
+        s"${ix.ns}.${ix.t(suffix)} has no partition spec"))
+
+  /** The index-maintenance MOR delta commit every index table shares:
+    * append `adds` under the table's partition spec + one eq-delete file
+    * of `deleteKeys` (whose OWN columns are the equality-identifier set —
+    * full rows for survivors and adjacency, doc_id for labels; every key
+    * set carries doc_id, so the delete-scoped compaction below can
+    * partition-scope its folds), at one sequence in one CAS commit.
+    * Eq-deletes apply to strictly-lower sequences (Mor.read's Iceberg-v2
+    * gate), so same-commit appends survive and the folded read equals a
+    * full rewrite row-for-row. Both sides are guarded on emptiness, so a
+    * no-op delta leaves the version untouched. Callers pass MATERIALIZED
+    * relations: the emptiness probe and the write each run an action.
+    */
+  private def commitMorDelta(spark: SparkSession, ix: Ix, suffix: String,
+      adds: DataFrame, deleteKeys: DataFrame): Unit = {
+    val t = ix.t(suffix)
+    val seq = TableIO.nextSeq(ix.root, ix.ns, t)
+    val dataEntries =
+      if (adds.isEmpty) Nil
+      else Partitioning.writePartitioned(spark, ix.root, ix.ns, t, adds,
+        specOf(ix, suffix), seq = seq)
+    val delEntries =
+      if (deleteKeys.isEmpty) Nil
+      else Seq(TableIO.writeExactFile(spark, ix.root, ix.ns, t,
+        s"data/eqdel-$seq.parquet", deleteKeys, "eq_delete", seq))
+    val entries = dataEntries ++ delEntries
+    if (entries.nonEmpty) TableIO.commit(ix.root, ix.ns, t, entries)
+    if (TableIO.readManifest(ix.root, ix.ns, t)
+        .count(_.content == "eq_delete") >= MaxSurvDeleteFiles)
+      // DELETE-SCOPED (r19, VERDICT r18 item 2): folds the delete debt
+      // into only the partitions the keys touch — a full-table rewrite
+      // here was the one index-sized term left in the steady state
+      Maintenance.compactDeletes(spark, ix.root, ix.ns, t)
   }
 
-  /** Auto-compaction threshold for the survivor table's accumulated
-    * eq-delete files (one per delta refresh).
+  /** The bucket-ADJACENCY rows of a (doc_id, band, key) relation: those
+    * in ≥2-member buckets. A bucket's multi-member status changes only
+    * when its membership does, and a delta changes membership only in
+    * the touched buckets, so `{t}_adj` is delta-maintainable — the
+    * steady-state refresh reads adjacency as committed state, with no
+    * index-wide exchange anywhere in its plan.
     */
-  val MaxSurvDeleteFiles = 8
+  private def adjFromSurv(surv: DataFrame): DataFrame = {
+    val multiKeys = surv.groupBy("band", "key")
+      .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
+      .select("band", "key")
+    surv.join(multiKeys, Seq("band", "key"), "left_semi")
+  }
 
-  /** The size route's threshold: the delta branch runs only while the
-    * changed-bucket row volume (old touched survivors + delta band
-    * rows) is under 1/8 of the index — past that, scoped bookkeeping
-    * costs more than the full rewrite it avoids (measured on the
-    * 1M-doc smoke's 1/3-corpus delta).
+  /** The refresh-atomicity token (r17 ADVICE, medium): a refresh commits
+    * several tables in sequence — individually atomic, jointly not. A
+    * crash between commits leaves them out of step, and the scoped
+    * relabel would then preserve stale label rows outside the next
+    * delta's ball VERBATIM. Every completed build/refresh therefore
+    * records the flavour's table versions; the next refresh takes the
+    * delta route only if the live versions still match, and otherwise
+    * heals and rebuilds — always correct, since the flavour's defining
+    * state (append-only signatures, or the semilattice survivor fold) is
+    * sound on its own. A legacy index without a token heals forward.
     */
-  val FullRefreshFactor = 8L
+  private def writeSyncToken(ix: Ix, flavour: Flavour): Unit =
+    java.nio.file.Files.writeString(syncFile(ix, flavour),
+      flavour.syncParts.map { case (k, s) => s""""$k":${ix.version(s)}""" }
+        .mkString("{", ",", "}"))
 
-  /** COMPONENT-SCOPED relabel shared by BOTH index flavors' delta
-    * branches (r17 for the capped refresh, VERDICT r16 item 2; r19
-    * for the exact refresh, VERDICT r18 item 1): the full relabel
-    * re-ran the index-wide pair join and re-propagated over ALL pairs
-    * per refresh — an index-sized ~13s floor that made small-delta
-    * refreshes no cheaper than rebuilds. The ONE structural input is
-    * the committed `{t}_adj` bucket-adjacency state, which both
-    * flavors delta-maintain: for the capped index its rows are the
-    * multi-member-bucket SURVIVORS (so the ball pair join reproduces
-    * the capped pair set), for the exact index ALL multi-member band
-    * rows (so it reproduces the exact `pairsFromSigs` set — a pair
-    * exists iff two docs share a bucket, and every such bucket's rows
-    * are in the adjacency).
-    * Labels under the fixed-`iters` propagation are LOCAL:
+  private def syncTokenMatches(ix: Ix, flavour: Flavour): Boolean = {
+    val f = syncFile(ix, flavour)
+    java.nio.file.Files.isRegularFile(f) && {
+      val body = java.nio.file.Files.readString(f)
+      flavour.syncParts.forall { case (k, s) =>
+        s""""$k":(\\d+)""".r.findFirstMatchIn(body).map(_.group(1).toLong)
+          .contains(ix.version(s))
+      }
+    }
+  }
+
+  private def syncFile(ix: Ix, flavour: Flavour): java.nio.file.Path =
+    ix.dir(flavour.syncParts.head._2).resolve("cluster-sync.json")
+
+  /** COMPONENT-SCOPED relabel of the delta route (r17 for the capped
+    * index, VERDICT r16 item 2; r19 for the exact one, VERDICT r18 item
+    * 1): a full relabel re-propagates over ALL pairs per refresh — an
+    * index-sized floor that made small-delta refreshes no cheaper than
+    * rebuilds. The one structural input is the committed `{t}_adj`
+    * adjacency: every multi-member bucket row of the flavour's
+    * membership, so the ball pair join reproduces the flavour's pair set
+    * (a pair exists iff two docs share a bucket).
+    * Labels under the fixed-[[ClusterIters]] propagation are LOCAL:
     * label(v) = min doc_id within `iters` hops of v, so a label can
     * change only for docs within `iters` hops of a changed edge, and
-    * every changed edge (added OR removed by eviction) has both
-    * endpoints among the TOUCHED buckets' members (old survivors +
-    * delta docs — the seeds). The scoped relabel therefore:
+    * every changed edge (added, or removed by eviction) has both
+    * endpoints among the TOUCHED buckets' members (old rows + delta docs
+    * — the seeds). The scoped relabel therefore:
     *   1. expands the seed set 2·iters hops through the bucket
-    *      adjacency (new survivors ∪ old touched rows, so paths
+    *      adjacency (new adjacency ∪ old touched rows, so paths
     *      through removed edges are also covered) — every edge on any
     *      ≤iters-hop path from the relabel set lies inside this ball;
     *   2. recomputes the pair join and propagation ONLY among ball
     *      members (delta-sized, not index-sized);
-    *   3. keeps every label row outside ball(seeds, iters) VERBATIM
-    *      from the committed snapshot.
-    * Bit-identical to the from-scratch relabel by the locality
-    * argument (spec-pinned by CappedClusterIndexSpec and both
-    * DedupScaleSmoke refresh-equals-rebuild checks); the refresh's
-    * propagation cost drops from index-sized to ball-sized.
+    *   3. keeps every label row outside ball(seeds, iters) VERBATIM.
+    * Bit-identical to the from-scratch relabel by the locality argument
+    * (spec-pinned by both index specs and the DedupScaleSmoke
+    * refresh-equals-rebuild checks).
     */
-  private def relabelClusterIndexScoped(spark: SparkSession,
-      root: String, ns: String, table: String, iters: Int,
+  private def relabelScoped(spark: SparkSession, ix: Ix,
       deltaBands: DataFrame, touchedOld: DataFrame): Unit = {
+    val iters = ClusterIters
     // The hop loop below would otherwise embed the shingle-pipeline +
     // Mor-scan plans of its inputs into an ever-growing logical tree
     // that Catalyst re-analyzes and re-optimizes per hop — measured
@@ -1617,20 +1358,17 @@ object PipelineOps {
     val seeds = deltaBands.select("doc_id")
       .union(touchedM.select("doc_id")).distinct()
     // Adjacency: docs sharing a (band, key) bucket — in the NEW
-    // survivor set (added edges) or the old touched rows (removed
+    // membership (added edges) or the old touched rows (removed
     // edges). SINGLETON buckets cannot carry an edge, so the new-side
     // adjacency keeps only multi-member-bucket rows — bounded by
-    // buckets × cap, typically a sliver of the index (on the 1M-doc
-    // boilerplate smoke: ~3k rows of 4M). Since r18 it is COMMITTED
-    // INDEX STATE ({t}_adj, delta-maintained by the caller's MOR
-    // commit), read here as files — the r17 version re-derived it per
-    // refresh with a full-index groupBy + semi-join, the last
-    // index-sized exchange in the steady-state refresh (VERDICT r17
-    // item 2). Docs whose buckets are all singletons are absent from
-    // the adjacency and drop out of the ball harmlessly: they have no
-    // pairs in either graph, hence no label row on any path (their
-    // old rows, if touched, ride touchedM).
-    val adjCore = graft.plans.Mor.read(spark, root, ns, s"${table}_adj")
+    // buckets × cap for the capped index, typically a sliver of the
+    // index (on the 1M-doc boilerplate smoke: ~3k rows of 4M). It is
+    // COMMITTED INDEX STATE ({t}_adj, delta-maintained by the caller's
+    // MOR commit), read here as files. Docs whose buckets are all
+    // singletons are absent from the adjacency and drop out of the
+    // ball harmlessly: they have no pairs in either graph, hence no
+    // label row on any path (their old rows, if touched, ride touchedM).
+    val adjCore = ix.read(spark, "_adj")
       .select("doc_id", "band", "key")
       .localCheckpoint()
     val adj = adjCore.unionByName(touchedM)
@@ -1675,127 +1413,19 @@ object PipelineOps {
     val pairs = graft.CacheScope.cached(
       Similarity.pairsAmongCapped(ballSurv, "doc_a", "doc_b",
         unordered = true))
-    // delta label commit (r18): fresh ball labels appended, relabel-set
-    // doc_ids eq-deleted, one commit — the old labels are never read,
-    // let alone rewritten (the r17 version read ALL old labels,
-    // anti-joined the ball, and full-replaced the snapshot). The ball
-    // labels are checkpointed like every other ball-sized intermediate
-    // here (r18 review): the publish probes emptiness AND writes — two
-    // actions — and an unmaterialized `fresh` would re-run the whole
-    // 3-round ball propagation for each.
+    // DELTA label commit (r18, VERDICT r17 item 1): the ball's fresh
+    // labels appended + ONE doc_id-keyed eq-delete file for the relabel
+    // set, one commit — the old labels are never read, let alone
+    // rewritten; the folded read is `old ∖ relabel ∪ fresh`, the full
+    // replace's result row-for-row. The ball labels are checkpointed
+    // like every other ball-sized intermediate here (r18 review): the
+    // commit probes emptiness AND writes — two actions — and an
+    // unmaterialized `fresh` would re-run the whole 3-round ball
+    // propagation for each.
     val freshBall = labelPropagation(pairs, iters)
       .join(relabelM, Seq("doc_id"), "left_semi")
       .localCheckpoint()
-    publishLabelsDelta(spark, root, ns, table, freshBall, relabelM)
-  }
-
-  /** The density-ROUTED cluster-index entry point — the persisted-
-    * artifact completion of the `Dedup.minhashLshAuto` pattern (r16):
-    * where [[buildClusterIndex]] REFUSES a dense corpus, this routes.
-    * One guard aggregate over the corpus's band-bucket stats picks the
-    * branch by the SAME integer rule the exact build's refusal and the
-    * text router use: exact index (full recall; signature + pair
-    * state) while the exact band join's measured candidate volume is
-    * within [[ClusterIndexGuardCapSlack]]× the capped bound, capped-
-    * survivor index ([[buildClusterIndexCapped]]) past it. The
-    * committed index is self-describing — cluster-cap.json marks the
-    * capped branch — so [[refreshClusterIndexAuto]] dispatches every
-    * later delta to the refresh whose contract matches the state, and
-    * a consumer never needs to remember which way a corpus routed.
-    * The oracle replays the identical routing comparison, so testdata
-    * regeneration cannot desynchronize route and oracle.
-    */
-  def buildClusterIndexAuto(spark: SparkSession, docs: DataFrame,
-      root: String, ns: String, table: String, cap: Int = 8,
-      iters: Int = ClusterIters): Unit = {
-    // already-built refusal BEFORE the corpus-sized work (r16 review):
-    // either branch's own require would also catch it, but only after
-    // paying the signature pass + guard aggregate. The auto build also
-    // refuses over a committed SURVIVOR table (r16 advice): an
-    // interrupted capped build can leave _surv committed with no label
-    // snapshot, and an exact build over that orphan would create MIXED
-    // state (exact sig/pairs beside a stale capped marker) that the
-    // auto refresh could then misroute on.
-    requireNoExactIndex(root, ns, table, "refreshClusterIndexAuto")
-    require(graft.plans.TableIO.currentVersion(root, ns,
-        s"${table}_surv") == 0L,
-      s"$ns.${table}_surv already holds committed capped-index state " +
-        "(an interrupted capped build?) — drop the index tables before " +
-        "rebuilding")
-    val sigsIn = graft.CacheScope.cached(Dedup.minhashSignatures(docs))
-    // ONE dual-shape guard job (r18): both shapes' volumes from a
-    // single pass over the cached signatures — previously the capped
-    // branch paid a second full aggregate at the re-banded 2×8 shape
-    val (exactVolume, bandRows, rebandVolume) =
-      Dedup.sigBandVolumeDual(sigsIn)
-    if (exactVolume <= bandRows * ClusterIndexGuardCapSlack)
-      // guard already passed — commit phase only, no second aggregate;
-      // both branches explicitly consume the one cached signature pass
-      buildExactIndexFromSigs(spark, sigsIn, root, ns, table, iters)
-    else {
-      // capped branch: shape-aware like the pair routers (r17) —
-      // re-band iff it shrinks the candidate volume by ≥ RebandGain
-      // (identical-clone corpora sit at exactly 0.5 and stay 4×4).
-      // The picked shape is committed as index state, so refreshes
-      // replay it without re-deciding.
-      val nBands = if (rebandVolume * Dedup.RebandGain <= exactVolume) 2
-        else 4
-      buildCappedIndexFromSigs(spark, sigsIn, root, ns, table, cap,
-        nBands, iters)
-    }
-  }
-
-  /** Fold a delta into an auto-built index: dispatches on the
-    * committed state itself (cluster-cap.json ⇒ the capped survivor
-    * fold; otherwise the exact signature/pair append) — same disjoint-
-    * doc_ids contract as both underlying refreshes. The marker is
-    * cross-checked against the committed table versions (r16 advice):
-    * a capped marker without committed survivors, or committed exact
-    * signatures beside a capped marker, is mixed state from an
-    * interrupted build — fail loudly instead of refreshing orphaned
-    * state.
-    */
-  def refreshClusterIndexAuto(spark: SparkSession, delta: DataFrame,
-      root: String, ns: String, table: String,
-      iters: Int = ClusterIters): Unit = {
-    import graft.plans.TableIO
-    val capFile = TableIO.tableDir(root, ns, s"${table}_surv")
-      .resolve("cluster-cap.json")
-    val hasMarker = java.nio.file.Files.isRegularFile(capFile)
-    val survV = TableIO.currentVersion(root, ns, s"${table}_surv")
-    val sigV = TableIO.currentVersion(root, ns, s"${table}_sig")
-    require(!(hasMarker && (survV == 0L || sigV > 0L)) &&
-        !(!hasMarker && survV > 0L),
-      s"$ns.$table is in MIXED cluster-index state (capped marker: " +
-        s"$hasMarker, surv version: $survV, sig version: $sigV) — an " +
-        "interrupted build left inconsistent tables; drop the index " +
-        "tables and rebuild")
-    if (hasMarker)
-      refreshClusterIndexCapped(spark, delta, root, ns, table, iters)
-    else refreshClusterIndex(spark, delta, root, ns, table, iters)
-  }
-
-  /** Labels from the committed survivor snapshot: survivor self-join
-    * on (band, key) — pair volume ≤ buckets × cap² by construction —
-    * then the same fixed-round propagation and publish as the exact
-    * index. The pair set equals `Dedup.pairsFromSigsCapped` over the
-    * union corpus's signatures, so the one capped-clusters oracle
-    * covers build and refresh alike.
-    */
-  private def relabelClusterIndexCapped(spark: SparkSession, root: String,
-      ns: String, table: String, iters: Int): Unit = {
-    val surv = graft.CacheScope.cached(
-      graft.plans.Mor.read(spark, root, ns, s"${table}_surv")
-        .select("doc_id", "band", "key"))
-    val pairs = graft.CacheScope.cached(
-      Similarity.pairsAmongCapped(surv, "doc_a", "doc_b", unordered = true))
-    // initial commit when no label snapshot exists yet (build, or the
-    // out-of-step fallback healing an interrupted build), replacing
-    // commit otherwise — decided from the committed state, not a flag,
-    // so the fallback can never hit a replace-without-spec failure
-    val replace = graft.plans.TableIO.currentVersion(root, ns, table) > 0L
-    publishLabels(spark, root, ns, table, labelPropagation(pairs, iters),
-      replace)
+    commitMorDelta(spark, ix, "", freshBall, relabelM.select("doc_id"))
   }
 
   /** The committed (doc_id, cluster) labels — what every downstream
@@ -1804,7 +1434,23 @@ object PipelineOps {
     */
   def readClusterIndex(spark: SparkSession, root: String, ns: String,
       table: String): DataFrame =
-    graft.plans.Mor.read(spark, root, ns, table)
+    Mor.read(spark, root, ns, table)
+
+  /** The eval's default knobs — NAMED (r17 advice) so the oracle SQL
+    * interpolates them instead of hardcoding its own copies. `copies`
+    * dieted 10 → 5 in r18 (VERDICT r17 item 3: the eval was the
+    * suite's heaviest query at 23–28s): the 6 ledger rows and their
+    * story are unchanged — at clone depth 5, like depth 10, every
+    * config sits at recall 1.0 because connectivity needs far fewer
+    * pairs than bands×cap keeps; the LOSS regime needs groups deeper
+    * than bands×cap, which the spec pins with its explicit 30-deep
+    * fixture — while the synthesized corpus, its truth pair join
+    * (quadratic in clone depth), and the 7-config propagation all
+    * shrink.
+    */
+  val LabelRecallCopies = 5
+  val LabelRecallStride = 10
+  val LabelRecallCaps: Seq[Int] = Seq(4, 8, 16)
 
   /** LABEL-level recall ledger for the capped cluster index (r17,
     * VERDICT r16 item 3) — the pair-level cap loss
@@ -1832,22 +1478,6 @@ object PipelineOps {
     * here (half the independent cap draws) — which is exactly why
     * the shape-aware router refuses to re-band on clone-dense text.
     */
-  /** The eval's default knobs — NAMED (r17 advice) so the oracle SQL
-    * interpolates them instead of hardcoding its own copies. `copies`
-    * dieted 10 → 5 in r18 (VERDICT r17 item 3: the eval was the
-    * suite's heaviest query at 23–28s): the 6 ledger rows and their
-    * story are unchanged — at clone depth 5, like depth 10, every
-    * config sits at recall 1.0 because connectivity needs far fewer
-    * pairs than bands×cap keeps; the LOSS regime needs groups deeper
-    * than bands×cap, which the spec pins with its explicit 30-deep
-    * fixture — while the synthesized corpus, its truth pair join
-    * (quadratic in clone depth), and the 7-config propagation all
-    * shrink.
-    */
-  val LabelRecallCopies = 5
-  val LabelRecallStride = 10
-  val LabelRecallCaps: Seq[Int] = Seq(4, 8, 16)
-
   def clusterLabelRecallEval(docs: DataFrame,
       caps: Seq[Int] = LabelRecallCaps,
       copies: Int = LabelRecallCopies, stride: Int = LabelRecallStride,

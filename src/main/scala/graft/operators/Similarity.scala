@@ -1572,27 +1572,6 @@ object Similarity {
       cappedCandidates(emb, bands, r, cap).filter(col("vec_a") < col("vec_b")),
       emb)
 
-  /** What the dense-bucket cap DROPS — the loss-ledger row for the
-    * capped family ([[knnJoinCapped]] / `Dedup.embeddingCosineCapped`),
-    * the one approximation in the ANN surface that previously shipped
-    * without a recall number (VERDICT r14 item 1). The corpus under
-    * eval is DELIBERATELY adversarial: every `stride`-th vector
-    * replicated `copies` times with fresh ids (the exact shape the sf1
-    * scale-up used to expose the exact join's quadratic pair volume —
-    * identical copies collide in ALL bands, so every bucket is
-    * `copies`x denser than the base corpus). Ground truth is the exact
-    * banded near-dup pair set (`Dedup.embeddingCosine`: all LSH
-    * candidates with cosine >= tau); the capped pair set is BY
-    * CONSTRUCTION a subset (capped candidates are banded candidates,
-    * scored by the same cosine), so pair recall is one division of two
-    * agreed counts — no pair-level join needed. One row per cap value:
-    * how much of the true near-dup mass survives at cap 4 / 8 / 16.
-    *
-    * Scale: the eval runs the exact join ONCE on a bounded adversarial
-    * sample (a production ledger samples the corpus for ground truth —
-    * the eval's cost is the gold-label generation, as in
-    * [[recallEval]]); each capped pass is the linear bounded join.
-    */
   /** The synthesized ADVERSARIALLY dense eval corpus both capped-recall
     * evals share (one Scala copy — the SQL oracles hardcode its twin
     * `vec_id * copies + c ... WHERE vec_id % stride = 0 AND vec_id <
@@ -1634,6 +1613,27 @@ object Similarity {
     dense
   }
 
+  /** What the dense-bucket cap DROPS — the loss-ledger row for the
+    * capped family ([[knnJoinCapped]] / `Dedup.embeddingCosineCapped`),
+    * the one approximation in the ANN surface that previously shipped
+    * without a recall number (VERDICT r14 item 1). The corpus under
+    * eval is DELIBERATELY adversarial: every `stride`-th vector
+    * replicated `copies` times with fresh ids (the exact shape the sf1
+    * scale-up used to expose the exact join's quadratic pair volume —
+    * identical copies collide in ALL bands, so every bucket is
+    * `copies`x denser than the base corpus). Ground truth is the exact
+    * banded near-dup pair set (`Dedup.embeddingCosine`: all LSH
+    * candidates with cosine >= tau); the capped pair set is BY
+    * CONSTRUCTION a subset (capped candidates are banded candidates,
+    * scored by the same cosine), so pair recall is one division of two
+    * agreed counts — no pair-level join needed. One row per cap value:
+    * how much of the true near-dup mass survives at cap 4 / 8 / 16.
+    *
+    * Scale: the eval runs the exact join ONCE on a bounded adversarial
+    * sample (a production ledger samples the corpus for ground truth —
+    * the eval's cost is the gold-label generation, as in
+    * [[recallEval]]); each capped pass is the linear bounded join.
+    */
   def recallEvalCapped(emb: DataFrame, caps: Seq[Int] = Seq(4, 8, 16),
       copies: Int = 10, stride: Int = 10, tau: Double = 0.4,
       bands: Int = 16, r: Int = 4): DataFrame = {

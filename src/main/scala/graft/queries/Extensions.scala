@@ -101,6 +101,41 @@ object Extensions {
     PipelineOps.readClusterIndex(s, clusterIndexRoot(s, dir),
       "corp", "clusters")
 
+  /** The change-feed refresh fixture every `dedup_clusters*_refreshed`
+    * query shares: the corpus lands as a governed table in TWO commits
+    * (doc_id % `lateEvery` != 0, then the rest); the index is built with
+    * `pairs` after the first, REFRESHED with the second commit's
+    * change-feed inserts, then read. Each query's oracle clusters the
+    * full corpus from scratch, so a refresh that missed a cross-batch
+    * pair, double-appended, or failed to re-merge clusters diverges.
+    */
+  private def refreshedClusterLabels(s: SparkSession, dir: String,
+      tag: String, lateEvery: Int,
+      pairs: PipelineOps.PairSource): DataFrame = {
+    val r = graft.plans.GeneratedTables.ensureCustom(dir + tag) { root =>
+      import org.apache.spark.sql.functions.col
+      import graft.plans.{Mor, TableIO}
+      val d = rd(s, dir, "documents")
+      val ns = "corp"
+      def commitDocs(file: String, rows: DataFrame): Unit =
+        TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s, root,
+          ns, "docs", s"data/$file.parquet", rows, "data",
+          TableIO.nextSeq(root, ns, "docs"))))
+      val base = d.filter(col("doc_id") % lateEvery =!= 0)
+      TableIO.createNamespace(root, ns)
+      TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
+      commitDocs("d0", base)
+      PipelineOps.buildClusterIndex(s, Mor.read(s, root, ns, "docs"),
+        root, ns, "clusters", pairs)
+      commitDocs("d1", d.filter(col("doc_id") % lateEvery === 0))
+      PipelineOps.refreshClusterIndex(s,
+        Mor.readChanges(s, root, ns, "docs", 1L, 2L)
+          .filter(col("_change_type") === "insert").drop("_change_type"),
+        root, ns, "clusters")
+    }
+    PipelineOps.readClusterIndex(s, r, "corp", "clusters").orderBy("doc_id")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_exact" -> ((s, dir) => Dedup.exact(rd(s, dir, "documents"))),
     "dedup_fingerprint" -> ((s, dir) => Dedup.fingerprint(rd(s, dir, "documents"))),
@@ -527,77 +562,24 @@ object Extensions {
     "dedup_clusters_indexed" -> ((s, dir) =>
       clusterLabels(s, dir).orderBy("doc_id")),
     // INCREMENTAL index maintenance under the oracle, composed with
-    // the change feed: the corpus lands as a governed table in TWO
-    // commits; the index is built after the first and REFRESHED with
-    // the second commit's change-feed inserts — then read. The oracle
-    // clusters the full corpus from scratch, so a refresh that missed
-    // a cross-batch pair, double-appended, or failed to re-merge
-    // clusters diverges.
-    "dedup_clusters_refreshed" -> ((s, dir) => {
-      val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clusteridxr") { root =>
-        import org.apache.spark.sql.functions.col
-        import graft.plans.{Mor, TableIO}
-        val d = rd(s, dir, "documents")
-        val ns = "corp"
-        val base = d.filter(col("doc_id") % 3 =!= 0)
-        TableIO.createNamespace(root, ns)
-        TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
-        TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s, root,
-          ns, "docs", "data/d0.parquet", base, "data",
-          TableIO.nextSeq(root, ns, "docs"))))
-        PipelineOps.buildClusterIndex(s, Mor.read(s, root, ns, "docs"),
-          root, ns, "clusters")
-        val late = d.filter(col("doc_id") % 3 === 0)
-        TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s, root,
-          ns, "docs", "data/d1.parquet", late, "data",
-          TableIO.nextSeq(root, ns, "docs"))))
-        val delta = Mor.readChanges(s, root, ns, "docs", 1L, 2L)
-          .filter(col("_change_type") === "insert")
-          .drop("_change_type")
-        PipelineOps.refreshClusterIndex(s, delta, root, ns, "clusters")
-        ()
-      }
-      PipelineOps.readClusterIndex(s, r, "corp", "clusters")
-        .orderBy("doc_id")
-    }),
+    // the change feed (see refreshedClusterLabels): built on the 2/3 of
+    // the corpus with doc_id % 3 != 0, refreshed with the rest — the
+    // bulk (full-rebuild) side of the exact size route
+    "dedup_clusters_refreshed" -> ((s, dir) =>
+      refreshedClusterLabels(s, dir, "#clusteridxr", 3,
+        PipelineOps.PairSource.Exact)),
     // the EXACT index's SMALL-delta refresh under the same oracle
     // (r19): a 2% delta keeps changed-bucket volume under index/8, so
-    // the size route must take the DELTA branch — adjacency and labels
+    // the size route must take the DELTA route — adjacency and labels
     // maintained by MOR delta commits through the component-scoped
     // relabel, the pair table appended but never read — and the folded
     // labels must still equal the from-scratch clustering of the full
-    // corpus bit-for-bit. The 1/3-delta twin above exercises the bulk
-    // (full-relabel) route; together the two queries put BOTH sides of
-    // the exact size route under the driver's oracle gate, mirroring
-    // the capped pair below.
-    "dedup_clusters_exact_delta_refreshed" -> ((s, dir) => {
-      val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxexd") {
-        root =>
-          import org.apache.spark.sql.functions.col
-          import graft.plans.{Mor, TableIO}
-          val d = rd(s, dir, "documents")
-          val ns = "corp"
-          val base = d.filter(col("doc_id") % 50 =!= 0)
-          TableIO.createNamespace(root, ns)
-          TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d0.parquet", base, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          PipelineOps.buildClusterIndex(s, Mor.read(s, root, ns, "docs"),
-            root, ns, "clusters")
-          val late = d.filter(col("doc_id") % 50 === 0)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d1.parquet", late, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          val delta = Mor.readChanges(s, root, ns, "docs", 1L, 2L)
-            .filter(col("_change_type") === "insert")
-            .drop("_change_type")
-          PipelineOps.refreshClusterIndex(s, delta, root, ns, "clusters")
-          ()
-      }
-      PipelineOps.readClusterIndex(s, r, "corp", "clusters")
-        .orderBy("doc_id")
-    }),
+    // corpus bit-for-bit. With the 1/3-delta twin above, BOTH sides of
+    // the exact size route sit under the oracle gate,
+    // mirroring the capped pair below.
+    "dedup_clusters_exact_delta_refreshed" -> ((s, dir) =>
+      refreshedClusterLabels(s, dir, "#clidxexd", 50,
+        PipelineOps.PairSource.Exact)),
     // the CAPPED cluster index (r16): per-bucket cap survivors ARE the
     // index state, so dense corpora get bounded work AND incremental
     // refresh together; the oracle replays the same cap before the
@@ -605,132 +587,47 @@ object Extensions {
     "dedup_clusters_capped" -> ((s, dir) => {
       val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxcap") {
         root =>
-          PipelineOps.buildClusterIndexCapped(s, rd(s, dir, "documents"),
-            root, "corp", "clusters")
+          PipelineOps.buildClusterIndex(s, rd(s, dir, "documents"),
+            root, "corp", "clusters", PipelineOps.PairSource.Capped())
       }
       PipelineOps.readClusterIndex(s, r, "corp", "clusters")
         .orderBy("doc_id")
     }),
     // the survivor-folding refresh under the SAME oracle: built on
-    // two-thirds of the corpus, refreshed with the last third's
-    // change-feed inserts — a fold that shifted a frozen survivor,
-    // dropped an eviction, or missed a cross-batch pair diverges from
-    // the from-scratch capped clustering
-    "dedup_clusters_capped_refreshed" -> ((s, dir) => {
-      val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxcapr") {
-        root =>
-          import org.apache.spark.sql.functions.col
-          import graft.plans.{Mor, TableIO}
-          val d = rd(s, dir, "documents")
-          val ns = "corp"
-          val base = d.filter(col("doc_id") % 3 =!= 0)
-          TableIO.createNamespace(root, ns)
-          TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d0.parquet", base, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          PipelineOps.buildClusterIndexCapped(s,
-            Mor.read(s, root, ns, "docs"), root, ns, "clusters")
-          val late = d.filter(col("doc_id") % 3 === 0)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d1.parquet", late, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          val delta = Mor.readChanges(s, root, ns, "docs", 1L, 2L)
-            .filter(col("_change_type") === "insert")
-            .drop("_change_type")
-          PipelineOps.refreshClusterIndexCapped(s, delta, root, ns,
-            "clusters")
-          ()
-      }
-      PipelineOps.readClusterIndex(s, r, "corp", "clusters")
-        .orderBy("doc_id")
-    }),
-    // the SMALL-delta refresh under the same oracle (r18): a 2% delta
-    // keeps changed-bucket volume under index/8, so the size route
-    // must take the DELTA branch — survivors, the bucket-adjacency
-    // state, and the labels are all maintained by MOR delta commits
-    // (appends + eq-delete files; the labels were full-replaced until
-    // r18) — and the folded read must still equal the from-scratch
-    // capped clustering of the full corpus bit-for-bit. The 1/3-delta
-    // twin above exercises the bulk (full-rewrite) route; together
-    // the two queries put BOTH sides of the size route under the
-    // driver's oracle gate.
-    "dedup_clusters_delta_refreshed" -> ((s, dir) => {
-      val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxcapd") {
-        root =>
-          import org.apache.spark.sql.functions.col
-          import graft.plans.{Mor, TableIO}
-          val d = rd(s, dir, "documents")
-          val ns = "corp"
-          val base = d.filter(col("doc_id") % 50 =!= 0)
-          TableIO.createNamespace(root, ns)
-          TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d0.parquet", base, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          PipelineOps.buildClusterIndexCapped(s,
-            Mor.read(s, root, ns, "docs"), root, ns, "clusters")
-          val late = d.filter(col("doc_id") % 50 === 0)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d1.parquet", late, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          val delta = Mor.readChanges(s, root, ns, "docs", 1L, 2L)
-            .filter(col("_change_type") === "insert")
-            .drop("_change_type")
-          PipelineOps.refreshClusterIndexCapped(s, delta, root, ns,
-            "clusters")
-          ()
-      }
-      PipelineOps.readClusterIndex(s, r, "corp", "clusters")
-        .orderBy("doc_id")
-    }),
-    // the density-ROUTED index entry point (r16): one guard aggregate
-    // picks exact or capped; the oracle replays the routing comparison
-    // itself, so testdata regeneration cannot desynchronize route and
-    // oracle (the testdata corpus routes EXACT — bit-equal to
-    // dedup_clusters — while the rule is under SQL test)
+    // two-thirds of the corpus, refreshed with the last third — a fold
+    // that shifted a frozen survivor, dropped an eviction, or missed a
+    // cross-batch pair diverges from the from-scratch capped clustering
+    "dedup_clusters_capped_refreshed" -> ((s, dir) =>
+      refreshedClusterLabels(s, dir, "#clidxcapr", 3,
+        PipelineOps.PairSource.Capped())),
+    // the capped SMALL-delta refresh under the same oracle (r18): a 2%
+    // delta takes the DELTA route — survivors, the bucket-adjacency
+    // state, and the labels all maintained by MOR delta commits — and
+    // the folded read must still equal the from-scratch capped
+    // clustering of the full corpus bit-for-bit
+    "dedup_clusters_delta_refreshed" -> ((s, dir) =>
+      refreshedClusterLabels(s, dir, "#clidxcapd", 50,
+        PipelineOps.PairSource.Capped())),
+    // the density-ROUTED build (r16): one guard aggregate picks exact
+    // or capped; the oracle replays the routing comparison itself, so
+    // testdata regeneration cannot desynchronize route and oracle (the
+    // testdata corpus routes EXACT — bit-equal to dedup_clusters —
+    // while the rule is under SQL test)
     "dedup_clusters_auto" -> ((s, dir) => {
       val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxauto") {
         root =>
-          PipelineOps.buildClusterIndexAuto(s, rd(s, dir, "documents"),
-            root, "corp", "clusters")
+          PipelineOps.buildClusterIndex(s, rd(s, dir, "documents"),
+            root, "corp", "clusters", PipelineOps.PairSource.Auto)
       }
       PipelineOps.readClusterIndex(s, r, "corp", "clusters")
         .orderBy("doc_id")
     }),
-    // the auto REFRESH dispatch under the same oracle: built on
-    // two-thirds, the last third folded in via refreshClusterIndexAuto
-    // — which must read the committed state's own branch marker and
-    // land on the matching refresh contract
-    "dedup_clusters_auto_refreshed" -> ((s, dir) => {
-      val r = graft.plans.GeneratedTables.ensureCustom(dir + "#clidxautor") {
-        root =>
-          import org.apache.spark.sql.functions.col
-          import graft.plans.{Mor, TableIO}
-          val d = rd(s, dir, "documents")
-          val ns = "corp"
-          val base = d.filter(col("doc_id") % 3 =!= 0)
-          TableIO.createNamespace(root, ns)
-          TableIO.createTableIfNotExists(root, ns, "docs", base.schema)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d0.parquet", base, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          PipelineOps.buildClusterIndexAuto(s,
-            Mor.read(s, root, ns, "docs"), root, ns, "clusters")
-          val late = d.filter(col("doc_id") % 3 === 0)
-          TableIO.commit(root, ns, "docs", Seq(TableIO.writeExactFile(s,
-            root, ns, "docs", "data/d1.parquet", late, "data",
-            TableIO.nextSeq(root, ns, "docs"))))
-          val delta = Mor.readChanges(s, root, ns, "docs", 1L, 2L)
-            .filter(col("_change_type") === "insert")
-            .drop("_change_type")
-          PipelineOps.refreshClusterIndexAuto(s, delta, root, ns,
-            "clusters")
-          ()
-      }
-      PipelineOps.readClusterIndex(s, r, "corp", "clusters")
-        .orderBy("doc_id")
-    }),
+    // the refresh DISPATCH under the same oracle: an auto-built index
+    // refreshed with the last third — the refresh must read the
+    // committed state's own flavour and fold by the matching contract
+    "dedup_clusters_auto_refreshed" -> ((s, dir) =>
+      refreshedClusterLabels(s, dir, "#clidxautor", 3,
+        PipelineOps.PairSource.Auto)),
     // derived view over the INDEX labels (was: a second full
     // reclustering per the r11 verdict) — same oracle, same answer
     "dedup_cluster_stats" -> ((s, dir) => {
@@ -1540,7 +1437,7 @@ object Extensions {
     // level — exact band join while bp <= br*64, capped survivors at
     // the picked shape past it — then one propagation chain over
     // whichever pair set the guards picked, exactly as
-    // buildClusterIndexAuto does. guardWhere restricts the stats to
+    // buildClusterIndex with PairSource.Auto does. guardWhere restricts the stats to
     // the corpus the engine ROUTED ON (the build-time base for the
     // refresh query — branch AND shape are index state, not
     // re-decided per delta).

@@ -184,8 +184,8 @@ object DedupScaleSmoke {
     // for. Build on the first 2/3, fold the last 1/3 in as a delta,
     // and require the refreshed labels equal a from-scratch capped
     // build of the full corpus BIT-FOR-BIT (the semilattice fold
-    // contract) — at corpus scale, not spec scale. The exact
-    // buildClusterIndex would refuse this corpus outright (its band
+    // contract) — at corpus scale, not spec scale. An exact build
+    // (PairSource.Exact) would refuse this corpus outright (its band
     // buckets run ~nb/1000 deep).
     import graft.operators.PipelineOps
     spark.range(nb).selectExpr("id AS doc_id",
@@ -202,18 +202,18 @@ object DedupScaleSmoke {
     val base3 = boilerLong.filter(s"doc_id % 3 != 0")
     val delta3 = boilerLong.filter(s"doc_id % 3 = 0")
     val iroot = Files.createTempDirectory("graft-clidx-").toString
-    timed(s"buildClusterIndexCapped ${nb * 2 / 3} boilerplate docs")(
-      PipelineOps.buildClusterIndexCapped(spark, base3, iroot, "corp",
-        "clusters"))
+    timed(s"buildClusterIndex capped ${nb * 2 / 3} boilerplate docs")(
+      PipelineOps.buildClusterIndex(spark, base3, iroot, "corp",
+        "clusters", PipelineOps.PairSource.Capped()))
     graft.CacheScope.drain()
-    timed(s"refreshClusterIndexCapped ${nb / 3} delta docs")(
-      PipelineOps.refreshClusterIndexCapped(spark, delta3, iroot, "corp",
+    timed(s"refreshClusterIndex capped ${nb / 3} delta docs")(
+      PipelineOps.refreshClusterIndex(spark, delta3, iroot, "corp",
         "clusters"))
     graft.CacheScope.drain()
     val iroot2 = Files.createTempDirectory("graft-clidx2-").toString
-    timed(s"buildClusterIndexCapped $nb docs (from-scratch reference)")(
-      PipelineOps.buildClusterIndexCapped(spark, boilerLong, iroot2, "corp",
-        "clusters"))
+    timed(s"buildClusterIndex capped $nb docs (from-scratch reference)")(
+      PipelineOps.buildClusterIndex(spark, boilerLong, iroot2, "corp",
+        "clusters", PipelineOps.PairSource.Capped()))
     graft.CacheScope.drain()
     val refreshed = PipelineOps.readClusterIndex(spark, iroot, "corp",
       "clusters")
@@ -238,10 +238,10 @@ object DedupScaleSmoke {
     // measured steady state, and the union-reference check below
     // covers its output, not just fresh delta commits
     val step = math.max(1L, nb / 800)
-    timed(s"8 x refreshClusterIndexCapped $step delta vs $nb-doc index " +
+    timed(s"8 x refreshClusterIndex capped $step delta vs $nb-doc index " +
       "(steady state, auto-compaction inside the loop)") {
       for (k <- 0L until 8L) {
-        PipelineOps.refreshClusterIndexCapped(spark,
+        PipelineOps.refreshClusterIndex(spark,
           spark.range(10 * nb + k * step, 10 * nb + (k + 1) * step)
             .selectExpr("id AS doc_id",
               "concat('fresh crawl document ', id, ' new body words') " +
@@ -259,9 +259,9 @@ object DedupScaleSmoke {
     // regression in the steady-state fold cannot pass this smoke
     // silently
     val iroot3 = Files.createTempDirectory("graft-clidx3-").toString
-    timed(s"buildClusterIndexCapped ${nb + 8 * step} docs (union reference)")(
-      PipelineOps.buildClusterIndexCapped(spark,
-        boilerLong.unionByName(small), iroot3, "corp", "clusters"))
+    timed(s"buildClusterIndex capped ${nb + 8 * step} docs (union reference)")(
+      PipelineOps.buildClusterIndex(spark, boilerLong.unionByName(small),
+        iroot3, "corp", "clusters", PipelineOps.PairSource.Capped()))
     graft.CacheScope.drain()
     val smallRefreshed = PipelineOps.readClusterIndex(spark, iroot2, "corp",
       "clusters")
@@ -298,7 +298,7 @@ object DedupScaleSmoke {
     // every 10th delta doc is an EXACT copy of a distinct base twin
     // group's body, so the delta branch's real fold runs (adjacency
     // delta + scoped relabel + delta label commit) — an all-unique
-    // delta would hit the adjAdds-empty skip and the
+    // delta would hit the unchanged-adjacency skip and the
     // refresh-equals-rebuild check would pass vacuously (r19 review).
     // The unique 7-word bodies keep every 4-shingle id-bearing, so
     // unique delta docs stay pairwise unrelated (an 8th shared word

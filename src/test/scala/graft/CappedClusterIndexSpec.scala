@@ -4,6 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
 import graft.operators.{Dedup, PipelineOps}
+import graft.operators.PipelineOps.PairSource
 import graft.plans.TableIO
 
 /** The CAPPED cluster index (VERDICT r15 item 1): on a dense corpus
@@ -56,16 +57,16 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     val batch2 = docs.filter(col("doc_id") >= 400)
 
     val rebuildRoot = Files.createTempDirectory("graft-clcap-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, docs, rebuildRoot, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, docs, rebuildRoot, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
 
     val refreshRoot = Files.createTempDirectory("graft-clcap-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark, batch1, refreshRoot, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, batch1, refreshRoot, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
     val preRefresh = survivorsOf(refreshRoot)
-    PipelineOps.refreshClusterIndexCapped(spark, batch2, refreshRoot,
+    PipelineOps.refreshClusterIndex(spark, batch2, refreshRoot,
       "corp", "clusters")
     CacheScope.drain()
 
@@ -113,8 +114,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     PipelineOps.buildClusterIndex(spark, docs, exactRoot, "corp", "clusters")
     CacheScope.drain()
     val cappedRoot = Files.createTempDirectory("graft-clcap-d-").toString
-    PipelineOps.buildClusterIndexCapped(spark, docs, cappedRoot, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, docs, cappedRoot, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
     val l = labelsOf(cappedRoot)
     assert(l == labelsOf(exactRoot) && l.nonEmpty)
@@ -132,13 +133,13 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       (5L, "same exact body tokens one two three four five six"))
       .toDF("doc_id", "text")
     val root = Files.createTempDirectory("graft-clcap-e-").toString
-    PipelineOps.buildClusterIndexCapped(spark, base, root, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, base, root, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root) == Seq((10L, 10L), (11L, 10L)))
     val vBuild = TableIO.currentVersion(root, "corp", "clusters")
 
-    PipelineOps.refreshClusterIndexCapped(spark, delta, root, "corp",
+    PipelineOps.refreshClusterIndex(spark, delta, root, "corp",
       "clusters")
     CacheScope.drain()
     assert(labelsOf(root) == Seq((5L, 5L), (10L, 5L), (11L, 5L)))
@@ -148,27 +149,16 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       .contains("overwrite"))
   }
 
-  test("a second capped build refuses; refreshing an EXACT index via " +
-      "the capped fold refuses (cap is index state, not a knob)") {
+  test("a second capped build refuses") {
     val root = Files.createTempDirectory("graft-clcap-f-").toString
     val docs = denseDocs(0L until 24L)
-    PipelineOps.buildClusterIndexCapped(spark, docs, root, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, docs, root, "corp", "clusters",
+      PairSource.Capped())
     CacheScope.drain()
     val e = intercept[IllegalArgumentException](
-      PipelineOps.buildClusterIndexCapped(spark, docs, root, "corp",
-        "clusters"))
-    assert(e.getMessage.contains("refreshClusterIndexCapped"))
-    CacheScope.drain()
-
-    val exactRoot = Files.createTempDirectory("graft-clcap-g-").toString
-    PipelineOps.buildClusterIndex(spark, sparseDocs(24), exactRoot,
-      "corp", "clusters")
-    CacheScope.drain()
-    val e2 = intercept[IllegalArgumentException](
-      PipelineOps.refreshClusterIndexCapped(spark, docs, exactRoot,
-        "corp", "clusters"))
-    assert(e2.getMessage.contains("not a capped cluster index"))
+      PipelineOps.buildClusterIndex(spark, docs, root, "corp", "clusters",
+        PairSource.Capped()))
+    assert(e.getMessage.contains("refreshClusterIndex"))
     CacheScope.drain()
   }
 
@@ -178,13 +168,13 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       PipelineOps.buildClusterIndex(spark, denseDocs(0L until 600L),
         root, "corp", "clusters"))
-    assert(e.getMessage.contains("buildClusterIndexCapped"))
+    assert(e.getMessage.contains("PairSource.Capped"))
     assert(e.getMessage.contains("candidate volume"))
     CacheScope.drain()
     // the refusal left nothing behind: no half-built index blocks a
     // later capped build at the same root
-    PipelineOps.buildClusterIndexCapped(spark, denseDocs(0L until 600L),
-      root, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, denseDocs(0L until 600L),
+      root, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root).nonEmpty)
   }
@@ -195,16 +185,16 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // table + cluster-cap.json present, labels == the capped build's
     val dense = denseDocs(0L until 600L)
     val dAuto = Files.createTempDirectory("graft-clauto-a-").toString
-    PipelineOps.buildClusterIndexAuto(spark, dense, dAuto, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, dense, dAuto, "corp",
+      "clusters", PairSource.Auto)
     CacheScope.drain()
     // the dense spec corpus is IDENTICAL-clone dense (template copies
     // collide at any band width), so the shape-aware capped branch
     // must stay at 4×4 — re-banding would only halve the cap draws
     assert(PipelineOps.readClusterCap(dAuto, "corp", "clusters") == ((8, 4)))
     val dCapped = Files.createTempDirectory("graft-clauto-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark, dense, dCapped, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, dense, dCapped, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(dAuto) == labelsOf(dCapped))
 
@@ -212,8 +202,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // pair state (no cap marker), labels == the exact build's
     val sparse = sparseDocs(60)
     val sAuto = Files.createTempDirectory("graft-clauto-c-").toString
-    PipelineOps.buildClusterIndexAuto(spark, sparse, sAuto, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, sparse, sAuto, "corp",
+      "clusters", PairSource.Auto)
     CacheScope.drain()
     intercept[IllegalArgumentException](
       PipelineOps.readClusterCap(sAuto, "corp", "clusters"))
@@ -228,12 +218,12 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // appends through the exact path — both end bit-equal to a
     // from-scratch build of the union corpus on their branch
     val denseDelta = denseDocs(600L until 900L)
-    PipelineOps.refreshClusterIndexAuto(spark, denseDelta, dAuto, "corp",
+    PipelineOps.refreshClusterIndex(spark, denseDelta, dAuto, "corp",
       "clusters")
     CacheScope.drain()
     val dFull = Files.createTempDirectory("graft-clauto-e-").toString
-    PipelineOps.buildClusterIndexCapped(spark, denseDocs(0L until 900L),
-      dFull, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, denseDocs(0L until 900L),
+      dFull, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(dAuto) == labelsOf(dFull))
 
@@ -241,7 +231,7 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     val sparseDelta = Seq((1000L,
       "shared0 corpus0 body0 alpha0 beta0 gamma0 delta0 zeta0"))
       .toDF("doc_id", "text")
-    PipelineOps.refreshClusterIndexAuto(spark, sparseDelta, sAuto, "corp",
+    PipelineOps.refreshClusterIndex(spark, sparseDelta, sAuto, "corp",
       "clusters")
     CacheScope.drain()
     val sFullLabels = labelsOf(sAuto)
@@ -255,8 +245,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     val ids = (0L until 600L)
     val docs = denseDocs(ids)
     val rebuildRoot = Files.createTempDirectory("graft-cl28-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, docs, rebuildRoot, "corp",
-      "clusters", nBands = 2)
+    PipelineOps.buildClusterIndex(spark, docs, rebuildRoot, "corp",
+      "clusters", PairSource.Capped(nBands = 2))
     CacheScope.drain()
     assert(PipelineOps.readClusterCap(rebuildRoot, "corp", "clusters")
       == ((8, 2)))
@@ -265,13 +255,13 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     assert(bands == Seq(0, 1), s"2x8 survivors carry bands $bands")
 
     val refreshRoot = Files.createTempDirectory("graft-cl28-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark,
+    PipelineOps.buildClusterIndex(spark,
       docs.filter(col("doc_id") < 400), refreshRoot, "corp", "clusters",
-      nBands = 2)
+      PairSource.Capped(nBands = 2))
     CacheScope.drain()
     // the refresh reads the shape from the committed index — no shape
     // argument anywhere — and must reproduce the 2x8 rebuild exactly
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       docs.filter(col("doc_id") >= 400), refreshRoot, "corp", "clusters")
     CacheScope.drain()
     assert(labelsOf(refreshRoot) == labelsOf(rebuildRoot))
@@ -296,11 +286,11 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     val base = corpus(0L until 2000L)
     val delta = corpus(2000L until 2060L)
     val root = Files.createTempDirectory("graft-cldelta-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, base, root, "corp",
-      "clusters")
+    PipelineOps.buildClusterIndex(spark, base, root, "corp",
+      "clusters", PairSource.Capped())
     CacheScope.drain()
     val vBuild = TableIO.currentVersion(root, "corp", "clusters_surv")
-    PipelineOps.refreshClusterIndexCapped(spark, delta, root, "corp",
+    PipelineOps.refreshClusterIndex(spark, delta, root, "corp",
       "clusters")
     CacheScope.drain()
     // the delta branch committed ONE new survivor version carrying an
@@ -318,8 +308,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       s"delta-sized append expected, wrote $appended rows")
     // ...and the folded state equals a from-scratch capped build
     val root2 = Files.createTempDirectory("graft-cldelta-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark,
-      base.unionByName(delta), root2, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark,
+      base.unionByName(delta), root2, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root) == labelsOf(root2))
     assert(survivorsOf(root) == survivorsOf(root2))
@@ -351,11 +341,11 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       "delta commits (appends + eq-deletes, no snapshot rewrite), and " +
       "two successive delta refreshes still equal the rebuild") {
     val root = Files.createTempDirectory("graft-cldl-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2000L),
-      root, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2000L),
+      root, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     val vBuild = TableIO.currentVersion(root, "corp", "clusters")
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       deltaCorpus(2000L until 2020L), root, "corp", "clusters")
     CacheScope.drain()
     // ONE label commit, and an APPEND commit (no overwrite sidecar):
@@ -401,7 +391,7 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // committed label snapshot — the r17 full-replace read the delta
     // label commit replaced.
     val snap = PlanCapture.capture(spark) {
-      PipelineOps.refreshClusterIndexCapped(spark,
+      PipelineOps.refreshClusterIndex(spark,
         deltaCorpus(2020L until 2040L), root, "corp", "clusters")
       CacheScope.drain()
     }
@@ -417,8 +407,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
           s"(the r17 full-replace read):\n${p.take(3000)}")
     }
     val root2 = Files.createTempDirectory("graft-cldl-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2040L),
-      root2, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2040L),
+      root2, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root) == labelsOf(root2))
     assert(survivorsOf(root) == survivorsOf(root2))
@@ -429,8 +419,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       "rebuild's") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-clnoop-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2000L),
-      root, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2000L),
+      root, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     val before = labelsOf(root)
     def versions() = (
@@ -441,7 +431,7 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // an EMPTY delta: a change-feed-driven refresher's idle tick —
     // before the r18 review fix this burned an adjacency eq-delete
     // version per run and eventually an index-sized compaction
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       deltaCorpus(Seq.empty[Long]), root, "corp", "clusters")
     CacheScope.drain()
     assert(versions() == v0, s"empty delta moved versions: $v0 -> " +
@@ -449,7 +439,7 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     assert(labelsOf(root) == before)
     // ...and the untouched index is still in step: the next real delta
     // takes the delta branch (append commit, no overwrite sidecar)
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       deltaCorpus(2000L until 2020L), root, "corp", "clusters")
     CacheScope.drain()
     val vNow = TableIO.currentVersion(root, "corp", "clusters")
@@ -462,8 +452,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       "never preserved by the scoped branch") {
     import spark.implicits._
     val root = Files.createTempDirectory("graft-clsync-a-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2000L),
-      root, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2000L),
+      root, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     // simulate the crash/tamper window: the label snapshot moves
     // WITHOUT a completed refresh updating the token — exactly the
@@ -481,7 +471,7 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     // the next delta refresh must refuse the scoped branch (token
     // mismatch), fully relabel from the committed survivors, and end
     // bit-equal to the rebuild — no garbage row survives
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       deltaCorpus(2000L until 2020L), root, "corp", "clusters")
     CacheScope.drain()
     val vAfter = TableIO.currentVersion(root, "corp", "clusters")
@@ -489,21 +479,21 @@ class CappedClusterIndexSpec extends AnyFunSuite {
       .contains("overwrite"),
       "out-of-step refresh must take the full-relabel fallback")
     val root2 = Files.createTempDirectory("graft-clsync-b-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2020L),
-      root2, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2020L),
+      root2, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root) == labelsOf(root2))
     // ...and the healed index is back in step: the NEXT delta may take
     // the scoped branch again (append commit, no overwrite sidecar)
-    PipelineOps.refreshClusterIndexCapped(spark,
+    PipelineOps.refreshClusterIndex(spark,
       deltaCorpus(2020L until 2040L), root, "corp", "clusters")
     CacheScope.drain()
     val vNext = TableIO.currentVersion(root, "corp", "clusters")
     assert(TableIO.replaceOperation(root, "corp", "clusters", vNext).isEmpty,
       "healed index must resume delta label maintenance")
     val root3 = Files.createTempDirectory("graft-clsync-c-").toString
-    PipelineOps.buildClusterIndexCapped(spark, deltaCorpus(0L until 2040L),
-      root3, "corp", "clusters")
+    PipelineOps.buildClusterIndex(spark, deltaCorpus(0L until 2040L),
+      root3, "corp", "clusters", PairSource.Capped())
     CacheScope.drain()
     assert(labelsOf(root) == labelsOf(root3))
   }
@@ -521,8 +511,8 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     graft.plans.Partitioning.preparePartitioned(spark, root, "corp",
       "clusters_surv", surv, graft.plans.PartitionSpec("bucket", "doc_id", 8))
     val e = intercept[IllegalArgumentException](
-      PipelineOps.buildClusterIndexAuto(spark, docs, root, "corp",
-        "clusters"))
+      PipelineOps.buildClusterIndex(spark, docs, root, "corp",
+        "clusters", PairSource.Auto))
     assert(e.getMessage.contains("interrupted"), e.getMessage)
     CacheScope.drain()
 
@@ -537,10 +527,22 @@ class CappedClusterIndexSpec extends AnyFunSuite {
     Files.createDirectories(capFile.getParent)
     Files.writeString(capFile, """{"cap":8}""")
     val e2 = intercept[IllegalArgumentException](
-      PipelineOps.refreshClusterIndexAuto(spark,
+      PipelineOps.refreshClusterIndex(spark,
         Seq((2000L, "some fresh text body")).toDF("doc_id", "text"),
         root2, "corp", "clusters"))
     assert(e2.getMessage.contains("MIXED"), e2.getMessage)
+    CacheScope.drain()
+
+    // NO committed index at all: the refresh refuses up front, naming
+    // the build call, and commits nothing to any index table
+    val root3 = Files.createTempDirectory("graft-clmix-c-").toString
+    val tables = Seq("clusters", "clusters_sig", "clusters_pairs",
+      "clusters_surv", "clusters_adj")
+    val e3 = intercept[IllegalArgumentException](
+      PipelineOps.refreshClusterIndex(spark, docs, root3, "corp",
+        "clusters"))
+    assert(e3.getMessage.contains("buildClusterIndex"), e3.getMessage)
+    assert(tables.forall(TableIO.currentVersion(root3, "corp", _) == 0L))
     CacheScope.drain()
   }
 }
