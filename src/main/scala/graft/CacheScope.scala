@@ -51,6 +51,19 @@ object CacheScope {
     }
   }
 
+  /** Block-scoped caches: `body` receives a `cache` function, and every
+    * relation passed to it stays cached until the block exits; the
+    * `finally` unpersists them, so an error still releases them. For
+    * code that consumes its caches before returning (a commit, a
+    * collect); a lazy operator result that outlives its builder uses
+    * [[cached]].
+    */
+  def scoped[T](body: (DataFrame => DataFrame) => T): T = {
+    val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => held += df.cache(); df }
+    finally held.reverseIterator.foreach(_.unpersist())
+  }
+
   /** Registered-but-not-yet-drained entry count (spec observability). */
   def pendingCount: Int = ledger.size()
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Layout
 import graft.functions.{TextHash, VectorOps}
 
 /** Deduplication operators over a documents table (doc_id, text) — the
@@ -50,7 +51,7 @@ object Dedup {
     * full-cluster sort.
     */
   def keepBest(docs: DataFrame): DataFrame =
-    Similarity.wideRepartition(docs, col("doc_id"))
+    Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"), col("n_chars"),
         md5(normalize(col("text"))).as("fp"))
       .groupBy("fp")
@@ -68,7 +69,7 @@ object Dedup {
     * the repartition they run in one task.
     */
   def fingerprint(docs: DataFrame): DataFrame =
-    Similarity.wideRepartition(docs, col("doc_id"))
+    Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"), md5(normalize(col("text"))).as("fp"))
       .groupBy("fp")
       .agg(min("doc_id").as("doc_id"), count(lit(1)).as("n_copies"))
@@ -97,7 +98,7 @@ object Dedup {
     // per-document shingle dedup is per-row: array_distinct before the
     // explode (a global .distinct() here shuffled #docs x #shingles
     // rows — the 2M-doc smoke measured ~7 min of that in decontaminate)
-    val sh0 = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val sh0 = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       explode(array_distinct(
         TextHash.shingleHashes(split(col("text"), " "), n))).as("sh"))
     // df-cap: the aggregate and the join share the `sh` hash partitioning,
@@ -108,10 +109,9 @@ object Dedup {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = sh.toDF("sh", "doc_a")
     val b = sh.toDF("sh", "doc_b")
-    // pinned-width repartition (see Similarity.wideRepartition): the
-    // inverted-shingle self-join explodes up to maxDf pairs per posting
-    // — AQE's byte-based coalescing serialized the join+count stage
-    Similarity.wideRepartition(a, col("sh")).join(b, "sh")
+    // the inverted-shingle self-join explodes up to maxDf pairs per
+    // posting
+    Layout.expand(a, col("sh")).join(b, "sh")
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("shared"))
@@ -139,7 +139,7 @@ object Dedup {
     */
   def containment(docs: DataFrame, n: Int = 4, tau: Double = 0.9,
       maxDf: Int = 256): DataFrame = {
-    val sh0 = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val sh0 = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       explode(array_distinct(
         TextHash.shingleHashes(split(col("text"), " "), n))).as("sh"))
     val rare = sh0.groupBy("sh").agg(count(lit(1)).as("df"))
@@ -148,8 +148,7 @@ object Dedup {
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
     val a = sh.toDF("sh", "doc_a")
     val b = sh.toDF("sh", "doc_b")
-    // pinned-width repartition — same AQE rationale as ngramJaccard
-    Similarity.wideRepartition(a, col("sh")).join(b, "sh")
+    Layout.expand(a, col("sh")).join(b, "sh")
       .filter(col("doc_a") < col("doc_b"))
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("shared"))
@@ -189,7 +188,7 @@ object Dedup {
     */
   def prefixJaccard(docs: DataFrame, n: Int = 4, tauNum: Int = 4,
       tauDen: Int = 5, maxDf: Int = 256): DataFrame = {
-    val sh0 = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val sh0 = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       explode(array_distinct(
         TextHash.shingleHashes(split(col("text"), " "), n))).as("sh"))
     // keep df: it defines the rarest-first global order
@@ -209,7 +208,7 @@ object Dedup {
       .filter(col("rk") <=
         col("sz") - floor((col("sz") * tauNum + (tauDen - 1)) / tauDen) + 1)
       .select("doc_id", "sh", "sz")
-    val cand = Similarity.wideRepartition(
+    val cand = Layout.expand(
         pref.select(col("sh"), col("doc_id").as("doc_a"),
           col("sz").as("size_a")), col("sh"))
       .join(pref.select(col("sh"), col("doc_id").as("doc_b"),
@@ -240,7 +239,7 @@ object Dedup {
     // No distinct needed: min over the shingle multiset equals min over
     // the set, so duplicates cannot change any signature component.
     // repartition spreads the shingle+rehash hot loop across cores.
-    val sh = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val sh = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       explode(TextHash.shingleHashes(split(col("text"), " "), n)).as("h"))
     val mins = TextHash.minhashSeeds.zipWithIndex.map { case ((a, b), j) =>
       min(TextHash.rehash(col("h"), a, b)).as(s"s$j")
@@ -275,8 +274,7 @@ object Dedup {
     val bands = sigBands(sig, nBands)
     val a = bands.toDF("doc_a", "band", "key")
     val b = bands.toDF("doc_b", "band", "key")
-    // pinned-width repartition — same AQE rationale as the LSH joins
-    Similarity.wideRepartition(a, col("band"), col("key"))
+    Layout.expand(a, col("band"), col("key"))
       .join(b, Seq("band", "key"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
@@ -466,7 +464,7 @@ object Dedup {
     val sigMatches = (0 until 16).map(j =>
       when(col(s"a$j") === col(s"b$j"), 1).otherwise(0)).reduce(_ + _)
     // distinct shingle-hash sets, touched only for candidate pairs
-    val sh = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val sh = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       explode(TextHash.shingleHashes(split(col("text"), " "), n)).as("h"))
       .distinct()
     val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
@@ -499,7 +497,7 @@ object Dedup {
     * source-hash gate so the oracle replays the whole flow.
     */
   def crossCorpusNew(incoming: DataFrame, existing: DataFrame): DataFrame = {
-    def fp(df: DataFrame) = Similarity.wideRepartition(df, col("doc_id"))
+    def fp(df: DataFrame) = Layout.expand(df, col("doc_id"))
       .select(col("doc_id"), md5(normalize(col("text"))).as("fp"))
     fp(incoming)
       .join(fp(existing).select("fp").distinct(), Seq("fp"), "left_anti")
@@ -542,7 +540,7 @@ object Dedup {
   }
 
   /** Normalized fingerprints of a corpus: (doc_id, fp). */
-  private def fpOf(df: DataFrame): DataFrame = Similarity.wideRepartition(df, col("doc_id"))
+  private def fpOf(df: DataFrame): DataFrame = Layout.expand(df, col("doc_id"))
     .select(col("doc_id"), md5(normalize(col("text"))).as("fp"))
 
   /** Kirsch-Mitzenmacher probe positions:
@@ -896,7 +894,7 @@ object Dedup {
     */
   def simhashPairs(docs: DataFrame, maxDist: Int = 1): DataFrame = {
     require(maxDist < 4, "4x8-bit banding is only exhaustive for maxDist < 4")
-    val withSim = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val withSim = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       TextHash.simhash32(graft.functions.HashFunctions.wordHashes(
         split(col("text"), " "))).as("sim"))
     val bands = withSim.select(col("doc_id"), col("sim"),
@@ -905,8 +903,7 @@ object Dedup {
       }: _*)).as(Seq("band", "key")))
     val a = bands.toDF("doc_a", "sim_a", "band", "key")
     val b = bands.toDF("doc_b", "sim_b", "band", "key")
-    // pinned-width repartition — same AQE rationale as the LSH joins
-    Similarity.wideRepartition(a, col("band"), col("key"))
+    Layout.expand(a, col("band"), col("key"))
       .join(b, Seq("band", "key"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
@@ -953,7 +950,7 @@ object Dedup {
     val bandDf = emb.select(col("vec_id"), col("embedding"),
       VectorOps.norm(col("embedding")).as("nrm"),
       posexplode(array(keyCols: _*)).as(Seq("band", "key")))
-    Similarity.wideRepartition(
+    Layout.expand(
         bandDf.toDF("vec_a", "emb_a", "norm_a", "band", "key"),
         col("band"), col("key"))
       .join(bandDf.toDF("vec_b", "emb_b", "norm_b", "band", "key"),

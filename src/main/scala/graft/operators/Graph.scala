@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Layout
 
 /** Distributed graph analytics over a deterministic document link
   * graph: PageRank (the classic quality prior for web-scale corpus
@@ -40,18 +41,6 @@ object Graph {
   val Scale = 1000000000L
   val OutlinksPerNode = 3
   val Iterations = 5
-
-  /** Lineage-truncation cadence for the LINEAR-lineage iterations
-    * (pagerank / personalized pagerank / HITS, whose loop relation is
-    * referenced ONCE per round, so the analyzed plan grows linearly —
-    * unlike the doubly-referencing CC/BFS/k-core loops, which double
-    * per round and checkpoint EVERY round). Each eager localCheckpoint
-    * is an extra Spark job (~0.2s of scheduling at bench scale), so
-    * the linear family truncates every 8th round: free at the default
-    * 5 iterations, and the plan stays bounded by 8 rounds of lineage
-    * if anyone raises Iterations (spec-pinned at 17 rounds).
-    */
-  val CheckpointEvery = 8
 
   /** The deterministic edge list (src, dst), self-loops removed,
     * multi-edges collapsed. `n` is the node count (doc_ids are
@@ -96,7 +85,9 @@ object Graph {
       linkEdges(docs).repartition(col("src")))
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // contributions join reuses the src partitioning every iteration
-    val contribEdges = cachedSizeAdaptive(edges.join(outdeg, "src"))
+    val wide = graft.CacheScope.cached(edges.join(outdeg, "src"))
+    val contribEdges = if (wide.count() > SmallGraphEdges) wide
+      else try Layout.single(wide) finally wide.unpersist(blocking = false)
     // Iterate on the IN-LINK SUM s_i(v) instead of the full rank
     // vector: r_i(v) = base + (85*s_i(v)) div 100 with s_i(v)=0 for
     // nodes with no in-links, so each iteration needs only ONE join
@@ -109,10 +100,6 @@ object Graph {
       .agg(sum("c").as("s")) // partial (map-side) long sums
       .select(col("dst").as("s_node"), col("s"))
     for (i <- 2 to iterations) {
-      // every-CheckpointEvery-rounds eager localCheckpoint bounds the
-      // linearly-growing lineage without paying an extra job per round
-      // (a real cluster with lineage-loss concerns would use reliable
-      // checkpoint())
       s = contribEdges
         .join(s, col("src") === col("s_node"), "left")
         .select(
@@ -122,7 +109,7 @@ object Graph {
         .groupBy("dst")
         .agg(sum("c").as("s"))
         .select(col("dst").as("s_node"), col("s"))
-      if (i % CheckpointEvery == 0) s = s.localCheckpoint(true)
+      if (i % Layout.CheckpointEvery == 0) s = Layout.iterated(s)
     }
     docs
       .select(col("doc_id").as("node"))
@@ -173,7 +160,7 @@ object Graph {
     * Scale shape identical to [[pagerank]]: one cached src-partitioned
     * weighted edge relation, one join per iteration against the
     * constant-width in-link-sum relation, partial map-side long sums,
-    * lineage truncated every [[CheckpointEvery]] rounds.
+    * lineage truncated every [[graft.Layout.CheckpointEvery]] rounds.
     */
   def weightedPagerank(spark: SparkSession, docs: DataFrame): DataFrame = {
     val base = Scale * 15 / 100
@@ -184,7 +171,9 @@ object Graph {
             col("dst").cast("string"))) % 9L + 1L)
         .repartition(col("src")))
     val wsum = edges.groupBy("src").agg(sum("w").as("wsum"))
-    val contribEdges = cachedSizeAdaptive(edges.join(wsum, "src"))
+    val wide = graft.CacheScope.cached(edges.join(wsum, "src"))
+    val contribEdges = if (wide.count() > SmallGraphEdges) wide
+      else try Layout.single(wide) finally wide.unpersist(blocking = false)
     var s = contribEdges
       .select(col("dst"), expr(s"(${Scale}L * w) div wsum").as("c"))
       .groupBy("dst")
@@ -200,7 +189,7 @@ object Graph {
         .groupBy("dst")
         .agg(sum("c").as("s"))
         .select(col("dst").as("s_node"), col("s"))
-      if (i % CheckpointEvery == 0) s = s.localCheckpoint(true)
+      if (i % Layout.CheckpointEvery == 0) s = Layout.iterated(s)
     }
     docs
       .select(col("doc_id").as("node"))
@@ -414,9 +403,9 @@ object Graph {
     * recommendation / trust-propagation primitive next to the global
     * [[pagerank]] quality prior. Same exact integer arithmetic and
     * in-link-sum iteration shape (one join per round over the cached
-    * src-partitioned edges, lineage truncated every [[CheckpointEvery]]
-    * rounds), with the base
-    * term seed-gated: r_{i+1}(v) = seed(v)·0.15·Scale +
+    * src-partitioned edges, lineage truncated every
+    * [[graft.Layout.CheckpointEvery]] rounds), with the base term
+    * seed-gated: r_{i+1}(v) = seed(v)·0.15·Scale +
     * (85·s_i(v)) div 100. Returns the top-20 nodes with NONZERO rank
     * (mass only reaches the seeds' forward neighborhoods):
     * (doc_id, rank_fp).
@@ -426,7 +415,9 @@ object Graph {
     val edges = graft.CacheScope.cached(
       linkEdges(docs).repartition(col("src")))
     val outdeg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val contribEdges = cachedSizeAdaptive(edges.join(outdeg, "src"))
+    val wide = graft.CacheScope.cached(edges.join(outdeg, "src"))
+    val contribEdges = if (wide.count() > SmallGraphEdges) wide
+      else try Layout.single(wide) finally wide.unpersist(blocking = false)
     def seedBase(node: String, mass: Long): String =
       s"CASE WHEN $node % $PprSeedMod = 0 THEN ${mass}L ELSE 0L END"
     var s = contribEdges
@@ -445,7 +436,7 @@ object Graph {
         .groupBy("dst")
         .agg(sum("c").as("s"))
         .select(col("dst").as("s_node"), col("s"))
-      if (i % CheckpointEvery == 0) s = s.localCheckpoint(true)
+      if (i % Layout.CheckpointEvery == 0) s = Layout.iterated(s)
     }
     docs
       .select(col("doc_id").as("node"))
@@ -502,12 +493,14 @@ object Graph {
     *
     * Scale shape: the SAME cached src-partitioned edge relation as
     * [[pagerank]]; each round is two partial-aggregated joins (h→a on
-    * dst, a→h on src), lineage truncated every [[CheckpointEvery]]
-    * rounds.
+    * dst, a→h on src), lineage truncated every
+    * [[graft.Layout.CheckpointEvery]] rounds.
     */
   def hits(spark: SparkSession, docs: DataFrame): DataFrame = {
-    val edges = cachedSizeAdaptive(
+    val wide = graft.CacheScope.cached(
       linkEdges(docs).repartition(col("src")))
+    val edges = if (wide.count() > SmallGraphEdges) wide
+      else try Layout.single(wide) finally wide.unpersist(blocking = false)
     // h_0 = 1 for every node => a_1(v) = indeg(v)
     var a = edges.groupBy("dst").agg(count(lit(1)).cast("long").as("a"))
       .select(col("dst").as("a_node"), col("a"))
@@ -522,9 +515,9 @@ object Graph {
         .groupBy("src").agg(sum("a").as("h"))
         .select(col("src").as("h_node"), col("h"))
       // h is also a's lineage tail, so one truncation bounds both
-      if (i % CheckpointEvery == 0) {
-        a = a.localCheckpoint(true)
-        h = h.localCheckpoint(true)
+      if (i % Layout.CheckpointEvery == 0) {
+        a = Layout.iterated(a)
+        h = Layout.iterated(h)
       }
     }
     docs.select(col("doc_id").as("node"))
@@ -659,20 +652,19 @@ object Graph {
     * and recomputes support with the degeneracy-bounded wedge+closing
     * join — O(wedges of the current subgraph) per round; the edge set
     * is monotone decreasing, so count equality is set equality, and
-    * rounds are bounded by the peel depth (TrussRounds guard). Eager
-    * localCheckpoint per round truncates the self-referencing lineage
-    * (the doubly-referencing loop rule).
+    * rounds are bounded by the peel depth (TrussRounds guard). One
+    * [[graft.Layout.iterated]] per round truncates the self-referencing
+    * lineage.
     */
   def ktruss(spark: SparkSession, docs: DataFrame, k: Int = 3): DataFrame = {
-    var alive = orientedEdges(docs)._1.localCheckpoint(true)
+    var alive = Layout.iterated(orientedEdges(docs)._1)
     var n = alive.count()
     var rounds = 0
     var done = false
     while (!done) {
-      val next = supportOf(alive)
+      val next = Layout.iterated(supportOf(alive)
         .filter(col("support") >= k - 2)
-        .select("u", "v")
-        .localCheckpoint(true)
+        .select("u", "v"))
       val n2 = next.count()
       done = n2 == n // monotone shrink: same count = same set
       alive = next
@@ -770,9 +762,12 @@ object Graph {
        |       n_triangles
        |FROM t""".stripMargin
 
-  /** Edge volume under which the cached symmetric edge relation
-    * collapses to ONE partition (≈8 MB of (long, long) rows — far
-    * below one task's comfort). The iterative consumers run many
+  /** Edge volume under which a cached edge relation ([[symmetricEdges]],
+    * and the directed ones of the pagerank family and [[hits]]) moves
+    * to [[graft.Layout.single]] (≈8 MB of (long, long) rows — far
+    * below one task's comfort). The count that tests the size fills
+    * the wide cache, which is dropped once the one-partition copy is
+    * resident. The iterative consumers run many
     * small per-round jobs over this relation, and AQE's
     * parallelism-first coalescing keeps ~#cores near-empty partitions
     * however tiny the data — the r18 eval-diet anatomy (measured
@@ -785,14 +780,8 @@ object Graph {
   /** The undirected link graph as a symmetric directed edge relation
     * (each undirected edge appears in both directions), hash-partitioned
     * by `src` and cached — the shared traversal input for
-    * [[connectedComponents]] and [[bfs]]. Size-adaptive (r19, VERDICT
-    * r18 item 3 — measure-first): the count fills the cache (a job
-    * every consumer's first action would otherwise run), and a graph
-    * under [[SmallGraphEdges]] re-caches as one partition — the
-    * coalesce sits on the materialized cache, so nothing upstream
-    * recomputes or narrows, and the wide duplicate is dropped once
-    * the single-partition copy is resident (drain's later unpersist
-    * of the ledger entry is an idempotent no-op).
+    * [[connectedComponents]] and [[bfs]]; one partition under
+    * [[SmallGraphEdges]] (r19, VERDICT r18 item 3).
     */
   private def symmetricEdges(docs: DataFrame,
       partitionKey: String = "src"): DataFrame = {
@@ -801,31 +790,12 @@ object Graph {
         least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
       .distinct()
-    cachedSizeAdaptive(
+    val wide = graft.CacheScope.cached(
       und.select(col("u").as("src"), col("v").as("dst"))
         .union(und.select(col("v").as("src"), col("u").as("dst")))
         .repartition(col(partitionKey)))
-  }
-
-  /** Cache an edge-shaped relation, re-caching it at ONE partition
-    * when it is small (≤ [[SmallGraphEdges]] rows) — the r19
-    * size-adaptive layout shared by [[symmetricEdges]] and the
-    * directed-edge iterative consumers ([[hits]], [[pagerankImpl]]):
-    * per-round joins/aggregates over a tiny cached relation otherwise
-    * run as ~#cores near-empty tasks per stage across dozens of AQE
-    * stage jobs. The count fills the cache (a job every consumer's
-    * first action would run anyway); above the threshold the wide
-    * layout is untouched.
-    */
-  private def cachedSizeAdaptive(df: DataFrame): DataFrame = {
-    val wide = graft.CacheScope.cached(df)
     if (wide.count() > SmallGraphEdges) wide
-    else {
-      val one = graft.CacheScope.cached(wide.coalesce(1))
-      one.count()
-      wide.unpersist(blocking = false)
-      one
-    }
+    else try Layout.single(wide) finally wide.unpersist(blocking = false)
   }
 
   /** SQL twin of [[symmetricEdges]] (CTE `ed`), for appending after
@@ -859,12 +829,9 @@ object Graph {
     val edges = symmetricEdges(docs, partitionKey = "dst")
     // Loop economics (this is all fixed overhead at test scale, and
     // shuffle count at cluster scale):
-    //  - ONE eager localCheckpoint per round — it both truncates the
-    //    self-referencing lineage (without truncation the plan doubles
-    //    per round and Catalyst planning time grows exponentially;
-    //    measured 181s -> 10.6s at sf0.01) and materializes the one
-    //    relation every later step reads. (On a cluster with
-    //    lineage-loss concerns, swap for reliable checkpoint().)
+    //  - ONE Layout.iterated per round — it both truncates the
+    //    self-referencing lineage and materializes the one relation
+    //    every later step reads.
     //  - the convergence test is a filter-count on that checkpointed
     //    relation (prev label carried as a column) — no join, no
     //    shuffle, one cheap local job.
@@ -872,10 +839,9 @@ object Graph {
     //    (already materialized) labels rather than the current
     //    intermediate — same fixpoint (at stability prev == current),
     //    one checkpoint instead of two per round.
-    var labels = docs
+    var labels = Layout.iterated(docs
       .select(col("doc_id").as("node"))
-      .withColumn("lab", col("node"))
-      .localCheckpoint(true)
+      .withColumn("lab", col("node")))
     var changed = 1L
     while (changed > 0) {
       // min label over neighbors, folded with own label
@@ -896,12 +862,11 @@ object Graph {
           col("lab1") === col("jn"), "left")
         .select(col("node"), col("plab"),
           least(col("lab1"), coalesce(col("jlab"), col("lab1"))).as("lab2"))
-      val next = jumped
+      val next = Layout.iterated(jumped
         .join(labels.select(col("node").as("kn"), col("lab").as("klab")),
           col("lab2") === col("kn"), "left")
         .select(col("node"), col("plab"),
-          least(col("lab2"), coalesce(col("klab"), col("lab2"))).as("lab"))
-        .localCheckpoint(true)
+          least(col("lab2"), coalesce(col("klab"), col("lab2"))).as("lab")))
       changed = next.filter(col("lab") =!= col("plab")).count()
       labels = next.select("node", "lab")
     }
@@ -940,30 +905,26 @@ object Graph {
     */
   def bfs(spark: SparkSession, docs: DataFrame, nSeeds: Int = 5): DataFrame = {
     val edges = symmetricEdges(docs)
-    // localCheckpoint: `dist` accumulates a union per hop and is also
-    // the anti-join filter for the next frontier — without truncation
-    // the plan grows quadratically over the hop loop (see
-    // [[connectedComponents]]).
-    var dist = docs
+    // iterated: `dist` accumulates a union per hop and is also the
+    // anti-join filter for the next frontier
+    var dist = Layout.iterated(docs
       .filter(col("doc_id") < nSeeds)
       .select(col("doc_id").as("node"))
-      .withColumn("hops", lit(0))
-      .localCheckpoint(true)
+      .withColumn("hops", lit(0)))
     var frontier = dist
     var h = 0
     var frontierEmpty = frontier.isEmpty
     while (!frontierEmpty && h < MaxHops) {
       h += 1
-      val next = edges
+      val next = Layout.iterated(edges
         .join(frontier.withColumnRenamed("node", "src").drop("hops"), "src")
         .select(col("dst").as("node"))
         .distinct()
         .join(dist, Seq("node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .localCheckpoint(true)
+        .withColumn("hops", lit(h)))
       frontierEmpty = next.isEmpty
       if (!frontierEmpty) {
-        dist = dist.union(next).localCheckpoint(true)
+        dist = Layout.iterated(dist.union(next))
       }
       frontier = next
     }
@@ -1004,8 +965,8 @@ object Graph {
     * Scale shape: each round is ONE join of the cached symmetric edge
     * relation against the shrinking-width dist relation plus a
     * min-aggregation (partial map-side); dist is referenced twice per
-    * round (union + join), so it localCheckpoints every round like
-    * CC/BFS — the doubly-referencing loop rule.
+    * round (union + join), so it is [[graft.Layout.iterated]] every
+    * round like CC/BFS.
     */
   def sssp(spark: SparkSession, docs: DataFrame,
       nSeeds: Int = 5): DataFrame = {
@@ -1014,18 +975,16 @@ object Graph {
         Sketches.hash60(concat(
           least(col("src"), col("dst")).cast("string"), lit(":"),
           greatest(col("src"), col("dst")).cast("string"))) % 9L + 1L))
-    var dist = docs
+    var dist = Layout.iterated(docs
       .filter(col("doc_id") < nSeeds)
-      .select(col("doc_id").as("node"), lit(0L).as("cost"))
-      .localCheckpoint(true)
+      .select(col("doc_id").as("node"), lit(0L).as("cost")))
     for (_ <- 1 to SsspHops) {
       val relaxed = ew
         .join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
-      dist = dist.union(relaxed)
+      dist = Layout.iterated(dist.union(relaxed)
         .groupBy("node")
-        .agg(min("cost").as("cost"))
-        .localCheckpoint(true)
+        .agg(min("cost").as("cost")))
     }
     dist.orderBy("node").select(col("node").as("doc_id"), col("cost"))
   }
@@ -1073,25 +1032,24 @@ object Graph {
     * relation against the shrinking alive set plus one partial-
     * aggregated degree count; alive is MONOTONE decreasing, so the
     * count-equality convergence test is set equality, and rounds are
-    * bounded by the degeneracy peel depth (KcoreRounds guard). Eager
-    * localCheckpoint per round truncates the self-referencing lineage
-    * (the iterative-DataFrame rule).
+    * bounded by the degeneracy peel depth (KcoreRounds guard). One
+    * [[graft.Layout.iterated]] per round truncates the self-referencing
+    * lineage.
     */
   def kcore(spark: SparkSession, docs: DataFrame, k: Int = 4): DataFrame = {
     val edges = symmetricEdges(docs)
-    var alive = edges.groupBy(col("src").as("node"))
+    var alive = Layout.iterated(edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg")).filter(col("deg") >= k)
-      .select("node").localCheckpoint(true)
+      .select("node"))
     var n = alive.count()
     var rounds = 1 // the initial degree filter IS peel round 1
     var done = false
     while (!done) {
-      val next = edges
+      val next = Layout.iterated(edges
         .join(alive.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
         .join(alive.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("node")
-        .localCheckpoint(true)
+        .filter(col("deg") >= k).select("node"))
       val n2 = next.count()
       done = n2 == n // alive shrinks monotonically: same count = same set
       alive = next
@@ -1189,28 +1147,26 @@ object Graph {
     * Returns one row: (n_communities, n_edges, q_num, modularity).
     *
     * Scale shape: `rounds` label joins over the cached dst-partitioned
-    * symmetric edges (labels localCheckpoint per round — the
-    * doubly-referencing rule), then one degree aggregation, one
+    * symmetric edges (labels [[graft.Layout.iterated]] per
+    * round), then one degree aggregation, one
     * two-sided label join for intra-community edge counts, and
     * constant-width final aggregates. Everything is linear in |E|.
     */
   def modularity(spark: SparkSession, docs: DataFrame,
       rounds: Int = ModularityRounds): DataFrame = {
     val edges = symmetricEdges(docs, partitionKey = "dst")
-    var labels = docs.select(col("doc_id").as("node"))
-      .withColumn("lab", col("node"))
-      .localCheckpoint(true)
+    var labels = Layout.iterated(docs.select(col("doc_id").as("node"))
+      .withColumn("lab", col("node")))
     for (_ <- 1 to rounds) {
       val viaN = edges
         .join(labels.withColumnRenamed("node", "dst")
           .withColumnRenamed("lab", "nl"), "dst")
         .groupBy(col("src").as("node"))
         .agg(min("nl").as("nlab")) // partial map-side min
-      labels = labels
+      labels = Layout.iterated(labels
         .join(viaN, Seq("node"), "left")
         .select(col("node"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"))
-        .localCheckpoint(true)
+          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab")))
     }
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg")) // symmetric relation: this IS the degree
@@ -1322,8 +1278,8 @@ object Graph {
     * Scale shape per phase: k_{i,c} is one edges⋈labels join + count
     * (linear in |E|), Σ_c one degree aggregation, the move selection a
     * max-of-struct groupBy on the node key (partial map-side max, no
-    * window over a skewed key); labels localCheckpoint per phase (the
-    * doubly-referencing loop rule). Scoring reuses the linear
+    * window over a skewed key); labels [[graft.Layout.iterated]] per
+    * phase. Scoring reuses the linear
     * modularity machinery. Nothing exceeds O(|E|) rows; products stay
     * under 2^53 to ~4.7e7 edges like [[modularity]]'s q_num.
     *
@@ -1365,20 +1321,18 @@ object Graph {
     // exact-Q accept/reject (oracle-replayed) cannot be deferred into
     // the plan. Parked unless the guard contract changes.
     val edges = symmetricEdges(docs, partitionKey = "dst")
-    var labels = docs.select(col("doc_id").as("node"))
-      .withColumn("lab", col("node"))
-      .localCheckpoint(true)
+    var labels = Layout.iterated(docs.select(col("doc_id").as("node"))
+      .withColumn("lab", col("node")))
     for (_ <- 1 to rounds) {
       val viaN = edges
         .join(labels.withColumnRenamed("node", "dst")
           .withColumnRenamed("lab", "nl"), "dst")
         .groupBy(col("src").as("node"))
         .agg(min("nl").as("nlab"))
-      labels = labels
+      labels = Layout.iterated(labels
         .join(viaN, Seq("node"), "left")
         .select(col("node"),
-          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab"))
-        .localCheckpoint(true)
+          least(col("lab"), coalesce(col("nlab"), col("lab"))).as("lab")))
     }
     val seed = labels
     // cached + eagerly filled: deg appears in EVERY rescore's dsum and
@@ -1458,9 +1412,8 @@ object Graph {
         // (gain, -c) — a partial-aggregating shape, no per-node window
         .agg(max(struct(col("gain"), (-col("c")).as("negc"))).as("best"))
         .select(col("node"), (-col("best.negc")).as("moved"))
-      val cand = refined.join(moves, Seq("node"), "left")
-        .select(col("node"), coalesce(col("moved"), col("lab")).as("lab"))
-        .localCheckpoint(true)
+      val cand = Layout.iterated(refined.join(moves, Seq("node"), "left")
+        .select(col("node"), coalesce(col("moved"), col("lab")).as("lab")))
       if (!guard) refined = cand
       else {
         // monotonicity guard: per-move gains are estimates against a

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Layout
 import graft.functions.TextHash
 import graft.plans.{Maintenance, Mor, PartitionSpec, Partitioning, TableIO}
 
@@ -43,7 +44,7 @@ object PipelineOps {
     // .distinct() after the explode shuffled #docs x #shingles rows
     // (54M rows / 7 min at the 2M-doc scale smoke; this shape is
     // shuffle-free and took decontaminate to ~11s there).
-    val base = Similarity.wideRepartition(docs, col("doc_id"))
+    val base = Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"),
         (pmod(idHash("t"), lit(20)) === 0).as("is_test"),
         explode(array_distinct(
@@ -193,12 +194,9 @@ object PipelineOps {
   def passageDupStats(docs: DataFrame, width: Int = 3): DataFrame = {
     val words = split(col("text"), " ")
     val nPass = ceil(size(words) / lit(width.toDouble)).cast("int")
-    // pinned-width repartition (r19, same AQE-coalescing anatomy as the
-    // banded self-joins): the per-window md5 expansion runs in the
-    // post-shuffle stage, and the pre-explosion doc bytes are small, so
-    // AQE's byte-based coalescing serialized the whole fingerprint
-    // compute into 1 task (JobProbe: a 0.99s 2-task job in a 2.8s wall)
-    val fps = Similarity.wideRepartition(docs, col("doc_id"))
+    // the per-window md5 expansion runs in the post-shuffle stage
+    // (JobProbe r19 before expand: a 0.99s 2-task job in a 2.8s wall)
+    val fps = Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"),
         explode(transform(sequence(lit(0), nPass - 1),
           i => md5(concat_ws(" ",
@@ -243,7 +241,7 @@ object PipelineOps {
     // warm wall; the filter's split() is evaluated in the scan stage,
     // whose parallelism is input-file-bound, not core-bound)
     val wins = graft.CacheScope.cached(
-      Similarity.wideRepartition(docs, col("doc_id"))
+      Layout.expand(docs, col("doc_id"))
         .filter(size(words) >= width)
         .select(col("doc_id"), size(words).cast("long").as("n_tokens"),
           posexplode(transform(sequence(lit(0), size(words) - width),
@@ -394,7 +392,7 @@ object PipelineOps {
     */
   def topNgrams(docs: DataFrame, k: Int = 20): DataFrame = {
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    Similarity.wideRepartition(docs, col("doc_id"))
+    Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "w")))
       .withColumn("w1", lead("w", 1).over(w))
       .withColumn("w2", lead("w", 2).over(w))
@@ -419,7 +417,7 @@ object PipelineOps {
     * stream against the vocab.
     */
   def vocabCoverage(docs: DataFrame, vocabSize: Int = 256): DataFrame = {
-    val toks = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val toks = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       col("source"), explode(split(lower(col("text")), " ")).as("w"))
     val dfreq = toks.select("doc_id", "w").distinct()
       .groupBy("w").agg(count(lit(1)).as("df"))
@@ -465,7 +463,7 @@ object PipelineOps {
     * TakeOrdered vocab broadcast back, one aggregation by source.
     */
   def vocabFertility(docs: DataFrame, vocabSize: Int = 256): DataFrame = {
-    val toks = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val toks = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       col("source"), explode(split(lower(col("text")), " ")).as("w"))
     val dfreq = toks.select("doc_id", "w").distinct()
       .groupBy("w").agg(count(lit(1)).as("df"))
@@ -937,9 +935,8 @@ object PipelineOps {
         // NO new pairs, and an empty partitioned append is a malformed
         // zero-file commit
         if (inSync) {
-          val deltaPairs = Dedup
-            .deltaPairsFromSigs(deltaSigs, old.unionByName(deltaSigs))
-            .localCheckpoint()
+          val deltaPairs = Layout.iterated(Dedup
+            .deltaPairsFromSigs(deltaSigs, old.unionByName(deltaSigs)))
           if (!deltaPairs.isEmpty)
             Partitioning.appendPartitioned(spark, ix.root, ix.ns,
               ix.t("_pairs"), deltaPairs)
@@ -995,14 +992,13 @@ object PipelineOps {
       def fold(spark: SparkSession, ix: Ix, deltaSigs: DataFrame,
           deltaBands: DataFrame, touched: DataFrame,
           inSync: Boolean): DataFrame = {
-        val recapped = Similarity.capBuckets(
+        val recapped = Layout.iterated(Similarity.capBuckets(
           touched.unionByName(deltaBands), "doc_id", cap, lit(0L))
-          .select("doc_id", "band", "key")
-          .localCheckpoint()
+          .select("doc_id", "band", "key"))
         val keys = Seq("doc_id", "band", "key")
         commitMorDelta(spark, ix, "_surv",
-          recapped.join(touched, keys, "left_anti").localCheckpoint(),
-          touched.join(recapped, keys, "left_anti").localCheckpoint())
+          Layout.iterated(recapped.join(touched, keys, "left_anti")),
+          Layout.iterated(touched.join(recapped, keys, "left_anti")))
         recapped
       }
 
@@ -1117,10 +1113,9 @@ object PipelineOps {
     // read by the fold, the route count, the adjacency delta and the
     // scoped relabel — and the checkpoint cuts the scan plans out of
     // everything downstream
-    val touched = flavour.bandRows(spark, ix)
+    val touched = Layout.iterated(flavour.bandRows(spark, ix)
       .join(deltaBands.select("band", "key").distinct(), Seq("band", "key"),
-        "left_semi")
-      .localCheckpoint()
+        "left_semi"))
     val fresh = flavour.fold(spark, ix, deltaSigs, deltaBands, touched, inSync)
     if (!inSync) flavour.heal(spark, ix)
     if (!inSync ||
@@ -1131,8 +1126,8 @@ object PipelineOps {
       // commitMorDelta's probe-plus-write. The delete keys are FULL rows,
       // so every key carries the partition-source column and
       // Maintenance.compactDeletes can scope its fold
-      val adjAdds = adjFromSurv(fresh).localCheckpoint()
-      val adjDels = adjFromSurv(touched).localCheckpoint()
+      val adjAdds = Layout.iterated(adjFromSurv(fresh))
+      val adjDels = Layout.iterated(adjFromSurv(touched))
       if (!(adjAdds.exceptAll(adjDels).isEmpty &&
           adjDels.exceptAll(adjAdds).isEmpty)) {
         commitMorDelta(spark, ix, "_adj", adjAdds, adjDels)
@@ -1368,9 +1363,8 @@ object PipelineOps {
     // singletons are absent from the adjacency and drop out of the
     // ball harmlessly: they have no pairs in either graph, hence no
     // label row on any path (their old rows, if touched, ride touchedM).
-    val adjCore = ix.read(spark, "_adj")
-      .select("doc_id", "band", "key")
-      .localCheckpoint()
+    val adjCore = Layout.iterated(ix.read(spark, "_adj")
+      .select("doc_id", "band", "key"))
     val adj = adjCore.unionByName(touchedM)
     // each hop references the PREVIOUS ball exactly once — bucket
     // adjacency is reflexive for any doc with adjacency rows (a doc
@@ -1378,7 +1372,7 @@ object PipelineOps {
     // a union. (Evicted delta docs drop out of the ball: they have no
     // edges in either graph and no label row on any path.) The
     // per-hop eager checkpoint keeps every hop's plan constant-sized.
-    var ball = seeds.localCheckpoint()
+    var ball = Layout.iterated(seeds)
     var relabelSet = ball
     // EARLY EXIT on convergence (r19): near-dup components are tiny,
     // so the expansion usually saturates after 1-2 hops — and from
@@ -1397,8 +1391,8 @@ object PipelineOps {
     while (h <= 2 * iters && !converged) {
       val keys = adj.join(ball, Seq("doc_id"), "left_semi")
         .select("band", "key").distinct()
-      ball = adj.join(keys, Seq("band", "key"), "left_semi")
-        .select("doc_id").distinct().localCheckpoint()
+      ball = Layout.iterated(adj.join(keys, Seq("band", "key"), "left_semi")
+        .select("doc_id").distinct())
       val n = ball.count()
       converged = h >= 2 && n == ballCount
       ballCount = n
@@ -1422,9 +1416,8 @@ object PipelineOps {
     // commit probes emptiness AND writes — two actions — and an
     // unmaterialized `fresh` would re-run the whole 3-round ball
     // propagation for each.
-    val freshBall = labelPropagation(pairs, iters)
-      .join(relabelM, Seq("doc_id"), "left_semi")
-      .localCheckpoint()
+    val freshBall = Layout.iterated(labelPropagation(pairs, iters)
+      .join(relabelM, Seq("doc_id"), "left_semi"))
     commitMorDelta(spark, ix, "", freshBall, relabelM.select("doc_id"))
   }
 
@@ -1490,29 +1483,13 @@ object PipelineOps {
           explode(array((0 until copies).map(lit): _*)).as("c"))
         .select((col("doc_id") * copies + col("c")).as("doc_id"),
           col("text")))
-    // SINGLE-PARTITION caches + EAGER materialization (r18, the eval's
-    // measured cost anatomy): the corpus is BOUNDED by construction
-    // (base ids under MaxEvalBaseId), but the relation carried the
-    // session's 32 shuffle partitions into every cached scan — and the
-    // plan reads `sig` from ~6 independent branches and `edges` from 6
-    // more (3 rounds × 2 union arms), each an AQE-materialized
-    // exchange of 32 near-empty map tasks. ~70 such exchange jobs ×
-    // ~33 tiny tasks was the wall (sum-of-job-walls ~8× wall clock;
-    // per-task overhead, not data). Caching the bounded relations at
-    // ONE partition makes every downstream stage 1-2 tasks, and the
-    // eager counts populate each cache in dependency order so AQE's
-    // parallel branch materialization never races the unpopulated
-    // cache (measured: those races serialized on the cache's block
-    // locks, re-running the shingle pipeline per branch). The shingle
-    // hashing itself still runs wide: repartition(1), NOT coalesce(1)
-    // — no exchange separates minhashSignatures' aggregate from its
-    // internal repartition(doc_id), so a coalesce's narrow dependency
-    // would reach down to that shuffle and collapse the whole
-    // explode + rehash + aggregate stage into one task (r18 ADVICE;
-    // denseEvalCorpus documents the same trap).
-    val sig = graft.CacheScope.cached(
-      Dedup.minhashSignatures(dense).repartition(1))
-    sig.count()
+    // single (r18): the corpus is BOUNDED by construction (base ids
+    // under MaxEvalBaseId), and the plan reads `sig` from ~6
+    // independent branches and `edges` from 6 more (3 rounds × 2 union
+    // arms); filled in dependency order, so AQE's parallel branches
+    // never race an unpopulated cache (those races serialized on the
+    // cache's block locks, re-running the shingle pipeline per branch)
+    val sig = Layout.single(Dedup.minhashSignatures(dense))
     // ONE config-tagged pair relation — truth plus all 6 capped
     // configs — so the whole eval pays ONE 3-round propagation, not
     // 7 (the first cut ran 7 chains and cost 44s of pure per-job
@@ -1552,24 +1529,17 @@ object PipelineOps {
     // the execution linear in rounds — the least()-formulation over
     // this 7-config edge relation cost ~30s of replanning and round
     // re-execution)
-    // eager localCheckpoint, not cache+count (r19): the propagation
-    // loop references edges from two plan positions per round ×3
-    // rounds plus the seed, so the LOGICAL tree repeats the whole
-    // pairs pipeline ~7×, and every downstream action re-analyzes and
-    // re-canonicalizes those copies even when the cache serves the
-    // data — JobProbe measured 3.5-4.2s job-free driver gaps (a third
-    // of the warm wall) that eager caching alone did not remove. The
-    // checkpoint truncates the lineage to a leaf, so each round plans
-    // over a 1-partition in-memory relation. Same adjudicated
-    // exception as Graph.louvainRefine's per-round checkpoints: an
-    // iterative consumer of a BOUNDED relation (the eval corpus is
-    // capped by MaxEvalBaseId) inside an eval-only operator.
-    val edges = pairs.select(col("banding"), col("cap"),
+    // single, then iterated (r19): the propagation loop references
+    // edges from two plan positions per round ×3 rounds plus the seed,
+    // so the logical tree repeated the whole pairs pipeline ~7× — the
+    // one-partition cache alone left 3.5-4.2s of job-free driver gaps
+    // (a third of the warm wall); the checkpoint makes it a leaf. The
+    // eval corpus is capped by MaxEvalBaseId.
+    val edges = Layout.iterated(Layout.single(
+      pairs.select(col("banding"), col("cap"),
         col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("banding"), col("cap"),
-        col("doc_b").as("src"), col("doc_a").as("dst")))
-      .coalesce(1)
-      .localCheckpoint(true)
+        col("doc_b").as("src"), col("doc_a").as("dst")))))
     // no distinct on the self-loops — harmless dupes under min, one
     // fewer shuffle (see labelPropagation)
     val withSelf = edges.union(edges

@@ -142,10 +142,6 @@ object Retrieval {
   // and the bucket-partitioned layout makes the rewrite surgical — only
   // buckets holding a changed doc's terms are read or rewritten.
 
-  private def srcVersionFile(root: String, ns: String) =
-    graft.plans.TableIO.tableDir(root, ns, "bm25_postings")
-      .resolve("src-version.text")
-
   /** [[buildIndex]] from a governed corpus table, checkpointing the
     * indexed snapshot version so [[refreshIndex]] knows where to resume.
     */
@@ -153,11 +149,12 @@ object Retrieval {
       srcRoot: String, srcNs: String, srcTable: String,
       root: String, ns: String, termBuckets: Int = 16,
       docBuckets: Int = 8): Unit = {
-    import graft.plans.{Mor, TableIO}
+    import graft.plans.{ChangeFeed, Mor, TableIO}
     val v = TableIO.currentVersion(srcRoot, srcNs, srcTable)
     buildIndex(spark, Mor.read(spark, srcRoot, srcNs, srcTable),
       root, ns, termBuckets, docBuckets)
-    java.nio.file.Files.writeString(srcVersionFile(root, ns), v.toString)
+    java.nio.file.Files.writeString(
+      ChangeFeed.srcVersionFile(root, ns, "bm25_postings"), v.toString)
   }
 
   /** Catch the index up to the corpus table's current version. Work is
@@ -172,8 +169,9 @@ object Retrieval {
   def refreshIndex(spark: org.apache.spark.sql.SparkSession,
       srcRoot: String, srcNs: String, srcTable: String,
       root: String, ns: String): (Long, Long) = {
-    graft.plans.ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
-      srcVersionFile(root, ns)) { changes =>
+    import graft.plans.ChangeFeed
+    ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
+      ChangeFeed.srcVersionFile(root, ns, "bm25_postings")) { changes =>
       applyIndexDelta(spark, changes, root, ns)
     }
   }
@@ -182,47 +180,31 @@ object Retrieval {
       changes: DataFrame, root: String, ns: String): Unit = {
     import graft.plans.{Mor, Partitioning, TableIO}
     val sign = when(col("_change_type") === "insert", 1L).otherwise(-1L)
-    val tfDelta = changes.select(col("doc_id"), sign.as("sgn"),
-        explode(split(lower(col("text")), " ")).as("term"))
-      .groupBy("doc_id", "term").agg(sum("sgn").as("dtf"))
-      .filter(col("dtf") =!= 0L)
-      .cache()
-    try {
-      val spec = Partitioning.readSpec(root, ns, "bm25_postings").getOrElse(
-        throw new IllegalStateException(
-          s"$ns.bm25_postings has no bucket spec — not a built index"))
-      // touched TERM buckets: at most termBuckets values, driver-safe
-      val touched = tfDelta
-        .select(spec.sparkValue(col("term")).as("b")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val cur = Mor.read(spark, root, ns, "bm25_postings",
-        pruneIn = Seq(Mor.PruneIn(spec.fieldName, touched.toSeq)))
-      val merged = cur.join(tfDelta.select("doc_id", "term", "dtf"),
-          Seq("doc_id", "term"), "full_outer")
-        .select(col("doc_id"), col("term"),
-          (coalesce(col("tf"), lit(0L)) + coalesce(col("dtf"), lit(0L)))
-            .as("tf"))
-        .filter(col("tf") > 0)
-      replaceBuckets(spark, root, ns, "bm25_postings", merged, spec, touched,
-        expected = TableIO.currentVersion(root, ns, "bm25_postings"))
-
+    graft.CacheScope.scoped { cache =>
+      val tfDelta = cache(changes.select(col("doc_id"), sign.as("sgn"),
+          explode(split(lower(col("text")), " ")).as("term"))
+        .groupBy("doc_id", "term").agg(sum("sgn").as("dtf"))
+        .filter(col("dtf") =!= 0L))
+      // postings: the touched TERM buckets (at most termBuckets values)
+      Partitioning.foldBuckets(spark, root, ns, "bm25_postings", tfDelta,
+          "term") {
+        _.join(tfDelta.select("doc_id", "term", "dtf"),
+            Seq("doc_id", "term"), "full_outer")
+          .select(col("doc_id"), col("term"),
+            (coalesce(col("tf"), lit(0L)) + coalesce(col("dtf"), lit(0L)))
+              .as("tf"))
+          .filter(col("tf") > 0)
+      }
       // doclen: same surgical fold on the doc-id buckets
       val dlDelta = tfDelta.groupBy("doc_id").agg(sum("dtf").as("ddl"))
-      val dspec = Partitioning.readSpec(root, ns, "bm25_doclen").getOrElse(
-        throw new IllegalStateException(
-          s"$ns.bm25_doclen has no bucket spec — not a built index"))
-      val touchedD = dlDelta
-        .select(dspec.sparkValue(col("doc_id")).as("b")).distinct()
-        .collect().map(_.getLong(0)).toSet
-      val curDl = Mor.read(spark, root, ns, "bm25_doclen",
-        pruneIn = Seq(Mor.PruneIn(dspec.fieldName, touchedD.toSeq)))
-      val mergedDl = curDl.join(dlDelta, Seq("doc_id"), "full_outer")
-        .select(col("doc_id"),
-          (coalesce(col("dl"), lit(0L)) + coalesce(col("ddl"), lit(0L)))
-            .as("dl"))
-        .filter(col("dl") > 0)
-      replaceBuckets(spark, root, ns, "bm25_doclen", mergedDl, dspec, touchedD,
-        expected = TableIO.currentVersion(root, ns, "bm25_doclen"))
+      Partitioning.foldBuckets(spark, root, ns, "bm25_doclen", dlDelta,
+          "doc_id") {
+        _.join(dlDelta, Seq("doc_id"), "full_outer")
+          .select(col("doc_id"),
+            (coalesce(col("dl"), lit(0L)) + coalesce(col("ddl"), lit(0L)))
+              .as("dl"))
+          .filter(col("dl") > 0)
+      }
 
       // stats re-aggregates the (index-sized, one narrow row per doc)
       // doclen table — O(#docs), never the corpus text
@@ -235,15 +217,8 @@ object Retrieval {
         Seq(TableIO.writeExactFile(spark, root, ns, "bm25_stats",
           s"data/stats-s$sseq.parquet", stats, "data", sseq)),
         expectedVersion = Some(sv), operation = Some("overwrite"))
-    } finally tfDelta.unpersist()
+    }
   }
-
-  private def replaceBuckets(spark: org.apache.spark.sql.SparkSession,
-      root: String, ns: String, table: String, merged: DataFrame,
-      spec: graft.plans.PartitionSpec, touched: Set[Long],
-      expected: Long): Unit =
-    graft.plans.Partitioning.replacePartitions(spark, root, ns, table,
-      merged, spec, touched, expected)
 
   /** Hybrid retrieval with reciprocal-rank fusion (the RAG-pipeline
     * standard): fuse a lexical BM25 candidate list and a dense

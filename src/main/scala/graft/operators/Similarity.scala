@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Layout
 import graft.functions.VectorOps
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -594,7 +595,7 @@ object Similarity {
       assigned: DataFrame, cb: DataFrame, codes: DataFrame, queryId: Long,
       k: Int, subDims: Int, nprobe: Int, rerank: Int): DataFrame = {
     // route the query: nprobe nearest lists by centroid distance
-    val probes = localizedSmall(cent.join(broadcast(qn), "pos")
+    val probes = Layout.local(cent.join(broadcast(qn), "pos")
       .groupBy("cid")
       .agg(sum(floor((col("c") - col("qe")) * (col("c") - col("qe"))
         * lit(1e12))).as("dist"))
@@ -656,18 +657,10 @@ object Similarity {
   private def ivfPqModel(emb: DataFrame, kClusters: Int, iters: Int,
       subDims: Int, kCodes: Int, pqIters: Int)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
-    // eager localCheckpoint (r19), not a plain cache: the Lloyd/PQ
-    // training collects below each run an action over this relation —
-    // uncached, the explode+normalize lineage re-executed once per
-    // collect (measured 2x on the pair); CACHED, the data was served
-    // but every one of the ~12 downstream actions still re-analyzed
-    // and re-canonicalized the full lineage for the cache lookup
-    // (JobProbe r19: ~3s of job-free driver gaps in the warm pair).
-    // The checkpoint truncates the plan to a leaf — same adjudicated
-    // exception as Graph.louvainRefine: an iterated relation consumed
-    // by driver-materialized training rounds.
-    val nd = normalizedFullDims(emb).repartition(col("vec_id"))
-      .localCheckpoint(true)
+    // iterated (r19): the Lloyd/PQ training collects below each run an
+    // action over this relation (uncached, the explode+normalize
+    // lineage re-executed once per collect: 2x on the pair)
+    val nd = Layout.iterated(normalizedFullDims(emb), col("vec_id"))
     // coarse quantizer: seeded fixed-point Lloyd on normalized dims.
     // r19 (VERDICT r18 item 4), measured in two steps: the pair is
     // NOT the r18 eval-diet species — its warm cost sat in a handful
@@ -682,38 +675,34 @@ object Similarity {
       .select(col("vec_id").as("cid"), col("pos"), col("e").as("c"))
     for (_ <- 1 to iters) {
       val a = assignClustersLit(nd, cent)
-      cent = localizedSmall(nd.join(a, "vec_id")
+      cent = Layout.local(nd.join(a, "vec_id")
         .groupBy("cid", "pos")
         .agg((sum(floor(col("e") * lit(1e7))).cast("double") / lit(1e7) /
           count(lit(1))).as("c")))
     }
-    // eager localCheckpoint: assignClustersLit inlines kClusters×dims
+    // iterated: assignClustersLit inlines kClusters×dims
     // literal terms (a ~1k-node expression tree); downstream, the rdims
     // build and every search/eval shortlist action re-analyzed,
     // re-optimized and re-evaluated that tree per action. The
     // checkpoint is one (vec_id, cid) row per vector — narrower than
     // the nd relation already checkpointed above — and keeps nd's
     // vec_id partitioning, so the joins below stay exchange-free.
-    val assigned = assignClustersLit(nd, cent).localCheckpoint(true)
+    val assigned = Layout.iterated(assignClustersLit(nd, cent))
     // residual encode: subtract each vector's own list centroid, then
-    // split into subspaces for the PQ
-    val rdims = nd.join(assigned, "vec_id")
+    // split into subspaces for the PQ; checkpointed like nd — the PQ
+    // training collects and the search-side joins re-reference it
+    val rdims = Layout.iterated(nd.join(assigned, "vec_id")
       .join(broadcast(cent), Seq("cid", "pos"))
       .select(col("vec_id"),
         expr(s"CAST(pos div $subDims AS INT)").as("sub"),
         expr(s"CAST(pos % $subDims AS INT)").as("spos"),
-        (col("e") - col("c")).as("e"))
-      .repartition(col("vec_id"))
-      // eager localCheckpoint for the same reason as nd above: the PQ
-      // training collects and the search-side joins re-reference this
-      // relation from many independent actions
-      .localCheckpoint(true)
+        (col("e") - col("c")).as("e")), col("vec_id"))
     val cb = pqTrain(rdims, kCodes, pqIters)
     // same medicine as `assigned`: pqAssign inlines kCodes literal
     // distance terms per subspace — truncate it out of the shortlist
     // actions and evaluate the codes once
-    val codes = pqAssign(rdims, cb).withColumnRenamed("cid", "code")
-      .localCheckpoint(true)
+    val codes = Layout.iterated(
+      pqAssign(rdims, cb).withColumnRenamed("cid", "code"))
     (nd, cent, assigned, cb, codes)
   }
 
@@ -736,7 +725,7 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("pos"), col("e").as("qe"))
     val wn = Window.partitionBy("qid")
       .orderBy(col("dist").asc, col("cid").asc)
-    val probes = localizedSmall(cent.join(broadcast(qn), "pos")
+    val probes = Layout.local(cent.join(broadcast(qn), "pos")
       .groupBy("qid", "cid")
       .agg(sum(floor((col("c") - col("qe")) * (col("c") - col("qe"))
         * lit(1e12))).as("dist"))
@@ -788,19 +777,14 @@ object Similarity {
     val norms = raw.groupBy("vec_id")
       .agg((sqrt(sum(floor(col("e") * lit(1e7)) * floor(col("e") * lit(1e7)))
         .cast("double")) / lit(1e7)).as("nrm"))
-    // eager localCheckpoint for the same reason as ivfPqModel's nd:
-    // pqTrain's codebook collects re-run this lineage once per
-    // iteration if unmaterialized, and even cached the many downstream
-    // actions re-analyzed it per cache lookup (JobProbe r19: warm
-    // ann_pq wall 4.6s vs 2.2s sum-of-jobs — half the wall was
-    // job-free driver planning)
-    raw.join(norms, "vec_id")
+    // iterated, like ivfPqModel's nd: pqTrain's codebook collects
+    // re-run this lineage once per iteration if unmaterialized
+    Layout.iterated(raw.join(norms, "vec_id")
       .select(col("vec_id"),
         expr(s"CAST(pos div $subDims AS INT)").as("sub"),
         expr(s"CAST(pos % $subDims AS INT)").as("spos"),
-        when(col("nrm") === 0d, 0d).otherwise(col("e") / col("nrm")).as("e"))
-      .repartition(col("vec_id"))
-      .localCheckpoint(true)
+        when(col("nrm") === 0d, 0d).otherwise(col("e") / col("nrm")).as("e")),
+      col("vec_id"))
   }
 
   /** Per-subspace codebooks, seeded by the kCodes lowest vec_ids.
@@ -816,25 +800,17 @@ object Similarity {
     * of its stages).
     */
   private def pqTrain(dims: DataFrame, kCodes: Int, iters: Int): DataFrame = {
-    var cb = localizedSmall(dims.filter(col("vec_id") < kCodes)
+    var cb = Layout.local(dims.filter(col("vec_id") < kCodes)
       .select(col("sub"), col("vec_id").as("cid"), col("spos"), col("e").as("c")))
     for (_ <- 1 to iters) {
       val a = pqAssign(dims, cb)
-      cb = localizedSmall(dims.join(a, Seq("vec_id", "sub"))
+      cb = Layout.local(dims.join(a, Seq("vec_id", "sub"))
         .groupBy("sub", "cid", "spos")
         .agg((sum(floor(col("e") * lit(1e7))).cast("double") / lit(1e7) /
           count(lit(1))).as("c")))
     }
     cb
   }
-
-  /** Collect a provably-small DataFrame (codebooks, centroids) and
-    * rebuild it as a driver-local relation, cutting the corpus-scale
-    * lineage out of every downstream plan that joins against it.
-    */
-  private def localizedSmall(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** ADC shortlist + exact re-rank against given codebook/codes. */
   private def pqSearch(emb: DataFrame, dims: DataFrame, cb: DataFrame,
@@ -1002,10 +978,6 @@ object Similarity {
   // standard incremental-ingest trade; periodic rebuilds refresh the
   // codebook), and only their id buckets are rewritten.
 
-  private def pqSrcVersionFile(root: String, ns: String) =
-    graft.plans.TableIO.tableDir(root, ns, "pq_codes")
-      .resolve("src-version.text")
-
   /** [[buildPqIndex]] from a governed embeddings table, checkpointing
     * the indexed snapshot version for [[refreshPqIndex]].
     */
@@ -1013,11 +985,12 @@ object Similarity {
       srcRoot: String, srcNs: String, srcTable: String,
       root: String, ns: String, subDims: Int = 8, kCodes: Int = 16,
       iters: Int = 1, idBuckets: Int = 8): Unit = {
-    import graft.plans.{Mor, TableIO}
+    import graft.plans.{ChangeFeed, Mor, TableIO}
     val v = TableIO.currentVersion(srcRoot, srcNs, srcTable)
     buildPqIndex(spark, Mor.read(spark, srcRoot, srcNs, srcTable),
       root, ns, subDims, kCodes, iters, idBuckets)
-    java.nio.file.Files.writeString(pqSrcVersionFile(root, ns), v.toString)
+    java.nio.file.Files.writeString(
+      ChangeFeed.srcVersionFile(root, ns, "pq_codes"), v.toString)
   }
 
   /** Catch the codes table up to the embeddings table's current version.
@@ -1030,8 +1003,9 @@ object Similarity {
   def refreshPqIndex(spark: org.apache.spark.sql.SparkSession,
       srcRoot: String, srcNs: String, srcTable: String,
       root: String, ns: String, subDims: Int = 8): (Long, Long) = {
-    graft.plans.ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
-      pqSrcVersionFile(root, ns)) { changes =>
+    import graft.plans.ChangeFeed
+    ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
+      ChangeFeed.srcVersionFile(root, ns, "pq_codes")) { changes =>
       applyPqDelta(spark, changes, root, ns, subDims)
     }
   }
@@ -1039,38 +1013,24 @@ object Similarity {
   private def applyPqDelta(spark: org.apache.spark.sql.SparkSession,
       changes: DataFrame, root: String, ns: String, subDims: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
-    import graft.plans.{Mor, Partitioning, TableIO}
+    import graft.plans.{Mor, Partitioning}
     val byKey = Window.partitionBy("vec_id")
     val inserts = changes
       .withColumn("_lv", max(col("_change_version")).over(byKey))
       .filter(col("_change_version") === col("_lv") &&
         col("_change_type") === "insert")
       .select("vec_id", "embedding")
-    val touchedIds = changes.select("vec_id").distinct().cache()
-    try {
-      val spec = Partitioning.readSpec(root, ns, "pq_codes").getOrElse(
-        throw new IllegalStateException(
-          s"$ns.pq_codes has no bucket spec — not a built index"))
-      // touched ID buckets: at most idBuckets values, driver-safe
-      val touched = touchedIds
-        .select(spec.sparkValue(col("vec_id")).as("b")).distinct()
-        .collect().map(_.getLong(0)).toSet
+    graft.CacheScope.scoped { cache =>
+      val touchedIds = cache(changes.select("vec_id").distinct())
       val cb = Mor.read(spark, root, ns, "pq_codebook")
       val newCodes = pqAssign(pqNormalizedDims(inserts, subDims), cb)
-      val cur = Mor.read(spark, root, ns, "pq_codes",
-        pruneIn = Seq(Mor.PruneIn(spec.fieldName, touched.toSeq)))
       // every changed vector's old codes die; latest-insert ones re-enter
-      val merged = cur.join(touchedIds, Seq("vec_id"), "left_anti")
-        .unionByName(newCodes)
-      Partitioning.replacePartitions(spark, root, ns, "pq_codes", merged,
-        spec, touched,
-        expected = TableIO.currentVersion(root, ns, "pq_codes"))
-    } finally touchedIds.unpersist()
+      Partitioning.foldBuckets(spark, root, ns, "pq_codes", touchedIds,
+          "vec_id") {
+        _.join(touchedIds, Seq("vec_id"), "left_anti").unionByName(newCodes)
+      }
+    }
   }
-
-  private def ivfPqSrcVersionFile(root: String, ns: String) =
-    graft.plans.TableIO.tableDir(root, ns, "ivfpq_codes")
-      .resolve("src-version.text")
 
   /** [[buildIvfPqIndex]] from a governed embeddings table,
     * checkpointing the indexed snapshot version for
@@ -1082,11 +1042,12 @@ object Similarity {
       root: String, ns: String, kClusters: Int = 8, iters: Int = 2,
       subDims: Int = 8, kCodes: Int = 16, pqIters: Int = 1,
       idBuckets: Int = 8): Unit = {
-    import graft.plans.{Mor, TableIO}
+    import graft.plans.{ChangeFeed, Mor, TableIO}
     val v = TableIO.currentVersion(srcRoot, srcNs, srcTable)
     buildIvfPqIndex(spark, Mor.read(spark, srcRoot, srcNs, srcTable),
       root, ns, kClusters, iters, subDims, kCodes, pqIters, idBuckets)
-    java.nio.file.Files.writeString(ivfPqSrcVersionFile(root, ns), v.toString)
+    java.nio.file.Files.writeString(
+      ChangeFeed.srcVersionFile(root, ns, "ivfpq_codes"), v.toString)
   }
 
   /** Catch the persisted IVF+PQ index up to the embeddings table's
@@ -1101,8 +1062,9 @@ object Similarity {
   def refreshIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       srcRoot: String, srcNs: String, srcTable: String,
       root: String, ns: String, subDims: Int = 8): (Long, Long) = {
-    graft.plans.ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
-      ivfPqSrcVersionFile(root, ns)) { changes =>
+    import graft.plans.ChangeFeed
+    ChangeFeed.processAvailable(spark, srcRoot, srcNs, srcTable,
+      ChangeFeed.srcVersionFile(root, ns, "ivfpq_codes")) { changes =>
       applyIvfPqDelta(spark, changes, root, ns, subDims)
     }
   }
@@ -1110,56 +1072,40 @@ object Similarity {
   private def applyIvfPqDelta(spark: org.apache.spark.sql.SparkSession,
       changes: DataFrame, root: String, ns: String, subDims: Int): Unit = {
     import org.apache.spark.sql.expressions.Window
-    import graft.plans.{Mor, Partitioning, TableIO}
+    import graft.plans.{Mor, Partitioning}
     val byKey = Window.partitionBy("vec_id")
     val inserts = changes
       .withColumn("_lv", max(col("_change_version")).over(byKey))
       .filter(col("_change_version") === col("_lv") &&
         col("_change_type") === "insert")
       .select("vec_id", "embedding")
-    val touchedIds = changes.select("vec_id").distinct().cache()
-    try {
+    graft.CacheScope.scoped { cache =>
+      val touchedIds = cache(changes.select("vec_id").distinct())
       val cent = Mor.read(spark, root, ns, "ivf_centroids")
       val nd = normalizedFullDims(inserts)
       // routing is referenced twice (written as ivf_assign AND joined
       // into the residual lineage of ivfpq_codes) — cached, or the
       // second write re-runs normalize+assign over the inserts
-      val assignedNew = assignClustersLit(nd, cent).cache()
-      try {
-        val cb = Mor.read(spark, root, ns, "ivfpq_codebook")
-        val rdims = nd.join(assignedNew, "vec_id")
-          .join(broadcast(cent), Seq("cid", "pos"))
-          .select(col("vec_id"),
-            expr(s"CAST(pos div $subDims AS INT)").as("sub"),
-            expr(s"CAST(pos % $subDims AS INT)").as("spos"),
-            (col("e") - col("c")).as("e"))
-        val codesNew = pqAssign(rdims, cb).withColumnRenamed("cid", "code")
-        // both relations are bucketed by the build with the same spec,
-        // so the (<= idBuckets values) touched-bucket collect runs once
-        // and is reused when the specs agree
-        val touchedOf = scala.collection.mutable.Map.empty[
-          graft.plans.PartitionSpec, Set[Long]]
-        // surgical rewrite of each corpus-scale relation: changed
-        // vectors' old rows die, latest-insert ones re-enter — same
-        // replacePartitions discipline as applyPqDelta
-        Seq("ivf_assign" -> assignedNew, "ivfpq_codes" -> codesNew)
-          .foreach { case (table, fresh) =>
-            val spec = Partitioning.readSpec(root, ns, table).getOrElse(
-              throw new IllegalStateException(
-                s"$ns.$table has no bucket spec — not a built index"))
-            val touched = touchedOf.getOrElseUpdate(spec, touchedIds
-              .select(spec.sparkValue(col("vec_id")).as("b")).distinct()
-              .collect().map(_.getLong(0)).toSet)
-            val cur = Mor.read(spark, root, ns, table,
-              pruneIn = Seq(Mor.PruneIn(spec.fieldName, touched.toSeq)))
-            val merged = cur.join(touchedIds, Seq("vec_id"), "left_anti")
-              .unionByName(fresh)
-            Partitioning.replacePartitions(spark, root, ns, table, merged,
-              spec, touched,
-              expected = TableIO.currentVersion(root, ns, table))
+      val assignedNew = cache(assignClustersLit(nd, cent))
+      val cb = Mor.read(spark, root, ns, "ivfpq_codebook")
+      val rdims = nd.join(assignedNew, "vec_id")
+        .join(broadcast(cent), Seq("cid", "pos"))
+        .select(col("vec_id"),
+          expr(s"CAST(pos div $subDims AS INT)").as("sub"),
+          expr(s"CAST(pos % $subDims AS INT)").as("spos"),
+          (col("e") - col("c")).as("e"))
+      val codesNew = pqAssign(rdims, cb).withColumnRenamed("cid", "code")
+      // surgical rewrite of each corpus-scale relation: changed
+      // vectors' old rows die, latest-insert ones re-enter — same
+      // bucket fold as applyPqDelta
+      Seq("ivf_assign" -> assignedNew, "ivfpq_codes" -> codesNew)
+        .foreach { case (table, fresh) =>
+          Partitioning.foldBuckets(spark, root, ns, table, touchedIds,
+              "vec_id") {
+            _.join(touchedIds, Seq("vec_id"), "left_anti").unionByName(fresh)
           }
-      } finally assignedNew.unpersist()
-    } finally touchedIds.unpersist()
+        }
+    }
   }
 
   /** Per-subspace E-step: nearest code per (vector, subspace) —
@@ -1294,7 +1240,7 @@ object Similarity {
     */
   def simHistogram(emb: DataFrame, bands: Int = 16, r: Int = 4): DataFrame = {
     val bandDf = bandKeys(emb, bands, r)
-    val cand = wideRepartition(bandDf.toDF("vec_a", "band", "key"),
+    val cand = Layout.expand(bandDf.toDF("vec_a", "band", "key"),
         col("band"), col("key"))
       .join(bandDf.toDF("vec_b", "band", "key"), Seq("band", "key"))
       .filter(col("vec_a") < col("vec_b"))
@@ -1361,7 +1307,7 @@ object Similarity {
     // partition, and everything up to the first exchange (join, distinct
     // partial agg) would otherwise run in one task
     val cand = if (saltShards <= 1) {
-      wideRepartition(bandDf.toDF("vec_a", "band", "key"),
+      Layout.expand(bandDf.toDF("vec_a", "band", "key"),
           col("band"), col("key"))
         .join(bandDf.toDF("vec_b", "band", "key"), Seq("band", "key"))
         .filter(col("vec_a") =!= col("vec_b"))
@@ -1381,7 +1327,7 @@ object Similarity {
         explode(array((0 until saltShards).map(lit): _*)))
       val bS = bandDf.toDF("vec_b", "band", "key").withColumn("_sb",
         pmod(col("vec_b"), lit(saltShards.toLong)).cast("int"))
-      wideRepartition(aS, col("band"), col("key"), col("_sb"))
+      Layout.expand(aS, col("band"), col("key"), col("_sb"))
         .join(bS, Seq("band", "key", "_sb"))
         .filter(col("vec_a") =!= col("vec_b"))
         .select("vec_a", "vec_b").distinct()
@@ -1478,31 +1424,11 @@ object Similarity {
     val b = capped.toDF(bCol, "band", "key")
     val cond = if (unordered) col(aCol) < col(bCol)
       else col(aCol) =!= col(bCol)
-    wideRepartition(a, col("band"), col("key"))
+    Layout.expand(a, col("band"), col("key"))
       .join(b, Seq("band", "key"))
       .filter(cond)
       .select(aCol, bCol).distinct()
   }
-
-  /** Repartition pinned to the session's configured shuffle
-    * parallelism — the exchange feeding an EXPLODING band self-join.
-    * AQE sizes the post-shuffle stage from map-output BYTES, and band
-    * rows are narrow (a few MB at bench scale), so the stage that
-    * expands each bucket into |bucket|² candidate pairs of per-row
-    * cosine / top-k work was coalesced to 1-2 tasks, serializing the
-    * join's CPU (JobProbe r19: ann_knn_join's candidate join ran as
-    * one 3.3s 2-task job inside a 5.5s warm wall on local[32]).
-    * `repartition(n, cols)` carries the REPARTITION_BY_NUM shuffle
-    * origin, which AQE's partition coalescing is specified to leave
-    * alone, so the explosion keeps the session's full parallelism.
-    * The count tracks spark.sql.shuffle.partitions — the cluster
-    * value applies at scale — not a local core constant.
-    */
-  private[graft] def wideRepartition(df: DataFrame,
-      cols: org.apache.spark.sql.Column*): DataFrame =
-    df.repartition(
-      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt,
-      cols: _*)
 
   /** THE per-bucket cap primitive — one Scala copy of the Knuth rank
     * convention both capped families (embedding `cappedCandidates`,
@@ -1589,28 +1515,17 @@ object Similarity {
 
   private def denseEvalCorpus(emb: DataFrame, copies: Int,
       stride: Int): DataFrame = {
-    // single-partition + eager (r18, same anatomy as the label-recall
-    // eval's measured fix): the corpus is bounded by construction, but
-    // it used to carry the session's 32 shuffle partitions into every
-    // consumer branch — and the evals fan out 3-4 config branches that
-    // AQE materializes in parallel, racing the lazily-populated cache.
-    // One partition makes each branch's map stages 1-task (the join
-    // explosions happen on the reduce side, which AQE already sizes by
-    // bytes), and the eager count populates the cache before the race.
-    val dense = graft.CacheScope.cached(
+    // single (r18): the evals fan out 3-4 config branches that AQE
+    // materializes in parallel; one partition makes each branch's map
+    // stages 1-task (the join explosions happen on the reduce side,
+    // which AQE already sizes by bytes)
+    Layout.single(
       emb.filter(pmod(col("vec_id"), lit(stride.toLong)) === 0L &&
           col("vec_id") < lit(MaxEvalBaseId))
         .select(col("vec_id"), col("embedding"),
           explode(array((0 until copies).map(lit): _*)).as("c"))
         .select((col("vec_id") * copies + col("c")).as("vec_id"),
-          col("embedding"))
-        // repartition, NOT coalesce (r18 review): with no exchange
-        // below it, coalesce(1) would propagate to the source and
-        // single-thread the whole embeddings scan + filter; the
-        // repartition shuffles only the bounded filtered rows
-        .repartition(1))
-    dense.count()
-    dense
+          col("embedding")))
   }
 
   /** What the dense-bucket cap DROPS — the loss-ledger row for the
@@ -1911,15 +1826,15 @@ object Similarity {
         floor(col("e").cast("double") * 10000).cast("long").as("x"))
       .repartition(col("vec_id"))
     graft.CacheScope.cached(xq)
-    // eager localCheckpoints on every bounded relation in the loop:
+    // iterated, every bounded relation in the loop:
     // u is referenced twice per iteration (rescale divisor + new v)
     // and v's lineage otherwise nests 4 joins per round — without
     // truncation the tree RE-EXECUTES per reference and doubles per
     // iteration (the iterative-DataFrame rule; measured 62s -> ~2s
     // for 3 iterations at sf0.01). All checkpointed relations are
     // <= dims rows or single-row scalars.
-    val nDf = emb.agg(count(lit(1)).as("n")).localCheckpoint(true)
-    val sRel = xq.groupBy("pos").agg(sum("x").as("s")).localCheckpoint(true)
+    val nDf = Layout.iterated(emb.agg(count(lit(1)).as("n")))
+    val sRel = Layout.iterated(xq.groupBy("pos").agg(sum("x").as("s")))
     def tdiv(a: org.apache.spark.sql.Column,
         b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       ((a - a % b) / b).cast("long") // exact: divisible and < 2^53
@@ -1931,15 +1846,13 @@ object Similarity {
         .groupBy("pos").agg(sum(col("x") * col("xv")).as("m"))
       val sv = sRel.join(broadcast(v), "pos")
         .agg(sum(col("s") * col("v")).as("sv"))
-      val u = m.join(sRel, "pos")
+      val u = Layout.iterated(m.join(sRel, "pos")
         .crossJoin(broadcast(sv)).crossJoin(broadcast(nDf))
         .select(col("pos"),
-          (col("m") - col("s") * tdiv(col("sv"), col("n"))).as("u"))
-        .localCheckpoint(true)
+          (col("m") - col("s") * tdiv(col("sv"), col("n"))).as("u")))
       val dDf = u.agg((tdiv(max(abs(col("u"))), lit(1024L)) + 1L).as("d"))
-      v = u.crossJoin(broadcast(dDf))
-        .select(col("pos"), tdiv(col("u"), col("d")).as("v"))
-        .localCheckpoint(true)
+      v = Layout.iterated(u.crossJoin(broadcast(dDf))
+        .select(col("pos"), tdiv(col("u"), col("d")).as("v")))
     }
     (v, xq)
   }
@@ -1959,8 +1872,8 @@ object Similarity {
       ((a - a % b) / b).cast("long")
     val scores = xq.join(broadcast(v), "pos")
       .groupBy("vec_id").agg(sum(col("x") * col("v")).as("score"))
-    val bounds = scores.agg(min("score").as("lo"), max("score").as("hi"))
-      .localCheckpoint(true)
+    val bounds = Layout.iterated(
+      scores.agg(min("score").as("lo"), max("score").as("hi")))
     scores.crossJoin(broadcast(bounds))
       .select(tdiv((col("score") - col("lo")) * 16,
         col("hi") - col("lo") + 1).as("bucket"))

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Layout
 
 /** K-minimum-values (KMV) sketches for distinct-count and corpus-overlap
   * estimation.
@@ -134,11 +135,10 @@ object Sketches {
     // re-take bottom-K directly on the hash rows (kmvStateRows would
     // re-hash — state rows are already hashes)
     val w = Window.partitionBy("g").orderBy("h")
-    val folded = merged
+    val folded = Layout.iterated(merged
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= K)
-      .select("g", "h")
-      .localCheckpoint(true)
+      .select("g", "h"))
     folded.write.mode("overwrite").parquet(path)
   }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.Layout
 import graft.functions.TextHash
 
 /** Text-analysis operators for a training-data pipeline: corpus stats,
@@ -180,7 +181,7 @@ object TextAnalysis {
   private def lmScoreFp(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    val words = Similarity.wideRepartition(docs, col("doc_id")).select(col("doc_id"),
+    val words = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
       posexplode(split(col("text"), " ")).as(Seq("pos", "w1")))
     val bi = words.withColumn("w2", lead("w1", 1).over(byDoc))
       .filter(col("w2").isNotNull)
@@ -230,7 +231,7 @@ object TextAnalysis {
     * hash-derived weights make the oracle replayable without one.
     */
   def classifierScore(docs: DataFrame, buckets: Int = 1024): DataFrame =
-    Similarity.wideRepartition(docs, col("doc_id"))
+    Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"),
         explode(split(lower(col("text")), " ")).as("w"))
       .select(col("doc_id"),
@@ -254,7 +255,7 @@ object TextAnalysis {
     * outputs keep the oracle hash float-free.
     */
   def rarity(docs: DataFrame, rareDf: Int = 2): DataFrame = {
-    val words = Similarity.wideRepartition(docs, col("doc_id"))
+    val words = Layout.expand(docs, col("doc_id"))
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("w"))
     val dfs = words.groupBy("w").agg(count(lit(1)).as("df"))

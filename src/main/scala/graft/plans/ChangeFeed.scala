@@ -25,6 +25,12 @@ object ChangeFeed {
       Files.readString(checkpoint).trim.toLong
     else 0L
 
+  /** The checkpoint an index keeps beside its `table`: the source
+    * snapshot version it has folded up to.
+    */
+  def srcVersionFile(root: String, ns: String, table: String): Path =
+    TableIO.tableDir(root, ns, table).resolve("src-version.text")
+
   /** Process all snapshots committed since the checkpoint. Returns
     * (fromVersion, toVersion); equal values mean nothing new.
     */

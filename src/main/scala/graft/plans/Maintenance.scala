@@ -372,11 +372,10 @@ object Maintenance {
       posEntries.map(e => (dir.resolve(e.path).toString, e.seq))).get
     val dataSeqs = manifest.filter(_.content == "data")
       .map(e => (e.path, e.seq)).toDF("file_path", "_dataseq")
-    val live = pd.join(broadcast(dataSeqs), Seq("file_path"))
-      .filter(col("_dataseq") <= col("_dseq"))
-      .groupBy("file_path", "pos").agg(max("_dseq").as("_dseq"))
-      .cache()
-    try {
+    graft.CacheScope.scoped { cache =>
+      val live = cache(pd.join(broadcast(dataSeqs), Seq("file_path"))
+        .filter(col("_dataseq") <= col("_dseq"))
+        .groupBy("file_path", "pos").agg(max("_dseq").as("_dseq")))
       val seqs = live.select("_dseq").distinct().as[Long].collect().sorted
       val newV = v + 1
       val newEntries = seqs.map { sq =>
@@ -388,7 +387,7 @@ object Maintenance {
       TableIO.commitReplacing(root, ns, table,
         manifest.filterNot(_.content == "pos_delete") ++ newEntries,
         expectedVersion = Some(v), operation = Some("replace"))
-    } finally live.unpersist()
+    }
   }
 
   /** Remove ORPHAN files: parquet files under data/ and deletes/ that

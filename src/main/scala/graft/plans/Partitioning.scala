@@ -272,6 +272,27 @@ object Partitioning {
     }
   }
 
+  /** Fold a keyed delta into a bucket-partitioned index table: read its
+    * bucket spec (none means not a built index), collect the bucket
+    * values `delta`'s `key` column touches (at most the bucket count,
+    * driver-safe), read only those buckets, and replace them with
+    * `merge(current rows)`, CAS-guarded on the current version — the
+    * incremental refresh of the PQ, IVF-PQ and BM25 indexes.
+    */
+  def foldBuckets(spark: SparkSession, root: String, ns: String,
+      table: String, delta: DataFrame, key: String)(
+      merge: DataFrame => DataFrame): Unit = {
+    val spec = readSpec(root, ns, table).getOrElse(
+      throw new IllegalStateException(
+        s"$ns.$table has no bucket spec — not a built index"))
+    val touched = delta.select(spec.sparkValue(col(key)).as("b")).distinct()
+      .collect().map(_.getLong(0)).toSet
+    val cur = Mor.read(spark, root, ns, table,
+      pruneIn = Seq(Mor.PruneIn(spec.fieldName, touched.toSeq)))
+    replacePartitions(spark, root, ns, table, merge(cur), spec, touched,
+      expected = TableIO.currentVersion(root, ns, table))
+  }
+
   /** Commit a snapshot replacing ONLY the given partition values of a
     * partitioned table with `merged`'s rows; every other partition's
     * files carry over untouched — the surgical rewrite incremental index

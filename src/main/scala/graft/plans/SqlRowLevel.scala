@@ -133,78 +133,75 @@ object SqlRowLevel {
     val on = rebind(c.cond, c.tNames, c.sNames)
     val delPieces = Seq.newBuilder[DataFrame]
     val dataPieces = Seq.newBuilder[DataFrame]
-    val cached = Seq.newBuilder[DataFrame]
 
-    if (c.matched.nonEmpty) {
-      val mf = t.join(s, on, "inner")
-        .withColumn("_act", firstFire(c.matched, c.tNames, c.sNames))
-        .withColumn("_f", col("__t._file")).withColumn("_p", col("__t._pos"))
-        .filter(col("_act") > 0).cache()
-      cached += mf
-      // SQL MERGE cardinality rule: a target row may be touched by at
-      // most one source row
-      val dup = mf.groupBy("_f", "_p").count().filter(col("count") > 1)
-        .limit(1).count() > 0
-      if (dup) throw new IllegalStateException(
-        "MERGE cardinality violation: a target row matches multiple source rows")
-      delPieces += mf.select(col("_f").as("file_path"), col("_p").as("pos"))
-      c.matched.zipWithIndex.foreach {
-        case (u: UpdateAction, i) =>
-          dataPieces += mf.filter(col("_act") === i + 1)
-            .select(actionRow(fields, assignMap(u.assignments, c.tNames),
-              c.tNames, c.sNames, fromTarget = true): _*)
-        case (_: DeleteAction, _) => // the pos-delete already covers it
-        case (other, _) => throw new UnsupportedOperationException(
-          s"unsupported matched action: $other")
+    graft.CacheScope.scoped { cache =>
+      if (c.matched.nonEmpty) {
+        val mf = cache(t.join(s, on, "inner")
+          .withColumn("_act", firstFire(c.matched, c.tNames, c.sNames))
+          .withColumn("_f", col("__t._file")).withColumn("_p", col("__t._pos"))
+          .filter(col("_act") > 0))
+        // SQL MERGE cardinality rule: a target row may be touched by at
+        // most one source row
+        val dup = mf.groupBy("_f", "_p").count().filter(col("count") > 1)
+          .limit(1).count() > 0
+        if (dup) throw new IllegalStateException(
+          "MERGE cardinality violation: a target row matches multiple source rows")
+        delPieces += mf.select(col("_f").as("file_path"), col("_p").as("pos"))
+        c.matched.zipWithIndex.foreach {
+          case (u: UpdateAction, i) =>
+            dataPieces += mf.filter(col("_act") === i + 1)
+              .select(actionRow(fields, assignMap(u.assignments, c.tNames),
+                c.tNames, c.sNames, fromTarget = true): _*)
+          case (_: DeleteAction, _) => // the pos-delete already covers it
+          case (other, _) => throw new UnsupportedOperationException(
+            s"unsupported matched action: $other")
+        }
       }
-    }
-    if (c.notMatched.nonEmpty) {
-      val nm = s.join(t, on, "left_anti")
-        .withColumn("_act", firstFire(c.notMatched, c.tNames, c.sNames))
-        .filter(col("_act") > 0).cache()
-      cached += nm
-      c.notMatched.zipWithIndex.foreach {
-        case (ins: InsertAction, i) =>
-          dataPieces += nm.filter(col("_act") === i + 1)
-            .select(actionRow(fields, assignMap(ins.assignments, c.tNames),
-              c.tNames, c.sNames, fromTarget = false): _*)
-        case (other, _) => throw new UnsupportedOperationException(
-          s"unsupported not-matched action: $other")
+      if (c.notMatched.nonEmpty) {
+        val nm = cache(s.join(t, on, "left_anti")
+          .withColumn("_act", firstFire(c.notMatched, c.tNames, c.sNames))
+          .filter(col("_act") > 0))
+        c.notMatched.zipWithIndex.foreach {
+          case (ins: InsertAction, i) =>
+            dataPieces += nm.filter(col("_act") === i + 1)
+              .select(actionRow(fields, assignMap(ins.assignments, c.tNames),
+                c.tNames, c.sNames, fromTarget = false): _*)
+          case (other, _) => throw new UnsupportedOperationException(
+            s"unsupported not-matched action: $other")
+        }
       }
-    }
-    if (c.notMatchedBySource.nonEmpty) {
-      val tn = t.join(s, on, "left_anti")
-        .withColumn("_act",
-          firstFire(c.notMatchedBySource, c.tNames, c.sNames))
-        .filter(col("_act") > 0).cache()
-      cached += tn
-      delPieces += tn.select(col("__t._file").as("file_path"),
-        col("__t._pos").as("pos"))
-      c.notMatchedBySource.zipWithIndex.foreach {
-        case (u: UpdateAction, i) =>
-          dataPieces += tn.filter(col("_act") === i + 1)
-            .select(actionRow(fields, assignMap(u.assignments, c.tNames),
-              c.tNames, c.sNames, fromTarget = true): _*)
-        case (_: DeleteAction, _) => ()
-        case (other, _) => throw new UnsupportedOperationException(
-          s"unsupported not-matched-by-source action: $other")
+      if (c.notMatchedBySource.nonEmpty) {
+        val tn = cache(t.join(s, on, "left_anti")
+          .withColumn("_act",
+            firstFire(c.notMatchedBySource, c.tNames, c.sNames))
+          .filter(col("_act") > 0))
+        delPieces += tn.select(col("__t._file").as("file_path"),
+          col("__t._pos").as("pos"))
+        c.notMatchedBySource.zipWithIndex.foreach {
+          case (u: UpdateAction, i) =>
+            dataPieces += tn.filter(col("_act") === i + 1)
+              .select(actionRow(fields, assignMap(u.assignments, c.tNames),
+                c.tNames, c.sNames, fromTarget = true): _*)
+          case (_: DeleteAction, _) => ()
+          case (other, _) => throw new UnsupportedOperationException(
+            s"unsupported not-matched-by-source action: $other")
+        }
       }
+      val dels = delPieces.result()
+      val data = dataPieces.result()
+      val emptyDel = spark.createDataFrame(
+        spark.sparkContext.emptyRDD[Row],
+        org.apache.spark.sql.types.StructType(Seq(
+          StructField("file_path", org.apache.spark.sql.types.StringType,
+            nullable = false),
+          StructField("pos", org.apache.spark.sql.types.LongType,
+            nullable = false))))
+      commitRowLevel(spark, c.root, c.ns, c.tbl,
+        dels.reduceOption(_ unionByName _).getOrElse(emptyDel),
+        data.reduceOption(_ unionByName _).getOrElse(
+          emptyDel.limit(0).select(fields.map(f =>
+            lit(null).cast(f.dataType).as(f.name)): _*)))
     }
-    val dels = delPieces.result()
-    val data = dataPieces.result()
-    val emptyDel = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        StructField("file_path", org.apache.spark.sql.types.StringType,
-          nullable = false),
-        StructField("pos", org.apache.spark.sql.types.LongType,
-          nullable = false))))
-    try commitRowLevel(spark, c.root, c.ns, c.tbl,
-      dels.reduceOption(_ unionByName _).getOrElse(emptyDel),
-      data.reduceOption(_ unionByName _).getOrElse(
-        emptyDel.limit(0).select(fields.map(f =>
-          lit(null).cast(f.dataType).as(f.name)): _*)))
-    finally cached.result().foreach(_.unpersist())
   }
 
   private[plans] def runUpdate(spark: SparkSession,
@@ -212,13 +209,14 @@ object SqlRowLevel {
     val fields = TableIO.readSchema(c.root, c.ns, c.tbl).fields.toSeq
     val t = Mor.read(spark, c.root, c.ns, c.tbl, keepProvenance = true)
       .alias("__t")
-    val af = t.filter(c.cond.map(rebind(_, c.tNames, Map.empty))
-      .getOrElse(lit(true))).cache()
-    try commitRowLevel(spark, c.root, c.ns, c.tbl,
-      af.select(col("__t._file").as("file_path"), col("__t._pos").as("pos")),
-      af.select(actionRow(fields, assignMap(c.assignments, c.tNames),
-        c.tNames, Map.empty, fromTarget = true): _*))
-    finally af.unpersist()
+    graft.CacheScope.scoped { cache =>
+      val af = cache(t.filter(c.cond.map(rebind(_, c.tNames, Map.empty))
+        .getOrElse(lit(true))))
+      commitRowLevel(spark, c.root, c.ns, c.tbl,
+        af.select(col("__t._file").as("file_path"), col("__t._pos").as("pos")),
+        af.select(actionRow(fields, assignMap(c.assignments, c.tNames),
+          c.tNames, Map.empty, fromTarget = true): _*))
+    }
   }
 
   private[plans] def runDelete(spark: SparkSession,

@@ -52,10 +52,9 @@ object Replication {
     require(keyCols.nonEmpty, "replication requires identifier columns")
     val dataCols = batch.columns
       .filterNot(c => c == "_change_type" || c == "_change_version").toSeq
-    val cached = batch.select(
-      (dataCols.map(col) :+ col("_change_type") :+ col("_change_version")): _*)
-      .cache()
-    try {
+    graft.CacheScope.scoped { cache =>
+      val cached = cache(batch.select((dataCols.map(col) :+
+        col("_change_type") :+ col("_change_version")): _*))
       if (cached.isEmpty) -1L
       else {
         val keys = cached.select(keyCols.map(col): _*).distinct()
@@ -74,7 +73,7 @@ object Replication {
           f"data/replica-$seq%05d.parquet", ins, "data", seq)
         TableIO.commit(root, ns, table, Seq(delete, data))
       }
-    } finally cached.unpersist()
+    }
   }
 
   /** Continuous replication: tail the source's CDC stream and apply

@@ -53,10 +53,10 @@ object PipeScaleSmoke {
     timed("filterCompose")(PipelineOps.filterCompose(docs).count())
     timed("fingerprint dedup")(Dedup.fingerprint(docs).count())
     // same-JVM A/B: the retired two-regex normalize vs the native pass
-    // (same pinned-width repartition as Dedup.fingerprint, so the arms
+    // (same Layout.expand as Dedup.fingerprint, so the arms
     // differ ONLY in the normalize expression, not partition layout)
     timed("fingerprint dedup (regex normalize)")(
-      graft.operators.Similarity.wideRepartition(docs, col("doc_id"))
+      graft.Layout.expand(docs, col("doc_id"))
         .select(col("doc_id"), md5(Dedup.normalizeRegex(col("text"))).as("fp"))
         .groupBy("fp").count().count())
     val nc = timed("chunkDocuments")(PipelineOps.chunkDocuments(docs).count())

@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars,
 # mirroring the JVM flags in build.sbt. Usage: run_main.sh <class> [args...]
+# The classes come from the checkout this script sits in, so a second
+# checkout (say, a parent commit for a plan diff) runs its own build.
 set -e
+repo="$(cd "$(dirname "$0")/.." && pwd)"
 cls="$1"; shift
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -17,5 +20,5 @@ exec java $ADDOPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xms${SPARK_DRIVER_MEM:-16g} -Xmx${SPARK_DRIVER_MEM:-16g} \
   -XX:ReservedCodeCacheSize=1g \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$cls" "$@"
