@@ -30,10 +30,16 @@ object Dml {
 
   /** Delete all rows with `column` in [lo, hi]. Returns the new
     * snapshot version (or the current one when nothing matched).
+    *
+    * Planned against one pinned version `v` and committed only as
+    * v + 1: a commit landing in between (say a concurrent append) makes
+    * this throw `ConcurrentModificationException` instead of being
+    * erased by the replacing manifest.
     */
   def deleteWhere(spark: SparkSession, root: String, ns: String,
       table: String, column: String, lo: Long, hi: Long): Long = {
-    val manifest = TableIO.readManifest(root, ns, table)
+    val snap = TableIO.snapshot(root, ns, table)
+    val (v, manifest) = (snap.version, snap.entries)
     val dataEntries = manifest.filter(_.content == "data")
     val fullyCovered = dataEntries.filter(e =>
       e.bounds.get(column).exists { case (l, h) => l >= lo && h <= hi })
@@ -41,27 +47,32 @@ object Dml {
     val touched = dataEntries.filterNot(e => fullSet(e.path))
       .filter(_.mayContain(column, lo, hi))
 
-    val seq = TableIO.nextSeq(root, ns, table)
+    val seq = snap.nextSeq
     val newDeletes =
       if (touched.isEmpty) Nil
       else {
         val matches = Mor.scanWithProvenance(spark, root, ns, table,
-            onlyPaths = Some(touched.map(_.path).toSet))
+            version = Some(v), onlyPaths = Some(touched.map(_.path).toSet))
           .filter(col(column).between(lo, hi))
           .select(col("_file").as("file_path"), col("_pos").as("pos"))
           .orderBy("file_path", "pos")
-        val n = matches.count()
-        if (n == 0) Nil
-        else Seq(TableIO.writeExactFile(spark, root, ns, table,
-          s"deletes/pos_delete-dml-s$seq.parquet", matches, "pos_delete",
-          seq, recordCount = n))
+        // one pass: write the sorted file, count it from its footer, and
+        // drop it again when nothing matched
+        val rel = s"deletes/pos_delete-dml-s$seq.parquet"
+        val e = TableIO.writeExactFile(spark, root, ns, table, rel, matches,
+          "pos_delete", seq)
+        if (e.recordCount > 0) Seq(e)
+        else {
+          java.nio.file.Files.delete(snap.dir.resolve(rel))
+          Nil
+        }
       }
-    if (fullyCovered.isEmpty && newDeletes.isEmpty)
-      TableIO.currentVersion(root, ns, table)
+    if (fullyCovered.isEmpty && newDeletes.isEmpty) v
     else
       TableIO.commitReplacing(root, ns, table,
         manifest.filterNot(e => e.content == "data" && fullSet(e.path)) ++
           newDeletes,
+        expectedVersion = Some(v),
         // content-CHANGING when files leave the manifest: the changelog
         // must synthesize their alive rows as deletes, not skip the
         // commit as compaction. A pos-delete-only boundary commit stays

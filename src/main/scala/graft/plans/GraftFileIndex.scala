@@ -21,18 +21,24 @@ import org.apache.spark.sql.types.StructType
   * At 100 TB this moves pruning from "the caller remembered to pass a
   * Prune" to "every query plans against the metadata" — the difference
   * between an optimization and an architecture.
+  *
+  * `uriFor` maps each file's absolute path to the URI the scan opens
+  * (identity for local storage; see [[Mor.read]] for the REST byte
+  * transport). Sizes and times come from the local file either way.
   */
 final class GraftFileIndex(
     spark: SparkSession,
     tableDir: java.nio.file.Path,
     entries: Seq[ManifestEntry],
-    schema: StructType) extends FileIndex {
+    schema: StructType,
+    uriFor: String => String = identity) extends FileIndex {
 
   private val statuses: Seq[(ManifestEntry, FileStatus)] = entries.map { e =>
     val p = tableDir.resolve(e.path)
     val f = p.toFile
+    val uri = uriFor(p.toString)
     e -> new FileStatus(f.length(), false, 1, 128L << 20, f.lastModified(),
-      new Path(p.toUri))
+      if (uri == p.toString) new Path(p.toUri) else new Path(uri))
   }
 
   override def rootPaths: Seq[Path] =
@@ -167,19 +173,27 @@ object GraftFileIndex {
     * bounds consulted inside the planner, not by the caller). Parquet
     * row-level pushdown, column pruning and codegen all apply as usual
     * — this only swaps the file-listing layer, like Iceberg's scan.
-    *
-    * Note: this is the DATA scan (post-compaction tables, generated
-    * data); delete-aware reads stay on [[Mor.read]].
     */
   def scan(spark: SparkSession, root: String, ns: String,
       table: String): DataFrame = {
-    val dir = TableIO.tableDir(root, ns, table)
-    val entries = TableIO.readManifest(root, ns, table)
-      .filter(_.content == "data")
-    val schema = TableIO.readSchema(root, ns, table)
+    val snap = TableIO.snapshot(root, ns, table)
+    scanFiles(spark, snap.dir, snap.files("data"), snap.schema)
+  }
+
+  /** A scan of exactly `entries`' files read with `schema`: the file
+    * list comes from the manifest and the schema from the caller, so
+    * building it runs no listing job and no schema-inference job.
+    * `_metadata.file_name`/`row_index` resolve as on any parquet scan.
+    * [[Mor.read]] builds its data and delete scans here.
+    */
+  def scanFiles(spark: SparkSession, dir: java.nio.file.Path,
+      entries: Seq[ManifestEntry], schema: StructType,
+      uriFor: String => String = identity): DataFrame = {
+    // id-based column resolution (rename/drop survive; old files'
+    // values surface under evolved names)
     if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val index = new GraftFileIndex(spark, dir, entries, schema)
+    val index = new GraftFileIndex(spark, dir, entries, schema, uriFor)
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = StructType(Nil),

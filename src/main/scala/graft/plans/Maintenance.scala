@@ -3,6 +3,7 @@ package graft.plans
 import java.nio.file.{Files, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Table maintenance — the operations a MOR table needs to stay healthy
   * at scale (Iceberg's rewrite_data_files / expire_snapshots analogues).
@@ -54,9 +55,10 @@ object Maintenance {
     // files (Iceberg v3 row-id preservation through rewrites) — normal
     // reads project the table schema and never see it; lineage reads
     // prefer it over firstRowId + position
-    val merged = Mor.readLineage(spark, root, ns, table)
+    val snap = TableIO.snapshot(root, ns, table, Some(v))
+    val merged = Mor.readLineage(spark, root, ns, table, asOfVersion = Some(v))
     val nFiles = if (targetFileCount > 0) targetFileCount
-      else math.max(1, TableIO.filesOf(root, ns, table, "data").size / 2)
+      else math.max(1, snap.files("data").size / 2)
     val stage = Files.createTempDirectory(dir, ".compact")
     try {
       import org.apache.spark.sql.functions._
@@ -87,7 +89,7 @@ object Maintenance {
       arranged.write.mode("overwrite").parquet(stage.resolve("out").toString)
       val parts = Files.list(stage.resolve("out")).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.sortBy(_.toString)
-      val seq = TableIO.nextSeq(root, ns, table)
+      val seq = snap.nextSeq
       val moved = parts.zipWithIndex.map { case (p, i) =>
         val rel = f"data/compacted-v${v + 1}%d-$i%05d.parquet"
         val target = dir.resolve(rel)
@@ -97,8 +99,9 @@ object Maintenance {
       // per-file record counts (+ per-column cluster-key bounds) in ONE
       // metadata/stats job over grouped _metadata.file_name, instead of
       // one job per output file.
-      val scanned = spark.read
-        .parquet(moved.map(r => dir.resolve(r).toString): _*)
+      val scanned = GraftFileIndex.scanFiles(spark, dir,
+        moved.map(ManifestEntry(_, "data", seq, -1L)),
+        Bridge.asNullable(snap.schema))
       val aggs = count(lit(1)).as("n") +: clusterBy.flatMap(k => Seq(
         min(col(k).cast("long")).as(s"lo_$k"),
         max(col(k).cast("long")).as(s"hi_$k")))
@@ -120,8 +123,7 @@ object Maintenance {
       // props entries (committed table properties, e.g. a bloom index's
       // (bits, kHashes)) survive compaction: they describe the rows'
       // interpretation, which the rewrite preserves
-      val props = TableIO.readManifest(root, ns, table)
-        .filter(_.content == TableIO.PropsContent)
+      val props = snap.files(TableIO.PropsContent)
       TableIO.commitReplacing(root, ns, table, entries ++ props,
         expectedVersion = Some(v), operation = Some("replace"))
     } finally {
@@ -167,26 +169,26 @@ object Maintenance {
   def compactDeletes(spark: SparkSession, root: String, ns: String,
       table: String): Long = {
     import org.apache.spark.sql.functions.col
-    val v = TableIO.currentVersion(root, ns, table)
-    val manifest = TableIO.readManifestAt(root, ns, table, v)
-    val eq = manifest.filter(_.content == "eq_delete")
+    import org.apache.spark.sql.types.{Metadata, StructType}
+    val snap = TableIO.snapshot(root, ns, table)
+    val (v, manifest) = (snap.version, snap.entries)
+    val eq = snap.files("eq_delete")
     if (eq.isEmpty) return v
-    val dir = TableIO.tableDir(root, ns, table)
     val specs = Partitioning.readSpecs(root, ns, table)
     val scopable = specs.size == 1 &&
       !manifest.exists(_.content == "pos_delete") &&
-      eq.forall(e => spark.read.parquet(dir.resolve(e.path).toString)
-        .schema.fieldNames.contains(specs.head.column)) &&
+      eq.forall(e => TableIO.equalityColumns(spark, snap, e)
+        .contains(specs.head.column)) &&
       manifest.filter(_.content == "data")
         .forall(_.bounds.contains(specs.head.fieldName))
     if (!scopable) return compact(spark, root, ns, table)
     val spec = specs.head
     // touched partition values from the delete KEYS — a delta-sized
     // read collapsing to at most #partition-values rows
-    val touched = eq.map(e =>
-        spark.read.parquet(dir.resolve(e.path).toString)
-          .select(col(spec.column)))
-      .reduce(_ unionByName _)
+    val keyField = snap.schema(spec.column)
+      .copy(nullable = true, metadata = Metadata.empty)
+    val touched = GraftFileIndex.scanFiles(spark, snap.dir, eq,
+        StructType(Seq(keyField)))
       .select(spec.sparkValue(col(spec.column)).as("_pv"))
       .distinct().collect().map(_.getLong(0)).toSet
     val keep = manifest.filterNot(_.content == "eq_delete")
@@ -199,12 +201,12 @@ object Maintenance {
         touched.exists(t => t >= lo && t <= hi) })
     // current MOR view of the touched partitions only (all deletes
     // applied); lineage read so the rewrite materializes stable row ids
-    val merged = Mor.readLineage(spark, root, ns, table,
+    val merged = Mor.readLineage(spark, root, ns, table, asOfVersion = Some(v),
       onlyPaths = Some(touchedEntries.map(_.path).toSet))
     val newEntries =
       if (touchedEntries.isEmpty || merged.isEmpty) Nil
       else Partitioning.writePartitioned(spark, root, ns, table, merged,
-        spec, seq = TableIO.nextSeq(root, ns, table),
+        spec, seq = snap.nextSeq,
         filePrefix = "compactd")
     val replaced = touchedEntries.map(_.path).toSet
     TableIO.commitReplacing(root, ns, table,
@@ -312,9 +314,8 @@ object Maintenance {
     val coveredDead: Set[String] =
       if (posEntries.isEmpty) Set.empty
       else {
-        val dir = TableIO.tableDir(root, ns, table)
-        val pd = Mor.readDeletes(spark,
-          posEntries.map(e => (dir.resolve(e.path).toString, e.seq))).get
+        val pd = Mor.readDeletes(spark, TableIO.tableDir(root, ns, table),
+          posEntries, Mor.PosDeleteSchema)
         val dataMeta = manifest
           .filter(e => e.content == "data" && e.recordCount > 0L)
           .map(e => (e.path, e.seq, e.recordCount))
@@ -367,9 +368,8 @@ object Maintenance {
     val manifest = TableIO.readManifestAt(root, ns, table, v)
     val posEntries = manifest.filter(_.content == "pos_delete")
     if (posEntries.isEmpty) return v
-    val dir = TableIO.tableDir(root, ns, table)
-    val pd = Mor.readDeletes(spark,
-      posEntries.map(e => (dir.resolve(e.path).toString, e.seq))).get
+    val pd = Mor.readDeletes(spark, TableIO.tableDir(root, ns, table),
+      posEntries, Mor.PosDeleteSchema)
     val dataSeqs = manifest.filter(_.content == "data")
       .map(e => (e.path, e.seq)).toDF("file_path", "_dataseq")
     graft.CacheScope.scoped { cache =>

@@ -1,7 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{LongType, Metadata, StringType, StructField, StructType}
 import graft.functions.BitmapFunctions.bitmapContains
 
 /** Merge-on-read scan — the read semantics the reference's output defines
@@ -60,35 +63,28 @@ object Mor {
     */
   final case class PruneIn(column: String, values: Seq[Long])
 
-  /** Files of one content type (absolute path, seq) at a manifest
-    * version — `None` means the current snapshot. Data files are
-    * additionally bounds-pruned when `prunes` are given (a CONJUNCTION:
-    * a file survives only if its bounds can intersect every predicate —
-    * with z-order-clustered files that skips on each dimension
-    * independently).
+  /** Data entries of `snap` that survive the prune predicates (a
+    * CONJUNCTION: a file survives only if its bounds can intersect every
+    * predicate — with z-order-clustered files that skips on each
+    * dimension independently) and, when given, `onlyPaths`. A
+    * pruned-to-nothing scan or a legitimately empty snapshot
+    * (post-TRUNCATE) reads as empty; only a never-committed table is an
+    * error.
     */
-  private def filesAt(root: String, ns: String, table: String,
-      content: String, version: Option[Long],
-      prunes: Seq[Prune] = Nil,
-      pruneEqs: Seq[PruneEq] = Nil,
-      pruneIns: Seq[PruneIn] = Nil): Seq[(String, Long)] = {
-    val dir = TableIO.tableDir(root, ns, table)
-    val entries = version match {
-      case Some(v) => TableIO.readManifestAt(root, ns, table, v)
-      case None => TableIO.readManifest(root, ns, table)
-    }
-    entries.filter(_.content == content)
-      .filter(e => prunes.forall(p => e.mayContain(p.column, p.lo, p.hi)))
-      .filter(e => pruneEqs.forall(p => e.mayContainEq(p.column, p.value)))
-      .filter(e => pruneIns.forall(p =>
+  private def liveData(snap: Snapshot, prune: Seq[Prune] = Nil,
+      pruneEq: Seq[PruneEq] = Nil, pruneIn: Seq[PruneIn] = Nil,
+      onlyPaths: Option[Set[String]] = None): Seq[ManifestEntry] = {
+    val data = snap.files("data")
+      .filter(e => prune.forall(p => e.mayContain(p.column, p.lo, p.hi)))
+      .filter(e => pruneEq.forall(p => e.mayContainEq(p.column, p.value)))
+      .filter(e => pruneIn.forall(p =>
         p.values.exists(v => e.mayContain(p.column, v, v))))
-      .map(e => (dir.resolve(e.path).toString, e.seq))
-  }
-
-  private def manifestAt(root: String, ns: String, table: String,
-      version: Option[Long]): Seq[ManifestEntry] = version match {
-    case Some(v) => TableIO.readManifestAt(root, ns, table, v)
-    case None => TableIO.readManifest(root, ns, table)
+      .filter(e => onlyPaths.forall(_.contains(e.path)))
+    require(prune.nonEmpty || pruneEq.nonEmpty || pruneIn.nonEmpty ||
+      onlyPaths.nonEmpty || data.nonEmpty || snap.version > 0,
+      s"no data files in ${snap.dir.getParent.getFileName}." +
+        snap.dir.getFileName)
+    data
   }
 
   /** (basename, seq) pairs for a file list. The read path keys seq
@@ -99,8 +95,8 @@ object Mor {
     * delete (ADVICE r2). Generators emit unique names; this guard turns
     * a silent wrong answer into a loud error if that ever changes.
     */
-  private def basenameSeqs(files: Seq[(String, Long)]): Seq[(String, Long)] = {
-    val bn = files.map { case (abs, seq) => (abs.split('/').last, seq) }
+  private def basenameSeqs(files: Seq[ManifestEntry]): Seq[(String, Long)] = {
+    val bn = files.map(e => (e.path.split('/').last, e.seq))
     require(bn.map(_._1).distinct.size == bn.size,
       s"duplicate file basenames across directories break _fname keying: " +
         bn.groupBy(_._1).filter(_._2.size > 1).keys.mkString(", "))
@@ -119,56 +115,27 @@ object Mor {
       pruneIn: Seq[PruneIn] = Nil,
       keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
-    val dataFiles0 =
-      filesAt(root, ns, table, "data", version, prune, pruneEq, pruneIn)
-    val dir = TableIO.tableDir(root, ns, table)
-    val dataFiles = onlyPaths match {
-      case Some(keep) => dataFiles0.filter { case (abs, _) =>
-        keep.contains(dir.relativize(java.nio.file.Paths.get(abs)).toString) }
-      case None => dataFiles0
-    }
-    // a pruned-to-nothing scan or a legitimately empty snapshot
-    // (post-TRUNCATE) reads as empty; only a never-committed table is
-    // an error
-    require(prune.nonEmpty || pruneEq.nonEmpty || pruneIn.nonEmpty ||
-      onlyPaths.nonEmpty || dataFiles.nonEmpty ||
-      version.getOrElse(TableIO.currentVersion(root, ns, table)) > 0,
-      s"no data files in $ns.$table")
-    if (dataFiles.isEmpty) {
-      // every file pruned: an empty relation with the scan's schema —
-      // a query range outside all bounds is a result, not an error
-      import org.apache.spark.sql.types.{LongType, StructField, StructType}
-      val lineage =
-        if (keepFileRowId) Seq(StructField("_row_id", LongType)) else Nil
-      val schema = StructType(TableIO.readSchema(root, ns, table).fields ++
-        lineage ++
-        Seq(StructField("_file", org.apache.spark.sql.types.StringType),
-          StructField("_fname", org.apache.spark.sql.types.StringType),
-          StructField("_pos", LongType), StructField("_seq", LongType)))
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
-    // `_metadata.file_name` is a direct metadata field: per-row path
-    // string surgery (split/element_at over file_path) measured 100x
-    // slower than the plain scan on 10M rows.
-    val schema0 = TableIO.readSchema(root, ns, table)
+    val snap = TableIO.snapshot(root, ns, table, version)
+    scanData(spark, snap, liveData(snap, prune, pruneEq, pruneIn, onlyPaths),
+      keepFileRowId, uriFor)
+  }
+
+  private def scanData(spark: SparkSession, snap: Snapshot,
+      data: Seq[ManifestEntry], keepFileRowId: Boolean,
+      uriFor: String => String): DataFrame = {
     // lineage reads extend the read schema with the OPTIONAL materialized
     // `_row_id` column compaction writes (Iceberg v3: a rewritten file
     // carries its rows' preserved ids physically; files without the
     // column — every normally-appended file — read it as null and
     // inherit firstRowId + position instead)
     val schema =
-      if (!keepFileRowId) schema0
-      else org.apache.spark.sql.types.StructType(schema0.fields :+
-        org.apache.spark.sql.types.StructField("_row_id",
-          org.apache.spark.sql.types.LongType))
-    // id-based column resolution (rename/drop survive; old files'
-    // values surface under evolved names)
-    if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))
-      spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val df = spark.read
-      .schema(schema)
-      .parquet(dataFiles.map(f => uriFor(f._1)): _*)
+      if (!keepFileRowId) snap.schema
+      else StructType(snap.schema.fields :+ StructField("_row_id", LongType))
+    // `_metadata.file_name` is a direct metadata field: per-row path
+    // string surgery (split/element_at over file_path) measured 100x
+    // slower than the plain scan on 10M rows.
+    val df = GraftFileIndex.scanFiles(spark, snap.dir, data,
+        Bridge.asNullable(schema), uriFor)
       .select(col("*"),
         // file name is unique within a table, so `data/<name>` equals the
         // manifest-relative path the delete files carry.
@@ -177,26 +144,80 @@ object Mor {
         col("_metadata.row_index").as("_pos"))
     // Attach each file's sequence number (tiny manifest join, broadcast).
     import spark.implicits._
-    val seqDf = basenameSeqs(dataFiles).toDF("_fname", "_seq")
+    val seqDf = basenameSeqs(data).toDF("_fname", "_seq")
     df.join(broadcast(seqDf), Seq("_fname"), "left")
   }
 
-  /** Delete files of one content type, each row tagged with its OWN
+  /** Position-delete file schema (Iceberg's `file_path`, `pos`). */
+  val PosDeleteSchema: StructType = StructType(Seq(
+    StructField("file_path", StringType), StructField("pos", LongType)))
+
+  /** Delete files read with `schema`, each row tagged with its OWN
     * file's commit sequence as `_dseq` (via `_metadata.file_name`, same
     * broadcast-join shape as the data side).
     */
-  private[plans] def readDeletes(spark: SparkSession,
-      files: Seq[(String, Long)],
-      uriFor: String => String = identity): Option[DataFrame] = {
-    if (files.isEmpty) None
-    else {
-      import spark.implicits._
-      val seqDf = basenameSeqs(files).toDF("_dfname", "_dseq")
-      Some(spark.read.parquet(files.map(f => uriFor(f._1)): _*)
-        .withColumn("_dfname", col("_metadata.file_name"))
-        .join(broadcast(seqDf), Seq("_dfname"))
-        .drop("_dfname"))
-    }
+  private[plans] def readDeletes(spark: SparkSession, dir: java.nio.file.Path,
+      files: Seq[ManifestEntry], schema: StructType,
+      uriFor: String => String = identity): DataFrame = {
+    import spark.implicits._
+    val seqDf = basenameSeqs(files).toDF("_dfname", "_dseq")
+    GraftFileIndex.scanFiles(spark, dir, files, schema, uriFor)
+      .withColumn("_dfname", col("_metadata.file_name"))
+      .join(broadcast(seqDf), Seq("_dfname"))
+      .drop("_dfname")
+  }
+
+  /** One join shape of the delete side: the delete rows (tagged `_dseq`)
+    * and the columns they match a provenance scan on.
+    *
+    * R2: position deletes match (`_file`, `_pos`) in files committed at
+    * or before the delete's sequence (Iceberg v2: data_seq <=
+    * delete_seq). R3: equality deletes match their identifier columns
+    * in rows with a STRICTLY lower sequence.
+    */
+  private final case class DeleteGroup(rows: DataFrame, keys: Seq[String]) {
+    def positional: Boolean = keys.isEmpty
+    def on(df: DataFrame): Column =
+      if (positional)
+        df("_file") === rows("file_path") && df("_pos") === rows("pos") &&
+          df("_seq") <= rows("_dseq")
+      else keys.map(k => df(k) === rows(k)).reduce(_ && _) &&
+        df("_seq") < rows("_dseq")
+  }
+
+  /** The delete groups of the delete files among `entries`, built from
+    * `snap`'s metadata alone (no Spark job): the position deletes, when
+    * they hold any row, then
+    * one group per equality-identifier set. The identifier columns are
+    * the entries' recorded `equality_ids` ([[TableIO.equalityColumns]]).
+    * Different snapshots may delete on DIFFERENT identifier sets (the
+    * pipeline's (foo,bar) deletes vs an upsert's key-only deletes), so
+    * each set anti-joins separately; a single mixed-schema scan would
+    * silently drop columns. Each set's files read with the table's
+    * types for those columns, so a widened identifier column still
+    * matches its narrower delete files.
+    */
+  private def deleteGroups(spark: SparkSession, snap: Snapshot,
+      entries: Seq[ManifestEntry],
+      uriFor: String => String): Seq[DeleteGroup] = {
+    val pos = entries.filter(_.content == "pos_delete")
+    val posGroup =
+      if (pos.map(_.recordCount).sum <= 0) Nil
+      else Seq(DeleteGroup(
+        readDeletes(spark, snap.dir, pos, PosDeleteSchema, uriFor), Nil))
+    val eqGroups = entries.filter(_.content == "eq_delete")
+      .groupBy(e => TableIO.equalityColumns(spark, snap, e, uriFor))
+      .toSeq.sortBy(_._1.mkString(","))
+      .map { case (keys, files) =>
+        val schema = StructType(keys.map(k =>
+          snap.schema(k).copy(nullable = true, metadata = Metadata.empty)))
+        // shuffle_hash: the delete side is much smaller than the data
+        // side but can exceed the broadcast threshold; hashing it avoids
+        // the sort-merge path's full sort of the data side.
+        DeleteGroup(readDeletes(spark, snap.dir, files, schema, uriFor)
+          .hint("shuffle_hash"), keys)
+      }
+    posGroup ++ eqGroups
   }
 
   /** Max positional-delete rows handled via deletion vectors. Above this
@@ -227,6 +248,11 @@ object Mor {
     * object store ([[RestObjectFileSystem]], the reference's
     * consumer-side S3 configuration): the plan is unchanged, only the
     * byte transport moves.
+    *
+    * Building the DataFrame reads one [[Snapshot]] (one version
+    * resolution, one manifest parse, one schema read) and runs no Spark
+    * job: file lists, schemas and identifier columns all come from the
+    * manifest.
     */
   def read(spark: SparkSession, root: String, ns: String, table: String,
       bitmapThreshold: Long = BitmapDeleteThreshold,
@@ -238,77 +264,45 @@ object Mor {
       pruneIn: Seq[PruneIn] = Nil,
       keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
-    var df = scanWithProvenance(spark, root, ns, table, asOfVersion, prune,
-      pruneEq, onlyPaths, pruneIn, keepFileRowId, uriFor)
-    val manifest = manifestAt(root, ns, table, asOfVersion)
+    val snap = TableIO.snapshot(root, ns, table, asOfVersion)
+    view(spark, snap, liveData(snap, prune, pruneEq, pruneIn, onlyPaths),
+      bitmapThreshold, keepProvenance, keepFileRowId, uriFor)
+  }
 
-    // R2: positional deletes apply to files committed at or before the
-    // delete's sequence (Iceberg v2: data_seq <= delete_seq).
-    val posFiles = filesAt(root, ns, table, "pos_delete", asOfVersion)
-    val posTotal = manifest.filter(_.content == "pos_delete")
-      .map(_.recordCount).sum
-    if (posTotal > 0) {
-      val pd = readDeletes(spark, posFiles, uriFor).get
-      // Positions are row indexes within a data file, so the manifest's
-      // recordCounts bound them — the Int-wrap guard (ADVICE r1) and the
-      // broadcast-size cap are pure metadata checks, no extra job. Under
-      // file skipping only surviving files need deletion vectors.
-      val dataEntries = manifest.filter(_.content == "data")
-        .filter(e => prune.forall(p => e.mayContain(p.column, p.lo, p.hi)))
-        .filter(e => pruneEq.forall(p => e.mayContainEq(p.column, p.value)))
-        .filter(e => pruneIn.forall(p =>
-          p.values.exists(v => e.mayContain(p.column, v, v))))
-        .filter(e => onlyPaths.forall(_.contains(e.path)))
-        // (conjunction over all prune predicates, matching filesAt)
-      val useBitmap = posTotal <= bitmapThreshold &&
-        dataEntries.forall(e =>
-          e.recordCount >= 0 && e.recordCount <= Int.MaxValue.toLong) &&
-        dataEntries.map(_.recordCount / 8 + 8).sum <= MaxBitmapBroadcastBytes
-      if (useBitmap) {
-        basenameSeqs(dataEntries.map(e => (e.path, e.seq))) // uniqueness guard
-        val dv = buildDeletionVectors(spark, pd,
-          dataEntries.map(e => (e.path, e.path.split('/').last, e.seq)))
-        df = df.join(broadcast(dv), Seq("_fname"), "left")
-          .filter(col("_dv").isNull || !bitmapContains(col("_dv"), col("_pos")))
-          .drop("_dv")
-      } else {
-        df = df.join(pd,
-          df("_file") === pd("file_path") && df("_pos") === pd("pos") &&
-            df("_seq") <= pd("_dseq"),
-          "left_anti")
+  /** `snap`'s merged view over the data files `data`: the one
+    * delete-application path behind [[read]], [[readAt]],
+    * [[readLineage]] and [[readChanges]].
+    */
+  private def view(spark: SparkSession, snap: Snapshot,
+      data: Seq[ManifestEntry],
+      bitmapThreshold: Long = BitmapDeleteThreshold,
+      keepProvenance: Boolean = false,
+      keepFileRowId: Boolean = false,
+      uriFor: String => String = identity): DataFrame = {
+    val scan = scanData(spark, snap, data, keepFileRowId, uriFor)
+    val posTotal = snap.files("pos_delete").map(_.recordCount).sum
+    val merged = deleteGroups(spark, snap, snap.entries, uriFor)
+      .foldLeft(scan) { (df, g) =>
+        // Positions are row indexes within a data file, so the manifest's
+        // recordCounts bound them — the Int-wrap guard (ADVICE r1) and the
+        // broadcast-size cap are pure metadata checks, no extra job. Under
+        // file skipping only surviving files need deletion vectors.
+        val useBitmap = g.positional && posTotal <= bitmapThreshold &&
+          data.forall(e =>
+            e.recordCount >= 0 && e.recordCount <= Int.MaxValue.toLong) &&
+          data.map(_.recordCount / 8 + 8).sum <= MaxBitmapBroadcastBytes
+        if (useBitmap) {
+          val dv = buildDeletionVectors(spark, g.rows,
+            data.map(e => (e.path, e.path.split('/').last, e.seq)))
+          df.join(broadcast(dv), Seq("_fname"), "left")
+            .filter(col("_dv").isNull || !bitmapContains(col("_dv"), col("_pos")))
+            .drop("_dv")
+        } else df.join(g.rows, g.on(df), "left_anti")
       }
-    }
-
-    // R3: equality deletes remove rows whose identifier columns match a
-    // delete row with a STRICTLY higher sequence (Iceberg v2 semantics).
-    // The delete files' own columns ARE the identifier set (the Iceberg
-    // equality_ids contract), so the join keys come from their schema.
-    // Different snapshots may delete on DIFFERENT identifier sets (the
-    // pipeline's (foo,bar) deletes vs an upsert's key-only deletes), so
-    // files are grouped by their column set — driver-side footer reads,
-    // O(#delete files) metadata — and each set anti-joins separately;
-    // a single mixed-schema scan would silently drop columns.
-    filesAt(root, ns, table, "eq_delete", asOfVersion)
-      .groupBy(f => spark.read.parquet(uriFor(f._1)).schema.fieldNames.toSeq)
-      .toSeq.sortBy(_._1.mkString(","))
-      .foreach { case (_, files) =>
-        val ed0 = readDeletes(spark, files, uriFor).get
-        // shuffle_hash: the delete side is much smaller than the data side
-        // but can exceed the broadcast threshold; hashing it avoids the
-        // sort-merge path's full sort of the data side.
-        val ed = ed0.hint("shuffle_hash")
-        val keys = ed0.columns.filterNot(_ == "_dseq")
-        val cond = keys.map(k => df(k) === ed(k)).reduce(_ && _) &&
-          df("_seq") < ed("_dseq")
-        df = df.join(ed, cond, "left_anti")
-      }
-
-    val cols = TableIO.readSchema(root, ns, table).fieldNames
+    val cols = snap.schema.fieldNames.toSeq
     val lineageCols = if (keepFileRowId) Seq("_row_id") else Nil
-    if (keepProvenance)
-      df.select((cols.toSeq ++ lineageCols ++
-        Seq("_file", "_pos", "_seq")).map(col): _*)
-    else df.select((cols.toSeq ++ lineageCols).map(col): _*)
+    val provenance = if (keepProvenance) Seq("_file", "_pos", "_seq") else Nil
+    merged.select((cols ++ lineageCols ++ provenance).map(col): _*)
   }
 
   /** Per-file deletion vectors, built distributedly — no driver-side
@@ -427,18 +421,22 @@ object Mor {
   def readLineage(spark: SparkSession, root: String, ns: String,
       table: String, asOfVersion: Option[Long] = None,
       onlyPaths: Option[Set[String]] = None): DataFrame = {
+    val snap = TableIO.snapshot(root, ns, table, asOfVersion)
+    lineageView(spark, snap, liveData(snap, onlyPaths = onlyPaths))
+  }
+
+  private def lineageView(spark: SparkSession, snap: Snapshot,
+      data: Seq[ManifestEntry]): DataFrame = {
     import spark.implicits._
-    val df = read(spark, root, ns, table, asOfVersion = asOfVersion,
-      keepProvenance = true, onlyPaths = onlyPaths, keepFileRowId = true)
-    val ids = manifestAt(root, ns, table, asOfVersion)
-      .filter(_.content == "data")
+    val df = view(spark, snap, data, keepProvenance = true,
+      keepFileRowId = true)
+    val ids = snap.files("data")
       .map(e => (e.path, e.firstRowId.getOrElse(-1L)))
       .toDF("_file", "_frid")
-    val schemaCols = TableIO.readSchema(root, ns, table).fieldNames.toSeq
     df.join(broadcast(ids), Seq("_file"), "left")
       .withColumn("_row_id", coalesce(col("_row_id"),
         when(col("_frid") >= 0, col("_frid") + col("_pos"))))
-      .select((schemaCols :+ "_row_id").map(col): _*)
+      .select((snap.schema.fieldNames.toSeq :+ "_row_id").map(col): _*)
   }
 
   /** MIN/MAX of a column answered from the manifest's per-file bounds —
@@ -465,6 +463,8 @@ object Mor {
     import spark.implicits._
     val dir = TableIO.tableDir(root, ns, table)
     val schema = TableIO.readSchema(root, ns, table)
+    def snapshotAt(v: Long) =
+      Snapshot(dir, v, TableIO.readManifestAt(root, ns, table, v), schema)
     val schemaCols0 = schema.fieldNames.toSeq
     // with lineage, every change row carries its stable _row_id — the
     // key an incremental consumer correlates inserts/deletes on
@@ -497,7 +497,8 @@ object Mor {
               s"across it is gone — reset the consumer (reconsume from " +
               "scratch, or re-point its offset into the retained history)")
       }
-      val prev = TableIO.readManifestAt(root, ns, table, v - 1)
+      val prevSnap = snapshotAt(v - 1)
+      val prev = prevSnap.entries
       val cur = TableIO.readManifestAt(root, ns, table, v)
       val prevKeys = prev.map(e => (e.path, e.content)).toSet
       val curKeys = cur.map(e => (e.path, e.content)).toSet
@@ -551,11 +552,10 @@ object Mor {
               // overwrite costs a scan of the replaced partitions, never
               // the table.
               val paths = droppedData.map(_.path).toSet
+              val data = liveData(prevSnap, onlyPaths = Some(paths))
               val alive =
-                if (withLineage) readLineage(spark, root, ns, table,
-                  asOfVersion = Some(v - 1), onlyPaths = Some(paths))
-                else read(spark, root, ns, table,
-                  asOfVersion = Some(v - 1), onlyPaths = Some(paths))
+                if (withLineage) lineageView(spark, prevSnap, data)
+                else view(spark, prevSnap, data)
               Seq(alive.select(schemaCols.map(col): _*)
                 .withColumn("_change_type", lit("delete")))
             }
@@ -581,10 +581,8 @@ object Mor {
         val inserts =
           if (addedData.isEmpty) None
           else Some {
-            if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))
-              spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-            val raw = spark.read.schema(schema)
-              .parquet(addedData.map(e => dir.resolve(e.path).toString): _*)
+            val raw = GraftFileIndex.scanFiles(spark, dir, addedData,
+              Bridge.asNullable(schema))
             val withId = if (!withLineage) raw else {
               val frids = addedData
                 .map(e => (e.path.split('/').last, e.firstRowId.getOrElse(-1L)))
@@ -598,12 +596,9 @@ object Mor {
             withId.select(schemaCols.map(col): _*)
               .withColumn("_change_type", lit("insert"))
           }
-        val addedPos = added.filter(_.content == "pos_delete")
-          .map(e => (dir.resolve(e.path).toString, e.seq))
-        val addedEq = added.filter(_.content == "eq_delete")
-          .map(e => (dir.resolve(e.path).toString, e.seq))
+        val groups = deleteGroups(spark, prevSnap, added, identity)
         val deletes =
-          if (addedPos.isEmpty && addedEq.isEmpty) None
+          if (groups.isEmpty) None
           else Some {
             // pos-deletes NAME their target files, so a pos-only commit
             // restricts the prior-snapshot scan to exactly those files —
@@ -611,36 +606,19 @@ object Mor {
             // files must not scan the world. Eq-deletes match by value
             // and can land anywhere, so any eq file forces the full
             // prior view.
+            val named =
+              if (groups.exists(!_.positional)) None
+              else posDeleteTargets(spark, dir,
+                added.filter(_.content == "pos_delete"),
+                prev.filter(_.content == "data").map(_.path))
             val targetPaths =
-              if (addedEq.nonEmpty) {
-                if (dropped.isEmpty) None else Some(keptPrevData)
-              } else {
-                val named = spark.read.parquet(addedPos.map(_._1): _*)
-                  .select("file_path").distinct()
-                  .collect().map(_.getString(0)).toSet
-                Some(if (dropped.isEmpty) named
-                  else named.intersect(keptPrevData))
-              }
-            val alive = read(spark, root, ns, table,
-              asOfVersion = Some(v - 1), keepProvenance = true,
-              onlyPaths = targetPaths)
-            var cands = Seq.empty[DataFrame]
-            readDeletes(spark, addedPos).foreach { pd =>
-              cands :+= alive.join(pd,
-                alive("_file") === pd("file_path") &&
-                  alive("_pos") === pd("pos") &&
-                  alive("_seq") <= pd("_dseq"), "left_semi")
-            }
-            addedEq.groupBy(f => spark.read.parquet(f._1).schema.fieldNames.toSeq)
-              .toSeq.sortBy(_._1.mkString(","))
-              .foreach { case (_, files) =>
-                val ed0 = readDeletes(spark, files).get
-                val ed = ed0.hint("shuffle_hash")
-                val keys = ed0.columns.filterNot(_ == "_dseq")
-                val cond = keys.map(k => alive(k) === ed(k)).reduce(_ && _) &&
-                  alive("_seq") < ed("_dseq")
-                cands :+= alive.join(ed, cond, "left_semi")
-              }
+              if (dropped.isEmpty) named
+              else Some(named.fold(keptPrevData)(_.intersect(keptPrevData)))
+            val alive = view(spark, prevSnap,
+              liveData(prevSnap, onlyPaths = targetPaths),
+              keepProvenance = true)
+            val cands = groups.map(g => alive.join(g.rows, g.on(alive),
+              "left_semi"))
             val deduped = cands.reduce(_ union _)
               .dropDuplicates("_file", "_pos")
             val withId = if (!withLineage) deduped else {
@@ -669,6 +647,38 @@ object Mor {
     } else parts.reduce(_ union _)
   }
 
+  /** The data paths among `candidates` that position-delete files can
+    * name, from the min/max statistics of each row group's `file_path`
+    * column — footers read on the driver, no Spark job. A superset of
+    * the named files (every candidate inside some row group's range);
+    * None when a row group lacks the statistics.
+    */
+  private def posDeleteTargets(spark: SparkSession, dir: java.nio.file.Path,
+      pos: Seq[ManifestEntry], candidates: Seq[String]): Option[Set[String]] = {
+    import scala.jdk.CollectionConverters._
+    val ranges = pos.flatMap { e =>
+      TableIO.footer(spark, dir.resolve(e.path).toString).getBlocks.asScala.map { b =>
+        b.getColumns.asScala.find(_.getPath.toDotString == "file_path")
+          .map(_.getStatistics)
+          .collect { case st if st != null && !st.isEmpty =>
+            if (!st.hasNonNullValue) None // an all-null group names nothing
+            else Some((st.genericGetMin.asInstanceOf[Binary].getBytes,
+              st.genericGetMax.asInstanceOf[Binary].getBytes))
+          }
+      }
+    }
+    if (ranges.exists(_.isEmpty)) None
+    else {
+      val bounds = ranges.flatten.flatten
+      def cmp(a: Array[Byte], b: Array[Byte]) =
+        java.util.Arrays.compareUnsigned(a, b)
+      Some(candidates.filter { p =>
+        val b = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        bounds.exists { case (lo, hi) => cmp(lo, b) <= 0 && cmp(b, hi) <= 0 }
+      }.toSet)
+    }
+  }
+
   /** Read the table at a named ref (branch or tag) — `VERSION AS OF
     * 'ref'` / Iceberg branch reads. The ref resolves to a snapshot
     * version; the fully gated read path then applies as usual.
@@ -693,11 +703,6 @@ object Mor {
     if (added.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema)
-    } else {
-      if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-      spark.read.schema(schema)
-        .parquet(added.map(e => dir.resolve(e.path).toString): _*)
-    }
+    } else GraftFileIndex.scanFiles(spark, dir, added, Bridge.asNullable(schema))
   }
 }

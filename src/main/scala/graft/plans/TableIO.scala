@@ -29,7 +29,12 @@ final case class ManifestEntry(
     // row N of the file has id firstRowId + N. Assigned at commit time
     // from the table's monotonic high-water mark; None on delete files
     // and on manifests written before lineage existed.
-    firstRowId: Option[Long] = None
+    firstRowId: Option[Long] = None,
+    // Iceberg `equality_ids`: the table field ids an equality-delete
+    // file's rows match on, in the file's column order. Empty on every
+    // other content type and on eq-delete entries written before the
+    // field existed (see [[TableIO.equalityColumns]]).
+    equalityIds: Seq[Long] = Nil
 ) {
   /** Can this file contain rows with `column` in [qlo, qhi]? */
   def mayContain(column: String, qlo: Long, qhi: Long): Boolean =
@@ -94,6 +99,21 @@ object Bloom {
     val bb = java.nio.ByteBuffer.wrap(java.util.Base64.getDecoder.decode(s))
     Vector.fill(bb.remaining() / 8)(bb.getLong)
   }
+}
+
+/** One read's view of a table: a manifest version, its entries and the
+  * table schema, loaded together once ([[TableIO.snapshot]]). Every
+  * file list, delete gate and identifier set of a MOR read comes from
+  * the same value, so a commit landing while the read is built cannot
+  * pair one version's data files with another's deletes.
+  */
+final case class Snapshot(dir: Path, version: Long,
+    entries: Seq[ManifestEntry], schema: StructType) {
+  def files(content: String): Seq[ManifestEntry] =
+    entries.filter(_.content == content)
+
+  /** The sequence number a commit planned on this snapshot takes. */
+  def nextSeq: Long = entries.map(_.seq).maxOption.getOrElse(0L) + 1L
 }
 
 /** Filesystem-backed emulation of the reference's catalog + commit
@@ -230,9 +250,7 @@ object TableIO {
   }
 
   private def maxFieldId(schema: StructType): Long =
-    schema.fields.flatMap(f =>
-      if (f.metadata.contains(FieldIdKey)) Some(f.metadata.getLong(FieldIdKey))
-      else None).maxOption.getOrElse(0L)
+    schema.fields.flatMap(fieldId).maxOption.getOrElse(0L)
 
   /** Monotone field-id high-water mark (Iceberg `last-column-id`):
     * survives drops, so a re-added column name can never reuse a
@@ -338,9 +356,7 @@ object TableIO {
     require(!cur.fieldNames.contains(newName), s"column $newName exists")
     require(cur.fields.forall(_.metadata.contains(FieldIdKey)),
       s"$ns.$table predates field ids; rename requires id-based resolution")
-    val eqRefs = filesOf(root, ns, table, "eq_delete").map(_._1)
-      .flatMap(p => spark.read.parquet(p).schema.fieldNames)
-    require(!eqRefs.contains(oldName),
+    require(!liveEqualityColumns(spark, root, ns, table).contains(oldName),
       s"column $oldName is an identifier of live equality-delete files")
     val evolved = StructType(cur.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
@@ -356,14 +372,64 @@ object TableIO {
     val cur = readSchema(root, ns, table)
     require(cur.fieldNames.contains(name), s"no column $name")
     require(cur.fields.length > 1, "cannot drop the last column")
-    val eqRefs = filesOf(root, ns, table, "eq_delete").map(_._1)
-      .flatMap(p => spark.read.parquet(p).schema.fieldNames)
-    require(!eqRefs.contains(name),
+    require(!liveEqualityColumns(spark, root, ns, table).contains(name),
       s"column $name is an identifier of live equality-delete files")
     val evolved = StructType(cur.fields.filterNot(_.name == name))
     atomicWrite(tableDir(root, ns, table).resolve("schema.json"), evolved.json)
     evolved
   }
+
+  /** Identifier columns of the current snapshot's equality deletes. */
+  private def liveEqualityColumns(spark: SparkSession, root: String,
+      ns: String, table: String): Set[String] = {
+    val snap = snapshot(root, ns, table)
+    snap.files("eq_delete").flatMap(e => equalityColumns(spark, snap, e)).toSet
+  }
+
+  /** The snapshot at `version` (the current one when None): one version
+    * resolution, one manifest parse and one schema read.
+    */
+  def snapshot(root: String, ns: String, table: String,
+      version: Option[Long] = None): Snapshot = {
+    val v = version.getOrElse(currentVersion(root, ns, table))
+    Snapshot(tableDir(root, ns, table), v, readManifestAt(root, ns, table, v),
+      readSchema(root, ns, table))
+  }
+
+  private def fieldId(f: org.apache.spark.sql.types.StructField): Option[Long] =
+    if (f.metadata.contains(FieldIdKey)) Some(f.metadata.getLong(FieldIdKey))
+    else None
+
+  /** The identifier columns of an equality-delete entry, named by the
+    * snapshot's schema through the entry's recorded `equalityIds`. An
+    * entry without them (written before the field existed, or to a
+    * table without field ids) falls back to the column names in the
+    * file's parquet footer, read on the driver: no Spark job either way.
+    * `uriFor` maps the file's absolute path to the URI the footer is
+    * read through (see [[Mor.read]]).
+    */
+  def equalityColumns(spark: SparkSession, snap: Snapshot, e: ManifestEntry,
+      uriFor: String => String = identity): Seq[String] = {
+    val byId = snap.schema.fields.flatMap(f => fieldId(f).map(_ -> f.name)).toMap
+    if (e.equalityIds.nonEmpty && e.equalityIds.forall(byId.contains))
+      e.equalityIds.map(byId)
+    else footer(spark, uriFor(snap.dir.resolve(e.path).toString))
+      .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+  }
+
+  /** A parquet file's footer, read on the driver — no Spark job. */
+  private[plans] def footer(spark: SparkSession,
+      file: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), conf))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** Row count of a parquet file: the sum of its row groups' counts. */
+  private def footerRowCount(spark: SparkSession, file: String): Long =
+    footer(spark, file).getBlocks.asScala.map(_.getRowCount).sum
 
   /** Current snapshot version. The hint file is a fast path only: a
     * committer that lost a publish race may flip the hint backwards a
@@ -632,12 +698,6 @@ object TableIO {
   def nextSeq(root: String, ns: String, table: String): Long =
     readManifest(root, ns, table).map(_.seq).maxOption.getOrElse(0L) + 1L
 
-  /** Write `df` as EXACTLY one parquet file at `relPath` under the table
-    * location — the per-file writer (K1/K2, `main.rs:137-151`): the
-    * reference writes one RecordBatch per named file. Returns the entry
-    * (not yet committed). `recordCount` avoids a recount job when the
-    * caller (the generator) already knows it.
-    */
   /** Exact per-column [min, max] of long-typed columns — for callers
     * that can't derive bounds in closed form (one small agg job; a
     * production writer reads them from the parquet footer metrics it
@@ -694,6 +754,15 @@ object TableIO {
     acc.map { case (c, a) => c -> a.toVector }
   }
 
+  /** Write `df` as EXACTLY one parquet file at `relPath` under the table
+    * location — the per-file writer (K1/K2, `main.rs:137-151`): the
+    * reference writes one RecordBatch per named file. Returns the entry
+    * (not yet committed). Without a `recordCount` from the caller, the
+    * count comes from the written file's footer, on the driver. An
+    * `eq_delete` entry records the table field ids of the columns it
+    * writes as its `equalityIds` (the reference's
+    * `EqualityDeleteWriterConfig::new(ids, ...)`, `main.rs:242-247`).
+    */
   def writeExactFile(spark: SparkSession, root: String, ns: String,
       table: String, relPath: String, df: DataFrame, content: String,
       seq: Long, recordCount: Long = -1L,
@@ -706,10 +775,15 @@ object TableIO {
     val tmp = Files.createTempDirectory(dir, ".stage")
     // data files embed the table's field ids (id-based resolution);
     // delete files read by name/position and stay as given
-    val out =
-      if (content == "data" && tableExists(root, ns, table))
-        alignFieldIds(df, readSchema(root, ns, table))
-      else df
+    val schema = if (tableExists(root, ns, table))
+      Some(readSchema(root, ns, table)) else None
+    val out = schema.filter(_ => content == "data")
+      .fold(df)(alignFieldIds(df, _))
+    val equalityIds = schema.filter(_ => content == "eq_delete").toSeq
+      .flatMap { s =>
+        val ids = df.columns.toSeq.map(c => s.find(_.name == c).flatMap(fieldId))
+        if (ids.forall(_.isDefined)) ids.flatten else Nil
+      }
     try {
       out.coalesce(1).write.mode("overwrite")
         .option("compression", props.compression)
@@ -723,8 +797,9 @@ object TableIO {
         .getOrElse(throw new IllegalStateException(s"no part file in $tmp"))
       Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
       val n = if (recordCount >= 0) recordCount
-        else spark.read.parquet(target.toString).count()
-      ManifestEntry(relPath, content, seq, n, bounds, blooms)
+        else footerRowCount(spark, target.toString)
+      ManifestEntry(relPath, content, seq, n, bounds, blooms,
+        equalityIds = equalityIds)
     } finally deleteRecursively(tmp)
   }
 
@@ -904,7 +979,9 @@ object TableIO {
   private[plans] def entryToJson(e: ManifestEntry): String = {
     val base = s""""path":"${e.path}","content":"${e.content}",""" +
       s""""seq":${e.seq},"record_count":${e.recordCount}""" +
-      e.firstRowId.map(r => s""","first_row_id":$r""").getOrElse("")
+      e.firstRowId.map(r => s""","first_row_id":$r""").getOrElse("") +
+      (if (e.equalityIds.isEmpty) ""
+       else e.equalityIds.mkString(""","equality_ids":[""", ",", "]"))
     val b = if (e.bounds.isEmpty) "" else
       e.bounds.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
         s""""$c":[$lo,$hi]"""
@@ -917,12 +994,12 @@ object TableIO {
   }
 
   private val entryRe =
-    """\{"path":"([^"]*)","content":"([^"]*)","seq":(\d+),"record_count":(\d+)(?:,"first_row_id":(\d+))?(?:,"bounds":\{([^}]*)\})?(?:,"blooms":\{([^}]*)\})?\}""".r
+    """\{"path":"([^"]*)","content":"([^"]*)","seq":(\d+),"record_count":(\d+)(?:,"first_row_id":(\d+))?(?:,"equality_ids":\[([\d,]*)\])?(?:,"bounds":\{([^}]*)\})?(?:,"blooms":\{([^}]*)\})?\}""".r
   private val boundRe = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
   private val bloomRe = """"([^"]+)":"([^"]*)"""".r
 
   private[plans] def entryFromJson(line: String): ManifestEntry = line.trim match {
-    case entryRe(p, c, s, n, frid, b, bl) =>
+    case entryRe(p, c, s, n, frid, eqIds, b, bl) =>
       val bounds = Option(b).map { body =>
         boundRe.findAllMatchIn(body).map { m =>
           m.group(1) -> (m.group(2).toLong, m.group(3).toLong)
@@ -934,7 +1011,8 @@ object TableIO {
         }.toMap
       }.getOrElse(Map.empty[String, Vector[Long]])
       ManifestEntry(p, c, s.toLong, n.toLong, bounds, blooms,
-        Option(frid).map(_.toLong))
+        Option(frid).map(_.toLong),
+        Option(eqIds).filter(_.nonEmpty).toSeq.flatMap(_.split(',').map(_.toLong)))
     case other => throw new IllegalArgumentException(s"bad manifest line: $other")
   }
 

@@ -16,6 +16,13 @@ object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field, element and value nullable — what
+    * `spark.read.schema(...)` applies to a file source's read schema
+    * (`StructType.asNullable` is `private[spark]`).
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** DataFrame over a hand-built logical plan (e.g. a LogicalRelation
     * wrapping a custom FileIndex) — `Dataset.ofRows` is `private[sql]`.
     */

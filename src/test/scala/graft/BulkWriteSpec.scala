@@ -57,4 +57,30 @@ class BulkWriteSpec extends AnyFunSuite {
     assert(m.count(_.content == "data") == 500)
     assert(Mor.read(spark, root, "ns", "t").count() == 2000L)
   }
+
+  test("writeExactFile counts rows from the written file's footer") {
+    import org.apache.spark.sql.functions._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import graft.plans.WriterProps
+    val root = Files.createTempDirectory("graft-footer-").toString
+    def rows(n: Long) = spark.range(0L, n).select(
+      col("id").cast("string").as("foo"), col("id").cast("int").as("bar"))
+    TableIO.createNamespace(root, "ns")
+    TableIO.createTableIfNotExists(root, "ns", "t", rows(1).schema)
+    val small = WriterProps(rowGroupBytes = 4096L, pageBytes = 1024L)
+    for ((n, props) <- Seq((0L, WriterProps()), (1L, WriterProps()),
+        (20000L, small))) {
+      val e = TableIO.writeExactFile(spark, root, "ns", "t",
+        s"data/n$n.parquet", rows(n), "data", 1L, props = props)
+      assert(e.recordCount == n, s"$n rows")
+      val file = new org.apache.hadoop.fs.Path(
+        TableIO.tableDir(root, "ns", "t").resolve(e.path).toUri)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file,
+        spark.sparkContext.hadoopConfiguration))
+      val groups = try reader.getFooter.getBlocks.size finally reader.close()
+      if (n == 20000L) assert(groups > 1, "expected several row groups")
+      assert(spark.read.parquet(file.toString).count() == n)
+    }
+  }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{Maintenance, ManifestEntry, Mor, Pipeline, TableIO}
+import graft.plans.{Dml, Maintenance, ManifestEntry, Mor, Pipeline, TableIO, Upsert}
 import graft.sources.{FileConfig, GenConfig}
 import org.apache.spark.sql.types._
 
@@ -167,5 +167,76 @@ class CommitProtocolSpec extends AnyFunSuite {
     // and nothing the tag references was deleted
     val tagged = TableIO.readManifestAt(root, "ns", "t", 1L).map(_.path).toSet
     assert(removed.toSet.intersect(tagged).isEmpty)
+  }
+
+  test("deleteWhere never erases a concurrent append (CAS on its version)") {
+    // deleteWhere plans its replacing manifest from version v; an append
+    // landing while it scans and writes must either survive in the
+    // published manifest or make deleteWhere throw
+    // ConcurrentModificationException — never vanish.
+    import org.apache.spark.sql.functions._
+    val root = newTable()
+    def append(name: String, lo: Int, n: Int): Unit = {
+      val df = spark.range(lo, lo + n).select(
+        col("id").cast("string").as("foo"), col("id").cast("int").as("bar"))
+      TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
+        "ns", "t", s"data/$name.parquet", df, "data",
+        TableIO.nextSeq(root, "ns", "t"), recordCount = n,
+        bounds = Map("bar" -> (lo.toLong, (lo + n - 1).toLong)))))
+    }
+    (0 until 4).foreach(i => append(s"base-$i", i * 50, 50))
+    val appended = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    @volatile var stop = false
+    val appender = new Thread(() => {
+      var i = 0
+      while (!stop) {
+        append(s"app-$i", 10000 + i * 10, 10); appended.add(s"data/app-$i.parquet")
+        i += 1; Thread.sleep(5)
+      }
+    })
+    appender.start()
+    var conflicts = 0
+    try (0 until 12).foreach { i =>
+      // boundary ranges inside the base files: each writes pos deletes
+      try Dml.deleteWhere(spark, root, "ns", "t", "bar", i * 15L + 1, i * 15L + 3)
+      catch { case _: java.util.ConcurrentModificationException => conflicts += 1 }
+    } finally { stop = true; appender.join() }
+    val live = TableIO.readManifest(root, "ns", "t").map(_.path).toSet
+    val lost = appended.toArray.toSeq.map(_.toString).filterNot(live)
+    assert(lost.isEmpty, s"${lost.size} of ${appended.size} appends lost " +
+      s"($conflicts deleteWhere conflicts)")
+    assert(Mor.read(spark, root, "ns", "t").filter(col("bar") >= 10000)
+      .count() == appended.size * 10L)
+  }
+
+  test("a MOR read sees one snapshot while upserts of its key land") {
+    // Each upsert commits an eq delete of key 7 and its new row at one
+    // sequence. A read that took its data files from version N and its
+    // deletes from N+1 would drop both the old and the new row.
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("graft-snapiso-").toString
+    Pipeline.prepareBulkData(spark, root, GenConfig("ns", "t",
+      FileConfig(50, 2), FileConfig(0, 0), FileConfig(0, 0)))
+    val row = spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row("7", 7, false)),
+      graft.sources.FixSchemaGen.dataSchema)
+    @volatile var done = false
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val upserter = new Thread(() => {
+      try (1 to 50).foreach(_ =>
+        Upsert.upsert(spark, root, "ns", "t", row, Seq("bar")))
+      catch { case t: Throwable => errs.add(t) }
+      finally done = true
+    })
+    upserter.start()
+    val counts = scala.collection.mutable.ArrayBuffer.empty[Long]
+    try while (!done)
+      counts += Mor.read(spark, root, "ns", "t").filter(col("bar") === 7).count()
+    finally upserter.join()
+    assert(errs.isEmpty, errs.toString)
+    val bad = counts.count(_ != 1L)
+    assert(counts.nonEmpty && bad == 0,
+      s"$bad of ${counts.size} reads saw key 7 ${counts.filter(_ != 1L).distinct} times")
+    assert(Mor.read(spark, root, "ns", "t").filter(col("bar") === 7).count() == 1L)
   }
 }
