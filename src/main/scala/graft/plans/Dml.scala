@@ -1,5 +1,7 @@
 package graft.plans
 
+import java.nio.file.Files
+import java.util.ConcurrentModificationException
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -57,19 +59,23 @@ object Dml {
           .select(col("_file").as("file_path"), col("_pos").as("pos"))
           .orderBy("file_path", "pos")
         // one pass: write the sorted file, count it from its footer, and
-        // drop it again when nothing matched
-        val rel = s"deletes/pos_delete-dml-s$seq.parquet"
+        // drop it again when nothing matched. The name is this call's
+        // own: `seq` alone repeats for two calls planned at one version
+        // and after a rollback, and a file another version names must
+        // never be overwritten or dropped here.
+        val unique = java.util.UUID.randomUUID().toString.take(8)
+        val rel = s"deletes/pos_delete-dml-s$seq-$unique.parquet"
         val e = TableIO.writeExactFile(spark, root, ns, table, rel, matches,
           "pos_delete", seq)
         if (e.recordCount > 0) Seq(e)
         else {
-          java.nio.file.Files.delete(snap.dir.resolve(rel))
+          Files.delete(snap.dir.resolve(rel))
           Nil
         }
       }
     if (fullyCovered.isEmpty && newDeletes.isEmpty) v
     else
-      TableIO.commitReplacing(root, ns, table,
+      try TableIO.commitReplacing(root, ns, table,
         manifest.filterNot(e => e.content == "data" && fullSet(e.path)) ++
           newDeletes,
         expectedVersion = Some(v),
@@ -78,5 +84,11 @@ object Dml {
         // commit as compaction. A pos-delete-only boundary commit stays
         // append-shaped and needs no marker.
         operation = if (fullyCovered.isEmpty) None else Some("delete"))
+      catch {
+        case lost: ConcurrentModificationException =>
+          // never published: the delete file is an orphan of this call
+          newDeletes.foreach(e => Files.delete(snap.dir.resolve(e.path)))
+          throw lost
+      }
   }
 }

@@ -180,15 +180,17 @@ object GraftFileIndex {
     scanFiles(spark, snap.dir, snap.files("data"), snap.schema)
   }
 
-  /** A scan of exactly `entries`' files read with `schema`: the file
-    * list comes from the manifest and the schema from the caller, so
-    * building it runs no listing job and no schema-inference job.
+  /** A scan of exactly `entries`' files read with `readSchema`, every
+    * field nullable (as `spark.read.schema` reads a file source): the
+    * file list comes from the manifest and the schema from the caller,
+    * so building it runs no listing job and no schema-inference job.
     * `_metadata.file_name`/`row_index` resolve as on any parquet scan.
     * [[Mor.read]] builds its data and delete scans here.
     */
   def scanFiles(spark: SparkSession, dir: java.nio.file.Path,
-      entries: Seq[ManifestEntry], schema: StructType,
+      entries: Seq[ManifestEntry], readSchema: StructType,
       uriFor: String => String = identity): DataFrame = {
+    val schema = Bridge.asNullable(readSchema)
     // id-based column resolution (rename/drop survive; old files'
     // values surface under evolved names)
     if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))

@@ -3,7 +3,6 @@ package graft.plans
 import java.nio.file.{Files, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.graftbridge.Bridge
 
 /** Table maintenance — the operations a MOR table needs to stay healthy
   * at scale (Iceberg's rewrite_data_files / expire_snapshots analogues).
@@ -100,8 +99,7 @@ object Maintenance {
       // metadata/stats job over grouped _metadata.file_name, instead of
       // one job per output file.
       val scanned = GraftFileIndex.scanFiles(spark, dir,
-        moved.map(ManifestEntry(_, "data", seq, -1L)),
-        Bridge.asNullable(snap.schema))
+        moved.map(ManifestEntry(_, "data", seq, -1L)), snap.schema)
       val aggs = count(lit(1)).as("n") +: clusterBy.flatMap(k => Seq(
         min(col(k).cast("long")).as(s"lo_$k"),
         max(col(k).cast("long")).as(s"hi_$k")))
@@ -169,7 +167,6 @@ object Maintenance {
   def compactDeletes(spark: SparkSession, root: String, ns: String,
       table: String): Long = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{Metadata, StructType}
     val snap = TableIO.snapshot(root, ns, table)
     val (v, manifest) = (snap.version, snap.entries)
     val eq = snap.files("eq_delete")
@@ -185,10 +182,8 @@ object Maintenance {
     val spec = specs.head
     // touched partition values from the delete KEYS — a delta-sized
     // read collapsing to at most #partition-values rows
-    val keyField = snap.schema(spec.column)
-      .copy(nullable = true, metadata = Metadata.empty)
     val touched = GraftFileIndex.scanFiles(spark, snap.dir, eq,
-        StructType(Seq(keyField)))
+        snap.keySchema(Seq(spec.column)))
       .select(spec.sparkValue(col(spec.column)).as("_pv"))
       .distinct().collect().map(_.getLong(0)).toSet
     val keep = manifest.filterNot(_.content == "eq_delete")

@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{LongType, Metadata, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.functions.BitmapFunctions.bitmapContains
 
 /** Merge-on-read scan — the read semantics the reference's output defines
@@ -134,8 +132,7 @@ object Mor {
     // `_metadata.file_name` is a direct metadata field: per-row path
     // string surgery (split/element_at over file_path) measured 100x
     // slower than the plain scan on 10M rows.
-    val df = GraftFileIndex.scanFiles(spark, snap.dir, data,
-        Bridge.asNullable(schema), uriFor)
+    val df = GraftFileIndex.scanFiles(spark, snap.dir, data, schema, uriFor)
       .select(col("*"),
         // file name is unique within a table, so `data/<name>` equals the
         // manifest-relative path the delete files carry.
@@ -209,12 +206,11 @@ object Mor {
       .groupBy(e => TableIO.equalityColumns(spark, snap, e, uriFor))
       .toSeq.sortBy(_._1.mkString(","))
       .map { case (keys, files) =>
-        val schema = StructType(keys.map(k =>
-          snap.schema(k).copy(nullable = true, metadata = Metadata.empty)))
         // shuffle_hash: the delete side is much smaller than the data
         // side but can exceed the broadcast threshold; hashing it avoids
         // the sort-merge path's full sort of the data side.
-        DeleteGroup(readDeletes(spark, snap.dir, files, schema, uriFor)
+        DeleteGroup(readDeletes(spark, snap.dir, files, snap.keySchema(keys),
+            uriFor)
           .hint("shuffle_hash"), keys)
       }
     posGroup ++ eqGroups
@@ -581,8 +577,7 @@ object Mor {
         val inserts =
           if (addedData.isEmpty) None
           else Some {
-            val raw = GraftFileIndex.scanFiles(spark, dir, addedData,
-              Bridge.asNullable(schema))
+            val raw = GraftFileIndex.scanFiles(spark, dir, addedData, schema)
             val withId = if (!withLineage) raw else {
               val frids = addedData
                 .map(e => (e.path.split('/').last, e.firstRowId.getOrElse(-1L)))
@@ -608,9 +603,8 @@ object Mor {
             // prior view.
             val named =
               if (groups.exists(!_.positional)) None
-              else posDeleteTargets(spark, dir,
-                added.filter(_.content == "pos_delete"),
-                prev.filter(_.content == "data").map(_.path))
+              else Some(added.filter(_.content == "pos_delete")
+                .flatMap(TableIO.referencedFiles(spark, prevSnap, _)).toSet)
             val targetPaths =
               if (dropped.isEmpty) named
               else Some(named.fold(keptPrevData)(_.intersect(keptPrevData)))
@@ -647,38 +641,6 @@ object Mor {
     } else parts.reduce(_ union _)
   }
 
-  /** The data paths among `candidates` that position-delete files can
-    * name, from the min/max statistics of each row group's `file_path`
-    * column — footers read on the driver, no Spark job. A superset of
-    * the named files (every candidate inside some row group's range);
-    * None when a row group lacks the statistics.
-    */
-  private def posDeleteTargets(spark: SparkSession, dir: java.nio.file.Path,
-      pos: Seq[ManifestEntry], candidates: Seq[String]): Option[Set[String]] = {
-    import scala.jdk.CollectionConverters._
-    val ranges = pos.flatMap { e =>
-      TableIO.footer(spark, dir.resolve(e.path).toString).getBlocks.asScala.map { b =>
-        b.getColumns.asScala.find(_.getPath.toDotString == "file_path")
-          .map(_.getStatistics)
-          .collect { case st if st != null && !st.isEmpty =>
-            if (!st.hasNonNullValue) None // an all-null group names nothing
-            else Some((st.genericGetMin.asInstanceOf[Binary].getBytes,
-              st.genericGetMax.asInstanceOf[Binary].getBytes))
-          }
-      }
-    }
-    if (ranges.exists(_.isEmpty)) None
-    else {
-      val bounds = ranges.flatten.flatten
-      def cmp(a: Array[Byte], b: Array[Byte]) =
-        java.util.Arrays.compareUnsigned(a, b)
-      Some(candidates.filter { p =>
-        val b = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        bounds.exists { case (lo, hi) => cmp(lo, b) <= 0 && cmp(b, hi) <= 0 }
-      }.toSet)
-    }
-  }
-
   /** Read the table at a named ref (branch or tag) — `VERSION AS OF
     * 'ref'` / Iceberg branch reads. The ref resolves to a snapshot
     * version; the fully gated read path then applies as usual.
@@ -703,6 +665,6 @@ object Mor {
     if (added.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema)
-    } else GraftFileIndex.scanFiles(spark, dir, added, Bridge.asNullable(schema))
+    } else GraftFileIndex.scanFiles(spark, dir, added, schema)
   }
 }

@@ -3,7 +3,7 @@ package graft.plans
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{Metadata, StructType}
 
 /** One entry of a snapshot manifest — the Spark-side analogue of the
   * Iceberg `DataFile` metadata the reference's writers return on `close()`
@@ -34,7 +34,12 @@ final case class ManifestEntry(
     // file's rows match on, in the file's column order. Empty on every
     // other content type and on eq-delete entries written before the
     // field existed (see [[TableIO.equalityColumns]]).
-    equalityIds: Seq[Long] = Nil
+    equalityIds: Seq[Long] = Nil,
+    // Iceberg `referenced_data_file`, as a list: the data files a
+    // position-delete file's rows name, sorted. Empty on every other
+    // content type and on position-delete entries written before the
+    // field existed (see [[TableIO.referencedFiles]]).
+    referencedFiles: Seq[String] = Nil
 ) {
   /** Can this file contain rows with `column` in [qlo, qhi]? */
   def mayContain(column: String, qlo: Long, qhi: Long): Boolean =
@@ -114,6 +119,14 @@ final case class Snapshot(dir: Path, version: Long,
 
   /** The sequence number a commit planned on this snapshot takes. */
   def nextSeq: Long = entries.map(_.seq).maxOption.getOrElse(0L) + 1L
+
+  /** The read schema of equality-delete files keyed on `keys`: the
+    * table's fields without their field ids, since delete files carry
+    * none and resolve by name. A widened column reads its narrower
+    * delete files as the table's type.
+    */
+  def keySchema(keys: Seq[String]): StructType = StructType(keys.map(k =>
+    schema(k).copy(metadata = Metadata.empty)))
 }
 
 /** Filesystem-backed emulation of the reference's catalog + commit
@@ -417,8 +430,52 @@ object TableIO {
       .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
   }
 
+  /** The data files a position-delete entry's rows name: its recorded
+    * `referencedFiles`, or, for an entry written before the field
+    * existed, the distinct `file_path` values of the file itself, read
+    * on the driver: no Spark job either way.
+    */
+  def referencedFiles(spark: SparkSession, snap: Snapshot,
+      e: ManifestEntry): Seq[String] =
+    if (e.referencedFiles.nonEmpty || e.recordCount == 0) e.referencedFiles
+    else filePathsOf(spark, snap.dir.resolve(e.path).toString)
+
+  /** The sorted distinct non-null `file_path` values of a position-delete
+    * file, decoded on the driver one row group at a time. */
+  private def filePathsOf(spark: SparkSession, file: String): Seq[String] = {
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.schema.MessageType
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+    try {
+      val meta = reader.getFooter.getFileMetaData
+      val proj = new MessageType(meta.getSchema.getName,
+        meta.getSchema.getType(meta.getSchema.getFieldIndex("file_path")))
+      val column = proj.getColumns.get(0)
+      reader.setRequestedSchema(proj)
+      val paths = scala.collection.mutable.Set.empty[String]
+      var rowGroup = reader.readNextRowGroup()
+      while (rowGroup != null) {
+        val values = new ColumnReadStoreImpl(rowGroup,
+          new GroupRecordConverter(proj).getRootConverter, proj,
+          meta.getCreatedBy).getColumnReader(column)
+        var i = 0L
+        while (i < values.getTotalValueCount) {
+          if (values.getCurrentDefinitionLevel == column.getMaxDefinitionLevel)
+            paths += values.getBinary.toStringUsingUTF8
+          values.consume()
+          i += 1
+        }
+        rowGroup = reader.readNextRowGroup()
+      }
+      paths.toSeq.sorted
+    } finally reader.close()
+  }
+
   /** A parquet file's footer, read on the driver — no Spark job. */
-  private[plans] def footer(spark: SparkSession,
+  private def footer(spark: SparkSession,
       file: String): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
     val conf = spark.sparkContext.hadoopConfiguration
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -798,8 +855,11 @@ object TableIO {
       Files.move(part, target, StandardCopyOption.REPLACE_EXISTING)
       val n = if (recordCount >= 0) recordCount
         else footerRowCount(spark, target.toString)
+      val referenced =
+        if (content == "pos_delete") filePathsOf(spark, target.toString)
+        else Nil
       ManifestEntry(relPath, content, seq, n, bounds, blooms,
-        equalityIds = equalityIds)
+        equalityIds = equalityIds, referencedFiles = referenced)
     } finally deleteRecursively(tmp)
   }
 
@@ -981,7 +1041,10 @@ object TableIO {
       s""""seq":${e.seq},"record_count":${e.recordCount}""" +
       e.firstRowId.map(r => s""","first_row_id":$r""").getOrElse("") +
       (if (e.equalityIds.isEmpty) ""
-       else e.equalityIds.mkString(""","equality_ids":[""", ",", "]"))
+       else e.equalityIds.mkString(""","equality_ids":[""", ",", "]")) +
+      (if (e.referencedFiles.isEmpty) ""
+       else e.referencedFiles.map(p => s""""$p"""")
+         .mkString(""","referenced_data_files":[""", ",", "]"))
     val b = if (e.bounds.isEmpty) "" else
       e.bounds.toSeq.sortBy(_._1).map { case (c, (lo, hi)) =>
         s""""$c":[$lo,$hi]"""
@@ -994,12 +1057,13 @@ object TableIO {
   }
 
   private val entryRe =
-    """\{"path":"([^"]*)","content":"([^"]*)","seq":(\d+),"record_count":(\d+)(?:,"first_row_id":(\d+))?(?:,"equality_ids":\[([\d,]*)\])?(?:,"bounds":\{([^}]*)\})?(?:,"blooms":\{([^}]*)\})?\}""".r
+    """\{"path":"([^"]*)","content":"([^"]*)","seq":(\d+),"record_count":(\d+)(?:,"first_row_id":(\d+))?(?:,"equality_ids":\[([\d,]*)\])?(?:,"referenced_data_files":\[([^\]]*)\])?(?:,"bounds":\{([^}]*)\})?(?:,"blooms":\{([^}]*)\})?\}""".r
   private val boundRe = """"([^"]+)":\[(-?\d+),(-?\d+)\]""".r
+  private val quotedRe = """"([^"]*)"""".r
   private val bloomRe = """"([^"]+)":"([^"]*)"""".r
 
   private[plans] def entryFromJson(line: String): ManifestEntry = line.trim match {
-    case entryRe(p, c, s, n, frid, eqIds, b, bl) =>
+    case entryRe(p, c, s, n, frid, eqIds, refs, b, bl) =>
       val bounds = Option(b).map { body =>
         boundRe.findAllMatchIn(body).map { m =>
           m.group(1) -> (m.group(2).toLong, m.group(3).toLong)
@@ -1012,7 +1076,8 @@ object TableIO {
       }.getOrElse(Map.empty[String, Vector[Long]])
       ManifestEntry(p, c, s.toLong, n.toLong, bounds, blooms,
         Option(frid).map(_.toLong),
-        Option(eqIds).filter(_.nonEmpty).toSeq.flatMap(_.split(',').map(_.toLong)))
+        Option(eqIds).filter(_.nonEmpty).toSeq.flatMap(_.split(',').map(_.toLong)),
+        Option(refs).toSeq.flatMap(quotedRe.findAllMatchIn(_).map(_.group(1))))
     case other => throw new IllegalArgumentException(s"bad manifest line: $other")
   }
 

@@ -207,6 +207,44 @@ class CommitProtocolSpec extends AnyFunSuite {
       s"($conflicts deleteWhere conflicts)")
     assert(Mor.read(spark, root, "ns", "t").filter(col("bar") >= 10000)
       .count() == appended.size * 10L)
+    // a call that lost its CAS leaves no delete file behind
+    val named = (0L to TableIO.currentVersion(root, "ns", "t"))
+      .flatMap(TableIO.readManifestAt(root, "ns", "t", _)).map(_.path).toSet
+    val dir = TableIO.tableDir(root, "ns", "t")
+    val orphans = Files.list(dir.resolve("deletes")).toArray.toSeq
+      .map(p => dir.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+      .filterNot(named)
+    assert(orphans.isEmpty, s"unreferenced delete files: $orphans")
+  }
+
+  test("a zero-match deleteWhere after a rollback keeps the rolled-back " +
+      "version readable") {
+    // After a rollback the next deleteWhere plans the sequence number of
+    // the commit rolled back; its delete file must not take that commit's
+    // file name, or writing and dropping it would break time travel.
+    import org.apache.spark.sql.functions._
+    val root = newTable()
+    // even bar values only: [5, 5] lies inside the file's bounds and
+    // matches nothing
+    val df = spark.range(0, 50).select(
+      col("id").cast("string").as("foo"), (col("id") * 2).cast("int").as("bar"))
+    TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
+      "ns", "t", "data/base.parquet", df, "data", 1L, recordCount = 50,
+      bounds = Map("bar" -> (0L, 98L)))))
+    val v0 = TableIO.currentVersion(root, "ns", "t")
+    val v1 = Dml.deleteWhere(spark, root, "ns", "t", "bar", 10, 14)
+    assert(v1 == v0 + 1)
+    def bars(d: org.apache.spark.sql.DataFrame): Seq[Int] =
+      d.select("bar").collect().map(_.getInt(0)).toSeq.sorted
+    val atV1 = (0 until 100 by 2).filterNot(b => b >= 10 && b <= 14)
+    assert(bars(Mor.readAt(spark, root, "ns", "t", v1)) == atV1)
+    TableIO.rollback(root, "ns", "t", v0)
+    assert(TableIO.nextSeq(root, "ns", "t") ==
+      TableIO.readManifestAt(root, "ns", "t", v1).map(_.seq).max)
+    val v3 = Dml.deleteWhere(spark, root, "ns", "t", "bar", 5, 5)
+    assert(v3 == TableIO.currentVersion(root, "ns", "t"))
+    assert(bars(Mor.readAt(spark, root, "ns", "t", v1)) == atV1)
+    assert(bars(Mor.read(spark, root, "ns", "t")) == (0 until 100 by 2))
   }
 
   test("a MOR read sees one snapshot while upserts of its key land") {

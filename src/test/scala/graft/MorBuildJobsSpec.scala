@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.plans.{Mor, Pipeline, TableIO}
@@ -171,6 +172,54 @@ class MorBuildJobsSpec extends AnyFunSuite {
     assert(rows(zeroJobs("legacy read")(Mor.read(spark, root, "ns", "t"))) == expect)
     assert(rows(zeroJobs("legacy readLineage")(
       Mor.readLineage(spark, root, "ns", "t"))) == expect)
+  }
+
+  /** The table-relative data files the scans of `df`'s plan read. */
+  private def scannedDataFiles(df: DataFrame): Set[String] =
+    df.queryExecution.optimizedPlan.collect { case l: LogicalRelation =>
+      l.relation match {
+        case r: HadoopFsRelation => r.location.inputFiles.toSeq
+        case _ => Nil
+      }
+    }.flatten.map(_.split('/').takeRight(2).mkString("/"))
+      .filter(_.startsWith("data/")).toSet
+
+  test("a position-only commit's changelog scans only the data files its " +
+    "deletes name, also for a legacy entry") {
+    val root = Files.createTempDirectory("graft-morposnamed-").toString
+    Pipeline.prepareBulkData(spark, root, GenConfig("ns", "t",
+      FileConfig(Rpf, Files0), FileConfig(0, 0), FileConfig(0, 0)))
+    val from = TableIO.currentVersion(root, "ns", "t")
+    // two files far apart in path order: a range over the named paths
+    // would span 188 files
+    val named = Seq(3, 190).map(i => f"data/part-$i%05d.parquet")
+    val posRows = spark.range(0, 4).select(
+      when(col("id") < 2, lit(named(0))).otherwise(lit(named(1))).as("file_path"),
+      (col("id") % 2 * 5).as("pos"))
+    TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
+      "ns", "t", "deletes/pos-named.parquet", posRows, "pos_delete",
+      TableIO.nextSeq(root, "ns", "t"))))
+    val v = TableIO.currentVersion(root, "ns", "t")
+    assert(TableIO.readManifest(root, "ns", "t").filter(_.content == "pos_delete")
+      .map(_.referencedFiles) == Seq(named))
+    val expect = reference(root, from).diff(reference(root, v))
+    assert(expect.size == 4)
+    def check(label: String): Unit = {
+      val changes = zeroJobs(s"$label readChanges")(
+        Mor.readChanges(spark, root, "ns", "t", from, v))
+      assert(scannedDataFiles(changes) == named.toSet, label)
+      assert(rows(changes.filter(col("_change_type") === "delete")) == expect, label)
+      assert(changes.count() == 4L, label)
+    }
+    check("recorded")
+    // the same entry as a writer predating the field would publish it
+    val mfile = TableIO.tableDir(root, "ns", "t").resolve(s"manifest/v$v.json")
+    val current = Files.readString(mfile)
+    val recorded = named.map(p => s"\"$p\"").mkString(",\"referenced_data_files\":[", ",", "]")
+    assert(current.contains(recorded))
+    Files.writeString(mfile, current.replace(recorded, ""))
+    assert(TableIO.readManifest(root, "ns", "t").forall(_.referencedFiles.isEmpty))
+    check("legacy")
   }
 
   test("widening an identifier column keeps its live equality deletes") {

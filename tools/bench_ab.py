@@ -15,11 +15,11 @@ prints each side's median and quartiles, how many pairs the change won
   metric's bound in BENCHMARK.json;
 - `-`: neither.
 
-A metric's direction and bound come from the change checkout's
-BENCHMARK.json. Every run's result, with the report lines printed before
-it (wall times, the calibration reference), is printed as one JSON line
-first, and a run that fails its checks is reported; `--out` also saves
-them.
+The run length (`run_seconds`) and each metric's direction and bound
+come from the change checkout's BENCHMARK.json; runs are untraced. Every
+run's result, with the report lines printed before it (wall times, the
+calibration reference), is printed as one JSON line first, and a run
+that fails its checks is reported; `--out` also saves them.
 """
 import argparse
 import json
@@ -30,10 +30,10 @@ import sys
 import time
 
 
-def run_once(checkout, workload, seed, seconds, trace):
+def run_once(checkout, workload, seed, seconds):
     cmd = [sys.executable, os.path.join(checkout, "lakebench", "run.py"),
            "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", str(trace)]
+           "--seconds", str(seconds)]
     t0 = time.time()
     r = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, text=True)
     lines = [l for l in r.stdout.splitlines() if l.strip()]
@@ -55,14 +55,15 @@ def quartiles(xs):
     return q1, q2, q3
 
 
-def spec_of(checkout):
-    path = os.path.join(checkout, "BENCHMARK.json")
-    if not os.path.isfile(path):
-        return {}
-    with open(path) as fh:
-        spec = json.load(fh)
-    return {m["name"]: m for m in spec.get("end_to_end", []) +
-            spec.get("per_layer", [])}
+def load_benchmark(checkout):
+    with open(os.path.join(checkout, "BENCHMARK.json")) as fh:
+        return json.load(fh)
+
+
+def spec_of(bench):
+    """Each metric's BENCHMARK.json entry, by name."""
+    return {m["name"]: m for m in bench.get("end_to_end", []) +
+            bench.get("per_layer", [])}
 
 
 def value(result, name):
@@ -116,17 +117,17 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=20)
-    ap.add_argument("--trace", type=int, default=0, choices=(0, 1))
     ap.add_argument("--out", help="write every run's result here as JSON")
     a = ap.parse_args()
     sides = {"parent": os.path.abspath(a.parent_dir),
              "change": os.path.abspath(a.change_dir)}
+    bench = load_benchmark(sides["change"])
     runs = {"parent": [], "change": []}
     for i in range(a.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], a.workload, a.seed, a.seconds, a.trace)
+            res = run_once(sides[side], a.workload, a.seed,
+                           bench["run_seconds"])
             runs[side].append(res)
             print(json.dumps({"pair": i + 1, "side": side, **res}), flush=True)
 
@@ -134,7 +135,7 @@ def main():
         with open(a.out, "w") as fh:
             json.dump({"workload": a.workload, "seed": a.seed, "runs": runs},
                       fh, indent=1)
-    bad = summarize(a.workload, a.seed, runs, spec_of(sides["change"]))
+    bad = summarize(a.workload, a.seed, runs, spec_of(bench))
     return 1 if bad else 0
 
 
