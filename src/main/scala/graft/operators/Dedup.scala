@@ -291,7 +291,7 @@ object Dedup {
     * embedding cap uses (one convention — `Similarity.capBuckets` —
     * one oracle shape); the key needs no hash term because a document
     * occupies exactly one bucket per band. The band mixing INSIDE the
-    * multiplication (r16 SaltProbe adoption) makes each band cap an
+    * multiplication (adopted in r16) makes each band cap an
     * independent survivor subset of a clone group, so the bands' union
     * covers up to bands× more true pairs than the r15 additive salt
     * did (measured ×2.2–×5.4) at identical bounded work; pair volume
@@ -342,7 +342,7 @@ object Dedup {
     * the bands × double the rows iff the measured re-banded candidate
     * volume is at most 1/`RebandGain` of the current shape's — i.e.
     * iff more bits per band actually shrink the buckets. The r17
-    * BandShapeProbe measurement behind the threshold: bucket depth
+    * measurement behind the threshold: bucket depth
     * driven by sign-collisions of DISTINCT items collapses ~16× under
     * re-banding (volume ratio ~0.15 on the adversarial dense
     * embedding corpora — exactly where the r16 ledger measured the
@@ -667,8 +667,7 @@ object Dedup {
     */
   /** The per-band key expressions over a signature relation — ONE copy
     * of the concat_ws layout (r18 review: the dual-shape guard had
-    * re-derived it inline, the exact hand-copy hazard the BandShapeProbe
-    * fix removed) shared by [[sigBands]] and [[sigBandVolumeDual]].
+    * re-derived it inline, a hand-copy hazard) shared by [[sigBands]] and [[sigBandVolumeDual]].
     */
   private def sigBandKeyCols(nBands: Int): Seq[Column] = {
     require(16 % nBands == 0, s"nBands must divide 16, got $nBands")

@@ -1466,7 +1466,7 @@ object PipelineOps {
     * unlabeled docs sentineled to a per-doc value so they never pair
     * — no pair enumeration, and the oracle replays it exactly.
     * Expected shape of the results (the honest text-side story the
-    * r17 BandShapeProbe measured): clone groups collide at ANY band
+    * r17 measurement found): clone groups collide at ANY band
     * width, so the re-banded 2×8 configs can only do WORSE than 4×4
     * here (half the independent cap draws) — which is exactly why
     * the shape-aware router refuses to re-band on clone-dense text.

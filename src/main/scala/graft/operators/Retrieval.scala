@@ -118,15 +118,12 @@ object Retrieval {
   def searchIndexed(spark: org.apache.spark.sql.SparkSession,
       root: String, ns: String, queryTerms: Seq[String],
       k: Int = 15, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    import graft.plans.{Mor, Partitioning}
-    // partition-pruned postings read: each query term names one bucket,
-    // and the scan opens only the UNION of those buckets' files (a
-    // disjunctive PruneIn — indexes written before bucketing took
-    // effect have no spec and read unpruned, still correct)
-    val pruneIn = Partitioning.readSpec(root, ns, "bm25_postings").toSeq
-      .map(sp => Mor.PruneIn(sp.fieldName,
-        queryTerms.map(sp.valueOfString).distinct))
-    val tf = Mor.read(spark, root, ns, "bm25_postings", pruneIn = pruneIn)
+    import graft.plans.Mor
+    // partition-pruned postings read: each query term names one bucket
+    // of the term spec, so the IN filter opens only the UNION of those
+    // buckets' files (indexes written before bucketing took effect have
+    // no spec and read unpruned, still correct)
+    val tf = Mor.read(spark, root, ns, "bm25_postings")
       .filter(col("term").isin(queryTerms: _*))
     val dl = Mor.read(spark, root, ns, "bm25_doclen")
     val consts = Mor.read(spark, root, ns, "bm25_stats")

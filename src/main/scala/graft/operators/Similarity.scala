@@ -1351,7 +1351,7 @@ object Similarity {
     * found the then-ADDITIVE salt kept the SAME survivors in every
     * band for a clone group (identical vectors → identical buckets in
     * all bands), wasting the bands' union coverage; the r16 A/B
-    * (tools/SaltProbe) measured the multiplicative mix — each band
+    * measured the multiplicative mix — each band
     * capping an independent survivor subset — at ×2.2–×5.4 the pair
     * recall at identical bounded work, and it was adopted. Deep
     * buckets still lose recall ~(bands·cap²/depth²)
@@ -1441,8 +1441,7 @@ object Similarity {
     *   mod 2^32.
     * Mixing band/key INSIDE the multiplication gives every (band, key)
     * bucket an independent id permutation — adopted in r16 after the
-    * measured A/B (tools/SaltProbe, dense clone corpora at depths
-    * 30/125): the previous ADDITIVE salt (id·A + band·c + keyTerm)
+    * measured A/B (dense clone corpora at depths 30/125): the previous ADDITIVE salt (id·A + band·c + keyTerm)
     * only shifted one global permutation, so a clone group kept the
     * SAME cap survivors in every band and union pair coverage stayed
     * ~cap² however many bands ran; rotating the survivor subset per
@@ -1572,8 +1571,8 @@ object Similarity {
     * [[recallEvalCapped]] shows a fixed cap on deep buckets loses
     * pair recall (post-r16-salt: cap 8 keeps 0.56 of the default
     * 10-copy dense corpus's near-dup pairs, and the loss steepens
-    * ~bands·cap²/depth² as buckets deepen — 0.0055 at 125-deep in the
-    * SaltProbe regime). The production response is NOT a bigger cap
+    * ~bands·cap²/depth² as buckets deepen — 0.0055 at 125-deep). The
+    * production response is NOT a bigger cap
     * (work grows cap²) but RE-BANDING: more sign bits per band shrink
     * buckets geometrically (r 4→8 divides expected occupancy by 16),
     * bringing depth back under the cap — exactly the
@@ -1624,7 +1623,7 @@ object Similarity {
     * corpus (r17, VERDICT r16 item 1's ledger row): the routed entry
     * point `Dedup.embeddingCosineAuto` run on a corpus dense enough
     * to take the capped branch (30 clones of every 10th base vector —
-    * the BandShapeProbe-measured regime where the 16×4 guard ratio is
+    * the r17-measured regime where the 16×4 guard ratio is
     * ~15× the exact-route bound and re-banding shrinks candidate
     * volume ~6.5×), next to both fixed capped shapes. Ground truth is
     * the EXACT 16×4 BANDED near-dup pair set (every config's pairs
@@ -1672,12 +1671,9 @@ object Similarity {
 
   /** Narrow (vec_id, band, key) sign-LSH band rows — the shared
     * candidate-generation primitive for [[knnJoin]] and the guard
-    * below. `private[graft]`: tools/BandShapeProbe calibrates the
-    * shape-router thresholds against THIS banding (r17 advice: a
-    * probe-local copy of the key layout could silently calibrate
-    * against stale code, exactly like the text side's sigBands).
+    * below.
     */
-  private[graft] def bandKeys(emb: DataFrame, bands: Int, r: Int): DataFrame =
+  private def bandKeys(emb: DataFrame, bands: Int, r: Int): DataFrame =
     emb.select(col("vec_id"),
       posexplode(array(bandKeyCols(bands, r): _*)).as(Seq("band", "key")))
 

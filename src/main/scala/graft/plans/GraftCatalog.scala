@@ -560,14 +560,14 @@ private[plans] class GraftScanBuilder(root: String, ns: String, t: String,
         override def schema: StructType = req
         override def buildScan(): RDD[Row] = {
           val spark = context.sparkSession
-          val base: DataFrame = atVersion match {
-            case Some(v) => Mor.readAt(spark, root, ns, t, v)
-            case None =>
-              val hasDeletes = TableIO.readManifest(root, ns, t)
-                .exists(_.content != "data")
-              if (hasDeletes) Mor.read(spark, root, ns, t)
-              else GraftFileIndex.scan(spark, root, ns, t)
-          }
+          // one snapshot decides the read path and feeds the read, so a
+          // first delete commit landing in between is never read past
+          val snap = TableIO.snapshot(root, ns, t, atVersion)
+          val base: DataFrame =
+            if (atVersion.isDefined || snap.entries.exists(_.content != "data"))
+              Mor.readSnapshot(spark, snap)
+            else GraftFileIndex.scanFiles(spark, snap.dir, snap.files("data"),
+              snap.schema)
           val filtered = preds.foldLeft(base)(_.filter(_))
           filtered.select(req.fieldNames.toIndexedSeq.map(col): _*).rdd
         }

@@ -1,5 +1,8 @@
 package graft.plans
 
+import java.io.FileNotFoundException
+import java.nio.file.{Files, NoSuchFileException}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -7,24 +10,25 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType, TimestampType}
+import graft.functions.PolyHash
 
 /** A manifest-backed Spark `FileIndex`: the scan's file listing comes
-  * from the table's committed manifest, and `listFiles` evaluates the
+  * from the table's committed manifest, and `listFiles` checks the
   * DATA FILTERS Catalyst pushes down against each file's recorded
-  * column bounds — so ordinary `df.filter(...)` predicates skip files
-  * with no manual prune API, exactly how Iceberg's Spark integration
-  * surfaces its metadata to the planner. The mechanism composes with
-  * everything that records bounds: clustered writes, z-order rewrites,
-  * hidden partition values, streamed appends.
-  *
-  * At 100 TB this moves pruning from "the caller remembered to pass a
-  * Prune" to "every query plans against the metadata" — the difference
-  * between an optimization and an architecture.
+  * metadata — column bounds, blooms and bucket partition values — so
+  * ordinary `df.filter(...)` predicates skip files, exactly how
+  * Iceberg's Spark integration surfaces its metadata to the planner.
+  * This is the engine's one file pruner: every MOR read, SQL scan and
+  * index lookup plans its skipping here. It composes with everything
+  * that records metadata: clustered writes, z-order rewrites, hidden
+  * partition values, streamed appends.
   *
   * `uriFor` maps each file's absolute path to the URI the scan opens
   * (identity for local storage; see [[Mor.read]] for the REST byte
-  * transport). Sizes and times come from the local file either way.
+  * transport). Sizes and times come from the local file either way; a
+  * manifest entry whose file is missing fails the read with a
+  * `FileNotFoundException` instead of reading as an empty file.
   */
 final class GraftFileIndex(
     spark: SparkSession,
@@ -35,124 +39,143 @@ final class GraftFileIndex(
 
   private val statuses: Seq[(ManifestEntry, FileStatus)] = entries.map { e =>
     val p = tableDir.resolve(e.path)
-    val f = p.toFile
+    val attrs = try Files.readAttributes(p, classOf[BasicFileAttributes])
+    catch {
+      case _: NoSuchFileException => throw new FileNotFoundException(
+        s"${e.path} is in the manifest of $tableDir but missing")
+    }
     val uri = uriFor(p.toString)
-    e -> new FileStatus(f.length(), false, 1, 128L << 20, f.lastModified(),
+    e -> new FileStatus(attrs.size, false, 1, 128L << 20,
+      attrs.lastModifiedTime.toMillis,
       if (uri == p.toString) new Path(p.toUri) else new Path(uri))
   }
+
+  /** The bucket specs of the table's spec history, read on the first
+    * listing that filters a bucket source column.
+    */
+  private lazy val bucketSpecs: Seq[PartitionSpec] =
+    Partitioning.readSpecs(tableDir).filter(_.transform == "bucket")
 
   override def rootPaths: Seq[Path] =
     Seq(new Path(tableDir.toUri))
 
-  /** Closed-interval [lo, hi] constraints implied by one pushed
-    * conjunct, on long-valued literals; unsupported shapes constrain
-    * nothing (pruning must stay a superset).
+  /** The checks one pushed conjunct implies: a file can hold a matching
+    * row only if it passes every one. Any shape not handled here implies
+    * nothing, so the kept files stay a superset of the matching ones.
     */
-  private def constraintsOf(e: Expression): Seq[(String, Long, Long)] = {
-    def lit(x: Expression): Option[Long] = x match {
-      case Literal(v: Int, _) => Some(v.toLong)
-      case Literal(v: Long, _) => Some(v)
-      case Literal(v: Short, _) => Some(v.toLong)
-      case _ => None
+  private def checks(e: Expression): Seq[ManifestEntry => Boolean] = e match {
+    case And(l, r) => checks(l) ++ checks(r)
+    case EqualTo(x, v: Literal) => anyPoint(x, Seq(v))
+    case EqualTo(v: Literal, x) => anyPoint(x, Seq(v))
+    case In(x, vs) if vs.forall(_.isInstanceOf[Literal]) =>
+      anyPoint(x, vs.map(_.asInstanceOf[Literal]))
+    case InSet(x, vs) => anyPoint(x, vs.toSeq.map(Literal(_, x.dataType)))
+    case GreaterThan(x, v: Literal) => range(x, v)(w => (up(w), Long.MaxValue))
+    case LessThan(v: Literal, x) => range(x, v)(w => (up(w), Long.MaxValue))
+    case GreaterThanOrEqual(x, v: Literal) => range(x, v)(w => (w, Long.MaxValue))
+    case LessThanOrEqual(v: Literal, x) => range(x, v)(w => (w, Long.MaxValue))
+    case LessThan(x, v: Literal) => range(x, v)(w => (Long.MinValue, down(w)))
+    case GreaterThan(v: Literal, x) => range(x, v)(w => (Long.MinValue, down(w)))
+    case LessThanOrEqual(x, v: Literal) => range(x, v)(w => (Long.MinValue, w))
+    case GreaterThanOrEqual(v: Literal, x) => range(x, v)(w => (Long.MinValue, w))
+    case _ => Nil
+  }
+
+  private def up(v: Long): Long = if (v == Long.MaxValue) v else v + 1
+  private def down(v: Long): Long = if (v == Long.MinValue) v else v - 1
+
+  /** `x op v` as a bounds check, where `interval` maps the literal's
+    * value to the closed interval the comparison admits, in the
+    * literal's units.
+    */
+  private def range(x: Expression, v: Literal)(
+      interval: Long => (Long, Long)): Seq[ManifestEntry => Boolean] =
+    bounded(x, v).toSeq.map { case (column, w, unit) =>
+      val (lo, hi) = interval(w)
+      val (blo, bhi) = (Math.floorDiv(lo, unit), Math.floorDiv(hi, unit))
+      (f: ManifestEntry) => f.mayContain(column, blo, bhi)
     }
-    def attr(x: Expression): Option[String] = x match {
-      case a: AttributeReference => Some(a.name)
-      case Cast(a: AttributeReference, _, _, _) => Some(a.name)
-      case _ => None
-    }
-    e match {
-      case And(l, r) => constraintsOf(l) ++ constraintsOf(r)
-      case EqualTo(a, v) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get, lit(v).get))
-      case EqualTo(v, a) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get, lit(v).get))
-      case GreaterThanOrEqual(a, v) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get, Long.MaxValue))
-      case GreaterThan(a, v) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get + 1, Long.MaxValue))
-      case LessThanOrEqual(a, v) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, Long.MinValue, lit(v).get))
-      case LessThan(a, v) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, Long.MinValue, lit(v).get - 1))
-      // literal-on-left comparisons, mirrored
-      case GreaterThanOrEqual(v, a) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, Long.MinValue, lit(v).get))
-      case GreaterThan(v, a) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, Long.MinValue, lit(v).get - 1))
-      case LessThanOrEqual(v, a) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get, Long.MaxValue))
-      case LessThan(v, a) if attr(a).isDefined && lit(v).isDefined =>
-        Seq((attr(a).get, lit(v).get + 1, Long.MaxValue))
+
+  /** `x` equals one of `vs`: a file is kept when one value passes all
+    * of its point checks. When some value has no check the disjunction
+    * can prune nothing.
+    */
+  private def anyPoint(x: Expression,
+      vs: Seq[Literal]): Seq[ManifestEntry => Boolean] = {
+    val perValue = vs.filter(_.value != null).map(pointChecks(x, _))
+    if (perValue.exists(_.isEmpty)) Nil
+    else Seq(f => perValue.exists(_.forall(_(f))))
+  }
+
+  /** The checks `x = v` implies: the bounds check, the bloom probe of a
+    * bare column, and the bucket of a bucket spec's source column or of
+    * the bucket transform itself.
+    */
+  private def pointChecks(x: Expression,
+      v: Literal): Seq[ManifestEntry => Boolean] = {
+    val bounds = range(x, v)(w => (w, w))
+    val bloomAndBucket = (x, v.value) match {
+      case (a: AttributeReference, w) if v.dataType == a.dataType &&
+          (a.dataType == StringType || integral(a.dataType)) =>
+        val key = w.toString
+        val buckets = bucketSpecs.filter(_.column == a.name).map { s =>
+          val b = if (a.dataType == StringType) s.valueOfString(key)
+            else s.valueOf(key.toLong)
+          (f: ManifestEntry) => f.mayContain(s.fieldName, b, b)
+        }
+        ((f: ManifestEntry) => f.mayContainEq(a.name, key)) +: buckets
+      case (Pmod(PolyHash(BucketSource(c)), Literal(n: Number, nt), _), w: Number)
+          if integral(nt) && integral(v.dataType) =>
+        val field = PartitionSpec("bucket", c, n.intValue).fieldName
+        Seq((f: ManifestEntry) => f.mayContain(field, w.longValue, w.longValue))
       case _ => Nil
+    }
+    bounds ++ bloomAndBucket
+  }
+
+  /** The source column inside a bucket transform `polyHash(cast(c as
+    * string))`, for an integral or string column (the cast is gone
+    * once the optimizer sees a string column).
+    */
+  private object BucketSource {
+    def unapply(e: Expression): Option[String] = e match {
+      case a: AttributeReference if a.dataType == StringType => Some(a.name)
+      case Cast(a: AttributeReference, StringType, _, _)
+          if integral(a.dataType) => Some(a.name)
+      case _ => None
     }
   }
 
-  /** Point-equality constraints usable by per-file BLOOM probes —
-    * string or integral literals, matched against the bloom's string
-    * encoding (bloomsOf hashes `CAST(col AS STRING)`). Bounds can't
-    * help an equality on a scattered high-cardinality column; blooms
-    * exist exactly for that case.
+  /** The bounds column `x` ranges over, the literal's value, and the
+    * divisor from the literal's units to the bounds' (bounds hold
+    * `cast(c as long)`, so a timestamp's micros become epoch seconds).
+    * An integral literal needs an integral column or a widening
+    * integral cast of one; a timestamp literal needs a bare timestamp
+    * column.
     */
-  private def eqConstraintsOf(e: Expression): Seq[(String, String)] = {
-    def strLit(x: Expression): Option[String] = x match {
-      case Literal(v: org.apache.spark.unsafe.types.UTF8String, _) =>
-        Some(v.toString)
-      case Literal(v: Int, _) => Some(v.toString)
-      case Literal(v: Long, _) => Some(v.toString)
+  private def bounded(x: Expression, v: Literal): Option[(String, Long, Long)] =
+    (x, v.value) match {
+      case (a: AttributeReference, w: Number)
+          if integral(a.dataType) && integral(v.dataType) =>
+        Some((a.name, w.longValue, 1L))
+      case (Cast(a: AttributeReference, to, _, _), w: Number)
+          if widens(a.dataType, to) && integral(v.dataType) =>
+        Some((a.name, w.longValue, 1L))
+      case (a: AttributeReference, w: java.lang.Long)
+          if a.dataType == TimestampType && v.dataType == TimestampType =>
+        Some((a.name, w.longValue, 1000000L))
       case _ => None
     }
-    def attr(x: Expression): Option[String] = x match {
-      case a: AttributeReference => Some(a.name)
-      case Cast(a: AttributeReference, _, _, _) => Some(a.name)
-      case _ => None
-    }
-    e match {
-      case And(l, r) => eqConstraintsOf(l) ++ eqConstraintsOf(r)
-      case EqualTo(a, v) if attr(a).isDefined && strLit(v).isDefined =>
-        Seq((attr(a).get, strLit(v).get))
-      case EqualTo(v, a) if attr(a).isDefined && strLit(v).isDefined =>
-        Seq((attr(a).get, strLit(v).get))
-      case _ => Nil
-    }
-  }
 
-  /** IN-list constraints (numeric In and its optimized InSet form): a
-    * file survives when ANY listed value intersects its bounds — the
-    * disjunction-of-points analog of the single-range check, and the
-    * shape `WHERE k IN (...)` point-lookup batches take at scale.
-    */
-  private def inConstraintsOf(e: Expression): Seq[(String, Seq[Long])] = {
-    def num(v: Any): Option[Long] = v match {
-      case i: Int => Some(i.toLong)
-      case l: Long => Some(l)
-      case s: Short => Some(s.toLong)
-      case _ => None
-    }
-    e match {
-      case And(l, r) => inConstraintsOf(l) ++ inConstraintsOf(r)
-      case In(a: AttributeReference, vs) if vs.nonEmpty &&
-          vs.forall { case Literal(v, _) => num(v).isDefined; case _ => false } =>
-        Seq((a.name, vs.map { case Literal(v, _) => num(v).get }))
-      case InSet(a: AttributeReference, hset) if hset.nonEmpty &&
-          hset.forall(num(_).isDefined) =>
-        Seq((a.name, hset.toSeq.flatMap(num)))
-      case _ => Nil
-    }
-  }
+  private val Integral = Seq(ByteType, ShortType, IntegerType, LongType)
+  private def integral(t: DataType): Boolean = Integral.contains(t)
+  private def widens(from: DataType, to: DataType): Boolean =
+    integral(from) && Integral.indexOf(to) >= Integral.indexOf(from)
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val cs = dataFilters.flatMap(constraintsOf)
-    val eqs = dataFilters.flatMap(eqConstraintsOf)
-    val ins = dataFilters.flatMap(inConstraintsOf)
-    val kept = statuses.collect {
-      case (e, st)
-          if cs.forall { case (c, lo, hi) => e.mayContain(c, lo, hi) } &&
-            eqs.forall { case (c, v) => e.mayContainEq(c, v) } &&
-            ins.forall { case (c, vs) =>
-              vs.exists(v => e.mayContain(c, v, v)) } =>
-        st
-    }
+    val cs = dataFilters.flatMap(checks)
+    val kept = statuses.collect { case (e, st) if cs.forall(_(e)) => st }
     Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
   }
 

@@ -24,7 +24,7 @@ object Maintenance {
   /** `clusterBy` additionally clusters the rewrite on long-typed
     * columns (Iceberg sort-order / z-order rewrite): each output file
     * holds a tight range of the cluster key, recorded as manifest bounds
-    * per column — so a later `Mor.Prune` scan skips every file outside
+    * per column — so a later range filter skips every file outside
     * the queried range. Clustering is WHY bounds prune well: after an
     * unordered write each file's [min,max] spans the whole domain and
     * nothing can be skipped.

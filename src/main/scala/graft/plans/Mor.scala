@@ -31,55 +31,24 @@ import graft.functions.BitmapFunctions.bitmapContains
   */
 object Mor {
 
-  /** A range predicate `column BETWEEN lo AND hi` used for manifest-level
-    * FILE SKIPPING: data files whose recorded bounds cannot intersect the
-    * range are dropped from the scan before Spark ever opens them — the
-    * Iceberg lower/upper-bounds pruning that dominates at 100 TB (the
-    * fastest file read is the one that never happens). Purely an
-    * optimization: files without bounds for the column are kept, and the
-    * caller still applies the row-level filter (bounds are
-    * file-granular).
+  /** A range predicate `column BETWEEN lo AND hi`, applied by [[read]]
+    * as the row filter `cast(column as long) BETWEEN lo AND hi`. Files
+    * are skipped by that filter like by any other: [[GraftFileIndex]]
+    * checks it against the manifest bounds before Spark opens a file.
+    * Kept for the lakebench workload's lookups; graft's own callers
+    * filter the frame [[read]] returns instead.
     */
   final case class Prune(column: String, lo: Long, hi: Long)
 
-  /** A point predicate `column = value` pruned via per-file BLOOM
-    * filters: skips files whose bloom proves the value absent. This is
-    * the pruner for high-cardinality scattered columns where [min,max]
-    * bounds span the whole domain and never skip anything (hashed ids,
-    * content fingerprints). Files without a bloom for the column are
-    * kept; the caller still applies the row filter (false positives
-    * admit a file, never a wrong row).
+  /** Data entries of `snap`, restricted to `onlyPaths` when given. A
+    * legitimately empty snapshot (post-TRUNCATE) reads as empty; only a
+    * never-committed table is an error.
     */
-  final case class PruneEq(column: String, value: String)
-
-  /** A DISJUNCTIVE point-set predicate `column IN (values)` for
-    * bucket-partitioned reads: a file survives if its bounds may contain
-    * ANY of the values. This is how a multi-term index lookup prunes —
-    * each query term hashes to one bucket, and the scan must touch the
-    * union of those buckets (a conjunction of single-value [[Prune]]s
-    * would demand one file to hold them all and prune everything).
-    */
-  final case class PruneIn(column: String, values: Seq[Long])
-
-  /** Data entries of `snap` that survive the prune predicates (a
-    * CONJUNCTION: a file survives only if its bounds can intersect every
-    * predicate — with z-order-clustered files that skips on each
-    * dimension independently) and, when given, `onlyPaths`. A
-    * pruned-to-nothing scan or a legitimately empty snapshot
-    * (post-TRUNCATE) reads as empty; only a never-committed table is an
-    * error.
-    */
-  private def liveData(snap: Snapshot, prune: Seq[Prune] = Nil,
-      pruneEq: Seq[PruneEq] = Nil, pruneIn: Seq[PruneIn] = Nil,
+  private def liveData(snap: Snapshot,
       onlyPaths: Option[Set[String]] = None): Seq[ManifestEntry] = {
     val data = snap.files("data")
-      .filter(e => prune.forall(p => e.mayContain(p.column, p.lo, p.hi)))
-      .filter(e => pruneEq.forall(p => e.mayContainEq(p.column, p.value)))
-      .filter(e => pruneIn.forall(p =>
-        p.values.exists(v => e.mayContain(p.column, v, v))))
       .filter(e => onlyPaths.forall(_.contains(e.path)))
-    require(prune.nonEmpty || pruneEq.nonEmpty || pruneIn.nonEmpty ||
-      onlyPaths.nonEmpty || data.nonEmpty || snap.version > 0,
+    require(onlyPaths.nonEmpty || data.nonEmpty || snap.version > 0,
       s"no data files in ${snap.dir.getParent.getFileName}." +
         snap.dir.getFileName)
     data
@@ -107,15 +76,11 @@ object Mor {
     */
   def scanWithProvenance(spark: SparkSession, root: String, ns: String,
       table: String, version: Option[Long] = None,
-      prune: Seq[Prune] = Nil,
-      pruneEq: Seq[PruneEq] = Nil,
       onlyPaths: Option[Set[String]] = None,
-      pruneIn: Seq[PruneIn] = Nil,
       keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
     val snap = TableIO.snapshot(root, ns, table, version)
-    scanData(spark, snap, liveData(snap, prune, pruneEq, pruneIn, onlyPaths),
-      keepFileRowId, uriFor)
+    scanData(spark, snap, liveData(snap, onlyPaths), keepFileRowId, uriFor)
   }
 
   private def scanData(spark: SparkSession, snap: Snapshot,
@@ -248,22 +213,29 @@ object Mor {
     * Building the DataFrame reads one [[Snapshot]] (one version
     * resolution, one manifest parse, one schema read) and runs no Spark
     * job: file lists, schemas and identifier columns all come from the
-    * manifest.
+    * manifest. Filters on the returned frame skip data files through
+    * [[GraftFileIndex]]; `prune` only adds such filters.
     */
   def read(spark: SparkSession, root: String, ns: String, table: String,
       bitmapThreshold: Long = BitmapDeleteThreshold,
       asOfVersion: Option[Long] = None,
       prune: Seq[Prune] = Nil,
       keepProvenance: Boolean = false,
-      pruneEq: Seq[PruneEq] = Nil,
       onlyPaths: Option[Set[String]] = None,
-      pruneIn: Seq[PruneIn] = Nil,
       keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
     val snap = TableIO.snapshot(root, ns, table, asOfVersion)
-    view(spark, snap, liveData(snap, prune, pruneEq, pruneIn, onlyPaths),
-      bitmapThreshold, keepProvenance, keepFileRowId, uriFor)
+    prune.foldLeft(view(spark, snap, liveData(snap, onlyPaths),
+        bitmapThreshold, keepProvenance, keepFileRowId, uriFor)) { (df, p) =>
+      df.filter(col(p.column).cast("long").between(p.lo, p.hi))
+    }
   }
+
+  /** The merged view of an already-loaded snapshot, for a caller that
+    * decides something from the same snapshot before reading it.
+    */
+  private[plans] def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
+    view(spark, snap, liveData(snap))
 
   /** `snap`'s merged view over the data files `data`: the one
     * delete-application path behind [[read]], [[readAt]],
@@ -281,8 +253,7 @@ object Mor {
       .foldLeft(scan) { (df, g) =>
         // Positions are row indexes within a data file, so the manifest's
         // recordCounts bound them — the Int-wrap guard (ADVICE r1) and the
-        // broadcast-size cap are pure metadata checks, no extra job. Under
-        // file skipping only surviving files need deletion vectors.
+        // broadcast-size cap are pure metadata checks, no extra job.
         val useBitmap = g.positional && posTotal <= bitmapThreshold &&
           data.forall(e =>
             e.recordCount >= 0 && e.recordCount <= Int.MaxValue.toLong) &&

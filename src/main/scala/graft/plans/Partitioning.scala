@@ -22,13 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * bucket, uniform spread — is identical.
   *
   * The partition value is recorded in each file's manifest `bounds` under
-  * [[fieldName]] as a degenerate [v, v] range, so the existing
-  * bounds-pruning scan path ([[Mor.Prune]]) doubles as the partition
-  * pruner — one metadata mechanism for both value ranges and partitions,
-  * which is exactly how Iceberg evaluates partition predicates (partition
-  * tuples are per-file metadata consulted before any file is opened). At
-  * 100 TB this is the difference between touching 1/n-th of the corpus
-  * and all of it.
+  * [[fieldName]] as a degenerate [v, v] range, and the order-preserving
+  * transforms also record the source column's implied range. Queries
+  * filter the source column and [[GraftFileIndex]] prunes from that
+  * metadata: a range on the column checks the implied bounds, and an
+  * equality on a bucket spec's column (or on the bucket expression
+  * [[sparkValue]]) checks the bucket value. That is how Iceberg
+  * evaluates partition predicates: partition tuples are per-file
+  * metadata consulted before any file is opened. At 100 TB this is the
+  * difference between touching 1/n-th of the corpus and all of it.
   */
 final case class PartitionSpec(transform: String, column: String, param: Int = 0) {
   require(Set("identity", "truncate", "bucket", "day", "hour",
@@ -111,18 +113,6 @@ final case class PartitionSpec(transform: String, column: String, param: Int = 0
         .atZone(java.time.ZoneOffset.UTC).getYear.toLong
   }
 
-  /** The file-skipping predicate for `column BETWEEN lo AND hi`, or None
-    * when the transform cannot prune a multi-key range (hash buckets
-    * scatter adjacent keys; only point lookups prune).
-    */
-  def pruneForRange(lo: Long, hi: Long): Option[Mor.Prune] = transform match {
-    case "bucket" if lo != hi => None
-    case _ => Some(Mor.Prune(fieldName, valueOf(lo), valueOf(hi)))
-  }
-
-  /** Prune to exactly one partition value (e.g. "scan bucket k"). */
-  def pruneForValue(v: Long): Mor.Prune = Mor.Prune(fieldName, v, v)
-
   /** Bucket value of a STRING key (index terms, fingerprints): the very
     * same polyHash the executor-side [[sparkValue]] applies after its
     * cast-to-string, so string-keyed buckets prune bit-for-bit. Only
@@ -168,8 +158,12 @@ object Partitioning {
     """\{"transform":"([^"]*)","column":"([^"]*)","param":(\d+)\}""".r
 
   /** Full spec history, oldest first (the active spec is the last). */
-  def readSpecs(root: String, ns: String, table: String): Seq[PartitionSpec] = {
-    val f = TableIO.tableDir(root, ns, table).resolve("partition-spec.json")
+  def readSpecs(root: String, ns: String, table: String): Seq[PartitionSpec] =
+    readSpecs(TableIO.tableDir(root, ns, table))
+
+  /** [[readSpecs]] of the table at `dir`. */
+  def readSpecs(dir: java.nio.file.Path): Seq[PartitionSpec] = {
+    val f = dir.resolve("partition-spec.json")
     if (!Files.isRegularFile(f)) Seq.empty
     else Files.readAllLines(f).asScala.filter(_.nonEmpty).map(_.trim match {
       case specRe(t, c, p) => PartitionSpec(t, c, p.toInt)
@@ -287,8 +281,8 @@ object Partitioning {
         s"$ns.$table has no bucket spec — not a built index"))
     val touched = delta.select(spec.sparkValue(col(key)).as("b")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val cur = Mor.read(spark, root, ns, table,
-      pruneIn = Seq(Mor.PruneIn(spec.fieldName, touched.toSeq)))
+    val cur = Mor.read(spark, root, ns, table)
+      .filter(spec.sparkValue(col(spec.column)).isin(touched.toSeq: _*))
     replacePartitions(spark, root, ns, table, merge(cur), spec, touched,
       expected = TableIO.currentVersion(root, ns, table))
   }

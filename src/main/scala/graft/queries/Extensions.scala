@@ -153,7 +153,7 @@ object Extensions {
     // the RE-BANDED capped twin (r17): 2 bands x 8 rows — the shape
     // the adaptive router picks when re-banding measurably shrinks
     // the buckets (it does not on identical-clone corpora, where the
-    // router stays at 4x4 — see BandShapeProbe)
+    // router stays at 4x4)
     "dedup_minhash_rebanded" -> ((s, dir) =>
       Dedup.minhashLshCapped(rd(s, dir, "documents"), nBands = 2)),
     // ...and the density-routed text entry point: the guard aggregate
@@ -653,8 +653,7 @@ object Extensions {
         graft.plans.Partitioning.preparePartitioned(s, root, "gen_ns",
           "corpus", filtered, spec)
       }
-      graft.plans.Mor.read(s, r, "gen_ns", "corpus",
-          prune = Seq(spec.pruneForValue(2L)))
+      graft.plans.Mor.read(s, r, "gen_ns", "corpus")
         .filter(spec.sparkValue(col("doc_id")) === 2L)
         .orderBy("doc_id")
     }),
@@ -908,7 +907,7 @@ object Extensions {
   /** DuckDB twin of Dedup.pairsFromSigsCapped's bucket cap over a
     * minhash band CTE — the (doc_id, band) multiplicative Knuth
     * rank (no key term: one bucket per band per doc), cap 8. The band
-    * mixes INSIDE the multiplication (r16 SaltProbe adoption) so each
+    * mixes INSIDE the multiplication (adopted in r16) so each
     * band caps an independent survivor subset. Parameterized over the
     * source band CTE so the shape-aware oracles can cap the re-banded
     * 2×8 rows with the identical rank.
@@ -1047,8 +1046,8 @@ object Extensions {
   /** The dense-bucket-cap CTE prefix shared by the capped join and
     * capped histogram oracles: each (band, bkey) bucket keeps its 8
     * lowest members by the same MULTIPLICATIVE per-band Knuth rank the
-    * engine uses (band/key mixed inside the multiplication — r16
-    * SaltProbe adoption — so each bucket caps an independent id
+    * engine uses (band/key mixed inside the multiplication — adopted
+    * in r16 — so each bucket caps an independent id
     * permutation; vec_id pre-reduced mod 2^31 so the product cannot
     * overflow Int64; all-positive operands, so DuckDB's % == Spark's
     * pmod). One copy: the hash constants and the cap must match

@@ -42,7 +42,7 @@ object Formats {
     // events through a Hive-layout partitioned directory: the filter
     // on the partition column prunes whole directories at planning
     // time — only event_type=purchase files are ever opened
-    // (PartitioningSpec asserts the scan's inputFiles).
+    // (PartitioningSpec asserts the executed scan's file partitions).
     "src_partitioned_roundtrip" -> ((s, dir) =>
       FormatRoundtrip.hivePartitionedEvents(s, dir)
         .filter(col("event_type") === "purchase")

@@ -417,20 +417,17 @@ object Generated {
         graft.plans.Maintenance.compact(s, r, c2.namespace, c2.tableName,
           targetFileCount = 4, clusterBy = Seq("bar"))
       }
-      Mor.read(s, r, c2.namespace, c2.tableName,
-          prune = Seq(Mor.Prune("bar", 4600L, 4700L)))
+      Mor.read(s, r, c2.namespace, c2.tableName)
         .filter(col("bar").between(4600, 4700))
         .select("foo", "bar", "baz").orderBy("bar")
     }),
-    // Manifest-bounds file skipping: a bar-range MOR read prunes data
-    // files whose [min,max] cannot intersect before Spark opens them
-    // (Iceberg lower/upper-bounds pruning; FileSkipSpec asserts the
-    // scan touches 2 of the 5 files). The row-level filter still
-    // applies — bounds are file-granular.
+    // Manifest-bounds file skipping: the bar-range filter on the MOR
+    // read prunes data files whose [min,max] cannot intersect before
+    // Spark opens them (Iceberg lower/upper-bounds pruning; FileSkipSpec
+    // asserts the scan opens 2 of the 5 files).
     "gen_pruned_scan" -> ((s, dir) => {
       val r = root(s, dir)
-      Mor.read(s, r, cfg.namespace, cfg.tableName,
-          prune = Seq(Mor.Prune("bar", 3500L, 4700L)))
+      Mor.read(s, r, cfg.namespace, cfg.tableName)
         .filter(col("bar").between(3500, 4700))
         .select("foo", "bar", "baz").orderBy("bar")
     }),
@@ -505,9 +502,7 @@ object Generated {
           zorder = true)
       }
       val h0 = 473352L // 2024-01-01T00:00 in hours since epoch
-      Mor.read(s, r, "gen_ns", "ev_z",
-          prune = Seq(Mor.Prune("user_id", 100L, 160L),
-            Mor.Prune("t_hour", h0 + 8, h0 + 16)))
+      Mor.read(s, r, "gen_ns", "ev_z")
         .filter(col("user_id").between(100, 160) &&
           col("t_hour").between(h0 + 8, h0 + 16))
         .orderBy("event_id")
@@ -531,9 +526,7 @@ object Generated {
           hilbert = true)
       }
       val h0 = 473352L // 2024-01-01T00:00 in hours since epoch
-      Mor.read(s, r, "gen_ns", "ev_h",
-          prune = Seq(Mor.Prune("user_id", 100L, 160L),
-            Mor.Prune("t_hour", h0 + 8, h0 + 16)))
+      Mor.read(s, r, "gen_ns", "ev_h")
         .filter(col("user_id").between(100, 160) &&
           col("t_hour").between(h0 + 8, h0 + 16))
         .orderBy("event_id")
@@ -576,8 +569,7 @@ object Generated {
         Partitioning.preparePartitioned(s, root, c2.namespace, c2.tableName,
           df, spec)
       }
-      Mor.read(s, r, c2.namespace, c2.tableName,
-          prune = Seq(spec.pruneForValue(1L)))
+      Mor.read(s, r, c2.namespace, c2.tableName)
         .filter(spec.sparkValue(col("bar")) === 1L)
         .select("foo", "bar", "baz").orderBy("bar")
     }),
@@ -592,11 +584,11 @@ object Generated {
     }),
     // Partition evolution (Iceberg UpdatePartitionSpec): half the rows
     // written under truncate(1000, bar), the spec evolved, the other
-    // half under bucket(4, bar) — no file rewritten. Point lookups carry
-    // BOTH specs' prunes; each file is pruned by its own spec's recorded
-    // partition values (absent key = keep), so every lookup opens exactly
-    // one truncate file + one bucket file regardless of which half holds
-    // the row (PartitionEvolutionSpec asserts the 2-file scans).
+    // half under bucket(4, bar) — no file rewritten. A point lookup on
+    // bar prunes each file by its own spec's recorded partition values
+    // (absent key = keep), so every lookup opens exactly one truncate
+    // file + one bucket file regardless of which half holds the row
+    // (PartitionEvolutionSpec asserts the 2-file scans).
     "gen_partition_evolution" -> ((s, dir) => {
       val c2 = cfg.copy(tableName = "t1_pevolve")
       val spec1 = PartitionSpec("truncate", "bar", 1000)
@@ -612,10 +604,7 @@ object Generated {
           half(N / 2, N))
       }
       Seq(42L, 1234L, 2600L, 4999L).map { k =>
-        Mor.read(s, r, c2.namespace, c2.tableName,
-            prune = Seq(Mor.Prune("bar", k, k),
-              spec2.pruneForValue(spec2.valueOf(k))))
-          .filter(col("bar") === k)
+        Mor.read(s, r, c2.namespace, c2.tableName).filter(col("bar") === k)
       }.reduce(_ union _).select("foo", "bar", "baz").orderBy("bar")
     }),
     // The `files` metadata table (Iceberg `table.files`): per-file
@@ -751,8 +740,7 @@ object Generated {
         TableIO.commit(root, ns2, t2, entries)
       }
       Seq("1234", "6789").map { v =>
-        Mor.read(s, r, ns2, t2, pruneEq = Seq(Mor.PruneEq("foo", v)))
-          .filter(col("foo") === v)
+        Mor.read(s, r, ns2, t2).filter(col("foo") === v)
       }.reduce(_ union _).orderBy("bar")
     }),
     // Position-delete rewrite (Iceberg rewrite_position_delete_files):

@@ -1,9 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import graft.plans.{GraftFileIndex, Maintenance, TableIO}
 
@@ -31,30 +28,18 @@ class AutoPruneSpec extends AnyFunSuite {
     root
   }
 
-  /** numFiles of the executed plan's parquet scan. */
-  private def scannedFiles(df: DataFrame): Long = {
-    df.collect() // finalize the (adaptive) plan + metrics
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    plan.collectLeaves().collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
-    }.sum
-  }
-
   test("a pushed range filter skips files via manifest bounds") {
     val scan = GraftFileIndex.scan(spark, root, "ns", "t")
     val q = scan.filter(col("bar").between(1200, 1800)).select("foo", "bar")
-    assert(scannedFiles(q) == 1L)
+    assert(OpenedFiles.count(q) == 1L)
     assert(q.count() == 601L)
   }
 
   test("a point lookup touches one file; unfiltered scan reads all") {
     val scan = GraftFileIndex.scan(spark, root, "ns", "t")
-    assert(scannedFiles(scan.filter(col("bar") === 4242)) == 1L)
+    assert(OpenedFiles.count(scan.filter(col("bar") === 4242)) == 1L)
     assert(scan.filter(col("bar") === 4242).head().getString(0) == "4242")
-    assert(scannedFiles(scan) == 5L)
+    assert(OpenedFiles.count(scan) == 5L)
     assert(scan.count() == 5000L)
   }
 
@@ -62,20 +47,20 @@ class AutoPruneSpec extends AnyFunSuite {
     val scan = GraftFileIndex.scan(spark, root, "ns", "t")
     // 3 values in 2 distinct 1000-wide files (of 5)
     val q = scan.filter(col("bar").isin(150, 180, 3300))
-    assert(scannedFiles(q) == 2L)
+    assert(OpenedFiles.count(q) == 2L)
     assert(q.count() == 3L)
     // a larger list crosses Spark's InSet conversion threshold (10) —
     // the InSet form must prune identically
     val many = (1100 to 1150 by 5).toSeq // 11 values, all in one file
     val q2 = scan.filter(col("bar").isin(many: _*))
-    assert(scannedFiles(q2) == 1L)
+    assert(OpenedFiles.count(q2) == 1L)
     assert(q2.count() == many.size.toLong)
   }
 
   test("non-bounds predicates keep every file (superset rule)") {
     val scan = GraftFileIndex.scan(spark, root, "ns", "t")
     val q = scan.filter(col("foo") === "7") // no bounds on string col
-    assert(scannedFiles(q) == 5L)
+    assert(OpenedFiles.count(q) == 5L)
     assert(q.count() == 1L)
   }
 
@@ -83,6 +68,6 @@ class AutoPruneSpec extends AnyFunSuite {
     val scan = GraftFileIndex.scan(spark, root, "ns", "t")
     val q = scan.filter(col("bar") > 999999)
     assert(q.count() == 0L)
-    assert(scannedFiles(q) == 0L)
+    assert(OpenedFiles.count(q) == 0L)
   }
 }

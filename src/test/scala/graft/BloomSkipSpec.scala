@@ -42,21 +42,21 @@ class BloomSkipSpec extends AnyFunSuite {
       val expect = admitted(v)
       // the file actually holding the value is always admitted
       assert(expect.contains(f"data/part-${k / 1000}%05d.parquet"))
-      val df = Mor.read(spark, root, "ns", "t",
-        pruneEq = Seq(Mor.PruneEq("foo", v)))
-      val scanned = df.inputFiles.filter(_.contains("/data/")).toSeq
-      assert(scanned.length == expect.length,
-        s"k=$k scanned ${scanned.length}, bloom admits ${expect.length}")
-      assert(df.filter(col("foo") === v).count() == 1L)
+      val df = Mor.read(spark, root, "ns", "t").filter(col("foo") === v)
+      val scanned = OpenedFiles.count(df)
+      assert(scanned == expect.length,
+        s"k=$k scanned $scanned, bloom admits ${expect.length}")
+      assert(df.count() == 1L)
     }
   }
 
   test("bloom-less files are kept; out-of-domain values return empty") {
     // the bloom-less file is admitted for any value
     assert(admitted("no-such-value").contains(f"data/part-${nFiles - 1}%05d.parquet"))
-    val df = Mor.read(spark, root, "ns", "t",
-      pruneEq = Seq(Mor.PruneEq("foo", "no-such-value")))
-    assert(df.filter(col("foo") === "no-such-value").count() == 0L)
+    val df = Mor.read(spark, root, "ns", "t")
+      .filter(col("foo") === "no-such-value")
+    assert(df.count() == 0L)
+    assert(OpenedFiles.count(df) == admitted("no-such-value").length)
     // skipping is substantial: across probes, most files are pruned
     val avgAdmitted = Seq("17", "2500", "6001", "7777")
       .map(v => admitted(v).length).sum / 4.0
@@ -65,21 +65,12 @@ class BloomSkipSpec extends AnyFunSuite {
   }
 
   test("planner-integrated: ordinary filter probes blooms via GraftFileIndex") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val df = graft.plans.GraftFileIndex.scan(spark, root, "ns", "t")
       .filter(col("foo") === "4242")
-    // an ORDINARY equality filter — no PruneEq anywhere — skips files
-    // through the pushed-down predicate's bloom probe (numFiles metric;
-    // df.inputFiles bypasses listFiles and always reports every file)
+    // an ORDINARY equality filter skips files through the pushed-down
+    // predicate's bloom probe
     assert(df.collect().length == 1)
-    val plan = df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
-    val scanned = plan.collectLeaves().collect {
-      case f: FileSourceScanExec => f.metrics("numFiles").value
-    }.sum
+    val scanned = OpenedFiles.count(df)
     assert(scanned == admitted("4242").length && scanned < nFiles,
       s"scanned $scanned, bloom admits ${admitted("4242").length}")
   }

@@ -223,10 +223,12 @@ class CatalogSqlSpec extends AnyFunSuite {
     assert(row.getLong(0) == 2000L)
     assert(row.getInt(1) == 0 && row.getInt(2) == 1999)
     // a residual filter disables the pushdown — the ordinary scan runs
-    // and sees the deleted (now 0-length) files as empty, returning 0
-    // where metadata would say 1989: proof the two paths are distinct
-    assert(spark.sql("SELECT count(*) FROM g.aggp.t WHERE v > 10")
-      .head().getLong(0) == 0L)
+    // and fails on the missing files where metadata would say 1989:
+    // proof the two paths are distinct
+    val ex = intercept[Exception](
+      spark.sql("SELECT count(*) FROM g.aggp.t WHERE v > 10").head())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]), ex)
   }
 
   test("PARTITIONED BY bucket DDL routes INSERTs through the partitioned writer") {
@@ -283,17 +285,18 @@ class CatalogSqlSpec extends AnyFunSuite {
     // what matters: every row lands in a month file and reads back
     assert(files.nonEmpty && files.size <= 4)
     assert(spark.table("g.mddl.ev").count() == 150L)
-    // February 2024 prune: epoch range [Feb 1, Mar 1) opens only files
+    // February 2024 prune: the ts range [Feb 1, Mar 1) opens only files
     // whose recorded ts range intersects it
-    val feb = graft.plans.Mor.read(spark, root, "mddl", "ev",
-      prune = Seq(graft.plans.Mor.Prune("ts", 1706745600L, 1709251199L)))
-    assert(feb.inputFiles.length < files.size)
+    import org.apache.spark.sql.functions.{col => c, lit}
+    def at(sec: Long) = lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec)))
+    val feb = graft.plans.Mor.read(spark, root, "mddl", "ev")
+      .filter(c("ts").between(at(1706745600L), at(1709251199L)))
+    assert(OpenedFiles.count(feb) < files.size)
     // correctness of the pruned read vs an unpruned filter
-    import org.apache.spark.sql.functions.{col => c}
-    val expected = spark.table("g.mddl.ev")
-      .filter(c("ts").cast("long").between(1706745600L, 1709251199L)).count()
-    assert(feb.filter(c("ts").cast("long")
-      .between(1706745600L, 1709251199L)).count() == expected)
+    val expected = spark.table("g.mddl.ev").collect()
+      .count(r => r.getTimestamp(0).getTime / 1000L >= 1706745600L &&
+        r.getTimestamp(0).getTime / 1000L <= 1709251199L)
+    assert(feb.count() == expected)
   }
 
   test("days(ts) partitioning: one file per day, ts-range prunes files") {
@@ -309,11 +312,13 @@ class CatalogSqlSpec extends AnyFunSuite {
     val files = TableIO.filesOf(root, "tddl", "ev", "data")
     assert(files.size == 4, s"expected 4 day files, got ${files.size}")
     assert(spark.table("g.tddl.ev").count() == 400L)
-    // epoch-second range prune through the manifest bounds: day 2 only
-    val pruned = graft.plans.Mor.read(spark, root, "tddl", "ev",
-      prune = Seq(graft.plans.Mor.Prune("ts", 2L * 86400, 3L * 86400 - 1)))
-    assert(pruned.inputFiles.length == 1,
-      s"expected 1 file after day prune, got ${pruned.inputFiles.length}")
+    // ts-range prune through the manifest bounds: day 2 only
+    import org.apache.spark.sql.functions.{col => c, lit}
+    def at(sec: Long) = lit(java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(sec)))
+    val pruned = graft.plans.Mor.read(spark, root, "tddl", "ev")
+      .filter(c("ts").between(at(2L * 86400), at(3L * 86400 - 1)))
+    val scanned = OpenedFiles.count(pruned)
+    assert(scanned == 1, s"expected 1 file after day prune, got $scanned")
     assert(pruned.count() == 100L)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.functions.ZOrder
 import graft.plans.{Maintenance, Mor, TableIO}
@@ -29,9 +30,11 @@ class ZOrderSpec extends AnyFunSuite {
     root
   }
 
-  private def scannedData(root: String, prunes: Seq[Mor.Prune]): Int =
-    Mor.read(spark, root, "ns", "t", prune = prunes)
-      .inputFiles.count(_.contains("/data/"))
+  private val quadrant = col("x").between(0, 15) && col("y").between(0, 15)
+  private val strip = col("y").between(0, 15) // y is the SECOND sort column
+
+  private def scannedData(root: String, filter: Column): Long =
+    OpenedFiles.count(Mor.read(spark, root, "ns", "t").filter(filter))
 
   test("zvalue interleaves bits of both dimensions") {
     val got = spark.range(0, 1).select(
@@ -43,19 +46,15 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("quadrant query prunes z-ordered files on both dimensions") {
     val root = grid(zorder = true)
-    val quadrant = Seq(Mor.Prune("x", 0L, 15L), Mor.Prune("y", 0L, 15L))
     val nScanned = scannedData(root, quadrant)
     assert(nScanned <= 2, s"expected <=2 of 16 files, scanned $nScanned")
-    // correctness: pruned + row filter == the quadrant's 256 points
-    val got = Mor.read(spark, root, "ns", "t", prune = quadrant)
-      .filter(col("x") <= 15 && col("y") <= 15)
-    assert(got.count() == 256L)
+    // correctness: the pruned read holds the quadrant's 256 points
+    assert(Mor.read(spark, root, "ns", "t").filter(quadrant).count() == 256L)
   }
 
   test("non-leading-column query prunes z-order but not lex clustering") {
     val zRoot = grid(zorder = true)
     val lexRoot = grid(zorder = false)
-    val strip = Seq(Mor.Prune("y", 0L, 15L)) // y is the SECOND sort column
     val zScanned = scannedData(zRoot, strip)
     val lexScanned = scannedData(lexRoot, strip)
     // z-order: y's bounds are tight per file -> ~1/4 of files survive.
@@ -84,13 +83,9 @@ class ZOrderSpec extends AnyFunSuite {
 
   test("hilbert clustering prunes like z-order on both query shapes") {
     val hRoot = grid(zorder = false, hilbert = true)
-    val quadrant = Seq(Mor.Prune("x", 0L, 15L), Mor.Prune("y", 0L, 15L))
     val hQuad = scannedData(hRoot, quadrant)
     assert(hQuad <= 2, s"hilbert scanned $hQuad of 16 for the quadrant")
-    val got = Mor.read(spark, hRoot, "ns", "t", prune = quadrant)
-      .filter(col("x") <= 15 && col("y") <= 15)
-    assert(got.count() == 256L)
-    val strip = Seq(Mor.Prune("y", 0L, 15L))
+    assert(Mor.read(spark, hRoot, "ns", "t").filter(quadrant).count() == 256L)
     val hStrip = scannedData(hRoot, strip)
     assert(hStrip <= 8, s"hilbert scanned $hStrip of 16 for the strip")
   }
