@@ -57,12 +57,11 @@ object Dml {
             version = Some(v), onlyPaths = Some(touched.map(_.path).toSet))
           .filter(col(column).between(lo, hi))
           .select(col("_file").as("file_path"), col("_pos").as("pos"))
-          .orderBy("file_path", "pos")
-        // one pass: write the sorted file, count it from its footer, and
-        // drop it again when nothing matched. The name is this call's
-        // own: `seq` alone repeats for two calls planned at one version
-        // and after a rollback, and a file another version names must
-        // never be overwritten or dropped here.
+        // one pass: write the file (the writer sorts it), count it from
+        // its footer, and drop it again when nothing matched. The name
+        // is this call's own: `seq` alone repeats for two calls planned
+        // at one version and after a rollback, and a file another
+        // version names must never be overwritten or dropped here.
         val unique = java.util.UUID.randomUUID().toString.take(8)
         val rel = s"deletes/pos_delete-dml-s$seq-$unique.parquet"
         val e = TableIO.writeExactFile(spark, root, ns, table, rel, matches,

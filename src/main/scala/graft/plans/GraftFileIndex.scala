@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructType, TimestampType}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
 import graft.functions.PolyHash
 
 /** A manifest-backed Spark `FileIndex`: the scan's file listing comes
@@ -29,13 +29,23 @@ import graft.functions.PolyHash
   * transport). Sizes and times come from the local file either way; a
   * manifest entry whose file is missing fails the read with a
   * `FileNotFoundException` instead of reading as an empty file.
+  *
+  * `manifestColumns` surface per-file manifest values as PARTITION
+  * columns (nullable longs): each row of a file carries its entry's
+  * value, e.g. the commit sequence a merge-on-read gates deletes on, so
+  * no manifest join is needed to attach it. `listFiles` returns one
+  * `PartitionDirectory` per distinct value tuple and evaluates the
+  * partition filters against them: Spark drops those filters from the
+  * filter it applies after the scan.
   */
 final class GraftFileIndex(
     spark: SparkSession,
     tableDir: java.nio.file.Path,
     entries: Seq[ManifestEntry],
     schema: StructType,
-    uriFor: String => String = identity) extends FileIndex {
+    uriFor: String => String = identity,
+    manifestColumns: Seq[GraftFileIndex.ManifestColumn] = Nil)
+    extends FileIndex {
 
   private val statuses: Seq[(ManifestEntry, FileStatus)] = entries.map { e =>
     val p = tableDir.resolve(e.path)
@@ -172,11 +182,31 @@ final class GraftFileIndex(
   private def widens(from: DataType, to: DataType): Boolean =
     integral(from) && Integral.indexOf(to) >= Integral.indexOf(from)
 
+  /** `partitionFilters` as one predicate over a file's partition
+    * values, in [[partitionSchema]] order.
+    */
+  private def partitionPredicate(
+      partitionFilters: Seq[Expression]): InternalRow => Boolean =
+    partitionFilters.reduceOption(And).fold((_: InternalRow) => true) { p =>
+      val bound = Predicate.createInterpreted(p.transform {
+        case a: AttributeReference =>
+          val i = manifestColumns.indexWhere(_.name.equalsIgnoreCase(a.name))
+          BoundReference(i, LongType, nullable = true)
+      })
+      bound.eval(_)
+    }
+
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val cs = dataFilters.flatMap(checks)
-    val kept = statuses.collect { case (e, st) if cs.forall(_(e)) => st }
-    Seq(PartitionDirectory(InternalRow.empty, kept.toArray))
+    val admits = partitionPredicate(partitionFilters)
+    val kept = statuses.collect { case (e, st) if cs.forall(_(e)) =>
+      (manifestColumns.map(_.valueOf(e)), st) }
+    val byValues = kept.groupMap(_._1)(_._2)
+    kept.map(_._1).distinct
+      .map(v => InternalRow.fromSeq(v.map(_.map(Long.box).orNull)) -> byValues(v))
+      .collect { case (row, files) if admits(row) =>
+        PartitionDirectory(row, files.toArray) }
   }
 
   override def inputFiles: Array[String] =
@@ -186,10 +216,27 @@ final class GraftFileIndex(
 
   override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
 
-  override def partitionSchema: StructType = StructType(Nil)
+  override def partitionSchema: StructType =
+    StructType(manifestColumns.map(c => StructField(c.name, LongType)))
 }
 
 object GraftFileIndex {
+
+  /** A per-file manifest value a scan carries as the long partition
+    * column `name`; `None` reads as null.
+    */
+  final case class ManifestColumn(name: String,
+      valueOf: ManifestEntry => Option[Long])
+
+  /** Each file's commit sequence number. */
+  def seqColumn(name: String): ManifestColumn =
+    ManifestColumn(name, e => Some(e.seq))
+
+  /** Each data file's first row id (null for a file committed before
+    * row lineage existed).
+    */
+  def firstRowIdColumn(name: String): ManifestColumn =
+    ManifestColumn(name, _.firstRowId)
 
   /** A DataFrame over the table's current data files whose scan plans
     * file skipping from pushed-down filters automatically (manifest
@@ -207,21 +254,25 @@ object GraftFileIndex {
     * field nullable (as `spark.read.schema` reads a file source): the
     * file list comes from the manifest and the schema from the caller,
     * so building it runs no listing job and no schema-inference job.
-    * `_metadata.file_name`/`row_index` resolve as on any parquet scan.
-    * [[Mor.read]] builds its data and delete scans here.
+    * `_metadata.file_name`/`row_index` resolve as on any parquet scan,
+    * and each of `manifestColumns` follows the data columns as a
+    * partition column. [[Mor.read]] builds its data and delete scans
+    * here.
     */
   def scanFiles(spark: SparkSession, dir: java.nio.file.Path,
       entries: Seq[ManifestEntry], readSchema: StructType,
-      uriFor: String => String = identity): DataFrame = {
+      uriFor: String => String = identity,
+      manifestColumns: Seq[ManifestColumn] = Nil): DataFrame = {
     val schema = Bridge.asNullable(readSchema)
     // id-based column resolution (rename/drop survive; old files'
     // values surface under evolved names)
     if (schema.fields.exists(_.metadata.contains(TableIO.FieldIdKey)))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    val index = new GraftFileIndex(spark, dir, entries, schema, uriFor)
+    val index = new GraftFileIndex(spark, dir, entries, schema, uriFor,
+      manifestColumns)
     val relation = HadoopFsRelation(
       location = index,
-      partitionSchema = StructType(Nil),
+      partitionSchema = index.partitionSchema,
       dataSchema = schema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,

@@ -375,7 +375,7 @@ object Maintenance {
       val newV = v + 1
       val newEntries = seqs.map { sq =>
         val rows = live.filter(col("_dseq") === sq)
-          .select("file_path", "pos").orderBy("file_path", "pos")
+          .select("file_path", "pos")
         TableIO.writeExactFile(spark, root, ns, table,
           s"deletes/pos_rewrite-v$newV-s$sq.parquet", rows, "pos_delete", sq)
       }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.functions.BitmapFunctions.bitmapContains
 
 /** Merge-on-read scan — the read semantics the reference's output defines
@@ -16,18 +17,29 @@ import graft.functions.BitmapFunctions.bitmapContains
   *
   * Physical provenance comes from the parquet metadata columns
   * `_metadata.file_name` / `_metadata.row_index` (Spark >= 3.5), so no
-  * custom source is needed.
+  * custom source is needed. The commit sequences the gates compare ride
+  * the scans as partition values of [[GraftFileIndex]]: every data row
+  * carries its file's `_seq`, every delete row its OWN file's `_dseq`,
+  * so multi-snapshot tables gate correctly with no manifest join (r1
+  * collapsed to the max seq per content type, which could delete data
+  * committed after an older delete snapshot).
   *
-  * Positional deletes apply as per-file deletion vectors (the
-  * Iceberg/Delta DV design): bitmaps are built distributedly — one
-  * shuffle of the (small) delete side on its target file — then
-  * broadcast-joined to the scan and probed by a native codegen
-  * expression, so the 100 TB data side never shuffles and the per-row
-  * filter stays inside whole-stage codegen. Equality deletes apply as a
-  * shuffle-hash `left_anti` join. Every delete row carries its OWN
-  * file's commit sequence (`_dseq`), so multi-snapshot tables gate
-  * correctly (r1 collapsed to the max seq per content type, which could
-  * delete data committed after an older delete snapshot).
+  * Each delete group (the position deletes, and one group per
+  * equality-identifier set) picks its strategy from its manifest record
+  * counts, the way FuseME picks an operator's strategy from known input
+  * sizes:
+  *
+  *   - a group whose rows fit Spark's `autoBroadcastJoinThreshold`
+  *     (R2 or R3) applies as a broadcast `left_anti` join: one
+  *     broadcast job, and the data side never shuffles;
+  *   - a larger R2 group applies as per-file deletion vectors (the
+  *     Iceberg/Delta DV design): bitmaps are built distributedly — one
+  *     shuffle of the delete side on its target file — then
+  *     broadcast-joined to the scan and probed by a native codegen
+  *     expression, so the data side never shuffles and the per-row
+  *     filter stays inside whole-stage codegen; past the vector caps it
+  *     falls back to a shuffled `left_anti` join;
+  *   - a larger R3 group applies as a shuffle-hash `left_anti` join.
   */
 object Mor {
 
@@ -54,60 +66,67 @@ object Mor {
     data
   }
 
-  /** (basename, seq) pairs for a file list. The read path keys seq
-    * attachment and deletion vectors on `_metadata.file_name` (cheap,
-    * unlike per-row path surgery), which is only sound while basenames
-    * are unique across the snapshot's directories — a duplicate would
-    * duplicate join rows and could attach a newer file's seq to an older
-    * delete (ADVICE r2). Generators emit unique names; this guard turns
-    * a silent wrong answer into a loud error if that ever changes.
+  /** (path, basename, seq) of each file. The read path keys deletion
+    * vectors on `_metadata.file_name` and derives `_file` from it
+    * (cheap, unlike per-row path surgery), which is only sound while
+    * basenames are unique across the snapshot's directories — a
+    * duplicate would duplicate join rows and could attach a newer file's
+    * vector to an older file (ADVICE r2). Generators emit unique names;
+    * this guard turns a silent wrong answer into a loud error if that
+    * ever changes.
     */
-  private def basenameSeqs(files: Seq[ManifestEntry]): Seq[(String, Long)] = {
-    val bn = files.map(e => (e.path.split('/').last, e.seq))
-    require(bn.map(_._1).distinct.size == bn.size,
+  private def basenameSeqs(
+      files: Seq[ManifestEntry]): Seq[(String, String, Long)] = {
+    val bn = files.map(e => (e.path, e.path.split('/').last, e.seq))
+    require(bn.map(_._2).distinct.size == bn.size,
       s"duplicate file basenames across directories break _fname keying: " +
-        bn.groupBy(_._1).filter(_._2.size > 1).keys.mkString(", "))
+        bn.groupBy(_._2).filter(_._2.size > 1).keys.mkString(", "))
     bn
   }
 
   /** Data scan with provenance columns `_file` (path relative to the
     * table dir, matching manifest/pos-delete paths) and `_pos` (row index
-    * within the file) plus the file's commit sequence number.
+    * within the file) plus the file's commit sequence number `_seq`.
     */
   def scanWithProvenance(spark: SparkSession, root: String, ns: String,
       table: String, version: Option[Long] = None,
       onlyPaths: Option[Set[String]] = None,
-      keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
     val snap = TableIO.snapshot(root, ns, table, version)
-    scanData(spark, snap, liveData(snap, onlyPaths), keepFileRowId, uriFor)
+    scanData(spark, snap, liveData(snap, onlyPaths), lineage = false, uriFor)
   }
 
+  /** The data scan of `data`: table columns, then `_seq` (and for a
+    * lineage read the physical `_row_id` and `_frid`, the file's first
+    * row id), then `_file`, `_fname` and `_pos`. The manifest values
+    * ride the scan as partition values ([[GraftFileIndex]]), so
+    * attaching them costs no join.
+    */
   private def scanData(spark: SparkSession, snap: Snapshot,
-      data: Seq[ManifestEntry], keepFileRowId: Boolean,
+      data: Seq[ManifestEntry], lineage: Boolean,
       uriFor: String => String): DataFrame = {
+    basenameSeqs(data) // the guard: `_file` and `_fname` key on basenames
     // lineage reads extend the read schema with the OPTIONAL materialized
     // `_row_id` column compaction writes (Iceberg v3: a rewritten file
     // carries its rows' preserved ids physically; files without the
     // column — every normally-appended file — read it as null and
     // inherit firstRowId + position instead)
     val schema =
-      if (!keepFileRowId) snap.schema
+      if (!lineage) snap.schema
       else StructType(snap.schema.fields :+ StructField("_row_id", LongType))
+    val manifestCols = GraftFileIndex.seqColumn("_seq") +:
+      (if (lineage) Seq(GraftFileIndex.firstRowIdColumn("_frid")) else Nil)
     // `_metadata.file_name` is a direct metadata field: per-row path
     // string surgery (split/element_at over file_path) measured 100x
     // slower than the plain scan on 10M rows.
-    val df = GraftFileIndex.scanFiles(spark, snap.dir, data, schema, uriFor)
+    GraftFileIndex.scanFiles(spark, snap.dir, data, schema, uriFor,
+        manifestCols)
       .select(col("*"),
         // file name is unique within a table, so `data/<name>` equals the
         // manifest-relative path the delete files carry.
         concat(lit("data/"), col("_metadata.file_name")).as("_file"),
         col("_metadata.file_name").as("_fname"),
         col("_metadata.row_index").as("_pos"))
-    // Attach each file's sequence number (tiny manifest join, broadcast).
-    import spark.implicits._
-    val seqDf = basenameSeqs(data).toDF("_fname", "_seq")
-    df.join(broadcast(seqDf), Seq("_fname"), "left")
   }
 
   /** Position-delete file schema (Iceberg's `file_path`, `pos`). */
@@ -115,29 +134,26 @@ object Mor {
     StructField("file_path", StringType), StructField("pos", LongType)))
 
   /** Delete files read with `schema`, each row tagged with its OWN
-    * file's commit sequence as `_dseq` (via `_metadata.file_name`, same
-    * broadcast-join shape as the data side).
+    * file's commit sequence as `_dseq` (a partition value of the scan,
+    * like the data side's `_seq`).
     */
   private[plans] def readDeletes(spark: SparkSession, dir: java.nio.file.Path,
       files: Seq[ManifestEntry], schema: StructType,
-      uriFor: String => String = identity): DataFrame = {
-    import spark.implicits._
-    val seqDf = basenameSeqs(files).toDF("_dfname", "_dseq")
-    GraftFileIndex.scanFiles(spark, dir, files, schema, uriFor)
-      .withColumn("_dfname", col("_metadata.file_name"))
-      .join(broadcast(seqDf), Seq("_dfname"))
-      .drop("_dfname")
-  }
+      uriFor: String => String = identity): DataFrame =
+    GraftFileIndex.scanFiles(spark, dir, files, schema, uriFor,
+      Seq(GraftFileIndex.seqColumn("_dseq")))
 
   /** One join shape of the delete side: the delete rows (tagged `_dseq`)
-    * and the columns they match a provenance scan on.
+    * of the delete files `files`, and the columns they match a
+    * provenance scan on.
     *
     * R2: position deletes match (`_file`, `_pos`) in files committed at
     * or before the delete's sequence (Iceberg v2: data_seq <=
     * delete_seq). R3: equality deletes match their identifier columns
     * in rows with a STRICTLY lower sequence.
     */
-  private final case class DeleteGroup(rows: DataFrame, keys: Seq[String]) {
+  private final case class DeleteGroup(rows: DataFrame, keys: Seq[String],
+      files: Seq[ManifestEntry]) {
     def positional: Boolean = keys.isEmpty
     def on(df: DataFrame): Column =
       if (positional)
@@ -145,6 +161,28 @@ object Mor {
           df("_seq") <= rows("_dseq")
       else keys.map(k => df(k) === rows(k)).reduce(_ && _) &&
         df("_seq") < rows("_dseq")
+
+    /** Whether the manifest says the rows fit under `threshold` bytes
+      * (Spark's `autoBroadcastJoinThreshold`, off when not positive): the
+      * files' summed record counts times the row width, `_dseq`
+      * included. A file of unknown count is never small.
+      */
+    def small(threshold: Long): Boolean = {
+      val width = rows.schema.defaultSize
+      threshold > 0 && files.forall(_.recordCount >= 0) &&
+        BigInt(files.map(_.recordCount).sum) * width <= threshold
+    }
+
+    /** The rows as the side a join of the scan builds: broadcast when
+      * [[small]], else positional rows as they are and equality rows
+      * hinted `shuffle_hash` — the delete side is much smaller than the
+      * data side but exceeds the broadcast threshold; hashing it avoids
+      * the sort-merge path's full sort of the data side.
+      */
+    def side(threshold: Long): DataFrame =
+      if (small(threshold)) broadcast(rows)
+      else if (positional) rows
+      else rows.hint("shuffle_hash")
   }
 
   /** The delete groups of the delete files among `entries`, built from
@@ -166,17 +204,13 @@ object Mor {
     val posGroup =
       if (pos.map(_.recordCount).sum <= 0) Nil
       else Seq(DeleteGroup(
-        readDeletes(spark, snap.dir, pos, PosDeleteSchema, uriFor), Nil))
+        readDeletes(spark, snap.dir, pos, PosDeleteSchema, uriFor), Nil, pos))
     val eqGroups = entries.filter(_.content == "eq_delete")
       .groupBy(e => TableIO.equalityColumns(spark, snap, e, uriFor))
       .toSeq.sortBy(_._1.mkString(","))
       .map { case (keys, files) =>
-        // shuffle_hash: the delete side is much smaller than the data
-        // side but can exceed the broadcast threshold; hashing it avoids
-        // the sort-merge path's full sort of the data side.
         DeleteGroup(readDeletes(spark, snap.dir, files, snap.keySchema(keys),
-            uriFor)
-          .hint("shuffle_hash"), keys)
+          uriFor), keys, files)
       }
     posGroup ++ eqGroups
   }
@@ -222,11 +256,10 @@ object Mor {
       prune: Seq[Prune] = Nil,
       keepProvenance: Boolean = false,
       onlyPaths: Option[Set[String]] = None,
-      keepFileRowId: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
     val snap = TableIO.snapshot(root, ns, table, asOfVersion)
     prune.foldLeft(view(spark, snap, liveData(snap, onlyPaths),
-        bitmapThreshold, keepProvenance, keepFileRowId, uriFor)) { (df, p) =>
+        bitmapThreshold, keepProvenance, lineage = false, uriFor)) { (df, p) =>
       df.filter(col(p.column).cast("long").between(p.lo, p.hi))
     }
   }
@@ -239,37 +272,48 @@ object Mor {
 
   /** `snap`'s merged view over the data files `data`: the one
     * delete-application path behind [[read]], [[readAt]],
-    * [[readLineage]] and [[readChanges]].
+    * [[readLineage]] and [[readChanges]]. A `lineage` view adds each
+    * row's stable `_row_id` after the table columns.
+    *
+    * Each delete group takes the cheapest strategy its manifest record
+    * counts allow: a group under the broadcast threshold
+    * ([[DeleteGroup.small]]) anti-joins broadcast, so the data side
+    * never shuffles; a larger positional group probes deletion vectors
+    * while `bitmapThreshold` and the vector caps allow, else anti-joins
+    * by shuffle; a larger equality group anti-joins by shuffle hash.
     */
   private def view(spark: SparkSession, snap: Snapshot,
       data: Seq[ManifestEntry],
       bitmapThreshold: Long = BitmapDeleteThreshold,
       keepProvenance: Boolean = false,
-      keepFileRowId: Boolean = false,
+      lineage: Boolean = false,
       uriFor: String => String = identity): DataFrame = {
-    val scan = scanData(spark, snap, data, keepFileRowId, uriFor)
+    val scan = scanData(spark, snap, data, lineage, uriFor)
     val posTotal = snap.files("pos_delete").map(_.recordCount).sum
+    val threshold = Bridge.broadcastThreshold(spark)
     val merged = deleteGroups(spark, snap, snap.entries, uriFor)
       .foldLeft(scan) { (df, g) =>
         // Positions are row indexes within a data file, so the manifest's
         // recordCounts bound them — the Int-wrap guard (ADVICE r1) and the
         // broadcast-size cap are pure metadata checks, no extra job.
-        val useBitmap = g.positional && posTotal <= bitmapThreshold &&
+        val useBitmap = g.positional && !g.small(threshold) &&
+          posTotal <= bitmapThreshold &&
           data.forall(e =>
             e.recordCount >= 0 && e.recordCount <= Int.MaxValue.toLong) &&
           data.map(_.recordCount / 8 + 8).sum <= MaxBitmapBroadcastBytes
         if (useBitmap) {
-          val dv = buildDeletionVectors(spark, g.rows,
-            data.map(e => (e.path, e.path.split('/').last, e.seq)))
+          val dv = buildDeletionVectors(spark, g.rows, basenameSeqs(data))
           df.join(broadcast(dv), Seq("_fname"), "left")
             .filter(col("_dv").isNull || !bitmapContains(col("_dv"), col("_pos")))
             .drop("_dv")
-        } else df.join(g.rows, g.on(df), "left_anti")
+        } else df.join(g.side(threshold), g.on(df), "left_anti")
       }
     val cols = snap.schema.fieldNames.toSeq
-    val lineageCols = if (keepFileRowId) Seq("_row_id") else Nil
     val provenance = if (keepProvenance) Seq("_file", "_pos", "_seq") else Nil
-    merged.select((cols ++ lineageCols ++ provenance).map(col): _*)
+    if (!lineage) merged.select((cols ++ provenance).map(col): _*)
+    else merged.select(cols.map(col) ++
+      Seq(coalesce(col("_row_id"), col("_frid") + col("_pos")).as("_row_id")) ++
+      provenance.map(col): _*)
   }
 
   /** Per-file deletion vectors, built distributedly — no driver-side
@@ -382,28 +426,14 @@ object Mor {
     * equality deletes, and appends (monotonic high-water assignment,
     * never reused) — the identity a downstream incremental consumer
     * keys on. Files committed before lineage existed surface `_row_id`
-    * as null (unknown, never fabricated). One broadcast of O(#files)
-    * (file, firstRowId) rows on top of the gated read.
+    * as null (unknown, never fabricated). The firstRowId rides the scan
+    * as a partition value, so lineage adds no join to the gated read.
     */
   def readLineage(spark: SparkSession, root: String, ns: String,
       table: String, asOfVersion: Option[Long] = None,
       onlyPaths: Option[Set[String]] = None): DataFrame = {
     val snap = TableIO.snapshot(root, ns, table, asOfVersion)
-    lineageView(spark, snap, liveData(snap, onlyPaths = onlyPaths))
-  }
-
-  private def lineageView(spark: SparkSession, snap: Snapshot,
-      data: Seq[ManifestEntry]): DataFrame = {
-    import spark.implicits._
-    val df = view(spark, snap, data, keepProvenance = true,
-      keepFileRowId = true)
-    val ids = snap.files("data")
-      .map(e => (e.path, e.firstRowId.getOrElse(-1L)))
-      .toDF("_file", "_frid")
-    df.join(broadcast(ids), Seq("_file"), "left")
-      .withColumn("_row_id", coalesce(col("_row_id"),
-        when(col("_frid") >= 0, col("_frid") + col("_pos"))))
-      .select((snap.schema.fieldNames.toSeq :+ "_row_id").map(col): _*)
+    view(spark, snap, liveData(snap, onlyPaths = onlyPaths), lineage = true)
   }
 
   /** MIN/MAX of a column answered from the manifest's per-file bounds —
@@ -427,7 +457,6 @@ object Mor {
   def readChanges(spark: SparkSession, root: String, ns: String,
       table: String, fromVersion: Long, toVersion: Long,
       withLineage: Boolean = false): DataFrame = {
-    import spark.implicits._
     val dir = TableIO.tableDir(root, ns, table)
     val schema = TableIO.readSchema(root, ns, table)
     def snapshotAt(v: Long) =
@@ -520,9 +549,7 @@ object Mor {
               // the table.
               val paths = droppedData.map(_.path).toSet
               val data = liveData(prevSnap, onlyPaths = Some(paths))
-              val alive =
-                if (withLineage) lineageView(spark, prevSnap, data)
-                else view(spark, prevSnap, data)
+              val alive = view(spark, prevSnap, data, lineage = withLineage)
               Seq(alive.select(schemaCols.map(col): _*)
                 .withColumn("_change_type", lit("delete")))
             }
@@ -548,21 +575,19 @@ object Mor {
         val inserts =
           if (addedData.isEmpty) None
           else Some {
-            val raw = GraftFileIndex.scanFiles(spark, dir, addedData, schema)
-            val withId = if (!withLineage) raw else {
-              val frids = addedData
-                .map(e => (e.path.split('/').last, e.firstRowId.getOrElse(-1L)))
-                .toDF("_fname", "_frid")
-              raw.withColumn("_fname", col("_metadata.file_name"))
-                .withColumn("_pos", col("_metadata.row_index"))
-                .join(broadcast(frids), Seq("_fname"), "left")
-                .withColumn("_row_id",
-                  when(col("_frid") >= 0, col("_frid") + col("_pos")))
-            }
+            val frid =
+              if (withLineage) Seq(GraftFileIndex.firstRowIdColumn("_frid"))
+              else Nil
+            val scan = GraftFileIndex.scanFiles(spark, dir, addedData, schema,
+              manifestColumns = frid)
+            val withId = if (!withLineage) scan
+              else scan.withColumn("_row_id",
+                col("_frid") + col("_metadata.row_index"))
             withId.select(schemaCols.map(col): _*)
               .withColumn("_change_type", lit("insert"))
           }
         val groups = deleteGroups(spark, prevSnap, added, identity)
+        val threshold = Bridge.broadcastThreshold(spark)
         val deletes =
           if (groups.isEmpty) None
           else Some {
@@ -581,20 +606,12 @@ object Mor {
               else Some(named.fold(keptPrevData)(_.intersect(keptPrevData)))
             val alive = view(spark, prevSnap,
               liveData(prevSnap, onlyPaths = targetPaths),
-              keepProvenance = true)
-            val cands = groups.map(g => alive.join(g.rows, g.on(alive),
-              "left_semi"))
-            val deduped = cands.reduce(_ union _)
+              keepProvenance = true, lineage = withLineage)
+            val cands = groups.map(g => alive.join(g.side(threshold),
+              g.on(alive), "left_semi"))
+            cands.reduce(_ union _)
               .dropDuplicates("_file", "_pos")
-            val withId = if (!withLineage) deduped else {
-              val frids = prev.filter(_.content == "data")
-                .map(e => (e.path, e.firstRowId.getOrElse(-1L)))
-                .toDF("_file", "_frid")
-              deduped.join(broadcast(frids), Seq("_file"), "left")
-                .withColumn("_row_id",
-                  when(col("_frid") >= 0, col("_frid") + col("_pos")))
-            }
-            withId.select(schemaCols.map(col): _*)
+              .select(schemaCols.map(col): _*)
               .withColumn("_change_type", lit("delete"))
           }
         (droppedChanges ++ inserts.toSeq ++ deletes.toSeq)

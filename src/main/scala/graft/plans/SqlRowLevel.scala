@@ -115,7 +115,7 @@ object SqlRowLevel {
     if (nDel > 0)
       entries += TableIO.writeExactFile(spark, root, ns, tbl,
         f"deletes/sqlrl_pos-$seq%05d-$unique.parquet",
-        dels.orderBy("file_path", "pos"), "pos_delete", seq,
+        dels, "pos_delete", seq,
         recordCount = nDel)
     if (nNew > 0)
       entries += TableIO.writeExactFile(spark, root, ns, tbl,

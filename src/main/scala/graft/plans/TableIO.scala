@@ -819,6 +819,8 @@ object TableIO {
     * `eq_delete` entry records the table field ids of the columns it
     * writes as its `equalityIds` (the reference's
     * `EqualityDeleteWriterConfig::new(ids, ...)`, `main.rs:242-247`).
+    * A `pos_delete` file is written sorted by (`file_path`, `pos`), as
+    * Iceberg requires, whatever order `df` has.
     */
   def writeExactFile(spark: SparkSession, root: String, ns: String,
       table: String, relPath: String, df: DataFrame, content: String,
@@ -834,8 +836,14 @@ object TableIO {
     // delete files read by name/position and stay as given
     val schema = if (tableExists(root, ns, table))
       Some(readSchema(root, ns, table)) else None
-    val out = schema.filter(_ => content == "data")
-      .fold(df)(alignFieldIds(df, _))
+    // position deletes are written in Iceberg's (file_path, pos) order,
+    // sorted here in one task: a global orderBy before the single-file
+    // write would add a range exchange and its sampling job
+    val out =
+      if (content == "pos_delete")
+        df.repartition(1).sortWithinPartitions("file_path", "pos")
+      else schema.filter(_ => content == "data")
+        .fold(df)(alignFieldIds(df, _))
     val equalityIds = schema.filter(_ => content == "eq_delete").toSeq
       .flatMap { s =>
         val ids = df.columns.toSeq.map(c => s.find(_.name == c).flatMap(fieldId))

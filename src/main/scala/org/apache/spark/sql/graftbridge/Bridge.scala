@@ -23,6 +23,13 @@ object Bridge {
   def asNullable(schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.types.StructType = schema.asNullable
 
+  /** The session's `spark.sql.autoBroadcastJoinThreshold` in bytes
+    * (`sessionState` is `private[sql]`).
+    */
+  def broadcastThreshold(spark: SparkSession): Long =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf.autoBroadcastJoinThreshold
+
   /** DataFrame over a hand-built logical plan (e.g. a LogicalRelation
     * wrapping a custom FileIndex) — `Dataset.ofRows` is `private[sql]`.
     */

@@ -55,6 +55,38 @@ class DmlSpec extends AnyFunSuite {
     assert(Dml.deleteWhere(spark, root, "ns", "t", "bar", 90000L, 99000L) == 2L)
   }
 
+  /** The (file_path, pos) rows of a position-delete file in the order
+    * they are stored, by `_metadata.row_index`. */
+  private def storedOrder(path: java.nio.file.Path): Seq[(String, Long)] =
+    spark.read.parquet(path.toString)
+      .select(col("file_path"), col("pos"), col("_metadata.row_index").as("i"))
+      .collect().toSeq.sortBy(_.getLong(2))
+      .map(r => (r.getString(0), r.getLong(1)))
+
+  test("position-delete files are stored in (file_path, pos) order") {
+    val root = freshTable()
+    val dir = TableIO.tableDir(root, "ns", "t")
+    // rows in descending order, spread over four partitions
+    val unsorted = spark.range(0, 40).select(
+      format_string("data/part-%05d.parquet", (lit(4) - col("id") % 5).cast("int"))
+        .as("file_path"),
+      (lit(999L) - col("id")).as("pos")).repartition(4)
+    val e = TableIO.writeExactFile(spark, root, "ns", "t",
+      "deletes/pos-unsorted.parquet", unsorted, "pos_delete", 2L)
+    val direct = storedOrder(dir.resolve(e.path))
+    assert(e.recordCount == 40L && direct.size == 40)
+    assert(direct == direct.sorted)
+    // deleteWhere's file over two boundary files
+    Dml.deleteWhere(spark, root, "ns", "t", "bar", 1500L, 3200L)
+    val dml = TableIO.readManifest(root, "ns", "t")
+      .filter(e => e.content == "pos_delete" && e.path.contains("-dml-"))
+    assert(dml.size == 1)
+    val rows = storedOrder(dir.resolve(dml.head.path))
+    assert(rows.size == 701 && rows == rows.sorted)
+    assert(rows.map(_._1).distinct ==
+      Seq("data/part-00001.parquet", "data/part-00003.parquet"))
+  }
+
   test("truncate publishes an empty snapshot; history stays readable") {
     val root = freshTable()
     val v = Dml.truncate(root, "ns", "t")

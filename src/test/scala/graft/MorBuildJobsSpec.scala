@@ -3,7 +3,10 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.plans.{Mor, Pipeline, TableIO}
@@ -13,7 +16,10 @@ import graft.sources.{FileConfig, GenConfig}
   * equality-identifier set comes from one manifest snapshot, so the
   * first job is the caller's action. Each build runs under a job group
   * and the status tracker must report no job for it; the rows must
-  * equal a reference anti-join computed from the raw files. */
+  * equal a reference anti-join computed from the raw files, on the
+  * broadcast path and with broadcasting off. The action itself is
+  * budgeted too: with small delete groups one broadcast job per group,
+  * then the scan, and no shuffle. */
 class MorBuildJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val Files0 = 200
@@ -38,9 +44,11 @@ class MorBuildJobsSpec extends AnyFunSuite {
   }
 
   private def rows(df: DataFrame): Seq[(String, Int, Boolean)] =
-    df.select("foo", "bar", "baz").collect().toSeq
-      .map(r => (r.getString(0), r.getAs[Number](1).intValue, r.getBoolean(2)))
-      .sorted
+    tuples(df.select("foo", "bar", "baz").collect())
+
+  private def tuples(rs: Array[Row]): Seq[(String, Int, Boolean)] =
+    rs.toSeq.map(r => (r.getAs[String]("foo"), r.getAs[Number]("bar").intValue,
+      r.getAs[Boolean]("baz"))).sorted
 
   /** The merged view at `version` computed by hand: every data row minus
     * the rows a position delete names (data_seq <= delete_seq) minus the
@@ -115,6 +123,14 @@ class MorBuildJobsSpec extends AnyFunSuite {
     assert(gotChanges == expectChanges, s"$label changelog")
   }
 
+  /** [[checkBuilds]] on the default (broadcast) route, then with
+    * broadcasting off: deletion vectors, the shuffled anti-join and
+    * `shuffle_hash` equality joins. */
+  private def checkRoutes(root: String, from: Long, label: String): Unit = {
+    checkBuilds(root, from, label)
+    NoBroadcast(spark)(checkBuilds(root, from, s"$label, no broadcast"))
+  }
+
   test("the job-group probe sees a job when one runs") {
     val (_, jobs) = jobsOf(spark.range(10).count())
     assert(jobs.nonEmpty)
@@ -132,7 +148,7 @@ class MorBuildJobsSpec extends AnyFunSuite {
       explode(array(lit(0L), lit(3L))).as("pos")).orderBy("file_path", "pos")
     TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
       "ns", "t", "deletes/pos-0.parquet", posRows, "pos_delete", posSeq)))
-    checkBuilds(root, 1L, "0 eq-delete files")
+    checkRoutes(root, 1L, "0 eq-delete files")
 
     // one eq delete, then a re-insert of its key at a higher sequence
     val v1 = TableIO.currentVersion(root, "ns", "t")
@@ -142,13 +158,44 @@ class MorBuildJobsSpec extends AnyFunSuite {
     TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
       "ns", "t", "data/reinsert-15.parquet", reins, "data",
       TableIO.nextSeq(root, "ns", "t"))))
-    checkBuilds(root, v1, "1 eq-delete file")
+    checkRoutes(root, v1, "1 eq-delete file")
     assert(TableIO.readManifest(root, "ns", "t")
       .filter(_.content == "eq_delete").forall(_.equalityIds == Seq(2L)))
 
     val v2 = TableIO.currentVersion(root, "ns", "t")
     (1 until 50).foreach(i => commitEqDelete(root, 15 + 37 * i))
-    checkBuilds(root, v2, "50 eq-delete files")
+    checkRoutes(root, v2, "50 eq-delete files")
+  }
+
+  test("a read with small delete groups runs one broadcast job per group, " +
+    "then the scan, and no shuffle; a delete-free read runs one job") {
+    val root = Files.createTempDirectory("graft-morbudget-").toString
+    Pipeline.prepareBulkData(spark, root, GenConfig("ns", "t",
+      FileConfig(Rpf, 20), FileConfig(0, 0), FileConfig(0, 0)))
+    def budget(label: String, groups: Int): Unit = {
+      val df = zeroJobs(s"$label build")(Mor.read(spark, root, "ns", "t"))
+      val (got, jobs) = jobsOf(df.collect())
+      assert(tuples(got) == reference(root, TableIO.currentVersion(root, "ns", "t")),
+        label)
+      assert(jobs.size <= groups + 1,
+        s"$label: ${jobs.size} jobs for $groups delete group(s)")
+      val plan = df.queryExecution.executedPlan
+      assert(PlanNodes.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"$label shuffles:\n$plan")
+      assert(PlanNodes.collect(plan) {
+        case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+      }.size == groups, s"$label:\n$plan")
+    }
+    budget("no deletes", 0)
+    val posRows = spark.range(0, 20, 3).select(
+      format_string("data/part-%05d.parquet", col("id").cast("int")).as("file_path"),
+      lit(4L).as("pos"))
+    TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
+      "ns", "t", "deletes/pos-0.parquet", posRows, "pos_delete",
+      TableIO.nextSeq(root, "ns", "t"))))
+    budget("position deletes", 1)
+    Seq(8, 52, 133).foreach(commitEqDelete(root, _))
+    budget("position and equality deletes", 2)
   }
 
   test("a legacy manifest without equality_ids reads the same rows with " +

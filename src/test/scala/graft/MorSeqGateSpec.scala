@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.plans.{Mor, Pipeline, TableIO}
 import graft.sources.{FileConfig, FixSchemaGenerator, GenConfig}
 
@@ -68,12 +71,26 @@ class MorSeqGateSpec extends AnyFunSuite {
     val cfg = GenConfig("ns", "t", FileConfig(20, 2), FileConfig(5, 1),
       FileConfig(5, 1))
     Pipeline.prepare(spark, root, cfg)
-    val plan = Mor.read(spark, root, "ns", "t")
-      .queryExecution.executedPlan.toString
+    val df = Mor.read(spark, root, "ns", "t")
+    assert(df.count() == 30L)
+    val plan = df.queryExecution.executedPlan
     // a Scala UDF renders as "UDF(...)"; the DV build side's MapGroups
     // (UDFAdaptors, small delete side only) is not a per-row filter UDF
-    assert(!plan.contains("UDF("), s"MOR plan contains a UDF:\n$plan")
-    assert(plan.contains("bitmapcontains"),
-      s"expected deletion-vector probe in plan:\n$plan")
+    assert(!plan.toString.contains("UDF("), s"MOR plan contains a UDF:\n$plan")
+    // both 5-row delete groups fit the broadcast threshold: each applies
+    // as a broadcast anti-join and the data side never shuffles
+    val antiJoins = PlanNodes.collect(plan) {
+      case j: BroadcastHashJoinExec if j.joinType == LeftAnti => j
+    }
+    assert(antiJoins.size == 2, s"expected two broadcast anti-joins:\n$plan")
+    assert(PlanNodes.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"expected no shuffle exchange:\n$plan")
+    // with broadcasting off, position deletes probe deletion vectors
+    val noBroadcast = NoBroadcast(spark)(Mor.read(spark, root, "ns", "t")
+      .queryExecution.executedPlan.toString)
+    assert(!noBroadcast.contains("UDF("),
+      s"MOR plan contains a UDF:\n$noBroadcast")
+    assert(noBroadcast.contains("bitmapcontains"),
+      s"expected deletion-vector probe in plan:\n$noBroadcast")
   }
 }

@@ -20,10 +20,16 @@ come from the change checkout's BENCHMARK.json; runs are untraced. Every
 run's result, with the report lines printed before it (wall times, the
 calibration reference), is printed as one JSON line first, and a run
 that fails its checks is reported; `--out` also saves them.
+
+After the metric table, a second table gives each side's median of every
+numeric report line the runs printed (`reference_ms`, `wall.*`,
+`loop_ms`, `lookup_ms.p50`, `curate.*_ms`, ...), with no verdict: it
+shows which part of a run a metric's move came from.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -110,6 +116,33 @@ def summarize(workload, seed, runs, spec):
     return bad
 
 
+REPORT_LINE = re.compile(r"^(\S+)\s+(-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?)\s+(\S+)$")
+
+
+def report_values(result):
+    """A run's numeric `name value unit` report lines, by name."""
+    found = (REPORT_LINE.match(l) for l in result.get("report", []))
+    return {m.group(1): (float(m.group(2)), m.group(3)) for m in found if m}
+
+
+def summarize_report(runs):
+    """Print each side's median of every numeric report line in `runs`."""
+    values = {s: [report_values(r) for r in runs[s]] for s in runs}
+    names = sorted(set().union(*(v for s in values for v in values[s])))
+    if not names:
+        return
+    print(f"\n{'report line (no verdict)':34} {'parent median':>16} "
+          f"{'change median':>16} {'delta':>8}  unit")
+    for name in names:
+        med = {s: [v[name][0] for v in values[s] if name in v] for s in values}
+        if not med["parent"] or not med["change"]:
+            continue
+        unit = next(v[name][1] for s in values for v in values[s] if name in v)
+        p, c = statistics.median(med["parent"]), statistics.median(med["change"])
+        delta = (c - p) / abs(p) * 100 if p else float("nan")
+        print(f"{name:34} {p:16.4g} {c:16.4g} {delta:+7.1f}%  {unit}")
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent_dir")
@@ -136,6 +169,7 @@ def main():
             json.dump({"workload": a.workload, "seed": a.seed, "runs": runs},
                       fh, indent=1)
     bad = summarize(a.workload, a.seed, runs, spec_of(bench))
+    summarize_report(runs)
     return 1 if bad else 0
 
 
