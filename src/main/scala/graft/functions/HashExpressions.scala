@@ -1,11 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the portable text-hash primitives.
@@ -121,17 +122,49 @@ object ShingleOps {
     acc
   }
 
+  private def strings(arr: ArrayData): Array[String] = {
+    val words = new Array[String](arr.numElements())
+    var i = 0
+    while (i < words.length) { words(i) = arr.getUTF8String(i).toString; i += 1 }
+    words
+  }
+
   /** array<long> of rolling hashes of all word n-grams. */
   def shingleHashes(arr: ArrayData, n: Int): ArrayData = {
     val m = arr.numElements()
     if (m < n) return new GenericArrayData(Array.empty[Long])
-    val words = new Array[String](m)
-    var i = 0
-    while (i < m) { words(i) = arr.getUTF8String(i).toString; i += 1 }
+    val words = strings(arr)
     val out = new Array[Long](m - n + 1)
-    i = 0
+    var i = 0
     while (i <= m - n) { out(i) = shingleHash(words, i, n); i += 1 }
     new GenericArrayData(out)
+  }
+
+  private val seedA = TextHash.minhashSeeds.map(_._1).toArray
+  private val seedB = TextHash.minhashSeeds.map(_._2).toArray
+
+  /** The MinHash signature of the word n-gram set: component j is the
+    * min over shingle hashes h of (h * a_j + b_j) mod P, with the seeds
+    * of [[TextHash.minhashSeeds]]. Null when there are fewer than n
+    * words (no shingle, so no signature).
+    */
+  def minhashSig(arr: ArrayData, n: Int): InternalRow = {
+    val m = arr.numElements()
+    if (m < n) return null
+    val words = strings(arr)
+    val mins = Array.fill(seedA.length)(Long.MaxValue)
+    var i = 0
+    while (i <= m - n) {
+      val h = shingleHash(words, i, n)
+      var j = 0
+      while (j < mins.length) {
+        val v = (h * seedA(j) + seedB(j)) % HashExprs.P
+        if (v < mins(j)) mins(j) = v
+        j += 1
+      }
+      i += 1
+    }
+    new GenericInternalRow(mins.map(v => v: Any))
   }
 
   /** array<long> of per-word polyHashes. */
@@ -163,6 +196,30 @@ case class ShingleHashes(child: Expression, n: Int) extends UnaryExpression {
       c => s"graft.functions.ShingleOps$$.MODULE$$.shingleHashes($c, $n)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** MinHash signature struct (s0..s15) of an array<string> of words in
+  * one codegen'd loop: the shingle hashes are folded straight into the
+  * 16 running minima, so a signature needs neither an exploded row per
+  * shingle nor a per-document aggregate. Null below n words.
+  */
+case class MinhashSig(child: Expression, n: Int) extends UnaryExpression {
+  override def dataType: DataType = MinhashSig.schema
+  override def nullable: Boolean = true
+  override protected def nullSafeEval(v: Any): Any =
+    ShingleOps.minhashSig(v.asInstanceOf[ArrayData], n)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = graft.functions.ShingleOps$$.MODULE$$.minhashSig($c, $n);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object MinhashSig {
+  /** s0..s15, nullable like the `min` aggregates they replace. */
+  val schema: StructType = StructType(TextHash.minhashSeeds.indices.map(j =>
+    StructField(s"s$j", LongType, nullable = true)))
 }
 
 /** Per-word polyHash array (SimHash input) in one codegen'd pass. */
@@ -225,6 +282,10 @@ object HashFunctions {
   /** Column API for ShingleHashes (array<string> -> array<bigint>). */
   def shingleHashes(c: Column, n: Int): Column =
     Bridge.column(ShingleHashes(Bridge.expression(c), n))
+
+  /** Column API for MinhashSig (array<string> -> struct<s0..s15>). */
+  def minhashSig(c: Column, n: Int): Column =
+    Bridge.column(MinhashSig(Bridge.expression(c), n))
 
   /** Column API for WordHashes (array<string> -> array<bigint>). */
   def wordHashes(c: Column): Column =

@@ -233,18 +233,21 @@ object Dedup {
   }
 
   /** MinHash signature per document: 16 permutation-mins over the
-    * rolling-hashed shingle set.
+    * rolling-hashed shingle set, one native loop per document
+    * ([[graft.functions.MinhashSig]]) — a per-row projection, with no
+    * row per shingle and no aggregate on doc_id. Documents with fewer
+    * than `n` words have no shingle and so no row; the word-count
+    * filter keeps them out without reading the signature twice.
+    * The repartition spreads the shingle+rehash hot loop across cores
+    * and leaves the rows hash-partitioned on doc_id.
     */
   def minhashSignatures(docs: DataFrame, n: Int = 4): DataFrame = {
-    // No distinct needed: min over the shingle multiset equals min over
-    // the set, so duplicates cannot change any signature component.
-    // repartition spreads the shingle+rehash hot loop across cores.
-    val sh = Layout.expand(docs, col("doc_id")).select(col("doc_id"),
-      explode(TextHash.shingleHashes(split(col("text"), " "), n)).as("h"))
-    val mins = TextHash.minhashSeeds.zipWithIndex.map { case ((a, b), j) =>
-      min(TextHash.rehash(col("h"), a, b)).as(s"s$j")
-    }
-    sh.groupBy("doc_id").agg(mins.head, mins.tail: _*)
+    val words = split(col("text"), " ")
+    Layout.expand(docs, col("doc_id"))
+      .filter(size(words) >= n)
+      .select(col("doc_id"),
+        graft.functions.HashFunctions.minhashSig(words, n).as("sig"))
+      .select(col("doc_id"), col("sig.*"))
   }
 
   /** MinHash + LSH candidate pairs: 4 bands x 4 rows; docs sharing any
@@ -268,17 +271,13 @@ object Dedup {
     * table instead of a fresh shingle pass. One pass over
     * the signatures: [[sigBands]] explodes each row into its 4 band
     * keys (a union of per-band selects would recompute the whole
-    * signature pipeline once per band — 4x the work).
+    * signature pipeline once per band — 4x the work), and
+    * [[Similarity.bandSelfJoin]] feeds both join sides from one
+    * exchange of those rows.
     */
-  def pairsFromSigs(sig: DataFrame, nBands: Int = 4): DataFrame = {
-    val bands = sigBands(sig, nBands)
-    val a = bands.toDF("doc_a", "band", "key")
-    val b = bands.toDF("doc_b", "band", "key")
-    Layout.expand(a, col("band"), col("key"))
-      .join(b, Seq("band", "key"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b").distinct()
-  }
+  def pairsFromSigs(sig: DataFrame, nBands: Int = 4): DataFrame =
+    Similarity.bandSelfJoin(sigBands(sig, nBands), "doc_a", "doc_b",
+      unordered = true)
 
   /** [[pairsFromSigs]] with the DENSE-BUCKET CAP — the text-side twin
     * of `Similarity.cappedCandidates` (r15): MinHash band buckets are
@@ -304,9 +303,9 @@ object Dedup {
     // shared Knuth rank primitive (one Scala copy of the constants);
     // keyTerm zero — a doc occupies exactly one bucket per band, so
     // the band term already salts the survivor choice
-    val capped = graft.CacheScope.cached(Similarity.capBuckets(
-      sigBands(sig, nBands), "doc_id", cap, lit(0L)))
-    Similarity.pairsAmongCapped(capped, "doc_a", "doc_b", unordered = true)
+    Similarity.bandSelfJoin(Similarity.capBuckets(
+      sigBands(sig, nBands), "doc_id", cap, lit(0L)),
+      "doc_a", "doc_b", unordered = true)
   }
 
   /** [[minhashLsh]] over the bucket-capped candidate set, at the

@@ -97,7 +97,7 @@ object PipelineOps {
 
   /** Curriculum ordering — the composition of this family's quality
     * signals into a training order: documents pass the Gopher rule gate
-    * ([[TextAnalysis.gopherRules]] passes=1 — the rule gate, unlike the
+    * ([[TextAnalysis.gopherPass]] — the rule gate, unlike the
     * untrained hash-weight classifier, is corpus-shape-robust), take
     * their PHASE from the CCNet perplexity bucket
     * ([[TextAnalysis.lmBuckets]]: phase 1 = most-fluent tercile
@@ -106,19 +106,19 @@ object PipelineOps {
     * — exactly how production curricula work: ordered phases, shuffled
     * content inside a phase (a score-exact global sort would buy
     * nothing and cost a total order). Windows are bounded by
-    * (phase, shard); everything else is the two signal pipelines plus
-    * two key joins. Single-word documents carry no LM signal and drop
-    * out with the gate rejects.
+    * (phase, shard); the gate filters the documents in place, so
+    * everything else is the LM signal pipeline plus one key join.
+    * Single-word documents carry no LM signal and drop out with the
+    * gate rejects.
     */
   def curriculum(docs: DataFrame, shards: Int = 8): DataFrame = {
     val phases = TextAnalysis.lmBuckets(docs)
       .select(col("doc_id"), col("bucket").as("phase"))
-    val gate = TextAnalysis.gopherRules(docs)
-      .filter(col("passes") === 1L).select("doc_id")
     val w = Window.partitionBy("phase", "shard")
       .orderBy(col("key"), col("doc_id"))
-    docs.select(col("doc_id"), idHash("u").as("key"))
-      .join(gate, "doc_id").join(phases, "doc_id")
+    docs.filter(TextAnalysis.gopherPass)
+      .select(col("doc_id"), idHash("u").as("key"))
+      .join(phases, "doc_id")
       .withColumn("shard", pmod(col("key"), lit(shards)))
       .withColumn("pos", row_number().over(w).cast("long"))
       .select("doc_id", "phase", "shard", "pos")
@@ -328,18 +328,19 @@ object PipelineOps {
   /** End-to-end curation composite — the operators chained the way a
     * production corpus build chains them, proving the family COMPOSES
     * rather than existing as isolated queries: (1) the Gopher rule
-    * gate ([[TextAnalysis.gopherRules]], passes = 1) drops junk; (2)
-    * exact-dedup keep-best ([[Dedup.keepBest]]) keeps one
-    * representative per fingerprint among the gated survivors; (3)
-    * the leakage-safe rule assigns each survivor to train/valid/test
-    * by its near-dup CLUSTER. Output: per split, document count,
-    * group count, and total characters — the numbers a dataset card
-    * quotes for the final cut.
+    * gate ([[TextAnalysis.gopherPass]]) drops junk; (2) exact-dedup
+    * keep-best ([[Dedup.keepBest]]) keeps one representative per
+    * fingerprint among the gated survivors; (3) the leakage-safe rule
+    * assigns each survivor to train/valid/test by its near-dup
+    * CLUSTER. Output: per split, document count, group count, and
+    * total characters — the numbers a dataset card quotes for the
+    * final cut.
     *
-    * Scale: each stage is the already-audited linear shape of its
-    * operator; the composition adds only doc-id semi-joins between
-    * stages. Every stage is ALSO individually oracle-checked by its
-    * own query, so a composite mismatch localizes immediately.
+    * Scale: one pass over the documents — the gate filters them in
+    * place and keep-best already carries each kept row's n_chars, so
+    * the only join is the cluster-label lookup. Every stage is ALSO
+    * individually oracle-checked by its own query, so a composite
+    * mismatch localizes immediately.
     */
   def e2eCuration(docs: DataFrame): DataFrame =
     e2eCuration(docs, dedupClusters(docs))
@@ -353,20 +354,14 @@ object PipelineOps {
     * splits (besides recomputing the most expensive stage per
     * consumer, the r11 verdict's top item).
     */
-  def e2eCuration(docs: DataFrame, labels: DataFrame): DataFrame = {
-    val gated = docs.join(
-      TextAnalysis.gopherRules(docs).filter(col("passes") === 1L)
-        .select("doc_id"), "doc_id")
-    val best = Dedup.keepBest(gated).select("doc_id")
-    val survivors = docs.join(best, "doc_id")
-    leakageSafeAssignment(survivors, labels)
-      .join(survivors.select(col("doc_id"), col("n_chars")), "doc_id")
+  def e2eCuration(docs: DataFrame, labels: DataFrame): DataFrame =
+    withSplits(Dedup.keepBest(docs.filter(TextAnalysis.gopherPass))
+        .select("doc_id", "n_chars"), labels)
       .groupBy("split")
       .agg(count(lit(1)).as("n_docs"),
         count_distinct(col("grp")).as("n_groups"),
         sum("n_chars").as("total_chars"))
       .orderBy("split")
-  }
 
   /** Per-document assignment behind [[leakageSafeSplit]] (spec
     * surface): (doc_id, grp, split, doc_split).
@@ -376,13 +371,18 @@ object PipelineOps {
 
   private[graft] def leakageSafeAssignment(docs: DataFrame,
       labels: DataFrame): DataFrame =
-    docs.select(col("doc_id"))
-      .join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("cluster"), col("doc_id")).as("grp"))
-      .select(col("doc_id"), col("grp"),
-        splitOf(col("grp")).as("split"),
-        splitOf(col("doc_id")).as("doc_split"))
+    withSplits(docs.select(col("doc_id")), labels)
+
+  /** `rows` (doc_id first, other columns carried along) with the
+    * leakage-safe assignment appended: grp (the doc's near-dup cluster,
+    * itself when unclustered), split (by grp) and doc_split (by doc_id).
+    */
+  private def withSplits(rows: DataFrame, labels: DataFrame): DataFrame =
+    rows.join(labels, Seq("doc_id"), "left")
+      .select(rows.columns.map(col) :+
+        coalesce(col("cluster"), col("doc_id")).as("grp"): _*)
+      .withColumn("split", splitOf(col("grp")))
+      .withColumn("doc_split", splitOf(col("doc_id")))
 
   /** Corpus-level most-frequent word n-grams (boilerplate detection,
     * contamination screening). N-grams are built with per-document
@@ -977,8 +977,7 @@ object PipelineOps {
       def liveBandRows(ix: Ix): Long = liveRecords(ix, "_surv")
 
       def pairs(spark: SparkSession, ix: Ix): DataFrame =
-        Similarity.pairsAmongCapped(
-          graft.CacheScope.cached(bandRows(spark, ix)), "doc_a", "doc_b",
+        Similarity.bandSelfJoin(bandRows(spark, ix), "doc_a", "doc_b",
           unordered = true)
 
       /** Re-cap just the touched buckets against their frozen survivors
@@ -1405,7 +1404,7 @@ object PipelineOps {
     // reads the small adjacency core, not the index relation
     val ballSurv = adjCore.join(ballM, Seq("doc_id"), "left_semi")
     val pairs = graft.CacheScope.cached(
-      Similarity.pairsAmongCapped(ballSurv, "doc_a", "doc_b",
+      Similarity.bandSelfJoin(ballSurv, "doc_a", "doc_b",
         unordered = true))
     // DELTA label commit (r18, VERDICT r17 item 1): the ball's fresh
     // labels appended + ONE doc_id-keyed eq-delete file for the relabel

@@ -1238,15 +1238,10 @@ object Similarity {
     * [[simHistogramCapped]], the bounded candidate set the capped
     * join actually scores.
     */
-  def simHistogram(emb: DataFrame, bands: Int = 16, r: Int = 4): DataFrame = {
-    val bandDf = bandKeys(emb, bands, r)
-    val cand = Layout.expand(bandDf.toDF("vec_a", "band", "key"),
-        col("band"), col("key"))
-      .join(bandDf.toDF("vec_b", "band", "key"), Seq("band", "key"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b").distinct()
-    cosineHistogram(cand, emb)
-  }
+  def simHistogram(emb: DataFrame, bands: Int = 16, r: Int = 4): DataFrame =
+    cosineHistogram(
+      bandSelfJoin(bandKeys(emb, bands, r), "vec_a", "vec_b", unordered = true),
+      emb)
 
   /** Shared histogram tail of [[simHistogram]] / [[simHistogramCapped]]:
     * one cosine per unordered pair, 20 buckets over [-1, 1], order-free
@@ -1303,15 +1298,8 @@ object Similarity {
   def knnJoin(emb: DataFrame, k: Int = 3, bands: Int = 16, r: Int = 4,
       saltShards: Int = 1): DataFrame = {
     val bandDf = bandKeys(emb, bands, r)
-    // spread the probe side across cores: a single-file scan is one
-    // partition, and everything up to the first exchange (join, distinct
-    // partial agg) would otherwise run in one task
     val cand = if (saltShards <= 1) {
-      Layout.expand(bandDf.toDF("vec_a", "band", "key"),
-          col("band"), col("key"))
-        .join(bandDf.toDF("vec_b", "band", "key"), Seq("band", "key"))
-        .filter(col("vec_a") =!= col("vec_b"))
-        .select("vec_a", "vec_b").distinct()
+      bandSelfJoin(bandDf, "vec_a", "vec_b", unordered = false)
     } else {
       // HOT-BAND salting (VERDICT r8 item 8): when [[bandCandidateStats]]
       // reports a dominant bucket, one (band, key) otherwise lands in
@@ -1327,6 +1315,9 @@ object Similarity {
         explode(array((0 until saltShards).map(lit): _*)))
       val bS = bandDf.toDF("vec_b", "band", "key").withColumn("_sb",
         pmod(col("vec_b"), lit(saltShards.toLong)).cast("int"))
+      // spread the probe side across cores: a single-file scan is one
+      // partition, and everything up to the first exchange would
+      // otherwise run in one task
       Layout.expand(aS, col("band"), col("key"), col("_sb"))
         .join(bS, Seq("band", "key", "_sb"))
         .filter(col("vec_a") =!= col("vec_b"))
@@ -1398,34 +1389,30 @@ object Similarity {
     */
   private[operators] def cappedCandidates(emb: DataFrame, bands: Int,
       r: Int, cap: Int): DataFrame = {
-    // the capping pipeline (band explode, per-bucket hash rank) is the
-    // expensive pre-join stage and both sides of the self-join read it
-    // — cached under CacheScope so it runs once per query, drained by
-    // the consuming harness
-    val capped = graft.CacheScope.cached(capBuckets(
-      bandKeys(emb, bands, r), "vec_id", cap, col("key") * lit(69069L)))
-    pairsAmongCapped(capped, "vec_a", "vec_b", unordered = false)
+    bandSelfJoin(capBuckets(bandKeys(emb, bands, r), "vec_id", cap,
+      col("key") * lit(69069L)), "vec_a", "vec_b", unordered = false)
   }
 
-  /** THE capped-survivor pair self-join — one Scala copy of the join
-    * convention (repartition on (band, key), self-join, distinct)
-    * every capped family reads: embedding [[cappedCandidates]]
-    * (ordered pairs, both directions, for kNN scoring), text
-    * `Dedup.pairsFromSigsCapped` and the capped cluster index's
-    * relabel (unordered a<b pairs). `capped` is an already-capped
-    * (id, band, key) relation — first column is the id, whatever its
-    * name. The r15 review consolidated the rank constants into
-    * [[capBuckets]] for the same reason: these sites are contractually
-    * bit-identical, so the shape must live once.
+  /** THE band self-join — one Scala copy of the join every banded
+    * candidate family reads: the exact embedding [[knnJoin]] and
+    * [[simHistogram]], text `Dedup.pairsFromSigs`, the capped
+    * [[cappedCandidates]] / `Dedup.pairsFromSigsCapped`, and the capped
+    * cluster index's relabel. `bands` is an (id, band, key) relation —
+    * first column the id, whatever its name. It is expanded ONCE on
+    * (band, key) and that exchange feeds both sides, which it already
+    * satisfies, so the second side plans as a `ReusedExchange` instead
+    * of evaluating `bands` (scan, signatures, band explode) a second
+    * time. Pairs are distinct; `unordered` keeps a < b, otherwise both
+    * directions.
     */
-  private[operators] def pairsAmongCapped(capped: DataFrame, aCol: String,
+  private[operators] def bandSelfJoin(bands: DataFrame, aCol: String,
       bCol: String, unordered: Boolean): DataFrame = {
-    val a = capped.toDF(aCol, "band", "key")
-    val b = capped.toDF(bCol, "band", "key")
+    val x = Layout.expand(bands.toDF("id", "band", "key"),
+      col("band"), col("key"))
     val cond = if (unordered) col(aCol) < col(bCol)
       else col(aCol) =!= col(bCol)
-    Layout.expand(a, col("band"), col("key"))
-      .join(b, Seq("band", "key"))
+    x.toDF(aCol, "band", "key")
+      .join(x.toDF(bCol, "band", "key"), Seq("band", "key"))
       .filter(cond)
       .select(aCol, bCol).distinct()
   }

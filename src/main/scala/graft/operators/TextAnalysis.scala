@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.Layout
-import graft.functions.TextHash
+import graft.functions.{GopherOps, TextHash}
 
 /** Text-analysis operators for a training-data pipeline: corpus stats,
   * tokenization counts, quality scoring, marker-based language ID, and
@@ -33,8 +33,6 @@ object TextAnalysis {
       col("n_chars"))
       .orderBy("doc_id")
 
-  private val stopwords = Seq("the", "a", "of", "and", "to", "in", "is")
-
   /** Quality signals per document: length, alpha ratio, stopword ratio,
     * mean token length. Ratios are single int/int divisions — identical
     * IEEE doubles in Spark and DuckDB.
@@ -44,7 +42,7 @@ object TextAnalysis {
     val nTok = size(words)
     val alpha = length(regexp_replace(col("text"), "[^a-z]", ""))
     val stop = size(filter(words,
-      w => stopwords.map(s => w === s).reduce(_ || _)))
+      w => GopherOps.Stopwords.map(s => w === s).reduce(_ || _)))
     docs.select(col("doc_id"),
       nTok.as("n_tokens"),
       (alpha.cast("double") / col("n_chars")).as("alpha_ratio"),
@@ -58,34 +56,49 @@ object TextAnalysis {
     * length, symbol-to-word ratio (# and ellipses), alphabetic-word
     * fraction, and stopword presence, plus the conjunction. Distinct
     * from [[quality]] (raw signals): this emits the named DECISIONS a
-    * pipeline filters on. Pure per-row higher-order-function column
-    * expressions — codegen'd linear scan, embarrassingly parallel;
-    * every ratio is one int/int division (IEEE-identical in DuckDB).
+    * pipeline filters on. The counts behind the flags come from one
+    * native loop per document ([[graft.functions.GopherStats]]) — a
+    * codegen'd linear scan, embarrassingly parallel; every ratio is one
+    * int/int division (IEEE-identical in DuckDB).
     */
-  def gopherRules(docs: DataFrame, minWords: Int = 50,
-      maxWords: Int = 100000, minMeanWl: Double = 3.0,
-      maxMeanWl: Double = 10.0): DataFrame = {
-    val words = split(trim(col("text")), "\\s+")
-    val nw = size(words).cast("long")
-    val meanWl = aggregate(words, lit(0L), (a, w) => a + length(w))
-      .cast("double") / nw
-    val symRatio = (regexp_count(col("text"), lit("#")) +
-      regexp_count(col("text"), lit("\\.\\.\\."))).cast("double") / nw
-    val alphaFrac = size(filter(words, w => w.rlike("[A-Za-z]")))
-      .cast("double") / nw
-    val nStop = size(filter(words,
-      w => stopwords.map(s => w === s).reduce(_ || _))).cast("long")
+  def gopherRules(docs: DataFrame): DataFrame = {
     def flag(c: Column): Column = when(c, 1L).otherwise(0L)
-    val fWords = flag(nw >= minWords && nw <= maxWords)
-    val fMeanWl = flag(meanWl >= minMeanWl && meanWl <= maxMeanWl)
-    val fSym = flag(symRatio <= 0.1)
-    val fAlpha = flag(alphaFrac >= 0.8)
-    val fStop = flag(nStop >= 2)
-    docs.select(col("doc_id"), nw.as("n_words"),
-      fWords.as("ok_words"), fMeanWl.as("ok_mean_wl"), fSym.as("ok_sym"),
-      fAlpha.as("ok_alpha"), fStop.as("ok_stop"),
-      (fWords * fMeanWl * fSym * fAlpha * fStop).as("passes"))
+    val fs = gopherFlags(col("g")).map(flag)
+    docs.select(col("doc_id"), gopherStats.as("g"))
+      .select(col("doc_id"), col("g.n_words").as("n_words"),
+        fs(0).as("ok_words"), fs(1).as("ok_mean_wl"), fs(2).as("ok_sym"),
+        fs(3).as("ok_alpha"), fs(4).as("ok_stop"),
+        fs.reduce(_ * _).as("passes"))
       .orderBy("doc_id")
+  }
+
+  /** The conjunction of the [[gopherRules]] as a predicate on a
+    * relation with a `text` column: true exactly where `passes` is 1.
+    * Gating with it filters the relation in place, with no join back
+    * to a flags frame. The rules read the stats struct through a
+    * one-element array so the native kernel runs once per row: a
+    * filter condition re-evaluates an expression at every reference
+    * (whole-stage codegen eliminates no common subexpression there).
+    */
+  def gopherPass: Column =
+    exists(array(gopherStats), gopherFlags(_).reduce(_ && _))
+
+  private def gopherStats: Column = GopherOps.column(col("text"))
+
+  /** The five rule predicates over a GopherStats struct, in
+    * [[gopherRules]]' column order: 50 to 100,000 words, mean word
+    * length 3 to 10, at most 0.1 symbols per word, at least 80%
+    * alphabetic words, at least two stopwords. */
+  private def gopherFlags(g: Column): Seq[Column] = {
+    val nw = g("n_words")
+    val meanWl = g("sum_wl").cast("double") / nw
+    val symRatio = g("n_sym").cast("double") / nw
+    val alphaFrac = g("n_alpha").cast("double") / nw
+    Seq(nw >= 50 && nw <= 100000,
+      meanWl >= 3.0 && meanWl <= 10.0,
+      symRatio <= 0.1,
+      alphaFrac >= 0.8,
+      g("n_stop") >= 2)
   }
 
   private val markers: Seq[(String, String)] = Seq(

@@ -84,8 +84,12 @@ object PipeScaleSmoke {
     // (WindowGroupLimit), keep-best aggregate, Gopher rule scan
     timed("classifierScore")(
       graft.operators.TextAnalysis.classifierScore(docs).count())
-    timed("gopherRules")(
-      graft.operators.TextAnalysis.gopherRules(docs).count())
+    val nRules = timed("gopherRules")(graft.operators.TextAnalysis
+      .gopherRules(docs).filter(col("passes") === 1L).count())
+    val nPass = timed("gopherPass gate")(
+      docs.filter(graft.operators.TextAnalysis.gopherPass).count())
+    require(nRules == nPass, s"gopherPass kept $nPass docs, gopherRules $nRules")
+    timed("curriculum")(PipelineOps.curriculum(docs).count())
     timed("sourceCap")(PipelineOps.sourceCap(docs, cap = 100000).count())
     timed("keepBest")(Dedup.keepBest(docs).count())
     // round-12 additions: rolling-window duplicated spans (3 linear
