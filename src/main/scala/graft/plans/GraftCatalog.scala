@@ -535,9 +535,7 @@ private[plans] class GraftScanBuilder(root: String, ns: String, t: String,
       * (a safe overestimate — stats may only err toward bigger).
       */
     override def estimateStatistics(): Statistics = new Statistics {
-      private val entries = atVersion
-        .map(v => TableIO.readManifestAt(root, ns, t, v))
-        .getOrElse(TableIO.readManifest(root, ns, t))
+      private val entries = TableIO.snapshot(root, ns, t, atVersion).entries
       private val dir = TableIO.tableDir(root, ns, t)
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(math.max(1L,

@@ -374,27 +374,6 @@ object Mor {
       asOfVersion: Long): DataFrame =
     read(spark, root, ns, table, BitmapDeleteThreshold, Some(asOfVersion))
 
-  /** CDC changelog scan (Iceberg's changelog / Delta CDF): row-level
-    * changes between two snapshot versions, one pass per commit.
-    * Per version v in (from, to]:
-    *
-    *   - data files ADDED at v emit their rows as `insert` — a plain
-    *     scan of just those files (the append fast path: no join at all
-    *     for append-only traffic, the overwhelmingly common case);
-    *   - delete files ADDED at v emit `delete` rows: ONLY the new
-    *     delete files are applied (seq-gated, per identifier set)
-    *     against the view as of v-1 — rows already dead at v-1 can't
-    *     re-emit, and a row hit by both a new pos- and eq-delete
-    *     dedupes on its physical identity (_file, _pos);
-    *   - snapshots that REMOVE files (compaction rewrites, rollbacks)
-    *     produce no change rows — the Iceberg changelog rule: a rewrite
-    *     changes no logical row, and a rollback's changes were already
-    *     reported when the rolled-back commits happened.
-    *
-    * Scale shape: inserts are pure incremental scans; deletes join the
-    * (small) new-delete side against one prior snapshot — never a diff
-    * of two full snapshots.
-    */
   /** COUNT(*) answered from manifest metadata alone — no data file is
     * opened (Iceberg answers `SELECT count(*)` the same way: aggregate
     * pushdown into the manifest record counts). Valid when the snapshot
@@ -408,9 +387,7 @@ object Mor {
     */
   def countFromMetadata(root: String, ns: String, table: String,
       version: Option[Long] = None): Option[Long] = {
-    val entries = version
-      .map(v => TableIO.readManifestAt(root, ns, table, v))
-      .getOrElse(TableIO.readManifest(root, ns, table))
+    val entries = TableIO.snapshot(root, ns, table, version).entries
     if (entries.exists(_.content == "eq_delete")) None
     else Some(entries.filter(_.content == "data").map(_.recordCount).sum -
       entries.filter(_.content == "pos_delete").map(_.recordCount).sum)
@@ -444,9 +421,7 @@ object Mor {
     */
   def minMaxFromMetadata(root: String, ns: String, table: String,
       column: String, version: Option[Long] = None): Option[(Long, Long)] = {
-    val entries = version
-      .map(v => TableIO.readManifestAt(root, ns, table, v))
-      .getOrElse(TableIO.readManifest(root, ns, table))
+    val entries = TableIO.snapshot(root, ns, table, version).entries
     val data = entries.filter(_.content == "data")
     if (entries.size != data.size || data.isEmpty ||
         !data.forall(_.bounds.contains(column))) None
@@ -454,13 +429,33 @@ object Mor {
       data.map(_.bounds(column)._2).max))
   }
 
+  /** CDC changelog scan (Iceberg's changelog / Delta CDF): row-level
+    * changes between two snapshot versions, one pass per commit.
+    * Per version v in (from, to]:
+    *
+    *   - data files ADDED at v emit their rows as `insert` — a plain
+    *     scan of just those files (the append fast path: no join at all
+    *     for append-only traffic, the overwhelmingly common case);
+    *   - delete files ADDED at v emit `delete` rows: ONLY the new
+    *     delete files are applied (seq-gated, per identifier set)
+    *     against the view as of v-1 — rows already dead at v-1 can't
+    *     re-emit, and a row hit by both a new pos- and eq-delete
+    *     dedupes on its physical identity (_file, _pos);
+    *   - snapshots that REMOVE files go by their header's operation
+    *     marker: a `replace` (compaction rewrite) produces no change rows
+    *     — the Iceberg changelog rule: a rewrite changes no logical row;
+    *     a `delete`/`overwrite` also emits the dropped files' live rows
+    *     as `delete`; a rollback or an unmarked version fails loudly.
+    *
+    * Scale shape: inserts are pure incremental scans; deletes join the
+    * (small) new-delete side against one prior snapshot — never a diff
+    * of two full snapshots.
+    */
   def readChanges(spark: SparkSession, root: String, ns: String,
       table: String, fromVersion: Long, toVersion: Long,
       withLineage: Boolean = false): DataFrame = {
     val dir = TableIO.tableDir(root, ns, table)
     val schema = TableIO.readSchema(root, ns, table)
-    def snapshotAt(v: Long) =
-      Snapshot(dir, v, TableIO.readManifestAt(root, ns, table, v), schema)
     val schemaCols0 = schema.fieldNames.toSeq
     // with lineage, every change row carries its stable _row_id — the
     // key an incremental consumer correlates inserts/deletes on
@@ -476,12 +471,17 @@ object Mor {
     require(0L <= fromVersion && fromVersion <= toVersion && toVersion <= curV,
       s"changelog range [$fromVersion, $toVersion] outside $ns.$table's " +
         s"history [0, $curV]")
-    val parts = ((fromVersion + 1) to toVersion).flatMap { v =>
+    // each version is read once: v's snapshot is also the prev of v + 1
+    val snaps = (fromVersion to toVersion).iterator
+      .map(v => TableIO.snapshot(root, ns, table, Some(v)))
+    val parts = snaps.sliding(2).withPartial(false).flatMap { pair =>
+      val (prevSnap, snap) = (pair(0), pair(1))
+      val v = snap.version
       // A rollback CHANGES content but looks replace-shaped; silently
       // skipping it (as for content-preserving compaction) would let
       // every changelog consumer diverge. Fail loudly instead — the
       // consumer must reconsume or deliberately re-point its offset.
-      if (TableIO.isRollback(root, ns, table, v))
+      if (snap.isRollback)
         throw new IllegalStateException(
           s"$ns.$table v$v is a rollback: the changelog across it is not " +
             "append-derivable — reset the consumer (reconsume from " +
@@ -493,9 +493,8 @@ object Mor {
               s"across it is gone — reset the consumer (reconsume from " +
               "scratch, or re-point its offset into the retained history)")
       }
-      val prevSnap = snapshotAt(v - 1)
       val prev = prevSnap.entries
-      val cur = TableIO.readManifestAt(root, ns, table, v)
+      val cur = snap.entries
       val prevKeys = prev.map(e => (e.path, e.content)).toSet
       val curKeys = cur.map(e => (e.path, e.content)).toSet
       val dropped = prev.filterNot(e => curKeys((e.path, e.content)))
@@ -513,14 +512,12 @@ object Mor {
       //                          (a mixed DELETE WHERE also carries
       //                          boundary pos-deletes; an overwrite also
       //                          carries inserts);
-      //   unmarked               unknown writer or a crash between
-      //                          publish and marker — fail LOUDLY. The
-      //                          pre-marker behavior (silent skip) let a
-      //                          CDC consumer miss every metadata-only
-      //                          DELETE WHERE / TRUNCATE forever.
-      val replaceOp =
-        if (dropped.isEmpty) None
-        else TableIO.replaceOperation(root, ns, table, v)
+      //   unmarked               a writer that stamped no operation —
+      //                          fail LOUDLY. The pre-marker behavior
+      //                          (silent skip) let a CDC consumer miss
+      //                          every metadata-only DELETE WHERE /
+      //                          TRUNCATE forever.
+      val replaceOp = if (dropped.isEmpty) None else snap.operation
       val droppedChanges: Seq[DataFrame] =
         if (dropped.isEmpty) Seq.empty
         else replaceOp match {
@@ -617,7 +614,7 @@ object Mor {
         (droppedChanges ++ inserts.toSeq ++ deletes.toSeq)
           .map(_.withColumn("_change_version", lit(v.toInt)))
       }
-    }
+    }.toVector
     if (parts.isEmpty) {
       import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
       val lineageField =

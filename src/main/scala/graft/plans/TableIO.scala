@@ -106,16 +106,25 @@ object Bloom {
   }
 }
 
-/** One read's view of a table: a manifest version, its entries and the
-  * table schema, loaded together once ([[TableIO.snapshot]]). Every
-  * file list, delete gate and identifier set of a MOR read comes from
-  * the same value, so a commit landing while the read is built cannot
-  * pair one version's data files with another's deletes.
+/** One read's view of a table: a manifest version, its entries, its
+  * commit header and the table schema, loaded together once
+  * ([[TableIO.snapshot]]). Every file list, delete gate and identifier
+  * set of a MOR read comes from the same value, so a commit landing
+  * while the read is built cannot pair one version's data files with
+  * another's deletes. `nextRowId` is the row-id high-water mark the
+  * version's header records (0 for a version without a header);
+  * `operation` is the header's operation marker: a
+  * [[TableIO.ReplaceOperations]] member on a marked replacing commit,
+  * [[TableIO.RollbackOperation]] on a rollback, None otherwise.
   */
 final case class Snapshot(dir: Path, version: Long,
-    entries: Seq[ManifestEntry], schema: StructType) {
+    entries: Seq[ManifestEntry], schema: StructType, nextRowId: Long,
+    operation: Option[String]) {
   def files(content: String): Seq[ManifestEntry] =
     entries.filter(_.content == content)
+
+  /** Whether this version was published by [[TableIO.rollback]]. */
+  def isRollback: Boolean = operation.contains(TableIO.RollbackOperation)
 
   /** The sequence number a commit planned on this snapshot takes. */
   def nextSeq: Long = entries.map(_.seq).maxOption.getOrElse(0L) + 1L
@@ -140,11 +149,17 @@ final case class Snapshot(dir: Path, version: Long,
   * {{{
   *   <root>/<namespace>/<table>/
   *     schema.json           table schema (DDL-time, D2)
-  *     version-hint.text     current manifest version (atomic pointer)
-  *     manifest/v<N>.json    one JSON line per ManifestEntry
+  *     manifest/v<N>.json    one commit header line, then one JSON line
+  *                           per ManifestEntry
   *     data/part-*.parquet
   *     deletes/{pos_delete,equality_delete}-*.parquet
   * }}}
+  *
+  * The header, `{"commit":{"next_row_id":N,"operation":"replace"}}`,
+  * carries the table's row-id high-water mark after the commit and, on
+  * replacing commits and rollbacks only, the operation marker. The
+  * highest published `v<N>.json` is the current version, so one
+  * compare-and-swap publish of that file is the whole commit.
   *
   * Commits are O(#files) metadata writes only — no data rewrite — which is
   * the property that makes the protocol viable at 100 TB.
@@ -257,8 +272,7 @@ object TableIO {
       val withIds = withFieldIds(schema)
       Files.writeString(dir.resolve("schema.json"), withIds.json)
       writeLastFieldId(root, ns, table, maxFieldId(withIds))
-      atomicWrite(dir.resolve("manifest/v0.json"), "")
-      atomicWrite(dir.resolve("version-hint.text"), "0")
+      atomicWrite(dir.resolve("manifest/v0.json"), header(0L, None))
     }
   }
 
@@ -404,9 +418,11 @@ object TableIO {
     */
   def snapshot(root: String, ns: String, table: String,
       version: Option[Long] = None): Snapshot = {
+    val dir = tableDir(root, ns, table)
     val v = version.getOrElse(currentVersion(root, ns, table))
-    Snapshot(tableDir(root, ns, table), v, readManifestAt(root, ns, table, v),
-      readSchema(root, ns, table))
+    val m = readVersion(dir, v)
+    Snapshot(dir, v, m.entries, readSchema(root, ns, table), m.nextRowId,
+      m.operation)
   }
 
   private def fieldId(f: org.apache.spark.sql.types.StructField): Option[Long] =
@@ -488,29 +504,21 @@ object TableIO {
   private def footerRowCount(spark: SparkSession, file: String): Long =
     footer(spark, file).getBlocks.asScala.map(_.getRowCount).sum
 
-  /** Current snapshot version. The hint file is a fast path only: a
-    * committer that lost a publish race may flip the hint backwards a
-    * moment after the winner, so the directory's highest published
-    * manifest is authoritative (Iceberg's HadoopTableOperations makes
-    * the same choice).
+  /** Current snapshot version: the highest manifest version published
+    * in the table's manifest directory (Iceberg's HadoopTableOperations
+    * lists the same way).
     */
   def currentVersion(root: String, ns: String, table: String): Long = {
-    val dir = tableDir(root, ns, table)
-    val hint = dir.resolve("version-hint.text")
-    val hinted =
-      if (Files.isRegularFile(hint)) Files.readString(hint).trim.toLong else 0L
-    val mdir = dir.resolve("manifest")
-    val published =
-      if (!Files.isDirectory(mdir)) 0L
-      else {
-        val s = Files.list(mdir)
-        try s.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case manifestVRe(v) => v.toLong }
-          .foldLeft(0L)(math.max)
-        finally s.close()
-      }
-    math.max(hinted, published)
+    val mdir = tableDir(root, ns, table).resolve("manifest")
+    if (!Files.isDirectory(mdir)) 0L
+    else {
+      val s = Files.list(mdir)
+      try s.iterator().asScala
+        .map(_.getFileName.toString)
+        .collect { case manifestVRe(v) => v.toLong }
+        .foldLeft(0L)(math.max)
+      finally s.close()
+    }
   }
 
   private val manifestVRe = """v(\d+)\.json""".r
@@ -532,9 +540,48 @@ object TableIO {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** K6 (`main.rs:125-158`): one atomic append commit = write new full
-    * manifest v(N+1), then flip the version pointer. Readers racing a
-    * commit see either vN or v(N+1), never a partial manifest.
+  /** The one commit path behind [[commit]], [[commitAppendExpecting]],
+    * [[commitReplacing]] and [[rollback]]: read version `base` once,
+    * stamp `added`'s unassigned data entries with row ids, and publish
+    * version `base + 1` — `base`'s entries plus `added` when `keepBase`,
+    * else `added` alone — with its commit header. False when another
+    * committer published `base + 1` first; the caller's policy decides
+    * what a lost race means.
+    *
+    * Row lineage (Iceberg v3): every committed data file gets a
+    * `firstRowId` from the table's monotonic high-water mark, so row N
+    * of the file has the STABLE id firstRowId + N: unaffected by
+    * positional deletes (positions don't shift) and by appends, and
+    * never reused. The mark is the higher of `base`'s header mark and
+    * the highest id `base`'s entries hold, and the new header carries
+    * it forward, so a truncate or a rollback to an older version never
+    * lowers it. Delete files carry no lineage; entries the caller
+    * stamped (a rollback republishing an old manifest) keep theirs.
+    */
+  private def publish(dir: Path, base: Long, added: Seq[ManifestEntry],
+      keepBase: Boolean, operation: Option[String]): Boolean = {
+    val prior = readVersion(dir, base)
+    var next = rowIdMark(prior.nextRowId, prior.entries)
+    val stamped = added.map { e =>
+      if (e.content != "data" || e.firstRowId.isDefined || e.recordCount < 0) e
+      else {
+        val s = e.copy(firstRowId = Some(next))
+        next += e.recordCount
+        s
+      }
+    }
+    val entries = if (keepBase) prior.entries ++ stamped else stamped
+    tryPublish(dir, base + 1, (header(rowIdMark(next, entries), operation) +:
+      entries.map(entryToJson)).mkString("\n"))
+  }
+
+  private def rowIdMark(mark: Long, entries: Seq[ManifestEntry]): Long =
+    entries.flatMap(e => e.firstRowId.map(_ + e.recordCount))
+      .foldLeft(mark)(math.max)
+
+  /** K6 (`main.rs:125-158`): one atomic append commit = publish the new
+    * full manifest v(N+1). Readers racing a commit see either vN or
+    * v(N+1), never a partial manifest.
     *
     * Optimistic concurrency: losing a publish race re-reads the new
     * base manifest and retries — a fast-append conflicts with nothing
@@ -550,13 +597,7 @@ object TableIO {
     var attempts = 0
     while (attempts < 1000) {
       val v = currentVersion(root, ns, table)
-      val assigned = assignRowIds(root, ns, table, newEntries)
-      val all = readManifest(root, ns, table) ++ assigned
-      if (tryPublish(dir, v + 1, all.map(entryToJson).mkString("\n"))) {
-        advanceRowIdMark(root, ns, table, assigned)
-        atomicWrite(dir.resolve("version-hint.text"), (v + 1).toString)
-        return v + 1
-      }
+      if (publish(dir, v, newEntries, keepBase = true, None)) return v + 1
       attempts += 1
     }
     throw new IllegalStateException(
@@ -573,75 +614,17 @@ object TableIO {
     * retry would let the loser land as expected + 2, silently voiding
     * the 409 contract the route advertises. The base manifest is read
     * AT `expected` (immutable once published), so a racer advancing the
-    * table mid-flight cannot skew what this commit appends onto.
+    * table mid-flight cannot skew what this commit appends onto, and the
+    * row ids it assigns start from that base's own mark.
     */
   def commitAppendExpecting(root: String, ns: String, table: String,
       newEntries: Seq[ManifestEntry],
       expected: Long): Either[Long, Long] = {
-    val dir = tableDir(root, ns, table)
     val cur = currentVersion(root, ns, table)
-    if (cur != expected) return Left(cur)
-    // row-id assignment floors at the BASE manifest's own high-water
-    // mark, not just the separately-written next-row-id.text: a racer
-    // observing the winner's published manifest before the winner's
-    // mark advance (or a writer that crashed between the two) must
-    // still never publish firstRowId ranges overlapping the entries it
-    // appends onto (ADVICE r13) — the floor makes non-overlap a
-    // property of THIS commit's inputs, not of mark-write timing.
-    val base = readManifestAt(root, ns, table, expected)
-    val floor = base.flatMap(e => e.firstRowId.map(_ + e.recordCount))
-      .foldLeft(0L)(math.max)
-    val assigned = assignRowIds(root, ns, table, newEntries, floor)
-    val all = base ++ assigned
-    if (tryPublish(dir, expected + 1, all.map(entryToJson).mkString("\n"))) {
-      advanceRowIdMark(root, ns, table, assigned)
-      atomicWrite(dir.resolve("version-hint.text"), (expected + 1).toString)
-      Right(expected + 1)
-    } else Left(currentVersion(root, ns, table))
-  }
-
-  // --- row lineage (Iceberg v3) ----------------------------------------
-  // Every committed data file gets a `firstRowId` from a monotonic
-  // per-table high-water mark, so row N of the file has the STABLE id
-  // firstRowId + N: unaffected by positional deletes (positions don't
-  // shift) and by appends, and never reused. The mark is
-  // max(next-row-id.text, max over the live manifest) — robust to a
-  // crash between manifest publish and mark write.
-
-  private def rowIdMark(root: String, ns: String, table: String): Long = {
-    val f = tableDir(root, ns, table).resolve("next-row-id.text")
-    val persisted =
-      if (Files.isRegularFile(f)) Files.readString(f).trim.toLong else 0L
-    val live = readManifest(root, ns, table)
-      .flatMap(e => e.firstRowId.map(_ + e.recordCount))
-      .foldLeft(0L)(math.max)
-    math.max(persisted, live)
-  }
-
-  /** Stamp unassigned data entries with consecutive firstRowIds from the
-    * high-water mark (delete files carry no lineage).
-    */
-  private def assignRowIds(root: String, ns: String, table: String,
-      entries: Seq[ManifestEntry],
-      floor: Long = 0L): Seq[ManifestEntry] = {
-    var next = math.max(rowIdMark(root, ns, table), floor)
-    entries.map { e =>
-      if (e.content != "data" || e.firstRowId.isDefined || e.recordCount < 0) e
-      else {
-        val stamped = e.copy(firstRowId = Some(next))
-        next += e.recordCount
-        stamped
-      }
-    }
-  }
-
-  private def advanceRowIdMark(root: String, ns: String, table: String,
-      assigned: Seq[ManifestEntry]): Unit = {
-    val high = assigned.flatMap(e => e.firstRowId.map(_ + e.recordCount))
-      .foldLeft(0L)(math.max)
-    if (high > 0L)
-      atomicWrite(tableDir(root, ns, table).resolve("next-row-id.text"),
-        high.toString)
+    if (cur != expected) Left(cur)
+    else if (publish(tableDir(root, ns, table), expected, newEntries,
+        keepBase = true, None)) Right(expected + 1)
+    else Left(currentVersion(root, ns, table))
   }
 
   /** Commit a snapshot whose manifest REPLACES the previous content
@@ -650,6 +633,21 @@ object TableIO {
     * and a concurrent commit means that base is stale (Iceberg fails
     * rewrites on conflicting updates the same way). The caller re-plans
     * against the new head if it still wants the rewrite.
+    *
+    * Rewritten files still get a fresh firstRowId (Iceberg v3 assigns
+    * one to every data file), but it is only the INHERITANCE fallback:
+    * compaction materializes each row's preserved _row_id as a physical
+    * column, which lineage reads prefer (Mor.readLineage's coalesce) —
+    * so ids survive the rewrite's row reordering.
+    *
+    * `operation` is the changelog's only way to tell a
+    * content-preserving rewrite ("replace": compaction, binpack,
+    * pos-delete rewrite) from a content-CHANGING one ("delete"/
+    * "overwrite": DELETE WHERE dropping covered files, TRUNCATE, INSERT
+    * OVERWRITE, partition refresh). It rides in the published header,
+    * so a replace-shaped version is never visible without its marker;
+    * an unmarked one (a caller passing None) makes Mor.readChanges fail
+    * loudly — never a silent wrong answer.
     */
   def commitReplacing(root: String, ns: String, table: String,
       entries: Seq[ManifestEntry],
@@ -658,34 +656,15 @@ object TableIO {
     operation.foreach(op => require(ReplaceOperations(op),
       s"unknown replace operation marker '$op' " +
         s"(expected one of ${ReplaceOperations.mkString(", ")})"))
-    val dir = tableDir(root, ns, table)
     val v = currentVersion(root, ns, table)
     expectedVersion.filter(_ != v).foreach { e =>
       throw new java.util.ConcurrentModificationException(
         s"$ns.$table is at v$v but the rewrite was planned from v$e — re-plan")
     }
-    // rewritten files still get a fresh firstRowId (Iceberg v3 assigns
-    // one to every data file), but it is only the INHERITANCE fallback:
-    // compaction materializes each row's preserved _row_id as a physical
-    // column, which lineage reads prefer (Mor.readLineage's coalesce) —
-    // so ids survive the rewrite's row reordering. Entries the caller
-    // stamped (e.g. rollback republishing an old manifest) keep theirs.
-    val assigned = assignRowIds(root, ns, table, entries)
-    if (!tryPublish(dir, v + 1, assigned.map(entryToJson).mkString("\n")))
+    if (!publish(tableDir(root, ns, table), v, entries, keepBase = false,
+        operation))
       throw new java.util.ConcurrentModificationException(
         s"$ns.$table advanced past v$v during a replacing commit — re-plan")
-    advanceRowIdMark(root, ns, table, assigned)
-    // Operation sidecar — the changelog's only way to tell a
-    // content-preserving rewrite ("replace": compaction, binpack,
-    // pos-delete rewrite) from a content-CHANGING one ("delete"/
-    // "overwrite": DELETE WHERE dropping covered files, TRUNCATE,
-    // INSERT OVERWRITE, partition refresh). Same crash discipline as
-    // the rollback marker: written after the manifest publish, so a
-    // crash in between leaves an UNMARKED replace-shaped commit, which
-    // Mor.readChanges fails loudly on — never a silent wrong answer.
-    operation.foreach(op =>
-      atomicWrite(dir.resolve(s"manifest/v${v + 1}.op"), op))
-    atomicWrite(dir.resolve("version-hint.text"), (v + 1).toString)
     v + 1
   }
 
@@ -712,10 +691,8 @@ object TableIO {
   /** The property set `name` at the current (or a given) snapshot. */
   def readProps(root: String, ns: String, table: String, name: String,
       version: Option[Long] = None): Option[Map[String, Long]] = {
-    val entries = version
-      .map(v => readManifestAt(root, ns, table, v))
-      .getOrElse(readManifest(root, ns, table))
-    entries.find(e => e.content == PropsContent && e.path == s"props/$name")
+    snapshot(root, ns, table, version).entries
+      .find(e => e.content == PropsContent && e.path == s"props/$name")
       .map(_.bounds.map { case (k, (lo, _)) => k -> lo })
   }
 
@@ -726,34 +703,59 @@ object TableIO {
     */
   val ReplaceOperations: Set[String] = Set("replace", "delete", "overwrite")
 
+  /** The operation marker in a [[rollback]]'s header. */
+  val RollbackOperation = "rollback"
+
   /** The operation marker a replacing commit was stamped with, if any.
-    * None for append commits, pre-marker commits, and a commit whose
-    * writer crashed between the manifest publish and the sidecar write.
+    * None for append commits, rollbacks and unmarked replacing commits.
     */
   def replaceOperation(root: String, ns: String, table: String,
-      version: Long): Option[String] = {
-    val f = tableDir(root, ns, table).resolve(s"manifest/v$version.op")
-    if (!Files.isRegularFile(f)) None else Some(Files.readString(f).trim)
-  }
+      version: Long): Option[String] =
+    snapshot(root, ns, table, Some(version)).operation.filter(ReplaceOperations)
 
   def readManifest(root: String, ns: String, table: String): Seq[ManifestEntry] =
     readManifestAt(root, ns, table, currentVersion(root, ns, table))
 
-  /** The manifest as of a specific snapshot version (time travel). */
+  /** The manifest as of a specific snapshot version (time travel),
+    * without its commit header. */
   def readManifestAt(root: String, ns: String, table: String,
-      version: Long): Seq[ManifestEntry] = {
-    val dir = tableDir(root, ns, table)
-    val f = dir.resolve(s"manifest/v$version.json")
-    if (!Files.isRegularFile(f)) Seq.empty
-    else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map(entryFromJson)
+      version: Long): Seq[ManifestEntry] =
+    readVersion(tableDir(root, ns, table), version).entries
+
+  /** A published manifest version: its entries and its header's row-id
+    * mark and operation marker. */
+  private final case class Version(entries: Seq[ManifestEntry],
+      nextRowId: Long, operation: Option[String])
+
+  /** Version `v` of the manifest under `dir`, parsed once. A missing
+    * version reads as empty; a version without a header line (a
+    * hand-written manifest) as mark 0 and no operation.
+    */
+  private def readVersion(dir: Path, v: Long): Version = {
+    val f = dir.resolve(s"manifest/v$v.json")
+    val lines =
+      if (!Files.isRegularFile(f)) Nil
+      else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    lines.headOption.map(_.trim) match {
+      case Some(headerRe(mark, op)) =>
+        Version(lines.tail.map(entryFromJson), mark.toLong, Option(op))
+      case _ => Version(lines.map(entryFromJson), 0L, None)
+    }
   }
+
+  private def header(nextRowId: Long, operation: Option[String]): String =
+    s"""{"commit":{"next_row_id":$nextRowId""" +
+      operation.map(op => s""","operation":"$op"""").getOrElse("") + "}}"
+
+  private val headerRe =
+    """\{"commit":\{"next_row_id":(\d+)(?:,"operation":"([^"]*)")?\}\}""".r
 
   /** Next sequence number = snapshot ordinal (the reference commits one
     * snapshot per phase: data=1, pos-deletes=2, eq-deletes=3;
     * `main.rs:157-158, 212-213, 272-273`).
     */
   def nextSeq(root: String, ns: String, table: String): Long =
-    readManifest(root, ns, table).map(_.seq).maxOption.getOrElse(0L) + 1L
+    snapshot(root, ns, table).nextSeq
 
   /** Exact per-column [min, max] of long-typed columns — for callers
     * that can't derive bounds in closed form (one small agg job; a
@@ -914,16 +916,17 @@ object TableIO {
     */
   def snapshotsDf(spark: SparkSession, root: String, ns: String,
       table: String): DataFrame = {
-    val rows = (1L to currentVersion(root, ns, table)).map { v =>
-      val prev = readManifestAt(root, ns, table, v - 1)
-      val cur = readManifestAt(root, ns, table, v)
-      val prevKeys = prev.map(e => (e.path, e.content)).toSet
-      val curKeys = cur.map(e => (e.path, e.content)).toSet
-      val added = cur.filterNot(e => prevKeys((e.path, e.content)))
-      val op = if (prevKeys.exists(!curKeys(_))) "overwrite" else "append"
-      (v.toInt, op, added.size.toLong, added.map(_.recordCount).sum,
-        cur.size.toLong, cur.filter(_.content == "data").map(_.recordCount).sum)
-    }
+    val manifests = (0L to currentVersion(root, ns, table)).iterator
+      .map(readManifestAt(root, ns, table, _))
+    val rows = manifests.sliding(2).withPartial(false).zipWithIndex.map {
+      case (Seq(prev, cur), i) =>
+        val prevKeys = prev.map(e => (e.path, e.content)).toSet
+        val curKeys = cur.map(e => (e.path, e.content)).toSet
+        val added = cur.filterNot(e => prevKeys((e.path, e.content)))
+        val op = if (prevKeys.exists(!curKeys(_))) "overwrite" else "append"
+        (i + 1, op, added.size.toLong, added.map(_.recordCount).sum,
+          cur.size.toLong, cur.filter(_.content == "data").map(_.recordCount).sum)
+    }.toSeq
     import spark.implicits._
     rows.toDF("version", "operation", "added_files", "added_records",
       "total_files", "total_data_records")
@@ -1000,27 +1003,24 @@ object TableIO {
     // CAS on the version the rollback was decided against: a concurrent
     // append between decision and publish must fail the rollback (the
     // operator re-decides with the new commit in view), not be silently
-    // erased by republishing the old manifest over it.
-    val v = commitReplacing(root, ns, table,
-      readManifestAt(root, ns, table, toVersion),
-      expectedVersion = Some(cur))
-    // Sidecar marker: a rollback CHANGES logical content, but its
+    // erased by republishing the old manifest over it. The header marks
+    // the version as a rollback: it CHANGES logical content, but its
     // manifest is replace-shaped — indistinguishable from a
-    // content-preserving compaction. Changelog consumers (Ivm,
-    // replication, index refresh) must fail loudly crossing it instead
-    // of silently emitting nothing and diverging ([[Mor.readChanges]]
-    // checks the marker). Written after the manifest publish: a crash
-    // in between leaves the pre-marker behavior (silent skip), never a
-    // false rollback flag on someone else's commit.
-    atomicWrite(tableDir(root, ns, table).resolve(s"manifest/v$v.rollback"), "")
-    v
+    // content-preserving compaction — so changelog consumers (Ivm,
+    // replication, index refresh) fail loudly crossing it instead of
+    // silently emitting nothing and diverging ([[Mor.readChanges]]).
+    if (!publish(tableDir(root, ns, table), cur,
+        readManifestAt(root, ns, table, toVersion), keepBase = false,
+        Some(RollbackOperation)))
+      throw new java.util.ConcurrentModificationException(
+        s"$ns.$table advanced past v$cur during a rollback — re-decide")
+    cur + 1
   }
 
   /** Whether `version` was published by [[rollback]]. */
   def isRollback(root: String, ns: String, table: String,
       version: Long): Boolean =
-    Files.isRegularFile(
-      tableDir(root, ns, table).resolve(s"manifest/v$version.rollback"))
+    snapshot(root, ns, table, Some(version)).isRollback
 
   /** Whether `version`'s manifest file is still on disk. False for a
     * committed-then-expired snapshot ([[graft.plans.Maintenance

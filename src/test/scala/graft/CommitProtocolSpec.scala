@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.plans.{Dml, Maintenance, ManifestEntry, Mor, Pipeline, TableIO, Upsert}
 import graft.sources.{FileConfig, GenConfig}
@@ -76,29 +77,59 @@ class CommitProtocolSpec extends AnyFunSuite {
       })
     }
     ts.foreach(_.start()); gate.countDown(); ts.foreach(_.join())
-    import scala.jdk.CollectionConverters._
     val rs = results.iterator().asScala.toSeq
     assert(rs.count(_ == Right(1L)) == 1, s"results: $rs")
     assert(rs.count(_.isLeft) == 1, s"results: $rs")
     assert(TableIO.currentVersion(root, "ns", "t") == 1L)
 
-    // stale-mark scenario (ADVICE r13): a crashed writer left
-    // next-row-id.text behind its published manifest. The next
-    // expecting-append must still assign ids ABOVE the base manifest's
-    // high-water mark — non-overlap is a property of the commit's
-    // inputs, not of mark-write timing.
-    val dir = TableIO.tableDir(root, "ns", "t")
-    Files.writeString(dir.resolve("next-row-id.text"), "0")
+    // stale-mark scenario: a hand-written base manifest
+    // whose header mark lags its entries. The next expecting-append
+    // must still assign ids ABOVE the base manifest's high-water mark —
+    // non-overlap is a property of the commit's inputs, not of what the
+    // header claims.
+    val mdir = TableIO.tableDir(root, "ns", "t").resolve("manifest")
+    val entryLines = Files.readAllLines(mdir.resolve("v1.json")).asScala
+      .filterNot(_.startsWith("{\"commit\""))
+    Files.writeString(mdir.resolve("v2.json"),
+      ("{\"commit\":{\"next_row_id\":0}}" +: entryLines).mkString("\n"))
     assert(TableIO.commitAppendExpecting(root, "ns", "t",
       Seq(ManifestEntry("data/next.parquet", "data", 2L, 10L)),
-      expected = 1L) == Right(2L))
-    val ranges = TableIO.readManifest(root, "ns", "t")
+      expected = 2L) == Right(3L))
+    def ranges = TableIO.readManifest(root, "ns", "t")
       .flatMap(e => e.firstRowId.map(id => (id, id + e.recordCount)))
       .sortBy(_._1)
     assert(ranges.size == 2)
     ranges.sliding(2).foreach { case Seq((_, hiA), (loB, _)) =>
       assert(loB >= hiA, s"overlapping firstRowId ranges: $ranges")
     }
+    // and a base manifest with no header line at all
+    Files.writeString(mdir.resolve("v4.json"),
+      Files.readAllLines(mdir.resolve("v3.json")).asScala
+        .filterNot(_.startsWith("{\"commit\"")).mkString("\n"))
+    assert(TableIO.commitAppendExpecting(root, "ns", "t",
+      Seq(ManifestEntry("data/last.parquet", "data", 3L, 10L)),
+      expected = 4L) == Right(5L))
+    assert(ranges.size == 3)
+    ranges.sliding(2).foreach { case Seq((_, hiA), (loB, _)) =>
+      assert(loB >= hiA, s"overlapping firstRowId ranges: $ranges")
+    }
+  }
+
+  test("an append after a rollback to v1 assigns ids above the " +
+      "pre-rollback mark") {
+    val root = newTable()
+    Seq("a", "b", "c").foreach(n => TableIO.commit(root, "ns", "t",
+      Seq(ManifestEntry(s"data/$n.parquet", "data", 1L, 10L))))
+    val mark = TableIO.readManifest(root, "ns", "t")
+      .flatMap(e => e.firstRowId.map(_ + e.recordCount)).max
+    assert(mark == 30L)
+    TableIO.rollback(root, "ns", "t", 1L)
+    TableIO.commit(root, "ns", "t",
+      Seq(ManifestEntry("data/d.parquet", "data", 2L, 10L)))
+    val ids = TableIO.readManifest(root, "ns", "t")
+      .map(e => e.path -> e.firstRowId).toMap
+    assert(ids == Map("data/a.parquet" -> Some(0L),
+      "data/d.parquet" -> Some(mark)))
   }
 
   test("replacing commit refuses when the base snapshot moved") {
