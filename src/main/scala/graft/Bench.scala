@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 object Bench {
   /** A query exceeding this gets one rerun; min is recorded. Every
@@ -72,19 +71,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // q_map_fns outputs map columns; allow them in the checksum hash
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      // event-time queries cast TIMESTAMP_NTZ through the session zone
-      // (Util.normalizeEventsTs) — an unpinned zone makes the bench
-      // checksums host-timezone-dependent (ADVICE r8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed session warm-up: JVM/JIT/codegen/scheduler spin-up was
     // previously absorbed by whichever query ran first alphabetically

@@ -174,7 +174,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       changes: TableChange*): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val (ns, t) = (ident.namespace()(0), ident.name)
-    val spark = SparkSession.active
     changes.foreach {
       case add: TableChange.AddColumn =>
         require(add.fieldNames.length == 1, "nested adds not supported")
@@ -183,10 +182,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
             add.fieldNames()(0), add.dataType, nullable = true))
       case rn: TableChange.RenameColumn =>
         require(rn.fieldNames.length == 1, "nested renames not supported")
-        TableIO.renameColumn(spark, root, ns, t, rn.fieldNames()(0), rn.newName)
+        TableIO.renameColumn(root, ns, t, rn.fieldNames()(0), rn.newName)
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames.length == 1, "nested drops not supported")
-        TableIO.dropColumn(spark, root, ns, t, del.fieldNames()(0))
+        TableIO.dropColumn(root, ns, t, del.fieldNames()(0))
       case up: TableChange.UpdateColumnType =>
         // ALTER COLUMN ... TYPE — Iceberg v3 promotion, metadata only
         require(up.fieldNames.length == 1, "nested type updates not supported")

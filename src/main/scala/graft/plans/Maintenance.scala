@@ -174,8 +174,7 @@ object Maintenance {
     val specs = Partitioning.readSpecs(root, ns, table)
     val scopable = specs.size == 1 &&
       !manifest.exists(_.content == "pos_delete") &&
-      eq.forall(e => TableIO.equalityColumns(spark, snap, e)
-        .contains(specs.head.column)) &&
+      eq.forall(TableIO.equalityColumns(snap, _).contains(specs.head.column)) &&
       manifest.filter(_.content == "data")
         .forall(_.bounds.contains(specs.head.fieldName))
     if (!scopable) return compact(spark, root, ns, table)

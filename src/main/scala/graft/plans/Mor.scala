@@ -206,7 +206,7 @@ object Mor {
       else Seq(DeleteGroup(
         readDeletes(spark, snap.dir, pos, PosDeleteSchema, uriFor), Nil, pos))
     val eqGroups = entries.filter(_.content == "eq_delete")
-      .groupBy(e => TableIO.equalityColumns(spark, snap, e, uriFor))
+      .groupBy(TableIO.equalityColumns(snap, _))
       .toSeq.sortBy(_._1.mkString(","))
       .map { case (keys, files) =>
         DeleteGroup(readDeletes(spark, snap.dir, files, snap.keySchema(keys),
@@ -267,8 +267,9 @@ object Mor {
   /** The merged view of an already-loaded snapshot, for a caller that
     * decides something from the same snapshot before reading it.
     */
-  private[plans] def readSnapshot(spark: SparkSession, snap: Snapshot): DataFrame =
-    view(spark, snap, liveData(snap))
+  private[plans] def readSnapshot(spark: SparkSession, snap: Snapshot,
+      keepProvenance: Boolean = false): DataFrame =
+    view(spark, snap, liveData(snap), keepProvenance = keepProvenance)
 
   /** `snap`'s merged view over the data files `data`: the one
     * delete-application path behind [[read]], [[readAt]],
@@ -597,7 +598,7 @@ object Mor {
             val named =
               if (groups.exists(!_.positional)) None
               else Some(added.filter(_.content == "pos_delete")
-                .flatMap(TableIO.referencedFiles(spark, prevSnap, _)).toSet)
+                .flatMap(_.referencedFiles).toSet)
             val targetPaths =
               if (dropped.isEmpty) named
               else Some(named.fold(keptPrevData)(_.intersect(keptPrevData)))

@@ -40,7 +40,7 @@ import org.apache.spark.sql.types.StructField
   *
   * Expression handoff: the analyzer resolves the statement's
   * expressions against the command's own relations; execution re-reads
-  * the table through [[Mor.read]] (a fresh plan with fresh attribute
+  * one pinned snapshot of the table (a fresh plan with fresh attribute
   * ids), so resolved attribute references are re-bound BY NAME to
   * aliased sides (`__t` = target, `__s` = source) before use — the
   * names are exact because they come from the resolved attributes
@@ -101,15 +101,21 @@ object SqlRowLevel {
         .as(f.name)
     }
 
-  /** One atomic MOR commit: sorted pos-delete file for the dying rows +
-    * data file for the replacement/new rows, same sequence number.
+  /** One atomic MOR commit onto `snap`, the snapshot the statement read:
+    * sorted pos-delete file for the dying rows + data file for the
+    * replacement/new rows, at `snap`'s next sequence number. The
+    * position deletes name `snap`'s files, so the commit lands only as
+    * the version right after it; a commit in between (say a compaction
+    * that rewrote those files) makes this delete its files and throw
+    * `ConcurrentModificationException`.
     */
   private def commitRowLevel(spark: SparkSession, root: String, ns: String,
-      tbl: String, dels: DataFrame, newData: DataFrame): Unit = {
+      tbl: String, snap: Snapshot, dels: DataFrame,
+      newData: DataFrame): Unit = {
     val nDel = dels.count()
     val nNew = newData.count()
     if (nDel == 0 && nNew == 0) return
-    val seq = TableIO.nextSeq(root, ns, tbl)
+    val seq = snap.nextSeq
     val unique = java.util.UUID.randomUUID().toString.take(8)
     val entries = Seq.newBuilder[ManifestEntry]
     if (nDel > 0)
@@ -121,14 +127,21 @@ object SqlRowLevel {
       entries += TableIO.writeExactFile(spark, root, ns, tbl,
         f"data/sqlrl-$seq%05d-$unique.parquet", newData, "data", seq,
         recordCount = nNew)
-    TableIO.commit(root, ns, tbl, entries.result())
+    val written = entries.result()
+    TableIO.commitAppendExpecting(root, ns, tbl, written, snap.version)
+      .left.foreach { cur =>
+        written.foreach(e => java.nio.file.Files.delete(snap.dir.resolve(e.path)))
+        throw new java.util.ConcurrentModificationException(
+          s"$ns.$tbl advanced from v${snap.version} to v$cur while the " +
+            "statement ran: re-run it")
+      }
   }
 
   private[plans] def runMerge(spark: SparkSession,
       c: GraftMergeCommand): Unit = {
-    val fields = TableIO.readSchema(c.root, c.ns, c.tbl).fields.toSeq
-    val t = Mor.read(spark, c.root, c.ns, c.tbl, keepProvenance = true)
-      .alias("__t")
+    val snap = TableIO.snapshot(c.root, c.ns, c.tbl)
+    val fields = snap.schema.fields.toSeq
+    val t = Mor.readSnapshot(spark, snap, keepProvenance = true).alias("__t")
     val s = Bridge.ofRows(spark, c.source).alias("__s")
     val on = rebind(c.cond, c.tNames, c.sNames)
     val delPieces = Seq.newBuilder[DataFrame]
@@ -196,7 +209,7 @@ object SqlRowLevel {
             nullable = false),
           StructField("pos", org.apache.spark.sql.types.LongType,
             nullable = false))))
-      commitRowLevel(spark, c.root, c.ns, c.tbl,
+      commitRowLevel(spark, c.root, c.ns, c.tbl, snap,
         dels.reduceOption(_ unionByName _).getOrElse(emptyDel),
         data.reduceOption(_ unionByName _).getOrElse(
           emptyDel.limit(0).select(fields.map(f =>
@@ -206,13 +219,13 @@ object SqlRowLevel {
 
   private[plans] def runUpdate(spark: SparkSession,
       c: GraftUpdateCommand): Unit = {
-    val fields = TableIO.readSchema(c.root, c.ns, c.tbl).fields.toSeq
-    val t = Mor.read(spark, c.root, c.ns, c.tbl, keepProvenance = true)
-      .alias("__t")
+    val snap = TableIO.snapshot(c.root, c.ns, c.tbl)
+    val fields = snap.schema.fields.toSeq
+    val t = Mor.readSnapshot(spark, snap, keepProvenance = true).alias("__t")
     graft.CacheScope.scoped { cache =>
       val af = cache(t.filter(c.cond.map(rebind(_, c.tNames, Map.empty))
         .getOrElse(lit(true))))
-      commitRowLevel(spark, c.root, c.ns, c.tbl,
+      commitRowLevel(spark, c.root, c.ns, c.tbl, snap,
         af.select(col("__t._file").as("file_path"), col("__t._pos").as("pos")),
         af.select(actionRow(fields, assignMap(c.assignments, c.tNames),
           c.tNames, Map.empty, fromTarget = true): _*))
@@ -221,12 +234,12 @@ object SqlRowLevel {
 
   private[plans] def runDelete(spark: SparkSession,
       c: GraftDeleteCommand): Unit = {
-    val t = Mor.read(spark, c.root, c.ns, c.tbl, keepProvenance = true)
-      .alias("__t")
+    val snap = TableIO.snapshot(c.root, c.ns, c.tbl)
+    val t = Mor.readSnapshot(spark, snap, keepProvenance = true).alias("__t")
     val af = t.filter(rebind(c.cond, c.tNames, Map.empty))
-    val fields = TableIO.readSchema(c.root, c.ns, c.tbl).fields.toSeq
+    val fields = snap.schema.fields.toSeq
     val empty = af.limit(0).select(fields.map(f => col(f.name)): _*)
-    commitRowLevel(spark, c.root, c.ns, c.tbl,
+    commitRowLevel(spark, c.root, c.ns, c.tbl, snap,
       af.select(col("__t._file").as("file_path"), col("__t._pos").as("pos")),
       empty)
   }

@@ -31,14 +31,13 @@ final case class ManifestEntry(
     // and on manifests written before lineage existed.
     firstRowId: Option[Long] = None,
     // Iceberg `equality_ids`: the table field ids an equality-delete
-    // file's rows match on, in the file's column order. Empty on every
-    // other content type and on eq-delete entries written before the
-    // field existed (see [[TableIO.equalityColumns]]).
+    // file's rows match on, in the file's column order
+    // ([[TableIO.equalityColumns]]). Required on every eq-delete entry,
+    // empty on every other content type.
     equalityIds: Seq[Long] = Nil,
     // Iceberg `referenced_data_file`, as a list: the data files a
-    // position-delete file's rows name, sorted. Empty on every other
-    // content type and on position-delete entries written before the
-    // field existed (see [[TableIO.referencedFiles]]).
+    // position-delete file's rows name, sorted. Required on every
+    // position-delete entry with rows, empty on every other entry.
     referencedFiles: Seq[String] = Nil
 ) {
   /** Can this file contain rows with `column` in [qlo, qhi]? */
@@ -112,8 +111,8 @@ object Bloom {
   * set of a MOR read comes from the same value, so a commit landing
   * while the read is built cannot pair one version's data files with
   * another's deletes. `nextRowId` is the row-id high-water mark the
-  * version's header records (0 for a version without a header);
-  * `operation` is the header's operation marker: a
+  * version's header records (0 for a missing version); `operation` is
+  * the header's operation marker: a
   * [[TableIO.ReplaceOperations]] member on a marked replacing commit,
   * [[TableIO.RollbackOperation]] on a rollback, None otherwise.
   */
@@ -376,14 +375,14 @@ object TableIO {
     * Renaming a column that live equality-delete files use as an
     * identifier is rejected — their application joins by name.
     */
-  def renameColumn(spark: SparkSession, root: String, ns: String,
+  def renameColumn(root: String, ns: String,
       table: String, oldName: String, newName: String): StructType = {
     val cur = readSchema(root, ns, table)
     require(cur.fieldNames.contains(oldName), s"no column $oldName")
     require(!cur.fieldNames.contains(newName), s"column $newName exists")
     require(cur.fields.forall(_.metadata.contains(FieldIdKey)),
       s"$ns.$table predates field ids; rename requires id-based resolution")
-    require(!liveEqualityColumns(spark, root, ns, table).contains(oldName),
+    require(!liveEqualityColumns(root, ns, table).contains(oldName),
       s"column $oldName is an identifier of live equality-delete files")
     val evolved = StructType(cur.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
@@ -394,12 +393,12 @@ object TableIO {
   /** Drop a column without rewriting files (old files' extra column is
     * simply not projected). Same identifier guard as rename.
     */
-  def dropColumn(spark: SparkSession, root: String, ns: String,
+  def dropColumn(root: String, ns: String,
       table: String, name: String): StructType = {
     val cur = readSchema(root, ns, table)
     require(cur.fieldNames.contains(name), s"no column $name")
     require(cur.fields.length > 1, "cannot drop the last column")
-    require(!liveEqualityColumns(spark, root, ns, table).contains(name),
+    require(!liveEqualityColumns(root, ns, table).contains(name),
       s"column $name is an identifier of live equality-delete files")
     val evolved = StructType(cur.fields.filterNot(_.name == name))
     atomicWrite(tableDir(root, ns, table).resolve("schema.json"), evolved.json)
@@ -407,10 +406,10 @@ object TableIO {
   }
 
   /** Identifier columns of the current snapshot's equality deletes. */
-  private def liveEqualityColumns(spark: SparkSession, root: String,
-      ns: String, table: String): Set[String] = {
+  private def liveEqualityColumns(root: String, ns: String,
+      table: String): Set[String] = {
     val snap = snapshot(root, ns, table)
-    snap.files("eq_delete").flatMap(e => equalityColumns(spark, snap, e)).toSet
+    snap.files("eq_delete").flatMap(equalityColumns(snap, _)).toSet
   }
 
   /** The snapshot at `version` (the current one when None): one version
@@ -429,32 +428,14 @@ object TableIO {
     if (f.metadata.contains(FieldIdKey)) Some(f.metadata.getLong(FieldIdKey))
     else None
 
-  /** The identifier columns of an equality-delete entry, named by the
-    * snapshot's schema through the entry's recorded `equalityIds`. An
-    * entry without them (written before the field existed, or to a
-    * table without field ids) falls back to the column names in the
-    * file's parquet footer, read on the driver: no Spark job either way.
-    * `uriFor` maps the file's absolute path to the URI the footer is
-    * read through (see [[Mor.read]]).
+  /** The identifier columns of an equality-delete entry: its recorded
+    * `equalityIds`, named by the snapshot's schema. No file is read.
     */
-  def equalityColumns(spark: SparkSession, snap: Snapshot, e: ManifestEntry,
-      uriFor: String => String = identity): Seq[String] = {
+  def equalityColumns(snap: Snapshot, e: ManifestEntry): Seq[String] = {
     val byId = snap.schema.fields.flatMap(f => fieldId(f).map(_ -> f.name)).toMap
-    if (e.equalityIds.nonEmpty && e.equalityIds.forall(byId.contains))
-      e.equalityIds.map(byId)
-    else footer(spark, uriFor(snap.dir.resolve(e.path).toString))
-      .getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+    e.equalityIds.map(id => byId.getOrElse(id, throw new IllegalStateException(
+      s"${e.path}: equality id $id names no field of the table schema")))
   }
-
-  /** The data files a position-delete entry's rows name: its recorded
-    * `referencedFiles`, or, for an entry written before the field
-    * existed, the distinct `file_path` values of the file itself, read
-    * on the driver: no Spark job either way.
-    */
-  def referencedFiles(spark: SparkSession, snap: Snapshot,
-      e: ManifestEntry): Seq[String] =
-    if (e.referencedFiles.nonEmpty || e.recordCount == 0) e.referencedFiles
-    else filePathsOf(spark, snap.dir.resolve(e.path).toString)
 
   /** The sorted distinct non-null `file_path` values of a position-delete
     * file, decoded on the driver one row group at a time. */
@@ -728,18 +709,24 @@ object TableIO {
       nextRowId: Long, operation: Option[String])
 
   /** Version `v` of the manifest under `dir`, parsed once. A missing
-    * version reads as empty; a version without a header line (a
-    * hand-written manifest) as mark 0 and no operation.
+    * version reads as empty; a version without a header line, or with a
+    * line [[entryFromJson]] refuses, fails naming the file.
     */
   private def readVersion(dir: Path, v: Long): Version = {
     val f = dir.resolve(s"manifest/v$v.json")
     val lines =
       if (!Files.isRegularFile(f)) Nil
       else Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    def entry(line: String): ManifestEntry =
+      try entryFromJson(line)
+      catch { case bad: IllegalArgumentException =>
+        throw new IllegalStateException(s"$f: ${bad.getMessage}", bad) }
     lines.headOption.map(_.trim) match {
       case Some(headerRe(mark, op)) =>
-        Version(lines.tail.map(entryFromJson), mark.toLong, Option(op))
-      case _ => Version(lines.map(entryFromJson), 0L, None)
+        Version(lines.tail.map(entry), mark.toLong, Option(op))
+      case None => Version(Nil, 0L, None)
+      case Some(other) => throw new IllegalStateException(
+        s"$f: first line is not a commit header: $other")
     }
   }
 
@@ -846,10 +833,12 @@ object TableIO {
         df.repartition(1).sortWithinPartitions("file_path", "pos")
       else schema.filter(_ => content == "data")
         .fold(df)(alignFieldIds(df, _))
-    val equalityIds = schema.filter(_ => content == "eq_delete").toSeq
-      .flatMap { s =>
-        val ids = df.columns.toSeq.map(c => s.find(_.name == c).flatMap(fieldId))
-        if (ids.forall(_.isDefined)) ids.flatten else Nil
+    val equalityIds =
+      if (content != "eq_delete") Nil
+      else df.columns.toSeq.map { c =>
+        schema.flatMap(_.find(_.name == c)).flatMap(fieldId).getOrElse(
+          throw new IllegalArgumentException(s"$ns.$table: equality-delete " +
+            s"column $c has no table field id to record in $relPath"))
       }
     try {
       out.coalesce(1).write.mode("overwrite")
@@ -1070,8 +1059,14 @@ object TableIO {
   private val quotedRe = """"([^"]*)"""".r
   private val bloomRe = """"([^"]+)":"([^"]*)"""".r
 
+  /** One manifest line as graft writes it. An eq-delete line without
+    * `equality_ids`, or a position-delete line with rows and without
+    * `referenced_data_files`, is refused as a bad line: no graft writer
+    * produces either. */
   private[plans] def entryFromJson(line: String): ManifestEntry = line.trim match {
-    case entryRe(p, c, s, n, frid, eqIds, refs, b, bl) =>
+    case entryRe(p, c, s, n, frid, eqIds, refs, b, bl)
+        if (c != "eq_delete" || Option(eqIds).exists(_.nonEmpty)) &&
+          (c != "pos_delete" || n.toLong == 0 || refs != null) =>
       val bounds = Option(b).map { body =>
         boundRe.findAllMatchIn(body).map { m =>
           m.group(1) -> (m.group(2).toLong, m.group(3).toLong)

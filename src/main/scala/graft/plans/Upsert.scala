@@ -36,13 +36,26 @@ object Upsert {
     val schema = TableIO.readSchema(root, ns, table)
     require(keyCols.forall(schema.fieldNames.contains),
       s"key columns ${keyCols.mkString(",")} not all in table schema")
-    val seq = TableIO.nextSeq(root, ns, table)
+    // the files are this call's own (a sequence number repeats after a
+    // rollback and between concurrent calls, and a file an older version
+    // names must never be overwritten); the sequence lives only in the
+    // manifest, so it is stamped per attempt and a retry rewrites nothing
+    val unique = java.util.UUID.randomUUID().toString.take(8)
     val delete = TableIO.writeExactFile(spark, root, ns, table,
-      f"deletes/upsert_eq-$seq%05d.parquet",
-      df.select(keyCols.head, keyCols.tail: _*), "eq_delete", seq)
+      s"deletes/upsert_eq-$unique.parquet",
+      df.select(keyCols.head, keyCols.tail: _*), "eq_delete", seq = 0L)
     val data = TableIO.writeExactFile(spark, root, ns, table,
-      f"data/upsert-$seq%05d.parquet", df, "data", seq,
+      s"data/upsert-$unique.parquet", df, "data", seq = 0L,
       bounds = TableIO.longBounds(df, statsCols))
-    TableIO.commit(root, ns, table, Seq(delete, data))
+    @annotation.tailrec
+    def publish(): Long = {
+      val snap = TableIO.snapshot(root, ns, table)
+      TableIO.commitAppendExpecting(root, ns, table,
+          Seq(delete, data).map(_.copy(seq = snap.nextSeq)), snap.version) match {
+        case Right(v) => v
+        case Left(_) => publish()
+      }
+    }
+    publish()
   }
 }

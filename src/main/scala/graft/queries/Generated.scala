@@ -642,7 +642,7 @@ object Generated {
         TableIO.commit(root, ns2, t2, Seq(TableIO.writeExactFile(s, root,
           ns2, t2, "data/part-00000.parquet", df1, "data", 1L,
           recordCount = 1000L)))
-        TableIO.renameColumn(s, root, ns2, t2, "foo", "label")
+        TableIO.renameColumn(root, ns2, t2, "foo", "label")
         val df2 = s.range(1000, 2000).select(
           col("id").cast("string").as("label"),
           col("id").cast("int").as("bar"), lit(true).as("baz"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import graft.plans.{Mor, Pipeline}
 import graft.sources.GenConfig
 
@@ -42,13 +41,8 @@ object Cli {
       case None => GenConfig.reference
     }
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false")
+    val builder = graft.LocalSession.builder()
+    val spark = sys.env.get("SPARK_MASTER").fold(builder)(builder.master)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,14 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke for the driver's t1 gate: SparkEntry.entry rows > 0. */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val s = graft.LocalSession.builder().getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     val df = graft.SparkEntry.entry(s)
     println("ENTRY_ROWS=" + df.count())

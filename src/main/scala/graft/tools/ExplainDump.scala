@@ -50,9 +50,8 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "/root/repo/PLANS.md"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // fixed 8 cores: the dumped plans name partition counts
+    val spark = graft.LocalSession.builder(cores = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val names = headline
     runDump(spark, sfDir, out, names)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev helper: run one named query (or a comma list) and dump results +
   * oracle SQL, for fast iteration with tools/check_oracle.py.
   * Args: <sfDir> <outDir> <name>[,<name>...] [--explain]
@@ -10,14 +8,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, names, rest @ _*) = args
     val explain = rest.contains("--explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val wantedList = names.split(',').toSeq // duplicates = warm re-runs
@@ -32,16 +23,7 @@ object RunOne {
       graft.CacheScope.drain()
       println(f"[runone] $name ok in ${(System.nanoTime() - t0) / 1e9}%.2fs")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case '\r' => "\\r"; case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql.filter(kv => wanted(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
+    graft.Verify.writeOracleSql(outDir, wanted)
     spark.stop()
   }
 }

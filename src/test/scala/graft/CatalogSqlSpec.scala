@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.plans.{Pipeline, TableIO}
+import graft.plans.{Maintenance, Pipeline, TableIO}
 import graft.sources.{FileConfig, GenConfig}
 
 /** The SQL front door: DDL/DML/queries against the governed tables
@@ -147,6 +147,37 @@ class CatalogSqlSpec extends AnyFunSuite {
       "SELECT count(*), count(DISTINCT bar), sum(bar) FROM g.racens.t").head()
     assert(r.getLong(0) == 120L && r.getLong(1) == 120L &&
       r.getLong(2) == (0 until 120).sum)
+  }
+
+  test("an UPDATE racing a compaction fails instead of keeping both rows") {
+    root
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.uracens")
+    spark.sql("CREATE TABLE g.uracens.t (foo STRING, bar INT, baz BOOLEAN)")
+    Seq(0, 50).foreach(lo => spark.sql(
+      s"""INSERT INTO g.uracens.t
+         |SELECT CAST(id AS STRING), CAST(id AS INT), true
+         |FROM range($lo, ${lo + 50})""".stripMargin))
+    spark.udf.register("update_race_gate", (bar: Int) => UpdateRaceGate.pass(bar))
+    var outcome: scala.util.Try[Unit] = null
+    val update = new Thread(() => outcome = scala.util.Try(spark.sql(
+      "UPDATE g.uracens.t SET foo = 'u' WHERE update_race_gate(bar)")))
+    update.start()
+    // the UPDATE has planned and is scanning: rewrite its files now
+    assert(UpdateRaceGate.reached.await(120, java.util.concurrent.TimeUnit.SECONDS))
+    Maintenance.compact(spark, root, "uracens", "t", targetFileCount = 1)
+    UpdateRaceGate.release.countDown()
+    update.join()
+    val lost = Iterator.iterate(outcome.failed.toOption.orNull)(_.getCause)
+      .takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException])
+    assert(lost, s"UPDATE outcome: $outcome")
+    val r = spark.sql("SELECT count(*), count(DISTINCT bar), " +
+      "sum(CASE WHEN foo = 'u' THEN 1 ELSE 0 END) FROM g.uracens.t").head()
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) == ((100L, 100L, 0L)))
+    // the losing statement's files are gone again
+    val dir = TableIO.tableDir(root, "uracens", "t")
+    assert(Seq("data", "deletes").flatMap(d => Option(dir.resolve(d).toFile.list())
+      .toSeq.flatten).forall(!_.startsWith("sqlrl")))
   }
 
   test("SQL reads apply MOR deletes on tables with delete files") {
@@ -519,5 +550,21 @@ class CatalogSqlSpec extends AnyFunSuite {
       "SELECT count(*), sum(CASE WHEN _row_id = bar THEN 1 ELSE 0 END) " +
         "FROM g.tt_ns.`t$lineage`").head()
     assert(lin.getLong(0) == 100L && lin.getLong(1) == 100L)
+  }
+}
+
+/** Holds the first row a racing UPDATE's predicate sees until the test
+  * releases it, so a commit can land between its read and its commit. */
+private object UpdateRaceGate {
+  val reached = new java.util.concurrent.CountDownLatch(1)
+  val release = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+
+  def pass(bar: Int): Boolean = {
+    if (first.getAndSet(false)) {
+      reached.countDown()
+      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
+    bar < 10
   }
 }

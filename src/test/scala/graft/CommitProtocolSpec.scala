@@ -102,17 +102,17 @@ class CommitProtocolSpec extends AnyFunSuite {
     ranges.sliding(2).foreach { case Seq((_, hiA), (loB, _)) =>
       assert(loB >= hiA, s"overlapping firstRowId ranges: $ranges")
     }
-    // and a base manifest with no header line at all
+    // and a base manifest with no header line at all is refused
     Files.writeString(mdir.resolve("v4.json"),
       Files.readAllLines(mdir.resolve("v3.json")).asScala
         .filterNot(_.startsWith("{\"commit\"")).mkString("\n"))
-    assert(TableIO.commitAppendExpecting(root, "ns", "t",
-      Seq(ManifestEntry("data/last.parquet", "data", 3L, 10L)),
-      expected = 4L) == Right(5L))
-    assert(ranges.size == 3)
-    ranges.sliding(2).foreach { case Seq((_, hiA), (loB, _)) =>
-      assert(loB >= hiA, s"overlapping firstRowId ranges: $ranges")
-    }
+    val err = intercept[IllegalStateException](
+      TableIO.commitAppendExpecting(root, "ns", "t",
+        Seq(ManifestEntry("data/last.parquet", "data", 3L, 10L)),
+        expected = 4L))
+    assert(err.getMessage.contains("manifest/v4.json") &&
+      err.getMessage.contains("not a commit header"), err.toString)
+    assert(TableIO.currentVersion(root, "ns", "t") == 4L)
   }
 
   test("an append after a rollback to v1 assigns ids above the " +

@@ -30,7 +30,7 @@ class FieldIdSpec extends AnyFunSuite {
     val (root, ns, t) = freshTable()
     val p = TableIO.tableDir(root, ns, t).resolve("data/part-00000.parquet")
     val mtime = java.nio.file.Files.getLastModifiedTime(p)
-    TableIO.renameColumn(spark, root, ns, t, "foo", "label")
+    TableIO.renameColumn(root, ns, t, "foo", "label")
     val df = Mor.read(spark, root, ns, t)
     assert(df.columns.toSeq == Seq("label", "bar", "baz"))
     // the crux: values resolved BY ID from the pre-rename file
@@ -39,16 +39,16 @@ class FieldIdSpec extends AnyFunSuite {
     assert(java.nio.file.Files.getLastModifiedTime(p) == mtime)
     // guards: duplicate/missing names
     intercept[IllegalArgumentException] {
-      TableIO.renameColumn(spark, root, ns, t, "bar", "label")
+      TableIO.renameColumn(root, ns, t, "bar", "label")
     }
     intercept[IllegalArgumentException] {
-      TableIO.renameColumn(spark, root, ns, t, "nope", "x")
+      TableIO.renameColumn(root, ns, t, "nope", "x")
     }
   }
 
   test("drop + re-add the same name never resurrects old values") {
     val (root, ns, t) = freshTable()
-    TableIO.dropColumn(spark, root, ns, t, "baz")
+    TableIO.dropColumn(root, ns, t, "baz")
     assert(Mor.read(spark, root, ns, t).columns.toSeq == Seq("foo", "bar"))
     // re-added name gets a FRESH id: the old file's baz (id 3) must
     // NOT come back — Iceberg id semantics
@@ -65,13 +65,13 @@ class FieldIdSpec extends AnyFunSuite {
     Pipeline.prepare(spark, root, cfg)
     val (ns, t) = (cfg.namespace, cfg.tableName)
     intercept[IllegalArgumentException] {
-      TableIO.renameColumn(spark, root, ns, t, "foo", "label")
+      TableIO.renameColumn(root, ns, t, "foo", "label")
     }
     intercept[IllegalArgumentException] {
-      TableIO.dropColumn(spark, root, ns, t, "bar")
+      TableIO.dropColumn(root, ns, t, "bar")
     }
     // baz is no identifier: rename allowed, MOR still fully gated
-    TableIO.renameColumn(spark, root, ns, t, "baz", "flag")
+    TableIO.renameColumn(root, ns, t, "baz", "flag")
     val df = Mor.read(spark, root, ns, t)
     assert(df.columns.toSeq == Seq("foo", "bar", "flag"))
     assert(df.count() == cfg.expectedSurvivingRows)

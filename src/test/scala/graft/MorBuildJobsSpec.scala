@@ -198,8 +198,7 @@ class MorBuildJobsSpec extends AnyFunSuite {
     budget("position and equality deletes", 2)
   }
 
-  test("a legacy manifest without equality_ids reads the same rows with " +
-    "no Spark job") {
+  test("a manifest line without equality_ids is refused, naming its manifest") {
     val root = Files.createTempDirectory("graft-morlegacy-").toString
     Pipeline.prepareBulkData(spark, root, GenConfig("ns", "t",
       FileConfig(Rpf, 20), FileConfig(0, 0), FileConfig(0, 0)))
@@ -208,17 +207,17 @@ class MorBuildJobsSpec extends AnyFunSuite {
     val mdir = TableIO.tableDir(root, "ns", "t").resolve("manifest")
     val current = Files.readString(mdir.resolve(s"v$v.json"))
     assert(current.contains("\"equality_ids\":[2]"))
-    // the same entries as a writer predating the field would publish them
+    // the same entries with their identifier ids stripped by hand
     Files.writeString(mdir.resolve(s"v${v + 1}.json"),
       current.replace(",\"equality_ids\":[2]", ""))
-    val legacy = TableIO.readManifest(root, "ns", "t")
-      .filter(_.content == "eq_delete")
-    assert(legacy.size == 3 && legacy.forall(_.equalityIds.isEmpty))
-    val expect = reference(root, v)
-    assert(expect.size == 20 * Rpf - 3)
-    assert(rows(zeroJobs("legacy read")(Mor.read(spark, root, "ns", "t"))) == expect)
-    assert(rows(zeroJobs("legacy readLineage")(
-      Mor.readLineage(spark, root, "ns", "t"))) == expect)
+    Seq[(String, () => Any)](
+      "readManifest" -> (() => TableIO.readManifest(root, "ns", "t")),
+      "read" -> (() => Mor.read(spark, root, "ns", "t"))).foreach {
+      case (label, f) =>
+        val err = intercept[IllegalStateException](f())
+        assert(err.getMessage.contains(s"manifest/v${v + 1}.json") &&
+          err.getMessage.contains("bad manifest line"), s"$label: $err")
+    }
   }
 
   /** The table-relative data files the scans of `df`'s plan read. */
@@ -231,8 +230,7 @@ class MorBuildJobsSpec extends AnyFunSuite {
     }.flatten.map(_.split('/').takeRight(2).mkString("/"))
       .filter(_.startsWith("data/")).toSet
 
-  test("a position-only commit's changelog scans only the data files its " +
-    "deletes name, also for a legacy entry") {
+  test("a pos-only commit's changelog scans only the data files its deletes name") {
     val root = Files.createTempDirectory("graft-morposnamed-").toString
     Pipeline.prepareBulkData(spark, root, GenConfig("ns", "t",
       FileConfig(Rpf, Files0), FileConfig(0, 0), FileConfig(0, 0)))
@@ -259,14 +257,16 @@ class MorBuildJobsSpec extends AnyFunSuite {
       assert(changes.count() == 4L, label)
     }
     check("recorded")
-    // the same entry as a writer predating the field would publish it
+    // the same entry with its named files stripped by hand is refused
     val mfile = TableIO.tableDir(root, "ns", "t").resolve(s"manifest/v$v.json")
     val current = Files.readString(mfile)
     val recorded = named.map(p => s"\"$p\"").mkString(",\"referenced_data_files\":[", ",", "]")
     assert(current.contains(recorded))
     Files.writeString(mfile, current.replace(recorded, ""))
-    assert(TableIO.readManifest(root, "ns", "t").forall(_.referencedFiles.isEmpty))
-    check("legacy")
+    val err = intercept[IllegalStateException](
+      Mor.readChanges(spark, root, "ns", "t", from, v))
+    assert(err.getMessage.contains(s"manifest/v$v.json") &&
+      err.getMessage.contains("bad manifest line"), err.toString)
   }
 
   test("widening an identifier column keeps its live equality deletes") {

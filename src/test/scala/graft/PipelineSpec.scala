@@ -8,13 +8,7 @@ import graft.sources.{FileConfig, FixSchemaGen, GenConfig}
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = LocalSession.builder(cores = 4).getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

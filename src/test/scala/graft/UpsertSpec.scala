@@ -63,4 +63,16 @@ class UpsertSpec extends AnyFunSuite {
     val after = Mor.read(spark, root, "ns", "t").collect()
     assert(after.count(!_.getBoolean(2)) == 50)
   }
+
+  test("an upsert after a rollback leaves the rolled-back version readable") {
+    val root = mkTable()
+    val v = up(root, 0, 10, "a")
+    val first = Mor.readAt(spark, root, "ns", "t", v).orderBy("bar").collect()
+    assert(first.count(!_.getBoolean(2)) == 10)
+    // the next upsert plans at the same sequence number as the first
+    TableIO.rollback(root, "ns", "t", 1L)
+    up(root, 50, 60, "b")
+    assert(Mor.readAt(spark, root, "ns", "t", v).orderBy("bar").collect()
+      .toSeq == first.toSeq)
+  }
 }

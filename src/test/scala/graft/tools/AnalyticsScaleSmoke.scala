@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Graph, Similarity, Sketches, TimeSeriesOps}
 
@@ -15,13 +14,7 @@ import graft.operators.{Graph, Similarity, Sketches, TimeSeriesOps}
 object AnalyticsScaleSmoke {
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toDouble else 1.0
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.operators.Dedup
 
 /** Scale smoke for the cross-corpus dedup family: synthesize a
@@ -14,23 +13,21 @@ import graft.operators.Dedup
   * constant-size bloom and the banded near join hold well past the
   * 500-doc correctness corpus. Args: [docsMillions] (default 5).
   *
-  * Run with docsMillions >= 2: the boilerplate router section's
+  * Refuses docsMillions < 2 up front: the boilerplate router section's
   * `require(autoFull == capFull)` asserts the corpus routes CAPPED,
   * which its bucket depths only reach past ~640k boiler docs
   * (bp = nb²/1000 vs the exact bound 256·nb) — at docsMillions = 1
   * (nb = 500k) the guard legitimately routes exact (bp 102M ≤ 128M,
-  * measured) and the require fails BY DESIGN, on any round's code.
+  * measured) and the require would fail by design.
   */
 object DedupScaleSmoke {
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toDouble else 5.0
+    require(m >= 2, s"docsMillions must be >= 2, got $m: below that the " +
+      "boilerplate corpus routes exact, and the router section's " +
+      "require(autoFull == capFull) fails by design")
     val n = (m * 1e6).toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

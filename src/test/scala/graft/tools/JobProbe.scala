@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
 /** Dev helper: per-JOB wall breakdown of one registry query — where a
@@ -12,14 +11,7 @@ object JobProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val name = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
     val descs = new java.util.concurrent.ConcurrentHashMap[Int, String]()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, PipelineOps}
 
@@ -15,12 +14,7 @@ object PipeScaleSmoke {
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toDouble else 2.0
     val nDocs = (m * 1e6).toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import graft.plans.{Maintenance, Mor, Pipeline}
 import graft.sources.{FileConfig, GenConfig}
 
@@ -14,12 +13,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val m = if (args.nonEmpty) args(0).toDouble else 1.0
     val rpf = (m * 1e6).toLong
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val root = Files.createTempDirectory("graft-scale-").toString
     val cfg = GenConfig("ns", "big",

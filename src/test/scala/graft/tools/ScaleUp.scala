@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-equivalent dataset from sf0.1 for SCALE
@@ -21,11 +21,8 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val Array(src, out, rest @ _*) = args
     val k = rest.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // fixed 8 cores: the derived files' layout follows the partition count
+    val spark = graft.LocalSession.builder(cores = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     new java.io.File(out).mkdirs()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Memory-pressure smoke (VERDICT r14 stretch item 8): the 128 GiB
@@ -26,16 +25,11 @@ object SpillSmoke {
       else Seq("graph_louvain", "ann_ivfpq", "ann_recall_eval_ivfpq",
         "dedup_substr_spans", "q_window_range_frame")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/sf1")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", parts)
+    val spark = graft.LocalSession.builder()
+      .config("spark.sql.shuffle.partitions", parts.toLong)
       // the starvation knob: ~frac of (heap - 300MB) is ALL the
       // execution+storage memory every concurrent task shares
       .config("spark.memory.fraction", frac)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.allowHashOnMapType", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val mem = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class against the compiled classes + Spark jars,
 # mirroring the JVM flags in build.sbt. Usage: run_main.sh <class> [args...]
+# The test classes are on the path too: the scale harnesses
+# (graft.tools.ScaleSmoke and friends) live in src/test; build them
+# with `sbt Test/compile`.
 # The classes come from the checkout this script sits in, so a second
 # checkout (say, a parent commit for a plan diff) runs its own build.
 set -e
@@ -20,5 +23,5 @@ exec java $ADDOPENS \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xms${SPARK_DRIVER_MEM:-16g} -Xmx${SPARK_DRIVER_MEM:-16g} \
   -XX:ReservedCodeCacheSize=1g \
-  -cp "$repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$repo/target/scala-2.13/classes:$repo/target/scala-2.13/test-classes:/opt/spark/jars/*" \
   "$cls" "$@"
