@@ -43,6 +43,17 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    eval's wall. [[single]] keeps such relations at one partition
   *    and fills the cache before AQE's parallel branches race it.
   *
+  *  - A relation is provably small either by construction (codebooks,
+  *    centroids, probe lists: [[local]]) or by a bounded probe. Near-dup
+  *    label propagation (`PipelineOps.labelPropagation`) collects at
+  *    most threshold / 16 pairs, with the threshold read from
+  *    `spark.sql.autoBroadcastJoinThreshold`, the rule small MOR
+  *    delete groups follow. When the pairs fit, its fixed rounds run on
+  *    the driver and return a driver-local relation; larger pair sets
+  *    keep the distributed rounds. In the llm_curate benchmark (1,144
+  *    pairs, local[4]) a `dedupClusters` call went from 28 Spark jobs
+  *    to 7.
+  *
   * All four are confined to BOUNDED inputs except [[expand]]; they are
   * eval-, training- or loop-scoped exceptions, never a default for a
   * corpus-scale relation. (On a cluster with lineage-loss concerns the

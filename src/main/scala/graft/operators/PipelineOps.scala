@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.Bridge
 import graft.Layout
 import graft.functions.TextHash
 import graft.plans.{Maintenance, Mor, PartitionSpec, Partitioning, TableIO}
@@ -707,20 +709,25 @@ object PipelineOps {
       .orderBy("bucket")
   }
 
-  /** Duplicate-cluster resolution: connected components over the
-    * MinHash-LSH near-dup pair graph by min-label propagation, a fixed
-    * `iters` rounds (deterministic, oracle-replayable; components here
-    * are tiny — duplicate groups — so a small fixed hop count
-    * converges). Each round is one groupBy on the edge key: linear in
-    * edges, the standard large-graph CC shape.
+  /** Duplicate-cluster resolution: min-label propagation over the
+    * MinHash-LSH near-dup pair graph, a fixed `iters` rounds
+    * (deterministic, oracle-replayable). After round r a document's
+    * label is the least doc id within r hops of it — the radius-`iters`
+    * ball minimum, which equals its connected component's minimum
+    * whenever the component's radius is at most `iters` (duplicate
+    * groups are small and dense). Labels come back in doc_id order;
+    * [[labelPropagation]] picks the driver or the distributed route.
     */
-  def dedupClusters(docs: DataFrame, iters: Int = ClusterIters): DataFrame =
-    // Cached: the propagation loop references the edge set 2x per round
-    // (plus once for the node list); without the cache each reference
-    // re-evaluates the whole MinHash signature+band pipeline. Edges are
-    // near-dup pairs — tiny relative to the corpus at any scale.
-    labelPropagation(graft.CacheScope.cached(Dedup.minhashPairs(docs)), iters)
-      .orderBy("doc_id")
+  def dedupClusters(docs: DataFrame, iters: Int = ClusterIters): DataFrame = {
+    // cached: the probe and every distributed round read the pairs,
+    // and each uncached read would re-run the MinHash signature and
+    // band pipeline
+    val pairs = graft.CacheScope.cached(Dedup.minhashPairs(docs))
+    // the driver route's rows are already in doc_id order, and a sort
+    // over its local relation would only add a range exchange
+    driverLabels(pairs, iters)
+      .getOrElse(distributedLabels(pairs, iters).orderBy("doc_id"))
+  }
 
   /** Propagation depth shared by every consumer of the cluster labels
     * (from-scratch, index build, index refresh) AND the oracle's
@@ -728,15 +735,84 @@ object PipelineOps {
     */
   val ClusterIters = 3
 
-  /** Min-label propagation over an undirected pair graph, a fixed
-    * `iters` rounds (deterministic, oracle-replayable; near-dup
-    * components are tiny — duplicate groups — so a small fixed hop
-    * count converges). Each round is one groupBy on the edge key:
-    * linear in edges, the standard large-graph CC shape. The caller
-    * caches `pairs` (each round references the edge set twice).
+  /** Bytes per pair in the driver route's size rule: two longs, the
+    * same per-row estimate the broadcast threshold applies to a join
+    * side.
+    */
+  private val PairBytes = 16L
+
+  /** Min-label propagation over an undirected (doc_a, doc_b) pair
+    * graph, a fixed `iters` rounds: each round gives every node the
+    * least label over itself and its neighbours, so the result is the
+    * radius-`iters` ball minimum, not full connected components.
+    * Returns (doc_id, cluster) over every node that has a pair.
+    *
+    * Two routes, one answer and one schema. When the pairs fit
+    * `spark.sql.autoBroadcastJoinThreshold` at [[PairBytes]] each —
+    * the rule small delete groups follow in `Mor.view` — one bounded
+    * collect brings them to the driver and the rounds run there
+    * ([[driverLabels]]); the result is a driver-local relation. Larger
+    * pair sets (or a disabled threshold) take [[distributedLabels]].
+    * The caller caches `pairs`: the probe fills that cache, and the
+    * distributed rounds read it again.
     */
   private[graft] def labelPropagation(pairs: DataFrame,
-      iters: Int = ClusterIters): DataFrame = {
+      iters: Int = ClusterIters): DataFrame =
+    driverLabels(pairs, iters).getOrElse(distributedLabels(pairs, iters))
+
+  /** The driver route: `None` when the threshold is off, the pair
+    * columns are not longs, the probe finds more pairs than the bound
+    * or a null id. One job collects at most bound + 1 pairs; the rounds
+    * are synchronous, like the distributed ones, and the rows come out
+    * in doc_id order.
+    */
+  private def driverLabels(pairs: DataFrame, iters: Int): Option[DataFrame] = {
+    val spark = pairs.sparkSession
+    val bound = Bridge.broadcastThreshold(spark) / PairBytes
+    val longs = Seq("doc_a", "doc_b").forall(c =>
+      pairs.schema(c).dataType == LongType)
+    if (bound <= 0 || !longs) None
+    else {
+      val got = pairs.select("doc_a", "doc_b")
+        .limit(math.min(bound, Int.MaxValue - 1L).toInt + 1).collect()
+      if (got.length > bound || got.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+        None
+      else {
+        val a = got.map(_.getLong(0))
+        val b = got.map(_.getLong(1))
+        val ids = (a ++ b).distinct.sorted
+        val ia = a.map(java.util.Arrays.binarySearch(ids, _))
+        val ib = b.map(java.util.Arrays.binarySearch(ids, _))
+        var lab = ids
+        for (_ <- 1 to iters) {
+          val next = lab.clone()
+          var i = 0
+          while (i < ia.length) {
+            val u = ia(i)
+            val v = ib(i)
+            if (lab(v) < next(u)) next(u) = lab(v)
+            if (lab(u) < next(v)) next(v) = lab(u)
+            i += 1
+          }
+          lab = next
+        }
+        // the distributed route's schema: doc_id is the union of the
+        // pair columns, cluster a `min`, which is always nullable
+        val schema = StructType(Seq(StructField("doc_id", LongType,
+            pairs.schema("doc_a").nullable || pairs.schema("doc_b").nullable),
+          StructField("cluster", LongType, nullable = true)))
+        val rows = ids.indices.map(i => Row(ids(i), lab(i)))
+        Some(spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
+      }
+    }
+  }
+
+  /** The distributed route: each round joins the previous labels to the
+    * edge list (both directions plus a self-loop per node) and takes
+    * `min` per source with one `groupBy` — linear in edges, the standard
+    * large-graph shape, and one shuffle chain per round.
+    */
+  private def distributedLabels(pairs: DataFrame, iters: Int): DataFrame = {
     // undirected: both directions
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
@@ -857,7 +933,8 @@ object PipelineOps {
   val FullRefreshFactor = 8L
 
   /** One index's address; `t(suffix)` names its `{table}{suffix}` table. */
-  private final case class Ix(root: String, ns: String, table: String) {
+  private[graft] final case class Ix(root: String, ns: String,
+      table: String) {
     def t(suffix: String): String = table + suffix
     def version(suffix: String): Long =
       TableIO.currentVersion(root, ns, t(suffix))
@@ -1243,20 +1320,22 @@ object PipelineOps {
     * no-op delta leaves the version untouched. Callers pass MATERIALIZED
     * relations: the emptiness probe and the write each run an action.
     */
-  private def commitMorDelta(spark: SparkSession, ix: Ix, suffix: String,
-      adds: DataFrame, deleteKeys: DataFrame): Unit = {
+  private[graft] def commitMorDelta(spark: SparkSession, ix: Ix,
+      suffix: String, adds: DataFrame, deleteKeys: DataFrame): Unit = {
     val t = ix.t(suffix)
-    val seq = TableIO.nextSeq(ix.root, ix.ns, t)
+    // the files are this call's own; the sequence lives only in the
+    // manifest (TableIO.commitAtNextSeq)
+    val unique = java.util.UUID.randomUUID().toString.take(8)
     val dataEntries =
       if (adds.isEmpty) Nil
       else Partitioning.writePartitioned(spark, ix.root, ix.ns, t, adds,
-        specOf(ix, suffix), seq = seq)
+        specOf(ix, suffix), seq = 0L, filePrefix = s"delta-$unique")
     val delEntries =
       if (deleteKeys.isEmpty) Nil
       else Seq(TableIO.writeExactFile(spark, ix.root, ix.ns, t,
-        s"data/eqdel-$seq.parquet", deleteKeys, "eq_delete", seq))
+        s"data/eqdel-$unique.parquet", deleteKeys, "eq_delete", seq = 0L))
     val entries = dataEntries ++ delEntries
-    if (entries.nonEmpty) TableIO.commit(ix.root, ix.ns, t, entries)
+    if (entries.nonEmpty) TableIO.commitAtNextSeq(ix.root, ix.ns, t, entries)
     if (TableIO.readManifest(ix.root, ix.ns, t)
         .count(_.content == "eq_delete") >= MaxSurvDeleteFiles)
       // DELETE-SCOPED (r19, VERDICT r18 item 2): folds the delete debt

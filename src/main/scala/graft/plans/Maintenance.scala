@@ -2,7 +2,8 @@ package graft.plans
 
 import java.nio.file.{Files, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, struct, when}
 
 /** Table maintenance — the operations a MOR table needs to stay healthy
   * at scale (Iceberg's rewrite_data_files / expire_snapshots analogues).
@@ -63,27 +64,21 @@ object Maintenance {
       import org.apache.spark.sql.functions._
       val arranged =
         if (clusterBy.isEmpty) merged.repartition(nFiles)
-        else if (hilbert) {
-          // loud misconfiguration failure, not a silent fall-through to
-          // the z-order/lexical branch: the Hilbert curve here is 2-D
-          require(clusterBy.size == 2,
-            s"hilbert clustering requires exactly 2 cluster columns, " +
-              s"got ${clusterBy.size}: ${clusterBy.mkString(", ")}")
-          val h = graft.functions.ZOrder.hvalue(
-            col(clusterBy(0)), col(clusterBy(1)))
-          merged.withColumn("_h", h)
-            .repartitionByRange(nFiles, col("_h"))
-            .sortWithinPartitions("_h")
-            .drop("_h")
-        } else if (zorder && clusterBy.size >= 2) {
-          val z = graft.functions.ZOrder.zvalue(clusterBy.map(col))
-          merged.withColumn("_z", z)
-            .repartitionByRange(nFiles, col("_z"))
-            .sortWithinPartitions("_z")
-            .drop("_z")
-        } else {
-          merged.repartitionByRange(nFiles, clusterBy.map(col): _*)
-            .sortWithinPartitions(clusterBy.head, clusterBy.tail: _*)
+        else {
+          val key =
+            if (hilbert) {
+              // loud misconfiguration failure, not a silent fall-through to
+              // the z-order/lexical branch: the Hilbert curve here is 2-D
+              require(clusterBy.size == 2,
+                s"hilbert clustering requires exactly 2 cluster columns, " +
+                  s"got ${clusterBy.size}: ${clusterBy.mkString(", ")}")
+              Seq(graft.functions.ZOrder.hvalue(
+                col(clusterBy(0)), col(clusterBy(1))))
+            } else if (zorder && clusterBy.size >= 2)
+              Seq(graft.functions.ZOrder.zvalue(clusterBy.map(col)))
+            else clusterBy.map(col)
+          rangeLayout(merged, nFiles,
+            snap.files("data").map(e => math.max(e.recordCount, 0L)).sum, key)
         }
       arranged.write.mode("overwrite").parquet(stage.resolve("out").toString)
       val parts = Files.list(stage.resolve("out")).iterator().asScala
@@ -128,6 +123,44 @@ object Maintenance {
       Files.walk(stage).sorted(java.util.Comparator.reverseOrder())
         .iterator().asScala.foreach(Files.delete)
     }
+  }
+
+  /** Most key rows a clustered [[compact]] samples for its boundaries. */
+  private val BoundarySampleRows = 100000L
+
+  /** `df` in `n` contiguous ranges of `key` (lexicographic over the
+    * long-cast columns, nulls first), one partition each, sorted within.
+    * The boundaries are exact quantiles, taken on the driver, of a
+    * sample with a fixed seed — every row when the table holds at most
+    * [[BoundarySampleRows]] (`rows`, from manifest counts) — so one
+    * table compacts to one layout in any session. `repartitionByRange`
+    * seeds its own sample with the sampling RDD's id, which made the
+    * layout depend on how many RDDs the session had made before.
+    */
+  private def rangeLayout(df: DataFrame, n: Int, rows: Long,
+      key: Seq[Column]): DataFrame = {
+    val fields = key.indices.map(i => s"k$i")
+    val keyed = df.withColumn("_k",
+      struct(key.zip(fields).map { case (k, f) => k.cast("long").as(f) }: _*))
+    val keys = keyed.select("_k")
+    val sample = (if (rows <= BoundarySampleRows) keys
+      else keys.sample(false, BoundarySampleRows.toDouble / rows, 0L))
+      .collect().map { r =>
+        val k = r.getStruct(0)
+        fields.indices.map(i => if (k.isNullAt(i)) None else Some(k.getLong(i)))
+      }
+      .sorted(Ordering.Implicits.seqOrdering[IndexedSeq, Option[Long]])
+    // RangePartitioner's rule: a key equal to a boundary stays below it
+    val bounds =
+      if (sample.isEmpty) Nil
+      else (1 until n).map(i =>
+        sample(math.max(0, (i.toLong * sample.length / n).toInt - 1))).distinct
+    val part = bounds.map { b =>
+      val bound = struct(b.zip(fields).map { case (v, f) =>
+        v.fold(lit(null).cast("long"))(lit(_)).as(f) }: _*)
+      when(col("_k") > bound, 1).otherwise(0)
+    }.foldLeft(lit(0))(_ + _)
+    keyed.repartitionById(n, part).sortWithinPartitions("_k").drop("_k")
   }
 
   /** DELETE-SCOPED compaction (r19, VERDICT r18 item 2): fold the

@@ -608,6 +608,26 @@ object TableIO {
     else Left(currentVersion(root, ns, table))
   }
 
+  /** Append `entries` at the sequence of the snapshot the commit lands
+    * on: each attempt reads the head, stamps every entry with its
+    * `nextSeq` and publishes through [[commitAppendExpecting]]; a lost
+    * race re-stamps and retries. The caller names its files per call,
+    * never by sequence — a sequence repeats after a rollback and
+    * between concurrent writers, and a file an older version names must
+    * never be overwritten — so a retry rewrites nothing. Returns the
+    * committed version.
+    */
+  @annotation.tailrec
+  def commitAtNextSeq(root: String, ns: String, table: String,
+      entries: Seq[ManifestEntry]): Long = {
+    val snap = snapshot(root, ns, table)
+    commitAppendExpecting(root, ns, table,
+        entries.map(_.copy(seq = snap.nextSeq)), snap.version) match {
+      case Right(v) => v
+      case Left(_) => commitAtNextSeq(root, ns, table, entries)
+    }
+  }
+
   /** Commit a snapshot whose manifest REPLACES the previous content
     * entirely (compaction/rewrite). Unlike a fast-append this CANNOT
     * blindly retry: the replacement was computed FROM a base snapshot,

@@ -36,10 +36,8 @@ object Upsert {
     val schema = TableIO.readSchema(root, ns, table)
     require(keyCols.forall(schema.fieldNames.contains),
       s"key columns ${keyCols.mkString(",")} not all in table schema")
-    // the files are this call's own (a sequence number repeats after a
-    // rollback and between concurrent calls, and a file an older version
-    // names must never be overwritten); the sequence lives only in the
-    // manifest, so it is stamped per attempt and a retry rewrites nothing
+    // the files are this call's own; the sequence lives only in the
+    // manifest (TableIO.commitAtNextSeq)
     val unique = java.util.UUID.randomUUID().toString.take(8)
     val delete = TableIO.writeExactFile(spark, root, ns, table,
       s"deletes/upsert_eq-$unique.parquet",
@@ -47,15 +45,6 @@ object Upsert {
     val data = TableIO.writeExactFile(spark, root, ns, table,
       s"data/upsert-$unique.parquet", df, "data", seq = 0L,
       bounds = TableIO.longBounds(df, statsCols))
-    @annotation.tailrec
-    def publish(): Long = {
-      val snap = TableIO.snapshot(root, ns, table)
-      TableIO.commitAppendExpecting(root, ns, table,
-          Seq(delete, data).map(_.copy(seq = snap.nextSeq)), snap.version) match {
-        case Right(v) => v
-        case Left(_) => publish()
-      }
-    }
-    publish()
+    TableIO.commitAtNextSeq(root, ns, table, Seq(delete, data))
   }
 }

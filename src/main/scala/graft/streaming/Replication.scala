@@ -66,12 +66,14 @@ object Replication {
           .filter(col("_change_version") === col("_latest_v") &&
             col("_change_type") === "insert")
           .select(dataCols.map(col): _*)
-        val seq = TableIO.nextSeq(root, ns, table)
+        // the files are this call's own; the sequence lives only in the
+        // manifest (TableIO.commitAtNextSeq)
+        val unique = java.util.UUID.randomUUID().toString.take(8)
         val delete = TableIO.writeExactFile(spark, root, ns, table,
-          f"deletes/replica_eq-$seq%05d.parquet", keys, "eq_delete", seq)
+          s"deletes/replica_eq-$unique.parquet", keys, "eq_delete", seq = 0L)
         val data = TableIO.writeExactFile(spark, root, ns, table,
-          f"data/replica-$seq%05d.parquet", ins, "data", seq)
-        TableIO.commit(root, ns, table, Seq(delete, data))
+          s"data/replica-$unique.parquet", ins, "data", seq = 0L)
+        TableIO.commitAtNextSeq(root, ns, table, Seq(delete, data))
       }
     }
   }

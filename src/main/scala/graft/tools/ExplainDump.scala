@@ -146,13 +146,20 @@ object ExplainDump {
       "(no fact shuffle), two-phase `HashAggregate`, " +
       "`WholeStageCodegen` spans covering the hot operators.\n")
     names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $n\n\n```\n$plan```\n")
-      // registered (unmaterialized) caches would otherwise leak into
-      // the NEXT query's displayed plan as InMemoryRelation pickups
-      graft.CacheScope.drain()
+      sb.append(s"\n## $n\n")
+      // each plan twice: one that differs between two builds in one
+      // session (AQE picks a broadcast build side from whichever stage
+      // finishes first) is unstable, and tools/plan_diff.py reports it
+      // apart from the plans a change moved
+      (1 to 2).foreach { _ =>
+        val df = graft.SparkEntry.queries(n)(spark, sfDir)
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        sb.append(s"\n```\n$plan```\n")
+        // registered (unmaterialized) caches would otherwise leak into
+        // the NEXT plan as InMemoryRelation pickups
+        graft.CacheScope.drain()
+      }
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"[explain] wrote ${names.size} plans to $out")

@@ -38,6 +38,32 @@ class ClusterIndexSpec extends AnyFunSuite {
     out
   }
 
+  test("an index MOR delta after a rollback leaves the rolled-back " +
+      "version readable") {
+    import spark.implicits._
+    import graft.plans.{Mor, PartitionSpec, Partitioning}
+    val root = Files.createTempDirectory("graft-clidx-rb-").toString
+    Partitioning.preparePartitioned(spark, root, "corp", "lab",
+      Seq((1L, 1L), (2L, 1L), (3L, 3L)).toDF("doc_id", "cluster"),
+      PartitionSpec("bucket", "doc_id", 8))
+    val ix = PipelineOps.Ix(root, "corp", "lab")
+    def content(v: Long) = Mor.readAt(spark, root, "corp", "lab", v)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def relabel3(to: Long): Long = {
+      PipelineOps.commitMorDelta(spark, ix, "",
+        Seq((3L, to)).toDF("doc_id", "cluster"), Seq(3L).toDF("doc_id"))
+      TableIO.currentVersion(root, "corp", "lab")
+    }
+    val v2 = relabel3(1L)
+    val first = content(v2)
+    assert(first == Set((1L, 1L), (2L, 1L), (3L, 1L)))
+    // the next delta lands at the same sequence number as the first
+    TableIO.rollback(root, "corp", "lab", 1L)
+    val v4 = relabel3(2L)
+    assert(content(v2) == first)
+    assert(content(v4) == Set((1L, 1L), (2L, 1L), (3L, 2L)))
+  }
+
   test("build + change-fold refresh is bit-identical to a from-scratch " +
       "rebuild of the union corpus") {
     val docs = docsDf(90)

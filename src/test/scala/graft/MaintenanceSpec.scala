@@ -33,6 +33,28 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(Mor.readAt(spark, root, "ns", "t", 3L).count() == 100L)
   }
 
+  test("a clustered compaction lays out exact quantile ranges, the same " +
+      "in any session history") {
+    import org.apache.spark.sql.functions.{col, lit}
+    def layout(): Seq[(Long, Long)] = {
+      val root = Files.createTempDirectory("graft-maint-range-").toString
+      val df = spark.range(0, 5000).select(col("id").cast("string").as("foo"),
+        col("id").cast("int").as("bar"), lit(true).as("baz"))
+      TableIO.createNamespace(root, "ns")
+      TableIO.createTableIfNotExists(root, "ns", "t", df.schema)
+      TableIO.commit(root, "ns", "t", Seq(TableIO.writeExactFile(spark, root,
+        "ns", "t", "data/part-00000.parquet", df, "data", seq = 1L)))
+      Maintenance.compact(spark, root, "ns", "t", targetFileCount = 5,
+        clusterBy = Seq("bar"))
+      TableIO.readManifest(root, "ns", "t").map(_.bounds("bar")).sorted
+    }
+    val first = layout()
+    assert(first == (0 until 5).map(i => (i * 1000L, i * 1000L + 999L)))
+    // other RDDs in between move a seeded sample's boundaries, not these
+    spark.range(0, 10).rdd.count()
+    assert(layout() == first)
+  }
+
   test("rewritePositionDeletes consolidates, dedupes, and preserves gates") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

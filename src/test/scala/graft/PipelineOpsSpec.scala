@@ -205,6 +205,25 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("dedupClusters: the driver route matches the distributed one in " +
+      "rows and schema, and its plan is a local leaf") {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val driver = PipelineOps.dedupClusters(docs)
+    val plan = driver.queryExecution.executedPlan
+    assert(PlanNodes.collect(plan) { case l: LocalTableScanExec => l }.nonEmpty)
+    assert(PlanNodes.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty)
+    val rows = driver.collect().toSeq
+    val (schema, distRows) = NoBroadcast(spark) {
+      val d = PipelineOps.dedupClusters(docs)
+      (d.schema, d.collect().toSeq)
+    }
+    CacheScope.drain()
+    assert(rows.nonEmpty)
+    assert(driver.schema == schema)
+    assert(rows == distRows)
+  }
+
   test("topNgrams counts the corpus-dominant trigram") {
     val top = PipelineOps.topNgrams(docs, k = 5).collect()
     assert(top.length == 5)

@@ -402,6 +402,34 @@ class TableStreamSpec extends AnyFunSuite {
     assert(got.toSet == Set((2L, "b3"), (3L, "c1"), (9L, "keep")), got)
   }
 
+  test("a replication re-apply after a rollback leaves the rolled-back " +
+      "version readable") {
+    import graft.plans.Mor
+    import graft.streaming.Replication
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-replrb-").toString
+    val ns = "replns"
+    val initial = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    TableIO.createNamespace(root, ns)
+    TableIO.createTableIfNotExists(root, ns, "dst", initial.schema)
+    TableIO.commit(root, ns, "dst", Seq(TableIO.writeExactFile(spark, root,
+      ns, "dst", "data/init.parquet", initial, "data", 1L)))
+    def content(v: Long) = Mor.readAt(spark, root, ns, "dst", v).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+    def batch(v: String) = Seq((1L, v, "insert", 1)).toDF("k", "v",
+      "_change_type", "_change_version")
+    val v2 = Replication.applyChanges(spark, root, ns, "dst", batch("x"),
+      Seq("k"))
+    val first = content(v2)
+    assert(first == Set((1L, "x"), (2L, "b")))
+    // the re-apply lands at the same sequence number as the first apply
+    TableIO.rollback(root, ns, "dst", 1L)
+    val v4 = Replication.applyChanges(spark, root, ns, "dst", batch("y"),
+      Seq("k"))
+    assert(content(v2) == first)
+    assert(content(v4) == Set((1L, "y"), (2L, "b")))
+  }
+
   test("fresh-checkpoint query into a pre-populated table fails loudly, " +
       "never silently drops") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
